@@ -50,6 +50,15 @@ object Bench {
 
   private def rmTree(path: String): Unit = graft.tools.Rm.rmTree(path)
 
+  /** `s` as a JSON string literal. */
+  private def jsonString(s: String): String =
+    s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    }.mkString("\"", "", "\"")
+
   /** Per-build task-level evidence: achieved parallelism, CPU/GC fractions,
     * volume written — enough to tell "the job stopped scaling" apart from
     * "the environment throttled CPU or IO" straight from BENCH.json. */
@@ -143,6 +152,7 @@ object Bench {
 
     // ---- phase 1: driver-harness operator queries
     var qs = "{}"
+    var gateErrors = "{}"
     var total = 0.0
     var prepSec = 0.0
     var evQueries = ""
@@ -162,10 +172,12 @@ object Bench {
       // whichever of them happens to build the field first (r2: q47 3.8 s)
       Indexes.titleIndex(spark1, sfDir)
       prepSec = (System.nanoTime() - tPrep) / 1e9
-      val results = SparkEntry.queries.map { case (name, fn) =>
+      // a gate that throws is an error, never a timing: it is reported under
+      // "gate_errors" and left out of "queries" and the total
+      val (results, errors) = SparkEntry.queries.toSeq.partitionMap { case (name, fn) =>
         val t0 = System.nanoTime()
-        try { fn(spark1, sfDir).count() } catch { case _: Throwable => -1L }
-        name -> (System.nanoTime() - t0) / 1e9
+        try { fn(spark1, sfDir).count(); Left(name -> (System.nanoTime() - t0) / 1e9) }
+        catch { case e: Throwable => Right(name -> s"${e.getClass.getName}: ${e.getMessage}") }
       }
       // same environment evidence as phase 2, so a throttled/contended box is
       // diagnosable for the per-query numbers too (r2 verdict: phases 1 and 3
@@ -176,9 +188,11 @@ object Bench {
       SparkSession.clearDefaultSession()
       qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
         .mkString("{", ",", "}")
+      gateErrors = errors.map { case (k, msg) => "\"" + k + "\":" + jsonString(msg) }
+        .mkString("{", ",", "}")
       // total keeps the r1 semantics (shared-index build included) — the
       // prep split is reported separately for per-query readability
-      total = prepSec + (if (results.nonEmpty) results.values.sum else 0.0)
+      total = prepSec + results.map(_._2).sum
     }
 
     var scalingJson = ""
@@ -277,7 +291,7 @@ object Bench {
     }
 
     val evQ = if (evQueries.nonEmpty) s""","evidence_queries":{$evQueries}""" else ""
-    val json = f"""{"metric":"total","value":$total,"unit":"sec","prep_sec":$prepSec%.2f,"queries":$qs,"sf":"$sfDir"$evQ$scalingJson}"""
+    val json = f"""{"metric":"total","value":$total,"unit":"sec","prep_sec":$prepSec%.2f,"queries":$qs,"gate_errors":$gateErrors,"sf":"$sfDir"$evQ$scalingJson}"""
     // sbt's [info]/[error] stdout prefixes broke driver parsing of r1; the
     // file copy is the machine-readable channel
     java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH.json"), json + "\n")

@@ -19,8 +19,8 @@ import org.apache.commons.codec.language.{Caverphone2, ColognePhonetic, DaitchMo
   *    token (`DoubleMetaphoneFilter.java:86-89`).
   *
   * Behavior pinned to the reference's own TestDoubleMetaphoneFilter vectors
-  * in PhoneticSpec. BeiderMorse / DaitchMokotoff stay declared non-goals
-  * (rule-asset-driven, SURVEY §7.4). */
+  * in PhoneticSpec. BeiderMorse stays a declared non-goal (rule-asset-driven,
+  * SURVEY §7.4); DaitchMokotoff is [[DaitchMokotoffAnalyzer]] below. */
 final case class DoubleMetaphoneAnalyzer(maxCodeLength: Int = 4,
                                          inject: Boolean = true) extends Analyzer {
   override val name = s"double-metaphone:$maxCodeLength:$inject"

@@ -4,6 +4,7 @@ import graft.core._
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import scala.collection.mutable
 
 /** One input document: external id (globally unique) + field text. */
@@ -666,6 +667,21 @@ final class InvertedIndex private (
   /** Driver-resident impact frontiers when [[warm]]ed on a frontier-bearing
     * index (term → (impFreqs, impDlbs)). */
   def warmFrontiers: Option[Map[String, (Array[Int], Array[Byte])]] = Option(warmFronts)
+
+  @transient @volatile private var warmSorted: Array[UTF8String] = null
+
+  /** The driver-resident dictionary's terms sorted in UTF-8 byte order —
+    * Catalyst's string order, so range and prefix bounds resolved here match
+    * the `term` predicates a scan would evaluate. Built on first use, not by
+    * [[warm]]. */
+  def warmSortedTerms: Option[Array[UTF8String]] = Option(warmStats).map { m =>
+    if (warmSorted == null) {
+      val terms = m.keysIterator.map(UTF8String.fromString).toArray
+      java.util.Arrays.sort(terms.asInstanceOf[Array[AnyRef]])
+      warmSorted = terms
+    }
+    warmSorted
+  }
 }
 
 object InvertedIndex {

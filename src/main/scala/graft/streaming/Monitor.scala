@@ -150,6 +150,7 @@ object Monitor {
       BooleanQuery(clauses.map { case (o, c) => (o, lowerSpans(c)) }, msm)
     case BoostQuery(inner, b) => BoostQuery(lowerSpans(inner), b)
     case ConstantScoreQuery(inner) => ConstantScoreQuery(lowerSpans(inner))
+    case DisjunctionMaxQuery(ds, tb) => DisjunctionMaxQuery(ds.map(lowerSpans), tb)
     case other => other
   }
 

@@ -38,14 +38,6 @@ object WebIndex {
     }.count()
   }
 
-  /** Assign dense doc ids by global url order, independent of the input's
-    * partitioning: range-repartition on url, sort within partitions, then a
-    * count pre-pass turns per-partition counts into global offsets (the
-    * standard deterministic zip-with-index; one extra narrow job, no global
-    * sort materialization on a single node).
-    *
-    * Returns `(docId, url, text, warc_ts, lang)`.
-    */
   private def partitionOffsets(counts: Array[(Int, Long)]): Map[Int, Long] = {
     val byPid = counts.toMap
     val maxPid = if (counts.isEmpty) -1 else counts.map(_._1).max
@@ -57,7 +49,23 @@ object WebIndex {
     }.toMap
   }
 
-  def assignDocIds(pages: Dataset[Page], numPartitions: Int): DataFrame = {
+  /** Assign dense doc ids by global url order, independent of the input's
+    * partitioning: range-repartition on url, sort within partitions, then a
+    * count pre-pass turns per-partition counts into global offsets (the
+    * standard deterministic zip-with-index; one extra narrow job, no global
+    * sort materialization on a single node).
+    *
+    * Returns `(docId, url, text, warc_ts, lang)`. The url-sorted pages the
+    * frame reads stay cached until the caller releases them
+    * (`spark.catalog.clearCache()`); [[build]] releases its own.
+    */
+  def assignDocIds(pages: Dataset[Page], numPartitions: Int): DataFrame =
+    assignDocIdsOver(pages, numPartitions)._1
+
+  /** [[assignDocIds]] plus the cached url-sorted pages the returned frame
+    * reads, so a caller can release them once the frame is consumed. */
+  private def assignDocIdsOver(pages: Dataset[Page], numPartitions: Int)
+      : (DataFrame, Dataset[(String, String, java.sql.Timestamp, String)]) = {
     val spark = pages.sparkSession
     import spark.implicits._
     val sorted = pages
@@ -71,13 +79,14 @@ object WebIndex {
     }.collect()
     val offsets: Map[Int, Long] = partitionOffsets(counts)
     val bc = spark.sparkContext.broadcast(offsets)
-    sorted.mapPartitions { it =>
+    val withIds = sorted.mapPartitions { it =>
       var next = bc.value(TaskContext.getPartitionId())
       it.map { case (url, text, ts, lang) =>
         val id = next; next += 1
         (id, url, text, ts, lang)
       }
     }.toDF("docId", "url", "text", "warc_ts", "lang")
+    (withIds, sorted)
   }
 
   /** Build (or resume) the inverted index over a pages table at `dir`.
@@ -96,9 +105,12 @@ object WebIndex {
     val parts =
       if (numPartitions > 0) numPartitions
       else spark.sparkContext.defaultParallelism
-    val withIds = assignDocIds(pages, parts).cache()
+    val (ids, sorted) = assignDocIdsOver(pages, parts)
+    val withIds = ids.cache()
     withIds.select($"docId", $"url", $"warc_ts", $"lang")
       .write.mode("overwrite").parquet(s"$dir/urlmap")
+    // the url map write filled the doc-id cache, which now holds every row
+    sorted.unpersist()
     val input = withIds.select($"docId", $"text").as[InputDoc]
     val idx = IndexBuilder.build(input, dir, config, resume)
     withIds.unpersist()

@@ -120,4 +120,35 @@ class MonitorSpec extends AnyFunSuite {
       "exact_repeat_ok" -> PhraseQuery(Seq("a", "a"), slop = 0))
     assert(Monitor.percolate(docs, ok, SimpleAnalyzer).count() >= 1)
   }
+
+  test("span rules under a dismax are lowered to intervals, with the same matches") {
+    val s = spark
+    import s.implicits._
+    val span = SpanQuery(Spans.SpanNear(Seq(Spans.SpanTerm("data"), Spans.SpanTerm("filter")),
+      slop = 3, inOrder = true))
+    val rule: Query = DisjunctionMaxQuery(Seq(TermQuery("vector"),
+      BooleanQuery(Seq(Occur.SHOULD -> span, Occur.SHOULD -> TermQuery("stream")))), 0.1f)
+    def hasSpan(q: Query): Boolean = q match {
+      case _: SpanQuery => true
+      case DisjunctionMaxQuery(ds, _) => ds.exists(hasSpan)
+      case BooleanQuery(cs, _) => cs.exists(c => hasSpan(c._2))
+      case BoostQuery(inner, _) => hasSpan(inner)
+      case ConstantScoreQuery(inner) => hasSpan(inner)
+      case _ => false
+    }
+    val lowered = Monitor.lowerAll(Seq("dismax_span" -> rule)).head._2
+    assert(hasSpan(rule) && !hasSpan(lowered), s"$lowered")
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      .select("doc_id", "text").as[(Long, String)]
+    val texts = docs.collect()
+    texts.foreach { case (id, text) =>
+      val view = new Monitor.DocView(SimpleAnalyzer.tokenize(text))
+      assert(Monitor.matches(lowered, view) == Monitor.matches(rule, view), s"doc $id")
+    }
+    val got = Monitor.percolate(docs, Seq("dismax_span" -> rule), SimpleAnalyzer)
+      .collect().map(_.getLong(0)).toSet
+    val want = new Searcher(index, ScoringMode.PreciseBM25()).scored(rule)
+      .select("docId").collect().map(_.getLong(0)).toSet
+    assert(got == want && got.nonEmpty)
+  }
 }

@@ -1,0 +1,205 @@
+package graft
+
+import graft.core._
+import graft.index._
+import graft.search._
+import org.apache.spark.JobExecutionStatus
+import org.apache.spark.sql.DataFrame
+import org.scalatest.BeforeAndAfterAll
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Warm serving: the single-task route a warmed index takes for small
+  * queries must return the cold exhaustive top-k, in one job of one stage,
+  * and must leave tombstoned indexes and queries above its postings bound on
+  * the multi-stage paths. Checked on a built (doc-aligned) index and on its
+  * merge. */
+class WarmServingSpec extends AnyFunSuite with BeforeAndAfterAll {
+  import SparkTestEnv.spark
+
+  // a supplementary-plane term (U+1D41A U+1D41B) and high-BMP fullwidth
+  // terms: UTF-16 order puts the first below the others, UTF-8 byte order
+  // (Catalyst's) above them
+  private val Supp = "𝐚𝐛"
+  private val Full = "ｚｚ"
+  // every doc carries every filler: 2,200 docs × 30 fillers puts the
+  // fillers' disjunction above the route's 2^16-postings bound
+  private val Fillers = (0 until 30).map(i => s"c$i")
+  private val config = IndexConfig(StandardLikeAnalyzer(), flushDocBudget = 64)
+
+  private def docs(n: Int): Seq[InputDoc] = {
+    val rnd = new scala.util.Random(17)
+    (0 until n).map { i =>
+      val words = Seq.fill(5 + rnd.nextInt(20))(s"w${math.min(29, (math.abs(rnd.nextGaussian()) * 8).toInt)}")
+      val extra = (if (i % 7 == 0) Seq(Supp) else Nil) ++ (if (i % 5 == 0) Seq(Full) else Nil) ++
+        (if (i % 11 == 0) Seq("ｚa") else Nil)
+      InputDoc(i.toLong, (words ++ extra ++ Fillers).mkString(" "))
+    }
+  }
+
+  private val tempDirs = scala.collection.mutable.ArrayBuffer.empty[String]
+  private def tempDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    tempDirs += dir
+    dir
+  }
+
+  private lazy val baseDir: String = {
+    val s = spark
+    import s.implicits._
+    val dir = tempDir("graft-warm-")
+    IndexBuilder.build(docs(2200).toDS().repartition(4), dir, config)
+    dir
+  }
+  private lazy val mergedDir: String = {
+    val dir = tempDir("graft-warm-merged-")
+    SegmentMerger.merge(InvertedIndex.open(spark, baseDir), dir, targetPostingsPerGroup = 64,
+      computeMetrics = false)
+    dir
+  }
+
+  private val warmed = scala.collection.mutable.ArrayBuffer.empty[InvertedIndex]
+  private def warm(dir: String): InvertedIndex = {
+    val idx = InvertedIndex.open(spark, dir).warm()
+    warmed += idx
+    idx
+  }
+  private def cold(dir: String) =
+    new Searcher(InvertedIndex.open(spark, dir), ScoringMode.PreciseBM25(), pruneThreshold = Long.MaxValue)
+
+  override def afterAll(): Unit = {
+    warmed.foreach { i => i.postings.unpersist(); i.termStats.unpersist(); i.docs.unpersist() }
+    tempDirs.foreach(graft.tools.Rm.rmTree)
+  }
+
+  private def rows(df: DataFrame): Seq[(Long, Double)] =
+    df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+
+  /** The single-task plan is the only one with a coalesce to one partition. */
+  private def routed(df: DataFrame): Boolean =
+    df.queryExecution.executedPlan.toString.contains("Coalesce 1")
+
+  private def close(a: Double, b: Double): Boolean =
+    math.abs(a - b) <= 1e-9 * math.max(math.abs(a), math.abs(b))
+
+  /** Equal top-k up to float noise: scores agree rank by rank within 1e-9
+    * relative, and docs differ only among those tied with the last score. */
+  private def assertSameTopK(label: String, got: Seq[(Long, Double)], want: Seq[(Long, Double)]): Unit = {
+    assert(got.size == want.size, s"$label: ${got.size} hits, expected ${want.size}")
+    got.zip(want).foreach { case (g, w) => assert(close(g._2, w._2), s"$label: $got vs $want") }
+    if (want.nonEmpty) {
+      def above(xs: Seq[(Long, Double)]) = xs.filterNot(h => close(h._2, want.last._2)).map(_._1).toSet
+      assert(above(got) == above(want), s"$label: $got vs $want")
+    }
+  }
+
+  private val queries: Seq[Query] = Seq(
+    TermQuery("w0"),
+    TermQuery("absent"),
+    BooleanQuery.must(TermQuery("w1"), TermQuery("w2")),
+    BooleanQuery.should(TermQuery("w3"), BoostQuery(TermQuery("w4"), 2f), TermQuery("w12")),
+    BooleanQuery(Seq(Occur.MUST -> TermQuery("w1"), Occur.MUST_NOT -> TermQuery("w2"))),
+    BooleanQuery(Seq(Occur.SHOULD -> TermQuery("w1"), Occur.SHOULD -> TermQuery("w2"),
+      Occur.SHOULD -> TermQuery("w5")), minimumShouldMatch = 2),
+    BooleanQuery(Seq(Occur.MUST -> TermQuery("w0"), Occur.SHOULD -> TermQuery("w6"),
+      Occur.SHOULD -> TermQuery("w7")), minimumShouldMatch = 1),
+    BooleanQuery(Seq(Occur.SHOULD -> TermQuery("w3"), Occur.SHOULD -> BoostQuery(TermQuery("w3"), 2.5f),
+      Occur.MUST -> BoostQuery(TermQuery("w1"), 0.5f), Occur.MUST -> TermQuery("w1"))),
+    BooleanQuery(Seq(Occur.MUST -> TermQuery("w2"), Occur.FILTER -> TermQuery("w0"),
+      Occur.MUST_NOT -> TermQuery("w9"))),
+    BooleanQuery(Seq(Occur.FILTER -> TermQuery("w1"), Occur.FILTER -> TermQuery("w3"))),
+    BoostQuery(BooleanQuery.should(TermQuery("w8"), TermQuery("w10")), 3f),
+    PhraseQuery(Seq("w0", "w1")),
+    PhraseQuery(Seq("w0", "w0")),
+    PhraseQuery(Seq("w1", "w3"), slop = 2),
+    PhraseQuery(Seq("w2", "w0", "w1"), slop = 3),
+    PhraseQuery(Seq("w0", "absent")),
+    PrefixQuery("w1"),
+    PrefixQuery("ｚ"),
+    TermRangeQuery(Some("w2"), Some("w25"), includeLower = true, includeUpper = false),
+    TermRangeQuery(Some(Full), None, includeLower = false, includeUpper = true),
+    TermRangeQuery(Some("w9"), Some(Supp), includeLower = false, includeUpper = false),
+    TermInSetQuery(Set("w5", Supp, "absent")))
+
+  test("warm statistics equal the cold dictionary; sorted terms follow Catalyst's order") {
+    Seq(baseDir, mergedDir).foreach { dir =>
+      val c = InvertedIndex.open(spark, dir)
+      val w = warm(dir)
+      val coldRows = c.termStats.select("term", "df", "ttf", "impFreqs", "impDlbs").collect()
+      assert(w.warmTermStats.get == coldRows.map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap)
+      val fronts = w.warmFrontiers.get
+      coldRows.foreach { r =>
+        val (f, d) = fronts(r.getString(0))
+        assert(f.toSeq == r.getSeq[Int](3) && d.toSeq == r.getAs[Array[Byte]](4).toSeq)
+      }
+      assert(w.warmSortedTerms.get.map(_.toString).toSeq ==
+        c.termStats.select("term").orderBy("term").collect().map(_.getString(0)).toSeq)
+    }
+  }
+
+  test("warm top-k == cold exhaustive top-k, routed to the single-task plan") {
+    // the merged index scores exactly like the one it merges (MergeSpec), so
+    // one cold reference serves both
+    val c = cold(baseDir)
+    val warmSearchers = Seq(baseDir, mergedDir).map(d => new Searcher(warm(d), ScoringMode.PreciseBM25()))
+    queries.foreach { q =>
+      val want = rows(c.search(q, 20))
+      warmSearchers.foreach { w =>
+        val df = w.search(q, 20)
+        assertSameTopK(s"${w.index.dir}: $q", rows(df), want)
+        if (want.nonEmpty) assert(routed(df), s"$q should take the single-task plan")
+      }
+    }
+    // the supplementary-plane term sorts above the fullwidth ones
+    assert(rows(warmSearchers.head.search(
+      TermRangeQuery(Some(Full), None, includeLower = false, includeUpper = true), 20)).nonEmpty)
+  }
+
+  /** (jobs run inside `search`, jobs run by `collect`, stages of those jobs). */
+  private def jobProfile(s: Searcher, q: Query): (Int, Int, Int) = {
+    val sc = spark.sparkContext
+    val tag = s"warm-serving-${System.nanoTime()}"
+    sc.setJobGroup(s"$tag-construct", "search")
+    val df = try s.search(q, 10) finally sc.clearJobGroup()
+    sc.setJobGroup(s"$tag-execute", "collect")
+    try df.collect() finally sc.clearJobGroup()
+    // the status tracker is fed by the listener bus: wait until the collect's
+    // jobs are seen finished (events arrive in order, so any job inside
+    // `search` has been seen by then)
+    val st = sc.statusTracker
+    def executed = st.getJobIdsForGroup(s"$tag-execute").toSeq.flatMap(st.getJobInfo(_))
+    val deadline = System.nanoTime() + 10000000000L
+    while ((executed.isEmpty || executed.exists(_.status != JobExecutionStatus.SUCCEEDED)) &&
+      System.nanoTime() < deadline) Thread.sleep(20)
+    (st.getJobIdsForGroup(s"$tag-construct").length, executed.size, executed.map(_.stageIds.length).sum)
+  }
+
+  test("a routed query runs one job of one stage, and no job inside search()") {
+    val w = new Searcher(warm(mergedDir), ScoringMode.PreciseBM25())
+    Seq(TermQuery("w0"), BooleanQuery.must(TermQuery("w1"), TermQuery("w2")),
+      PhraseQuery(Seq("w0", "w1")), PrefixQuery("w1"),
+      TermRangeQuery(Some("w2"), Some("w25"), includeLower = true, includeUpper = false)).foreach { q =>
+      assert(jobProfile(w, q) == ((0, 1, 1)), s"$q")
+    }
+  }
+
+  // runs last: it tombstones docs of the shared index
+  test("queries above the postings bound and tombstoned indexes keep the multi-stage paths") {
+    val q = BooleanQuery.should(Fillers.map(TermQuery): _*)
+    val df = new Searcher(warm(baseDir), ScoringMode.PreciseBM25()).search(q, 10)
+    assert(!routed(df))
+    assertSameTopK("filler disjunction", rows(df), rows(cold(baseDir).search(q, 10)))
+
+    val s = spark
+    import s.implicits._
+    val deleted = Set(0L, 5L, 7L)
+    Deletes.tombstone(spark, baseDir, deleted.toSeq.map(java.lang.Long.valueOf).toDS())
+    val w = new Searcher(warm(baseDir), ScoringMode.PreciseBM25())
+    Seq(BooleanQuery.must(TermQuery("w0"), TermQuery("w1")), PhraseQuery(Seq("w0", "w1"))).foreach { q =>
+      val got = w.search(q, 10)
+      assert(!routed(got), s"$q")
+      val hits = rows(got)
+      assert(!hits.exists(h => deleted(h._1)), s"$q returned a deleted doc")
+      assertSameTopK(s"tombstoned $q", hits, rows(cold(baseDir).search(q, 10)))
+    }
+  }
+}

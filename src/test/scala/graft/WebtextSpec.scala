@@ -57,6 +57,24 @@ class WebtextSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(a.map(_._2).toSeq == a.map(_._2).sorted.toSeq)
   }
 
+  test("WebIndex.build leaves in storage memory only what the caller cached") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val pages = PageGen.synthesize(spark, 300, 3, p).cache()
+    pages.count()
+    val callers = sc.getPersistentRDDs.keySet -- before
+    assert(callers.nonEmpty)
+    val d = java.nio.file.Files.createTempDirectory("graft-webtext-cache-").toString
+    try {
+      val idx = WebIndex.build(pages, d, IndexConfig(SimpleAnalyzer, withPositions = true), numPartitions = 4)
+      assert(idx.collectionStats.docCount == 300L)
+      assert(sc.getPersistentRDDs.keySet -- before == callers)
+    } finally {
+      pages.unpersist()
+      graft.tools.Rm.rmTree(d)
+    }
+  }
+
   test("corpus has head terms in >50% of docs and doc lengths past the lossy norm range") {
     val stats = index.termStats
     val n = index.collectionStats.docCount
