@@ -512,14 +512,16 @@ object Analyzers {
     case "folding"        => AsciiFoldingAnalyzer()
     case s if s.startsWith("shingle-") => // "shingle-<n>" over SimpleAnalyzer
       ShingleAnalyzer(SimpleAnalyzer, s.stripPrefix("shingle-").toInt)
-    case s if s.startsWith("commongrams:") => // commongrams:<inner>:<w1,w2,..>
+    // commongrams[-query]:<inner>:<w1,w2,..> — split at the LAST colon: the
+    // inner name may hold colons (phonetic:…), the word list holds none
+    case s if s.startsWith("commongrams:") =>
       val rest = s.stripPrefix("commongrams:")
-      val sep = rest.indexOf(':')
+      val sep = rest.lastIndexOf(':')
       CommonGramsAnalyzer(byName(rest.substring(0, sep)),
         rest.substring(sep + 1).split(',').toSet)
     case s if s.startsWith("commongrams-query:") =>
       val rest = s.stripPrefix("commongrams-query:")
-      val sep = rest.indexOf(':')
+      val sep = rest.lastIndexOf(':')
       CommonGramsQueryAnalyzer(byName(rest.substring(0, sep)),
         rest.substring(sep + 1).split(',').toSet)
     case "hunspell"       => HunspellAnalyzer.empty // dictionary is a user asset

@@ -271,20 +271,12 @@ object IndexBuilder {
     new SegmentFlusher(cfg, segNamespace, pid, docs)
 
   /** The `term_stats` aggregation shared by both refresh variants: per-term
-    * df/ttf (map-side-combined counts) PLUS the merged competitive-impact
-    * frontier ([[ImpactFrontier]] — a bounded 256-slot buffer, equally
-    * map-side combinable), so a query's per-term max score bound is a
-    * driver-side lookup, never a per-query postings-metadata job. Nested
-    * pruning reads only `blocks.impFreqs`/`blocks.impDlbs`, not payloads. */
-  private def termStatsFrame(data: DataFrame): DataFrame = {
-    val frontierUdaf = udaf(ImpactFrontier.agg)
+    * df/ttf, summed from the postings rows' scalar partials (map-side
+    * combined; the nested `blocks` payload is never read). */
+  private def termStatsFrame(data: DataFrame): DataFrame =
     data.filter(col("kind") === 1)
       .groupBy(col("term"))
-      .agg(sum(col("df")).cast("long").as("df"), sum(col("ttf")).as("ttf"),
-        frontierUdaf(col("blocks.impFreqs"), col("blocks.impDlbs")).as("frontier"))
-      .select(col("term"), col("df"), col("ttf"),
-        col("frontier.impFreqs").as("impFreqs"), col("frontier.impDlbs").as("impDlbs"))
-  }
+      .agg(sum(col("df")).cast("long").as("df"), sum(col("ttf")).as("ttf"))
 
   /** Recompute global term/collection statistics from the committed segment
     * data. The only shuffle of the build; partial (map-side) aggregation makes
@@ -550,9 +542,9 @@ final class InvertedIndex private (
     * streamed-append indexes, where a segment is one flusher run over a doc
     * slice. A MERGE breaks it: merged postings are re-sharded by
     * (term, salt), so one doc's terms scatter across merged "segments".
-    * Per-segment document-at-a-time scoring ([[graft.search.Wand]]) is only
-    * sound when this holds; merged indexes use the doc-keyed aggregation
-    * path instead. */
+    * The per-segment positional plans (the searcher's segment-local phrase
+    * and interval matching) are only sound when this holds; merged indexes
+    * use the doc-keyed plans instead. */
   lazy val docAlignedSegments: Boolean =
     parent.isEmpty &&
       !java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/merge_manifest"))
@@ -600,14 +592,17 @@ final class InvertedIndex private (
           "postingsFlushed", "flushOrdinal")
   }
 
-  /** term statistics are merge-invariant — resolved through the parent
-    * chain. Each snapshot's stats tables are immutable (`term_stats_v<N>`),
-    * so a pinned or time-traveled reader scans exactly the files its commit
-    * wrote, no matter how many later commits refresh the latest stats. */
+  /** term statistics (`term`, `df`, `ttf`) are merge-invariant — resolved
+    * through the parent chain. Each snapshot's stats tables are immutable
+    * (`term_stats_v<N>`), so a pinned or time-traveled reader scans exactly
+    * the files its commit wrote, no matter how many later commits refresh
+    * the latest stats. Indexes written with extra per-term columns open the
+    * same: only these three are read. */
   @transient lazy val termStats: DataFrame = parent match {
     case Some(p) => p.termStats
     case None => spark.read.parquet(
       IndexBuilder.statsPath(dir, "term_stats", snapshot.map(_.version).getOrElse(0)))
+      .select("term", "df", "ttf")
   }
 
   /** Tombstoned doc ids (`docId` column) pending physical purge, or None.
@@ -624,13 +619,6 @@ final class InvertedIndex private (
   }
 
   @transient @volatile private var warmStats: Map[String, (Long, Long)] = null
-  @transient @volatile private var warmFronts: Map[String, (Array[Int], Array[Byte])] = null
-
-  /** Whether `term_stats` carries the merged per-term impact frontier
-    * ([[ImpactFrontier]]) — indexes built before the frontier columns
-    * existed fall back to a per-query metadata job for max score bounds. */
-  @transient lazy val hasImpactStats: Boolean =
-    termStats.columns.contains("impFreqs")
 
   /** Serving mode: pin the postings and statistics views in cluster cache
     * (compressed columnar) and materialize them — the analog of a
@@ -640,33 +628,20 @@ final class InvertedIndex private (
     * The term dictionary additionally becomes driver-resident when it is
     * small enough (Zipf vocabularies are tiny relative to postings): that
     * removes the per-query term-stats lookup JOB entirely — the
-    * `TermStates.build` of a warm reader is a RAM lookup, not an IO. The
-    * impact frontiers ride along, so per-term max score bounds are RAM
-    * lookups too (the pruned paths' pass-2 tau needs no metadata job). */
+    * `TermStates.build` of a warm reader is a RAM lookup, not an IO — and
+    * lets the searcher size a query's top-k plan before any job runs. */
   def warm(): this.type = {
     postings.cache(); termStats.cache(); docs.cache()
     postings.count(); docs.count()
     val n = termStats.count()
-    if (n <= 2000000L) {
-      if (hasImpactStats) {
-        val rows = termStats.select("term", "df", "ttf", "impFreqs", "impDlbs").collect()
-        warmStats = rows.map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-        warmFronts = rows.map(r => r.getString(0) ->
-          (r.getSeq[Int](3).toArray, r.getAs[Array[Byte]](4))).toMap
-      } else {
-        warmStats = termStats.select("term", "df", "ttf").collect()
-          .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-      }
-    }
+    if (n <= 2000000L)
+      warmStats = termStats.select("term", "df", "ttf").collect()
+        .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     this
   }
 
   /** Driver-resident term dictionary when [[warm]]ed (term → (df, ttf)). */
   def warmTermStats: Option[Map[String, (Long, Long)]] = Option(warmStats)
-
-  /** Driver-resident impact frontiers when [[warm]]ed on a frontier-bearing
-    * index (term → (impFreqs, impDlbs)). */
-  def warmFrontiers: Option[Map[String, (Array[Int], Array[Byte])]] = Option(warmFronts)
 
   @transient @volatile private var warmSorted: Array[UTF8String] = null
 

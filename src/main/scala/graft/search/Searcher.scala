@@ -130,35 +130,34 @@ object ScoringMode {
   * the exact distributed analog of the reference's per-slice collectors +
   * `TopDocs.merge` (`lucene/core/src/java/org/apache/lucene/search/TopDocs.java:203`).
   *
-  * Single-term top-k uses two-pass block-max pruning (SURVEY.md §7.2.5):
-  * pass 1 scores only the best blocks by impact upper bound to obtain a
-  * conservative threshold (a true k-th best score, hence a lower bound on the
-  * final k-th best), pass 2 skips every block whose upper bound is below it.
-  * This is the static-threshold distributed analog of the reference's
-  * `ImpactsDISI` / block-max WAND
-  * (`lucene/core/src/java/org/apache/lucene/search/ImpactsDISI.java:56`).
+  * Flat term queries — a term, or a boolean of (boosted) term clauses with
+  * MUST / SHOULD / MUST_NOT / msm, FILTER only without a `queryCache` — have
+  * one top-k plan ([[flatPlan]]), the reference's one collector per index
+  * slice merged by `TopDocs.merge`
+  * (`lucene/core/src/java/org/apache/lucene/search/IndexSearcher.java:106`):
+  * the query's `(term, block)` rows are cut into R doc-range slices, each
+  * slice is scored by one [[SingleTask.flatTopK]] kernel that keeps only its
+  * own docs, and one TakeOrdered merges the slices. R grows with the
+  * query's postings (Σdf) up to the default parallelism. A
+  * [[InvertedIndex.warm]]ed index always takes the plan, and at R = 1 it
+  * reads the rows into ONE partition: one job, one stage, one task, no job
+  * before the action. A cold index takes it above `pruneThreshold`
+  * postings, after its one statistics lookup, and runs the exhaustive join
+  * plan below.
   *
-  * Small queries on a warm index take a single-task route instead
-  * ([[singleTaskPlan]]): the reference scores a query on a warm reader in
-  * one thread through one collector, so [[search]] reads the query terms'
-  * posting rows into ONE partition and scores them there with one kernel —
-  * one Spark job, one stage, one task, no shuffle, window or broadcast
-  * threshold, and no job before the action. It applies when all of these
-  * hold, and every other query keeps the paths above unchanged:
-  *  - the index is [[InvertedIndex.warm]]ed, so term statistics are read on
-  *    the driver without a job;
-  *  - no tombstones are pending;
-  *  - the query is a term, a boolean of (boosted) term clauses (FILTER
-  *    clauses only without a `queryCache`), an exact or sloppy phrase, or a
-  *    prefix / range / term-set expansion of at most 4,096 terms;
-  *  - its distinct terms hold at most 2^16 postings (Σdf, the
-  *    `SingleTaskMaxPostings` bound).
+  * Small exact / sloppy phrases and prefix / range / term-set expansions of
+  * at most 4,096 terms on a warm index take the same one-task form
+  * ([[singleTaskPlan]]) while their terms hold at most 2^16 postings (Σdf,
+  * the `SingleTaskMaxPostings` bound). Pending tombstones send every query
+  * to the exhaustive plan.
   */
 final class Searcher(
     val index: InvertedIndex,
     val mode: ScoringMode = ScoringMode.PreciseBM25(),
-    /** hits below which pruning is not attempted — the analog of the
-      * reference's totalHitsThreshold (`IndexSearcher.java:100`) */
+    /** postings (Σdf of a flat query's distinct terms) up to which a cold
+      * index scores the query with the exhaustive join plan; above it the
+      * query takes the sliced top-k plan ([[flatPlan]]). A warm index
+      * ignores it. `Long.MaxValue` keeps every cold query exhaustive. */
     val pruneThreshold: Long = 1000L,
     /** per-FILTER result cache with the reference's usage-tracking
       * admission policy ([[LRUQueryCache]]); None = no filter caching */
@@ -242,26 +241,6 @@ final class Searcher(
       }
   }
 
-  /** Upper bound of [[termScorer]] over any posting in a block from its
-    * competitive-impact frontier: every posting (freq, dl) is dominated by
-    * some frontier pair (freq' ≥ freq, dl' ≤ dl), and each similarity here is
-    * monotone in freq / antitone in length, so the max frontier score bounds
-    * the block. Tighter than the single (maxFreq, minDlb) pair — the
-    * reference's `ImpactsDISI.getMaxScore` over serialized impacts. */
-  private def termUpperBound(stats: TermStats, boost: Double): (Seq[Int], Array[Byte]) => Double = {
-    val f = termScorer(stats, boost)
-    (impFreqs, impDlbs) => {
-      var best = 0.0
-      var i = 0
-      while (i < impFreqs.length) {
-        val s = f(impFreqs(i), SmallFloat.byte4ToInt(impDlbs(i)))
-        if (s > best) best = s
-        i += 1
-      }
-      best
-    }
-  }
-
   /** Scorer for phrase hits: idf is the sum of the member terms' idfs
     * (`BM25Similarity.idfExplain` over a term array). freq is a Double —
     * sloppy-phrase frequency is fractional (Σ 1/(1+matchLength)). */
@@ -329,18 +308,6 @@ final class Searcher(
     index.warmTermStats match {
       case Some(m) => // warm serving mode: RAM lookup, no Spark job
         terms.iterator.flatMap(t => m.get(t).map(s => t -> TermStats(s._1, s._2))).toMap
-      case None if index.hasImpactStats =>
-        // cold mode: the SAME single collect fetches df/ttf AND the impact
-        // frontier, so the pruned paths' max-score bounds need no second job
-        val rows = index.termStats
-          .filter(col("term").isin(terms.toSeq: _*))
-          .select("term", "df", "ttf", "impFreqs", "impDlbs")
-          .collect()
-        rows.foreach { r =>
-          frontierCache.put(r.getString(0),
-            (r.getSeq[Int](3).toArray, r.getAs[Array[Byte]](4)))
-        }
-        rows.map(r => r.getString(0) -> TermStats(r.getLong(1), r.getLong(2))).toMap
       case None =>
         index.termStats
           .filter(col("term").isin(terms.toSeq: _*))
@@ -350,16 +317,6 @@ final class Searcher(
           .toMap
     }
   }
-
-  /** Frontier rows gathered by cold-mode [[lookupStats]] calls (warm mode
-    * reads [[InvertedIndex.warmFrontiers]] instead). */
-  private val frontierCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Array[Int], Array[Byte])]
-
-  /** This term's merged impact frontier, if the index carries one: the input
-    * to a DRIVER-side max-score-bound computation (no Spark job). */
-  private def frontierOf(term: String): Option[(Array[Int], Array[Byte])] =
-    index.warmFrontiers.flatMap(_.get(term)).orElse(frontierCache.get(term))
 
   // ---------------------------------------------------------------- leaves
 
@@ -387,201 +344,6 @@ final class Searcher(
       case None => emptyFrame
       case Some(ts) => decodeScored(blocksOf(term), termScorer(ts, boost))
     }
-
-  /** 1-row threshold frame from a probe's top-k: the k-th best probe score,
-    * or -Inf when the probe yields fewer than k docs (no safe threshold —
-    * -Inf prunes nothing, which IS the exhaustive fallback, in-plan). Joined
-    * back by a 1-row broadcast so probe + pruned pass run as ONE Spark
-    * action — the r3 verdict's per-query action-count fix.
-    *
-    * The emitted threshold is RELAXED by a float-reassociation epsilon:
-    * pass 2 re-sums the same contributions in a different aggregation order,
-    * so the threshold-defining doc's recomputed score can land 1 ulp below
-    * the probe's T and a strict `score ≥ T` filter would drop it (the
-    * driver-side completeness fallback this replaces was masking exactly
-    * that). Extra sub-T candidates the relaxation admits rank below k in the
-    * final TakeOrdered — under-inclusion was the only hazard. */
-  private def thresholdFrame(probeTop: DataFrame, k: Int): DataFrame = {
-    val t = min(col("score"))
-    probeTop.agg(
-      when(org.apache.spark.sql.functions.count(lit(1)) < k, lit(Double.NegativeInfinity))
-        .otherwise(t - greatest(abs(t) * lit(1e-9), lit(1e-12))).as("thr"))
-  }
-
-  /** Two-pass block-max pruned top-k for a single term (see class doc) —
-    * both passes inside one Spark action (the threshold is an in-plan 1-row
-    * broadcast, not a driver round-trip). */
-  private def prunedTermTopK(term: String, ts: TermStats, boost: Double, k: Int): DataFrame = {
-    val ub = termUpperBound(ts, boost)
-    val ubUdf = udf((impFreqs: Seq[Int], impDlbs: Array[Byte]) => ub(impFreqs, impDlbs))
-    val blocks = blocksOf(term)
-    val withUb = blocks.withColumn("ub", ubUdf(col("impFreqs"), col("impDlbs")))
-    // pass 1: exact-score the k best blocks by upper bound (≥ k docs since
-    // every block is non-empty) → the k-th best real score is a valid
-    // conservative threshold for pass 2.
-    val probe = withUb.orderBy(desc("ub")).limit(k)
-      .drop("ub").as[PostingBlock]
-    val scorer = termScorer(ts, boost)
-    val probeTop = decodeScored(probe, scorer)
-      .orderBy(desc("score"), asc("docId")).limit(k)
-    val thr = thresholdFrame(probeTop, k)
-    val pruned = withUb.crossJoin(broadcast(thr))
-      .filter(col("ub") >= col("thr"))
-      .drop("ub", "thr").as[PostingBlock]
-    decodeScored(pruned, scorer).orderBy(desc("score"), asc("docId")).limit(k)
-  }
-
-  /** Block-max pruned top-k for multi-term sum-scored booleans — the
-    * distributed analog of the reference's MAXSCORE/block-max-WAND scorers
-    * (`lucene/core/src/java/org/apache/lucene/search/WANDScorer.java:39`,
-    * `MaxScoreBulkScorer.java:26`, `BlockMaxConjunctionBulkScorer.java:36`),
-    * with the dynamic shared-memory threshold replaced by a two-pass static
-    * threshold (SURVEY.md §7.3) — a trade Lucene itself can't make because it
-    * has no cheap "probe the best blocks first" pass over a columnar layout.
-    *
-    * Correctness argument (every step conservative):
-    *  - Pass 1 decodes only each term's top `k` blocks by impact upper bound
-    *    and aggregates exact per-doc partial sums. A partial sum only omits
-    *    non-negative contributions, so it lower-bounds the doc's true score;
-    *    for conjunctions, probe docs seen under every term are true matches.
-    *    Hence the k-th best probe score `T` lower-bounds the true k-th best.
-    *  - Pass 2 skips a block `b` of term `t` iff
-    *    `ub_t(b) + Σ_{t'≠t} maxUb(t') < T`. Any doc `d` in a skipped block has
-    *    `score(d) ≤ ub_t(b) + Σ_{t'≠t} maxUb(t') < T`, so `d` cannot reach the
-    *    top k — skipping it is safe.
-    *  - A doc whose computed pass-2 score is ≥ T can have had no block skipped
-    *    (a skipped block implies true score < T), so every result row ≥ T is
-    *    exact; docs below T are discarded, and ≥ k docs score ≥ T by pass 1.
-    *
-    * When the probe yields < k candidates the threshold is -Inf (prunes
-    * nothing) — the exhaustive fallback expressed in-plan, keeping the whole
-    * query ONE Spark action.
-    */
-  private def prunedBooleanTopK(
-      terms: Seq[String], stats: Map[String, TermStats], boost: Double, k: Int,
-      requireAll: Boolean): DataFrame = {
-    // duplicate clauses contribute multiplicatively (every scorer here is
-    // linear in boost, so multiplicity folds into the per-term boost —
-    // matches the exhaustive path's summed duplicate frames)
-    val mult: Map[String, Int] = terms.groupBy(identity).map { case (t, g) => t -> g.size }
-    val present = terms.distinct.filter(stats.contains)
-    if (requireAll && present.size < terms.distinct.size) return emptyFrame
-    if (present.isEmpty) return emptyFrame
-    if (present.size == 1) {
-      val t = present.head
-      return prunedTermTopK(t, stats(t), boost * mult(t), k)
-    }
-
-    val scorers = present.map(t => t -> termScorer(stats(t), boost * mult(t))).toMap
-    val ubs = present.map(t => t -> termUpperBound(stats(t), boost * mult(t))).toMap
-    val ubUdf = udf((term: String, impFreqs: Seq[Int], impDlbs: Array[Byte]) =>
-      ubs(term)(impFreqs, impDlbs))
-
-    // One metadata-only scan: every block of every query term, with its score
-    // upper bound. Blocks stay encoded until pass 2 decodes the survivors.
-    val blocks = index.postings
-      .filter(col("term").isin(present: _*))
-      .select(col("segmentId"), col("term"), explode(col("blocks")).as("b"))
-      .select(col("segmentId"), col("term"), col("b.*"))
-      .withColumn("ub", ubUdf(col("term"), col("impFreqs"), col("impDlbs")))
-
-    // Per-term MAX upper bound: driver-side over the term_stats impact
-    // frontier (no Spark job — the frontier is exact, merged at build time);
-    // a frontier-less legacy index pays the metadata job instead.
-    val maxUb: Map[String, Double] = {
-      val fromFrontier = present.flatMap { t =>
-        frontierOf(t).map(f => t -> ubs(t)(f._1.toIndexedSeq, f._2))
-      }.toMap
-      if (fromFrontier.size == present.size) fromFrontier
-      else blocks.groupBy("term").agg(max("ub").as("m"))
-        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    }
-    if (maxUb.size < present.size && requireAll) return emptyFrame
-    val sumMaxUb = maxUb.values.sum
-
-    def decodeSum(selected: DataFrame): DataFrame = {
-      val scored = selected.select(col("term"), struct(
-          col("firstDoc"), col("lastDoc"), col("count"), col("maxFreq"), col("minDlb"),
-          col("impFreqs"), col("impDlbs"),
-          col("docDeltas"), col("freqs"), col("dlbs"), col("positions")).as("b"))
-        .as[(String, PostingBlock)]
-        .mapPartitions { it =>
-          it.flatMap { case (t, b) =>
-            val f = scorers(t)
-            val d = PostingsCodec.decodeBlock(b)
-            Iterator.tabulate(d.docs.length)(i => (d.docs(i), f(d.freqs(i), d.doclens(i))))
-          }
-        }.toDF("docId", "score")
-      scored.groupBy("docId")
-        .agg(sum("score").as("score"), org.apache.spark.sql.functions.count(lit(1)).as("cnt"))
-    }
-
-    // Pass 1: probe = each term's k best blocks by upper bound → 1-row
-    // threshold frame (k-th best exact probe score; -Inf when the probe has
-    // fewer than k docs, which makes pass 2 prune nothing — the exhaustive
-    // fallback, IN-PLAN). Pass 2 joins it back as a 1-row broadcast, so the
-    // whole pruned query is ONE Spark action end to end (r3 verdict #1b).
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("term").orderBy(desc("ub"), asc("firstDoc"))
-    val probe = blocks.withColumn("rn", row_number().over(w)).filter(col("rn") <= k).drop("rn")
-    val probeAgg = decodeSum(probe)
-    val probeTop = (if (requireAll) probeAgg.filter(col("cnt") === present.size) else probeAgg)
-      .orderBy(desc("score"), asc("docId")).limit(k)
-    val thr = thresholdFrame(probeTop, k)
-
-    // Pass 2: static per-term block cutoff tau_t = T - Σ_{t'≠t} maxUb(t')
-    // prunes blocks before the shuffle. When segments own their docs'
-    // complete postings (built/streamed indexes), the survivors are grouped
-    // by segment and scored by the in-partition dynamic block-max WAND loop,
-    // whose local top-k heap lifts T into a rising threshold and skips
-    // further blocks without decoding. Merged indexes re-shard postings by
-    // (term, salt) — one doc's terms scatter across "segments", so the
-    // per-segment DAAT sums would be partial; they take the doc-keyed
-    // aggregation path (still statically pruned) instead.
-    val slackOf = typedLit(present.map(t => t -> (sumMaxUb - maxUb(t))).toMap)
-    val kept = blocks.crossJoin(broadcast(thr))
-      .filter(col("ub") >= col("thr") - element_at(slackOf, col("term")))
-    val nTerms = present.size
-    val candidates =
-      if (index.docAlignedSegments) {
-        val segRows = kept.select(col("segmentId"), col("term"), col("ub"), col("thr"), struct(
-            col("firstDoc"), col("lastDoc"), col("count"), col("maxFreq"), col("minDlb"),
-            col("impFreqs"), col("impDlbs"),
-            col("docDeltas"), col("freqs"), col("dlbs"), col("positions")).as("b"))
-          .as[(Long, String, Double, Double, PostingBlock)]
-        segRows.groupByKey(_._1)
-          .flatMapGroups { (_, it0) =>
-            // conjunctions take the WAND loop (all terms required ⇒ DAAT
-            // frontier); disjunctions take the MAXSCORE bulk scorer, whose
-            // essential/non-essential split is the better fit when term max
-            // scores are skewed (the reference routes top-k SHOULD queries
-            // through MaxScoreBulkScorer the same way). The static threshold
-            // rides on every row (same 1-row broadcast) — read it once.
-            val it = it0.buffered
-            if (!it.hasNext) Iterator.empty
-            else {
-              val threshold = it.head._4
-              if (requireAll)
-                Wand.segmentTopK(it.map(r => (r._2, r._3, r._5)), scorers, nTerms,
-                  requireAll, threshold, k)
-              else
-                Wand.segmentTopKMaxScore(it.map(r => (r._2, r._3, r._5)), scorers,
-                  threshold, k)
-            }
-          }.toDF("docId", "score")
-      } else {
-        val agg = decodeSum(kept.drop("thr"))
-        (if (requireAll) agg.filter(col("cnt") === nTerms) else agg)
-          .crossJoin(broadcast(thr))
-          .filter(col("score") >= col("thr"))
-          .select("docId", "score")
-      }
-    // Completeness: pass 1 guarantees ≥ k docs with true score ≥ T whenever
-    // T > -Inf (probe partial sums lower-bound true scores), and T = -Inf
-    // prunes nothing, so the pass-2 result is always the exact top-k — no
-    // driver-side completeness check, no plan re-execution.
-    candidates.orderBy(desc("score"), asc("docId")).limit(k)
-  }
 
   /** Synonym: union postings, sum freqs per doc, score as one pseudo-term with
     * df = max clause df (`lucene/core/src/java/org/apache/lucene/search/SynonymQuery.java:54`). */
@@ -621,18 +383,16 @@ final class Searcher(
     * (its `term IN (...)` list stays small). */
   private val ExpansionCap = 4096
 
-  /** Candidate-postings bound of the single-task route ([[singleTaskPlan]]):
-    * a query whose distinct terms hold at most this many postings (Σdf, read
-    * off the warm dictionary) is scored inside ONE task, which must stay
-    * cheaper than the jobs and stages it replaces (≈ 60 ms per job on a
-    * 4-vCPU host). The scoring loops alone run ≈ 9M postings/s (≈ 7 ms at
-    * the bound); moving the rows into the one task and decoding them raises
-    * that to ≈ 0.8 µs per posting. Measured at 100k pages (warm merged index,
-    * `local[4]`), p50 of the single-task plan vs the multi-stage plan for the
-    * same query: a head term (Σdf 99,997) 134 vs 332 ms, a 4-term OR
-    * (Σdf 97,605) 110 vs 645 ms, a 4-term OR of rarer terms (Σdf 6,273) 73
-    * vs 470 ms. The bound is conservative at that scale; it keeps the single
-    * task off posting lists long enough to outgrow a job's overhead. */
+  /** Postings (Σdf of the distinct terms) scored by one task: the
+    * single-task route's bound ([[singleTaskPlan]]) and the slice size of
+    * [[flatPlan]]. One task must stay cheaper than the jobs and stages it
+    * replaces (≈ 60 ms per job on a 4-vCPU host). The scoring loops alone
+    * run ≈ 9M postings/s (≈ 7 ms at the bound); moving the rows into the one
+    * task and decoding them raises that to ≈ 0.8 µs per posting. Measured at
+    * 100k pages (warm merged index, `local[4]`), p50 of the single-task plan
+    * vs the former two-pass pruned plan for the same query: a head term
+    * (Σdf 99,997) 134 vs 332 ms, a 4-term OR (Σdf 97,605) 110 vs 645 ms, a
+    * 4-term OR of rarer terms (Σdf 6,273) 73 vs 470 ms. */
   private val SingleTaskMaxPostings = 1L << 16
 
   /** The rarest term's doc set as a broadcast membership filter — the
@@ -1469,32 +1229,76 @@ final class Searcher(
     case _ => None
   }
 
-  // ------------------------------------------------------ single-task route
+  // ------------------------------------------------------------ top-k plans
 
-  /** The single-task plan for a rewritten query, or None when it takes the
-    * multi-stage paths. Routed: the index is [[InvertedIndex.warm]]ed (its
-    * term statistics are driver-resident), no tombstones are pending, the
-    * shape is a flat term query / boolean (FILTER clauses only without a
-    * query cache), an exact or sloppy phrase, or a prefix / range / term-set
+  /** One `(term, block)` row per posting block of `terms`. */
+  private def termBlocks(terms: Seq[String]): Dataset[(String, PostingBlock)] =
+    index.postings
+      .filter(col("term").isin(terms: _*))
+      .select(col("term"), explode(col("blocks")).as("b"))
+      .as[(String, PostingBlock)]
+
+  private def topK(hits: DataFrame, k: Int): DataFrame =
+    hits.orderBy(desc("score"), asc("docId")).limit(k)
+
+  /** The top-k plan of a flat term query (see the class doc), or None for
+    * any other shape. Its R slices cut the doc-id line at multiples of
+    * `w = ceil(docCount / R)`: doc d belongs to slice `min(d / w, R − 1)`, a
+    * block goes to every slice its `[firstDoc, lastDoc]` overlaps, and each
+    * slice's kernel keeps only its own docs, so the clamp keeps the slices
+    * exact for any spread of doc ids. R = ceil(Σdf / 2^16), at most the
+    * default parallelism. */
+  private def flatPlan(q: Query, k: Int): Option[DataFrame] =
+    flatten(q).filter(f => f.tie < 0 && (queryCache.isEmpty || !hasFilter(q))).map { f =>
+      val stats = lookupStats(f.clauses.map(_.term).toSet)
+      val present = f.clauses.map(_.term).distinct.filter(stats.contains)
+      val postings = present.map(stats(_).docFreq).sum
+      val warm = index.warmTermStats.isDefined
+      if (present.isEmpty) emptyFrame
+      else if (!warm && postings <= pruneThreshold) topK(compile(q, stats, 1.0), k)
+      else {
+        val clauses = f.clauses.toArray
+        val scorers = clauses.map { c =>
+          if (c.kind == 2 || c.boost == 0.0 || !stats.contains(c.term)) null
+          else termScorer(stats(c.term), c.boost)
+        }
+        val (nMust, msm) = (f.nMust, f.msm)
+        val r = math.max(1, math.min((postings + SingleTaskMaxPostings - 1) / SingleTaskMaxPostings,
+          spark.sparkContext.defaultParallelism.toLong).toInt)
+        if (warm && r == 1)
+          topK(termBlocks(present).coalesce(1).mapPartitions { it =>
+            SingleTask.flatTopK(it, clauses, scorers, nMust, msm, k)
+          }.toDF("docId", "score"), k)
+        else {
+          val w = math.max(1L, (cs.docCount + r - 1) / r)
+          val sliceOf: Long => Int = d => math.min(math.max(d / w, 0L), r - 1L).toInt
+          topK(termBlocks(present)
+            .flatMap { case (t, b) => (sliceOf(b.firstDoc) to sliceOf(b.lastDoc)).iterator.map(s => (s, t, b)) }
+            .groupByKey(_._1)
+            .flatMapGroups { (s, it) =>
+              SingleTask.flatTopK(it.map(x => (x._2, x._3)), clauses, scorers, nMust, msm, k,
+                if (s == 0) Long.MinValue else s * w,
+                if (s == r - 1) Long.MaxValue else (s + 1) * w - 1)
+            }.toDF("docId", "score"), k)
+        }
+      }
+    }
+
+  /** The single-task plan of a small phrase or expansion on a warm index, or
+    * None when it takes the multi-stage paths. Routed: the index is
+    * [[InvertedIndex.warm]]ed (its term statistics are driver-resident), the
+    * shape is an exact or sloppy phrase or a prefix / range / term-set
     * expansion, and its distinct terms hold at most [[SingleTaskMaxPostings]]
     * postings. The plan reads those terms' posting rows into one partition
     * and scores them there with one [[SingleTask]] kernel — one job, one
     * stage, one task, no shuffle, no broadcast and no job before the action. */
   private def singleTaskPlan(q: Query, k: Int): Option[DataFrame] = {
-    if (index.warmTermStats.isEmpty || tombstones.isDefined) return None
-    def bounded(terms: Seq[String], stats: Map[String, TermStats]): Boolean =
-      terms.distinct.flatMap(stats.get).map(_.docFreq).sum <= SingleTaskMaxPostings
-    def rows(terms: Seq[String]): Dataset[(String, PostingBlock)] =
-      index.postings
-        .filter(col("term").isin(terms: _*))
-        .select(col("term"), explode(col("blocks")).as("b"))
-        .coalesce(1)
-        .as[(String, PostingBlock)]
-    def topK(hits: DataFrame): DataFrame = hits.orderBy(desc("score"), asc("docId")).limit(k)
+    if (index.warmTermStats.isEmpty) return None
+    def rows(terms: Seq[String]): Dataset[(String, PostingBlock)] = termBlocks(terms).coalesce(1)
     q match {
       case PhraseQuery(ts, slop) if ts.size >= 2 && (slop == 0 || ts.distinct.size == ts.size) =>
         val stats = lookupStats(ts.toSet)
-        if (!bounded(ts, stats)) None
+        if (ts.distinct.flatMap(stats.get).map(_.docFreq).sum > SingleTaskMaxPostings) None
         else if (ts.exists(t => !stats.contains(t))) Some(emptyFrame)
         else {
           val scorer = phraseScorer(ts.map(stats), 1.0)
@@ -1502,32 +1306,15 @@ final class Searcher(
           val terms = ts.toIndexedSeq
           Some(topK(rows(ts.distinct).mapPartitions { it =>
             SingleTask.topK(PhraseSegment.matchingDocs(SingleTask.byTerm(it), terms, rarest, slop, scorer), k)
-          }.toDF("docId", "score")))
+          }.toDF("docId", "score"), k))
         }
       case e @ (_: PrefixQuery | _: TermRangeQuery | _: TermInSetQuery) =>
         dictionaryMatches(e).map { terms =>
           if (terms.isEmpty) emptyFrame
           else topK(rows(terms).mapPartitions(it => SingleTask.smallestDocs(it.map(_._2), k))
-            .toDF("docId").withColumn("score", lit(1.0)))
+            .toDF("docId").withColumn("score", lit(1.0)), k)
         }
-      case _ =>
-        flatten(q).filter(f => f.tie < 0 && (queryCache.isEmpty || !hasFilter(q))).flatMap { f =>
-          val stats = lookupStats(f.clauses.map(_.term).toSet)
-          val present = f.clauses.map(_.term).distinct.filter(stats.contains)
-          if (!bounded(present, stats)) None
-          else if (present.isEmpty) Some(emptyFrame)
-          else {
-            val clauses = f.clauses.toArray
-            val scorers = clauses.map { c =>
-              if (c.kind == 2 || c.boost == 0.0 || !stats.contains(c.term)) null
-              else termScorer(stats(c.term), c.boost)
-            }
-            val (nMust, msm) = (f.nMust, f.msm)
-            Some(topK(rows(present).mapPartitions { it =>
-              SingleTask.flatTopK(it, clauses, scorers, nMust, msm, k)
-            }.toDF("docId", "score")))
-          }
-        }
+      case _ => None
     }
   }
 
@@ -1653,14 +1440,10 @@ final class Searcher(
     * the reference's `TopDocs.merge` tiebreak. */
   def search(q: Query, k: Int): DataFrame = {
     val rewritten = QueryRewriter.rewrite(q)
-    // with pending deletes, block-metadata pruning thresholds could count
-    // tombstoned docs toward k — take the exhaustive path until a merge
-    // purges them (the reference's pruning also degrades under deletions)
-    if (tombstones.isDefined)
-      return scored(rewritten).orderBy(desc("score"), asc("docId")).limit(k)
-    val routed = singleTaskPlan(rewritten, k)
-    if (routed.isDefined) return routed.get
-    rewritten match {
+    // the top-k plans read postings directly and would count tombstoned docs
+    // toward k — take the exhaustive path until a merge purges them
+    if (tombstones.isDefined) return topK(scored(rewritten), k)
+    flatPlan(rewritten, k).orElse(singleTaskPlan(rewritten, k)).getOrElse(rewritten match {
       // constant-score expansions: top-k = k smallest doc ids, block-metadata
       // pruned (see expansionTopK) — the r1 p95 tail was wide prefix/range
       // expansions decoding much of the vocabulary for 10 rows
@@ -1668,27 +1451,8 @@ final class Searcher(
         expansionTopK(expansionPred(e), 1.0, k, dictFirst = false)
       case e @ (_: FuzzyQuery | _: RegexpQuery) =>
         expansionTopK(expansionPred(e), 1.0, k, dictFirst = true)
-      case TermQuery(t) =>
-        val stats = lookupStats(Set(t))
-        stats.get(t) match {
-          case None => emptyFrame
-          case Some(ts) if ts.docFreq > pruneThreshold => prunedTermTopK(t, ts, 1.0, k)
-          case Some(ts) =>
-            termFrame(t, stats, 1.0).orderBy(desc("score"), asc("docId")).limit(k)
-        }
-      case b @ BooleanQuery(clauses, msm)
-          if msm <= 1 && clauses.nonEmpty &&
-            clauses.forall(_._2.isInstanceOf[TermQuery]) &&
-            (clauses.forall(_._1 == Occur.SHOULD) || clauses.forall(_._1 == Occur.MUST)) =>
-        val terms = clauses.map(_._2.asInstanceOf[TermQuery].term)
-        val stats = lookupStats(terms.toSet)
-        val requireAll = clauses.head._1 == Occur.MUST
-        val totalDf = terms.flatMap(stats.get(_)).map(_.docFreq).sum
-        if (totalDf > pruneThreshold) prunedBooleanTopK(terms, stats, 1.0, k, requireAll)
-        else scored(b).orderBy(desc("score"), asc("docId")).limit(k)
-      case other =>
-        scored(other).orderBy(desc("score"), asc("docId")).limit(k)
-    }
+      case other => topK(scored(other), k)
+    })
   }
 
   /** Batched top-k for a SET of queries in one postings pass — the
@@ -1710,8 +1474,10 @@ final class Searcher(
   def searchBatch(queries: Seq[(String, Query)], k: Int,
                   /** expansion/positional queries only join the shared scans
                     * when at least this many share one (below it, their
-                    * per-query block-pruned paths beat an unpruned shared
-                    * scan — measured on the 60-query reference set); scored
+                    * per-query [[search]] plans — the block-metadata top-k
+                    * of an expansion, the lead-filtered or single-task
+                    * phrase — beat an unpruned shared scan, measured on the
+                    * 60-query reference set); scored
                     * term/boolean shapes always batch */
                   minSharedScan: Int = 32): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -1739,7 +1505,7 @@ final class Searcher(
     queries.foreach { case (qid, q0) =>
       // pending deletes: the shared scans read postings directly and would
       // return tombstoned docs — route through search(), which anti-joins
-      // liveDocs (same policy as the pruned paths under deletions)
+      // liveDocs (the policy of every search() top-k plan under deletions)
       if (tombstones.isDefined) fallback += ((qid, q0))
       else QueryRewriter.rewrite(q0) match {
         case e @ (_: PrefixQuery | _: TermRangeQuery | _: TermInSetQuery |
@@ -1752,8 +1518,8 @@ final class Searcher(
       }
     }
     // Adaptive routing: below minSharedScan, expansion/positional queries
-    // run their per-query block-pruned paths (faster — pruning beats scan
-    // sharing at small counts); at volume they join the shared passes.
+    // run their per-query search() plans (faster — metadata skipping beats
+    // scan sharing at small counts); at volume they join the shared passes.
     locally {
       val exp = expansions.result()
       if (exp.size < minSharedScan) { exp.foreach(fallback += _); expansions.clear() }

@@ -15,9 +15,9 @@ final case class FlatClause(term: String, boost: Double, kind: Int)
   * score is `max + tie·(sum − max)` instead of the sum. */
 final case class FlatQuery(clauses: Seq[FlatClause], nMust: Int, msm: Int, tie: Double)
 
-/** Executor-side kernels of the single-task serving route: each consumes ALL
-  * of one query's posting blocks inside one task — the reference's one
-  * thread, one collector loop (`IndexSearcher.search` →
+/** Executor-side top-k kernels: each consumes one query's posting blocks
+  * inside one task — all of them, or one doc-range slice's — the
+  * reference's one thread, one collector loop (`IndexSearcher.search` →
   * `TopScoreDocCollector`) — and emits at most k rows. */
 object SingleTask {
 
@@ -50,12 +50,14 @@ object SingleTask {
     out.iterator
   }
 
-  /** Flat term boolean top-k by per-doc accumulation. `scorers(c)` scores
-    * clause c (null: the clause only gates — MUST_NOT, FILTER). Each term's
-    * blocks decode once whatever its clause count; doc-ids-only when no
-    * clause scores the term. */
+  /** Flat term boolean top-k by per-doc accumulation over the docs in
+    * `[lo, hi]` (one doc-range slice; postings outside it are skipped).
+    * `scorers(c)` scores clause c (null: the clause only gates — MUST_NOT,
+    * FILTER). Each term's blocks decode once whatever its clause count;
+    * doc-ids-only when no clause scores the term. */
   def flatTopK(rows: Iterator[(String, PostingBlock)], clauses: Array[FlatClause],
-      scorers: Array[(Int, Int) => Double], nMust: Int, msm: Int, k: Int): Iterator[(Long, Double)] = {
+      scorers: Array[(Int, Int) => Double], nMust: Int, msm: Int, k: Int,
+      lo: Long = Long.MinValue, hi: Long = Long.MaxValue): Iterator[(Long, Double)] = {
     val blocks = byTerm(rows)
     final class Decoded(val docs: Array[Long], val freqs: Array[Int], val doclens: Array[Int])
     val decoded = blocks.map { case (t, bs) =>
@@ -67,9 +69,9 @@ object SingleTask {
           ds.iterator.flatMap(_.freqs).toArray, ds.iterator.flatMap(_.doclens).toArray)
       }
     }
-    // the doc universe, sorted and distinct: one slot per candidate doc
+    // the slice's doc universe, sorted and distinct: one slot per candidate doc
     val all = new LongBuf(decoded.valuesIterator.map(_.docs.length).sum + 1)
-    decoded.valuesIterator.foreach(_.docs.foreach(all.add))
+    decoded.valuesIterator.foreach(_.docs.foreach(d => if (d >= lo && d <= hi) all.add(d)))
     val sorted = all.toArray
     java.util.Arrays.sort(sorted)
     var n = 0
@@ -89,8 +91,10 @@ object SingleTask {
         var j = 0
         while (j < d.docs.length) {
           val slot = java.util.Arrays.binarySearch(sorted, 0, n, d.docs(j))
-          counts(slot) += 1
-          if (f != null) score(slot) += f(d.freqs(j), d.doclens(j))
+          if (slot >= 0) {
+            counts(slot) += 1
+            if (f != null) score(slot) += f(d.freqs(j), d.doclens(j))
+          }
           j += 1
         }
       }

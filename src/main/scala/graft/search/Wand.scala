@@ -28,6 +28,10 @@ import graft.core.{PostingBlock, PostingsCodec}
   *
   * The caller still applies the global static threshold and merges segment
   * top-ks; this loop only ever *removes* decode work, never changes results.
+  *
+  * No search plan calls these loops: [[Searcher]] scores flat queries with
+  * [[SingleTask.flatTopK]]. They remain as kernels, timed by perfbench's
+  * kernel layer and checked by MaxScoreSpec.
   */
 object Wand {
 

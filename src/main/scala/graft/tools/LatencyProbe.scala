@@ -8,13 +8,16 @@ import org.apache.spark.sql.SparkSession
 
 /** Diagnostic: per-query latency over the reference query set, labeled by
   * query shape, on a warm merged index. Usage:
-  * runMain graft.tools.LatencyProbe <nDocs>. */
+  * runMain graft.tools.LatencyProbe <nDocs>; runs `local[SPARK_GRAFT_CPUS]`
+  * (default: the JVM's available processors). */
 object LatencyProbe {
   def main(args: Array[String]): Unit = {
     val nDocs = if (args.nonEmpty) args(0).toLong else 200000L
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.parquet.columnarReaderBatchSize", 256) // see InvertedIndex.open
       .config("spark.ui.enabled", "false")
       .getOrCreate()

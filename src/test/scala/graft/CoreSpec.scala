@@ -271,6 +271,14 @@ class AnalysisSpec extends AnyFunSuite {
     assert(Analyzers.byName("ngram-3-3") == NGramAnalyzer(SimpleAnalyzer, 3, 3))
   }
 
+  test("common-grams names round-trip over an inner analyzer whose name has colons") {
+    val inner = PhoneticAnalyzer("METAPHONE", inject = false, maxCodeLength = 6)
+    Seq(CommonGramsAnalyzer(inner, Set("the", "of")), CommonGramsQueryAnalyzer(inner, Set("a"))).foreach { a =>
+      assert(Analyzers.byName(a.name).name == a.name)
+      assert(Analyzers.byName(a.name) == a)
+    }
+  }
+
   test("simple analyzer: lowercase alnum runs with consecutive positions") {
     val toks = SimpleAnalyzer.tokenize("The fast-scan, 3.14 JOINs!")
     assert(toks.map(_.term) == Seq("the", "fast", "scan", "3", "14", "joins"))

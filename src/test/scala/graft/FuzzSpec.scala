@@ -8,7 +8,7 @@ import scala.util.Random
 
 /** Differential fuzzing: random query ASTs evaluated by two INDEPENDENT
   * implementations — the distributed index searcher (postings algebra,
-  * pruning, expansions) and the per-document Monitor evaluator (MemoryIndex
+  * top-k plans, expansions) and the per-document Monitor evaluator (MemoryIndex
   * analog) — must agree on the matching doc set. The reference uses the
   * same trick with `RandomIndexWriter` + dual-codec cross-checks
   * (`lucene/test-framework/src/java/org/apache/lucene/tests/index/RandomIndexWriter.java:53`).
@@ -56,7 +56,7 @@ class FuzzSpec extends AnyFunSuite {
     }
   }
 
-  test("fuzzed pruned boolean top-k == exhaustive (random terms, occur, k)") {
+  test("fuzzed sliced boolean top-k == exhaustive (random terms, occur, k)") {
     val pruned = new Searcher(index, ScoringMode.PreciseBM25(), pruneThreshold = 1L)
     val plain = new Searcher(index, ScoringMode.PreciseBM25(), pruneThreshold = Long.MaxValue)
     val rnd = new Random(424242)

@@ -79,11 +79,11 @@ class MergeSpec extends AnyFunSuite {
     assert(got.nonEmpty)
   }
 
-  test("pruned boolean top-k is exact on a MERGED index (doc-alignment fallback)") {
+  test("sliced top-k is exact on a MERGED index") {
     // merged postings are re-sharded by (term, salt): one doc's terms live in
-    // different merged "segments", so the per-segment WAND loop would sum
-    // partial scores — the searcher must detect this and take the doc-keyed
-    // aggregation path (regression test for that detection)
+    // different merged "segments", so a plan that scored segments on their
+    // own would sum partial scores — the sliced top-k plan cuts by doc range
+    // instead, and pruneThreshold = 1 sends these queries to it
     val (merged, _) = mergedPair
     assert(fragmented.docAlignedSegments, "built index should be doc-aligned")
     assert(!merged.docAlignedSegments, "merged index must NOT be doc-aligned")
@@ -166,8 +166,11 @@ class MergeSpec extends AnyFunSuite {
   }
 }
 
-/** Block-max pruned boolean top-k ≡ exhaustive (metamorphic, pattern from the
-  * reference's `TestBlockMaxConjunction` / WAND equivalence tests).
+/** Top-k of a cold searcher with `pruneThreshold = 1` (every flat query takes
+  * the sliced top-k plan) ≡ exhaustive (metamorphic, pattern from the
+  * reference's `TestBlockMaxConjunction` / WAND equivalence tests). The
+  * "pruned" names predate the sliced plan, which replaced the block-max
+  * pruned one.
   */
 class PrunedBooleanSpec extends AnyFunSuite {
   import SparkTestEnv._

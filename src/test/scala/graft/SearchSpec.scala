@@ -158,8 +158,8 @@ class SearcherSpec extends AnyFunSuite {
     }
   }
 
-  test("metamorphic: pruned top-k == exhaustive top-k") {
-    // force the pruned path with a tiny threshold
+  test("metamorphic: sliced top-k == exhaustive top-k") {
+    // a tiny threshold sends the cold query to the sliced top-k plan
     val pruned = new Searcher(index, ScoringMode.PreciseBM25(), pruneThreshold = 1L)
     Seq("spark", "query", "dup").foreach { term =>
       val a = pruned.search(TermQuery(term), 10).collect().map(r => (r.getLong(0), r.getDouble(1)))
@@ -171,9 +171,8 @@ class SearcherSpec extends AnyFunSuite {
     }
   }
 
-  test("metamorphic: pruned == exhaustive for DFR/IB/Axiomatic/DFI sims") {
-    // the generic upper bound f(maxFreq, minDl) must dominate every posting's
-    // score for each new similarity (monotone in freq, antitone in dl)
+  test("metamorphic: sliced top-k == exhaustive for DFR/IB/Axiomatic/DFI sims") {
+    // the sliced plan's kernel scores with each similarity's term scorer
     Seq[ScoringMode](ScoringMode.PreciseDFRInL2(), ScoringMode.PreciseIBLL(),
         ScoringMode.PreciseAxiomaticF2EXP(), ScoringMode.PreciseDFIChiSquared())
       .foreach { m =>
@@ -253,7 +252,7 @@ class SearcherSpec extends AnyFunSuite {
 
   test("duplicate boolean clauses: every path agrees (rewriter dedups first)") {
     // "a a b": the rewriter normalizes duplicate clauses away BEFORE any
-    // execution path sees them, so exhaustive, pruned and batched results
+    // execution path sees them, so exhaustive, sliced and batched results
     // must all equal the distinct query's — one contract, three engines
     val q = BooleanQuery(Seq(
       Occur.SHOULD -> TermQuery("spark"), Occur.SHOULD -> TermQuery("spark"),

@@ -9,10 +9,10 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Warm serving: the single-task route a warmed index takes for small
-  * queries must return the cold exhaustive top-k, in one job of one stage,
-  * and must leave tombstoned indexes and queries above its postings bound on
-  * the multi-stage paths. Checked on a built (doc-aligned) index and on its
-  * merge. */
+  * queries must return the cold exhaustive top-k, in one job of one stage;
+  * flat queries above its postings bound must take the sliced top-k plan
+  * and return the same top-k; tombstoned indexes keep the multi-stage paths.
+  * Checked on a built (doc-aligned) index and on its merge. */
 class WarmServingSpec extends AnyFunSuite with BeforeAndAfterAll {
   import SparkTestEnv.spark
 
@@ -22,7 +22,8 @@ class WarmServingSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val Supp = "𝐚𝐛"
   private val Full = "ｚｚ"
   // every doc carries every filler: 2,200 docs × 30 fillers puts the
-  // fillers' disjunction above the route's 2^16-postings bound
+  // fillers' disjunction above the route's 2^16-postings bound, so the
+  // sliced plan cuts it into 2 doc-range slices
   private val Fillers = (0 until 30).map(i => s"c$i")
   private val config = IndexConfig(StandardLikeAnalyzer(), flushDocBudget = 64)
 
@@ -78,6 +79,10 @@ class WarmServingSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def routed(df: DataFrame): Boolean =
     df.queryExecution.executedPlan.toString.contains("Coalesce 1")
 
+  /** The sliced top-k plan groups its rows by slice. */
+  private def sliced(df: DataFrame): Boolean =
+    df.queryExecution.executedPlan.toString.contains("MapGroups")
+
   private def close(a: Double, b: Double): Boolean =
     math.abs(a - b) <= 1e-9 * math.max(math.abs(a), math.abs(b))
 
@@ -124,13 +129,8 @@ class WarmServingSpec extends AnyFunSuite with BeforeAndAfterAll {
     Seq(baseDir, mergedDir).foreach { dir =>
       val c = InvertedIndex.open(spark, dir)
       val w = warm(dir)
-      val coldRows = c.termStats.select("term", "df", "ttf", "impFreqs", "impDlbs").collect()
+      val coldRows = c.termStats.select("term", "df", "ttf").collect()
       assert(w.warmTermStats.get == coldRows.map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap)
-      val fronts = w.warmFrontiers.get
-      coldRows.foreach { r =>
-        val (f, d) = fronts(r.getString(0))
-        assert(f.toSeq == r.getSeq[Int](3) && d.toSeq == r.getAs[Array[Byte]](4).toSeq)
-      }
       assert(w.warmSortedTerms.get.map(_.toString).toSeq ==
         c.termStats.select("term").orderBy("term").collect().map(_.getString(0)).toSeq)
     }
@@ -183,11 +183,22 @@ class WarmServingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   // runs last: it tombstones docs of the shared index
-  test("queries above the postings bound and tombstoned indexes keep the multi-stage paths") {
-    val q = BooleanQuery.should(Fillers.map(TermQuery): _*)
-    val df = new Searcher(warm(baseDir), ScoringMode.PreciseBM25()).search(q, 10)
-    assert(!routed(df))
-    assertSameTopK("filler disjunction", rows(df), rows(cold(baseDir).search(q, 10)))
+  test("queries above the postings bound take the sliced top-k plan; tombstoned indexes keep the multi-stage paths") {
+    val disjunction = BooleanQuery.should(Fillers.map(TermQuery): _*)
+    // every doc without w0 matches with score 0, so the top-k is the k
+    // smallest such doc ids: the docId tie-break within and across the
+    // slices decides it
+    val conjunction = BooleanQuery(Fillers.map(t => Occur.FILTER -> TermQuery(t)) :+
+      (Occur.MUST_NOT -> TermQuery("w0")))
+    val want = Seq(disjunction, conjunction).map(q => rows(cold(baseDir).search(q, 10)))
+    Seq(baseDir, mergedDir).foreach { dir =>
+      val w = new Searcher(warm(dir), ScoringMode.PreciseBM25())
+      val Seq(d, c) = Seq(disjunction, conjunction).map(w.search(_, 10))
+      assert(!routed(d) && sliced(d), s"$dir: filler disjunction")
+      assertSameTopK(s"$dir: filler disjunction", rows(d), want(0))
+      assert(!routed(c) && sliced(c), s"$dir: filler conjunction")
+      assert(want(1).nonEmpty && rows(c) == want(1), s"$dir: filler conjunction ${rows(c)} vs ${want(1)}")
+    }
 
     val s = spark
     import s.implicits._

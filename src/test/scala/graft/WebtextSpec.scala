@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** End-to-end tests over the north-rule `pages` input shape
   * (url, warc_ts, html, text, lang): deterministic synthesis, the
   * byte-identical extraction invariant, parallelism-independent doc-id
-  * assignment, resume, and rank-identity of the pruned search path against
+  * assignment, resume, and rank-identity of the sliced top-k search plan against
   * exhaustive scoring over the reference query set (FIXTURES.md §1-2).
   */
 class WebtextSpec extends AnyFunSuite with BeforeAndAfterAll {
