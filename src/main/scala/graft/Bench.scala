@@ -12,7 +12,8 @@ import org.apache.spark.sql.SparkSession
   *
   * Three phases:
   *  1. the driver-harness operator queries on `SPARK_GRAFT_SF_DIR` at
-  *     `local[SPARK_GRAFT_CPUS]` — per-query seconds in `"queries"`;
+  *     `local[SPARK_GRAFT_CPUS]` (default: the JVM's available processors)
+  *     — per-query seconds in `"queries"`;
   *  2. the north-rule scaling run: the identical index build (late-mat url
   *     doc-id assignment → segment build → salted merge) over the identical
   *     deterministic webtext corpus at `local[2]` (N) and `local[8]` (4N)
@@ -25,7 +26,7 @@ import org.apache.spark.sql.SparkSession
   *     slow/contended environment is diagnosable from the JSON alone
   *     (BASELINE.md §2-3);
   *  3. BM25 top-k p95 latency over the reference query set (FIXTURES.md §2)
-  *     on the merged index at 32 cores.
+  *     on the merged index at `local[SPARK_GRAFT_CPUS]`.
   *
   * Env knobs: `SPARK_GRAFT_BENCH_DOCS` (default 1500000) scales phase 2/3;
   * `SPARK_GRAFT_SCALING=0` skips phases 2-3; `SPARK_GRAFT_QUERIES=0` skips
@@ -141,7 +142,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
     // sized so parallel work amortizes the ~10 s of per-build serial overhead
     // (driver actions, job scheduling, parquet commits) — Amdahl demands
     // ~1000 s of single-core-equivalent work for eff >= 0.8 at 4x cores
@@ -261,7 +263,7 @@ object Bench {
 
       // ---- phase 3: BM25 top-k p95 latency on the merged index built by
       // the 32-core phase-2 run (same corpus — no redundant rebuild)
-      val spark3 = session(32, 32, smallScanBatch = true)
+      val spark3 = session(cpus, cpus, smallScanBatch = true)
       val probe3 = new TaskProbe(spark3)
       val tPhase3 = System.nanoTime()
       // serving mode: postings + stats pinned in cluster cache (the

@@ -451,9 +451,10 @@ object Analyzers {
 
   /** Dictionary-bearing analyzers (Hunspell, compound chains) register
     * their INSTANCE here at construction so a same-process index reopen
-    * resolves the exact configuration; a cross-process reopen falls back to
-    * the name-prefix parse below (documented: the dictionary is a user
-    * asset that must be re-supplied, like the reference's .aff/.dic). */
+    * resolves the exact configuration. Their names carry no dictionary, so
+    * a reopen in a process that has not constructed the instance throws
+    * (the dictionary is a user asset that must be re-supplied, like the
+    * reference's .aff/.dic). */
   private val dynamic = new java.util.concurrent.ConcurrentHashMap[String, Analyzer]()
   private[core] val instanceIds = new java.util.concurrent.atomic.AtomicInteger()
   private[core] def register(a: Analyzer): Unit = dynamic.put(a.name, a)
@@ -525,9 +526,13 @@ object Analyzers {
       CommonGramsQueryAnalyzer(byName(rest.substring(0, sep)),
         rest.substring(sep + 1).split(',').toSet)
     case "hunspell"       => HunspellAnalyzer.empty // dictionary is a user asset
-    case s if s.startsWith("hunspell:") => HunspellAnalyzer.empty // cross-process: re-supply the dictionary
-    case s if s.startsWith("german-compound:") => GermanAnalyzer() // cross-process: re-supply the dictionary
-    case s if s.startsWith("dutch-compound:") => DutchAnalyzer() // cross-process: re-supply the dictionary
+    // a dictionary-bearing instance resolves only through the registry: a
+    // dictionary-less stand-in would analyze queries unlike the index
+    case s if s.startsWith("hunspell:") || s.startsWith("german-compound:") ||
+        s.startsWith("dutch-compound:") =>
+      throw new IllegalArgumentException(
+        s"analyzer '$s' carries a user dictionary that is not constructed in this process: " +
+          "construct the analyzer with its dictionary in this process before opening the index")
     case s if s.startsWith("double-metaphone:") => // double-metaphone:<len>:<inject>
       val Array(len, inj) = s.stripPrefix("double-metaphone:").split(':')
       DoubleMetaphoneAnalyzer(len.toInt, inj.toBoolean)

@@ -167,8 +167,9 @@ object Hunspell {
   * position (deduplicated, the filter's dedup flag); a token with NO stems
   * passes through unchanged; `longestOnly` keeps the single longest stem.
   * Like the reference, the dictionary is a construction-time user asset —
-  * a byName reopen resolves to the dictionary-less pass-through (same
-  * contract as the compound-word dictionary chains). */
+  * a byName reopen resolves the instance constructed in this process and
+  * throws in any other (same contract as the compound-word dictionary
+  * chains). */
 final case class HunspellAnalyzer(dictionary: Hunspell.Dictionary,
                                   longestOnly: Boolean = false) extends Analyzer {
   override val name = s"hunspell:${Analyzers.instanceIds.incrementAndGet()}"
@@ -194,9 +195,9 @@ final case class HunspellAnalyzer(dictionary: Hunspell.Dictionary,
 }
 
 object HunspellAnalyzer {
-  /** The dictionary-less pass-through the registry resolves to (a single
-    * shared instance — each construction would otherwise register a fresh
-    * dynamic-registry entry). */
+  /** The dictionary-less pass-through the registry resolves the plain
+    * `hunspell` name to (a single shared instance — each construction would
+    * otherwise register a fresh dynamic-registry entry). */
   lazy val empty: HunspellAnalyzer =
     HunspellAnalyzer(Hunspell.parse("", "0"))
 }

@@ -537,18 +537,6 @@ final class InvertedIndex private (
       * this reader's whole lifetime (snapshot isolation) */
     val snapshot: Option[Snapshots.Snapshot] = None) extends Serializable {
 
-  /** True when every segment owns the COMPLETE postings (all terms) of the
-    * docs it contains — the per-LeafReaderContext invariant of built and
-    * streamed-append indexes, where a segment is one flusher run over a doc
-    * slice. A MERGE breaks it: merged postings are re-sharded by
-    * (term, salt), so one doc's terms scatter across merged "segments".
-    * The per-segment positional plans (the searcher's segment-local phrase
-    * and interval matching) are only sound when this holds; merged indexes
-    * use the doc-keyed plans instead. */
-  lazy val docAlignedSegments: Boolean =
-    parent.isEmpty &&
-      !java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/merge_manifest"))
-
   /** Stable identity of this reader's VISIBLE data: directory + pinned
     * snapshot version + parent chain. Segment data is immutable and a
     * reader's snapshot is fixed for its lifetime, so equal keys ⇒ identical

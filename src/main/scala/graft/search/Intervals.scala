@@ -10,9 +10,9 @@ import scala.collection.mutable
   * matching interval.
   *
   * Evaluation here is per-document over decoded position lists (an
-  * executor-side pure function, like [[SpanMatcher]]) — the doc-level
-  * candidate set comes from the usual postings conjunction, so only matching
-  * docs ever reach the interval evaluator.
+  * executor-side pure function, like [[SpanMatcher]]), called by the
+  * searcher's positional kernel ([[Positional.matchingDocs]]) on the
+  * candidate docs of the rarest required term.
   */
 sealed trait IntervalsSource extends Serializable {
   /** terms the source needs positions for */
@@ -165,13 +165,16 @@ object Intervals {
     NonOverlapping(minuend, Extend(subtrahend, positions, positions))
 
   /** Terms that MUST occur in a document for `src` to match — the doc-level
-    * conjunction hidden inside the algebra, used by the searcher to leapfrog
-    * every term's positional scan off the rarest required term (mirroring
-    * how the reference drives interval queries through a conjunction
-    * `DISI` over the required sub-iterators,
+    * conjunction hidden inside the algebra. The searcher answers an empty
+    * result when one is absent from the index, and otherwise leads its
+    * positional kernel with the rarest of them: only that term's docs are
+    * candidates, and the other terms' blocks decode only where a candidate
+    * lives (mirroring how the reference drives interval queries through a
+    * conjunction `DISI` over the required sub-iterators,
     * `lucene/queries/src/java/org/apache/lucene/queries/intervals/ConjunctionIntervalsSource.java`).
     * Conservative: a returned term is provably required; an empty set means
-    * no single term gates the match (e.g. a top-level `Or`). */
+    * no single term gates the match (e.g. an `Or`, at the root or nested),
+    * and then every present term's docs are candidates. */
   def requiredTerms(src: IntervalsSource): Set[String] = src match {
     case Term(t) => Set(t)
     case Phrase(ts) => ts.toSet
@@ -396,109 +399,4 @@ object IntervalEval extends Serializable {
 
   def matches(src: IntervalsSource, positions: Map[String, Array[Int]]): Boolean =
     evalL(src, positions).nonEmpty
-}
-
-/** Per-segment interval matcher over ENCODED posting blocks — the executor-
-  * side body of the searcher's doc-aligned interval path, and a directly
-  * unit-testable pure function (like [[Wand]]'s segment loops).
-  *
-  * Mirrors the phrase path's rarest-first leapfrog
-  * ([[graft.search.Searcher]] `segmentPhraseFrame`): the rarest REQUIRED
-  * term's blocks ([[Intervals.requiredTerms]]) are decoded first and define
-  * the candidate doc set; every other term's block is decoded ONLY when its
-  * [firstDoc, lastDoc] range contains a candidate — an `Ordered(the, year)`
-  * interval query decodes the head term's positions only where `year` docs
-  * live, the reference's `ConjunctionDISIApproximation` advance pattern.
-  * With no required term (a top-level `Or`) every present term's blocks
-  * decode — the union IS the candidate set, as in the reference. */
-object IntervalSegment {
-  import graft.core.{PostingBlock, PostingsCodec}
-
-  /** Matching docIds in one doc-aligned segment. `byTerm` holds the
-    * segment's blocks per present query term; `onDecode` is a test hook
-    * counting physical block decodes. */
-  def matchingDocs(src: IntervalsSource, required: Set[String],
-      byTerm: scala.collection.Map[String, Seq[PostingBlock]],
-      onDecode: () => Unit = () => ()): Iterator[Long] = {
-    if (byTerm.isEmpty) return Iterator.empty
-    if (required.exists(t => !byTerm.contains(t))) return Iterator.empty
-
-    val posOf = mutable.HashMap.empty[String, java.util.HashMap[Long, Array[Int]]]
-
-    def decodeAll(t: String): java.util.HashMap[Long, Array[Int]] = {
-      val m = new java.util.HashMap[Long, Array[Int]]()
-      byTerm(t).foreach { b =>
-        onDecode()
-        val d = PostingsCodec.decodeBlock(b, withPositions = true)
-        var i = 0
-        while (i < d.docs.length) { m.put(d.docs(i), d.positions(i)); i += 1 }
-      }
-      m
-    }
-
-    // candidate docs = the segment-locally rarest required term's postings
-    val candDocs: Array[Long] =
-      if (required.isEmpty) null
-      else {
-        val lead = required.minBy(t => byTerm(t).iterator.map(_.count.toLong).sum)
-        val m = decodeAll(lead)
-        posOf(lead) = m
-        val arr = new Array[Long](m.size)
-        val it = m.keySet().iterator()
-        var i = 0
-        while (it.hasNext) { arr(i) = it.next(); i += 1 }
-        java.util.Arrays.sort(arr)
-        arr
-      }
-
-    byTerm.keysIterator.filterNot(posOf.contains).foreach { t =>
-      if (candDocs == null) posOf(t) = decodeAll(t)
-      else {
-        val m = new java.util.HashMap[Long, Array[Int]]()
-        byTerm(t).foreach { b =>
-          // leapfrog skip: decode only blocks whose range holds a candidate
-          var i = java.util.Arrays.binarySearch(candDocs, b.firstDoc)
-          if (i < 0) i = -i - 1
-          if (i < candDocs.length && candDocs(i) <= b.lastDoc) {
-            onDecode()
-            val d = PostingsCodec.decodeBlock(b, withPositions = true)
-            var j = 0
-            while (j < d.docs.length) {
-              if (java.util.Arrays.binarySearch(candDocs, d.docs(j)) >= 0)
-                m.put(d.docs(j), d.positions(j))
-              j += 1
-            }
-          }
-        }
-        posOf(t) = m
-      }
-    }
-
-    val docsToCheck: Iterator[Long] =
-      if (candDocs != null) candDocs.iterator
-      else {
-        val s = new java.util.TreeSet[java.lang.Long]()
-        posOf.valuesIterator.foreach { m =>
-          val it = m.keySet().iterator()
-          while (it.hasNext) s.add(it.next())
-        }
-        val it = s.iterator()
-        new Iterator[Long] {
-          def hasNext = it.hasNext
-          def next() = it.next().longValue()
-        }
-      }
-
-    val terms = posOf.keys.toArray
-    docsToCheck.filter { doc =>
-      var pm = Map.empty[String, Array[Int]]
-      var i = 0
-      while (i < terms.length) {
-        val a = posOf(terms(i)).get(doc)
-        if (a != null) pm = pm.updated(terms(i), a)
-        i += 1
-      }
-      IntervalEval.matches(src, pm)
-    }
-  }
 }

@@ -52,8 +52,6 @@ object SpanMatcher extends Serializable {
 
 /** A decoded, scorable posting entry. */
 final case class Hit(docId: Long, freq: Int, doclen: Int)
-/** A decoded posting entry with positions (phrase verification). */
-final case class PosHit(docId: Long, doclen: Int, positions: Array[Int])
 
 /** How scores are computed.
   *
@@ -145,11 +143,22 @@ object ScoringMode {
   * postings, after its one statistics lookup, and runs the exhaustive join
   * plan below.
   *
-  * Small exact / sloppy phrases and prefix / range / term-set expansions of
-  * at most 4,096 terms on a warm index take the same one-task form
-  * ([[singleTaskPlan]]) while their terms hold at most 2^16 postings (Σdf,
-  * the `SingleTaskMaxPostings` bound). Pending tombstones send every query
-  * to the exhaustive plan.
+  * Positional queries — exact and sloppy phrases, multi-phrases, span-near
+  * and interval / span sources — have one plan on every index layout
+  * ([[positionalFrame]]): the same doc-range slices, each matched by one
+  * [[Positional.matchingDocs]] kernel, the reference's one phrase matcher
+  * or interval iterator per leaf. The kernel decodes the query's lead (its
+  * rarest term, or for a multi-phrase the cheapest position's alternatives)
+  * first, decodes another term's block only where it holds a candidate
+  * doc, and verifies positions per candidate. Only the query terms' encoded
+  * blocks are shuffled, so the shuffle is bounded by the query's postings
+  * whatever the shape; a warm index at R = 1 runs it in one task. The plan
+  * yields every match; top-k takes TakeOrdered over it.
+  *
+  * Prefix / range / term-set expansions of at most 4,096 terms on a warm
+  * index take a one-task plan ([[singleTaskPlan]]) while their terms hold
+  * at most 2^16 postings (Σdf, the `SingleTaskMaxPostings` bound). Pending
+  * tombstones send every query to the exhaustive plan.
   */
 final class Searcher(
     val index: InvertedIndex,
@@ -367,7 +376,7 @@ final class Searcher(
       .select(col("docId"), scoreUdf(col("freq"), col("doclen")).as("score"))
   }
 
-  // ------------------------------------------------ leapfrog (rarest-first)
+  // ------------------------------------------ lead filter (rarest-first)
 
   /** Doc-count bound for an EXACT lead broadcast: 1M doc ids ≈ 8 MB. Above
     * it the lead degrades to a coarse bucket filter, never to no filter. */
@@ -385,7 +394,7 @@ final class Searcher(
 
   /** Postings (Σdf of the distinct terms) scored by one task: the
     * single-task route's bound ([[singleTaskPlan]]) and the slice size of
-    * [[flatPlan]]. One task must stay cheaper than the jobs and stages it
+    * [[sliced]]. One task must stay cheaper than the jobs and stages it
     * replaces (≈ 60 ms per job on a 4-vCPU host). The scoring loops alone
     * run ≈ 9M postings/s (≈ 7 ms at the bound); moving the rows into the one
     * task and decoding them raises that to ≈ 0.8 µs per posting. Measured at
@@ -395,12 +404,14 @@ final class Searcher(
     * 4-term OR of rarer terms (Σdf 6,273) 73 vs 470 ms. */
   private val SingleTaskMaxPostings = 1L << 16
 
-  /** The rarest term's doc set as a broadcast membership filter — the
-    * distributed analog of the reference's cost-sorted conjunction lead
-    * (`lucene/core/src/java/org/apache/lucene/search/ConjunctionDISI.java:36`):
-    * every other term's positional postings are (a) block-skipped on
-    * [firstDoc, lastDoc] overlap and (b) row-filtered by membership BEFORE
-    * the shuffle into the per-doc group-by.
+  /** The rarest scoring term's doc set as a broadcast membership filter —
+    * the distributed analog of the reference's cost-sorted conjunction lead
+    * (`lucene/core/src/java/org/apache/lucene/search/ConjunctionDISI.java:36`).
+    * Only [[IndexOrDocValuesQuery]]'s "doc-values" plan
+    * ([[indexOrDocValuesFrame]]) uses it: the filter's expansion blocks are
+    * (a) block-skipped on [firstDoc, lastDoc] overlap and (b) row-filtered
+    * by membership before any decode. Positional queries lead inside their
+    * slice kernel instead ([[Positional.matchingDocs]]).
     *
     * Two tiers, both bounded, so there is NO df beyond which the filter
     * silently disables (the r2 cliff):
@@ -408,9 +419,7 @@ final class Searcher(
     *  - df > cap: doc ids quantized to ≤ 2^16 buckets over the lead's doc-id
     *    span — a conservative superset (never drops a true match), ~512 KB
     *    broadcast at ANY df. When the lead is dense the buckets pass
-    *    everything, which is exactly when no doc-level filter could prune —
-    *    dense-lead phrases instead take [[segmentPhraseFrame]]'s per-segment
-    *    local leapfrog on doc-aligned indexes. */
+    *    everything, which is exactly when no doc-level filter could prune. */
   private final class LeadFilter(
       bc: org.apache.spark.broadcast.Broadcast[Array[Long]], shift: Int) extends Serializable {
     def blockOverlaps(first: Long, last: Long): Boolean = {
@@ -423,20 +432,18 @@ final class Searcher(
       java.util.Arrays.binarySearch(bc.value, docId >> shift) >= 0
   }
 
-  /** Build the lead filter over the union of `leadTerms`' postings (one term
-    * for phrases/spans; one position's alternatives for multi-phrase). */
-  private def buildLeadFilter(leadTerms: Seq[String], totalDf: Long): LeadFilter = {
-    if (totalDf <= LeapfrogMaxDf) {
-      val docs = leadTerms.map { t =>
-        blocksOf(t).mapPartitions(it => it.flatMap(b => PostingsCodec.decodeDocIds(b).iterator)).collect()
-      }.reduce(_ ++ _).distinct
+  /** Build the lead filter over `term`'s postings (`df` of them). */
+  private def buildLeadFilter(term: String, df: Long): LeadFilter = {
+    if (df <= LeapfrogMaxDf) {
+      val docs = blocksOf(term)
+        .mapPartitions(it => it.flatMap(b => PostingsCodec.decodeDocIds(b).iterator)).collect()
       java.util.Arrays.sort(docs)
       new LeadFilter(spark.sparkContext.broadcast(docs), 0)
     } else {
       // coarse tier: one metadata-only pass over the lead's block ranges —
       // no posting payload decoded, collect bounded at 2^16 bucket ids
       val ranges = index.postings
-        .filter(col("term").isin(leadTerms: _*))
+        .filter(col("term") === lit(term))
         .select(explode(col("blocks")).as("b"))
         .select(col("b.firstDoc"), col("b.lastDoc"))
         .as[(Long, Long)]
@@ -451,226 +458,78 @@ final class Searcher(
     }
   }
 
-  /** Lead filter keyed by the rarest query term (None for 1-term inputs). */
-  private def rarestLead(terms: Seq[String], stats: Map[String, TermStats])
-      : Option[(String, LeadFilter)] = {
-    if (terms.distinct.size < 2) return None
-    val rarest = terms.minBy(t => stats(t).docFreq)
-    Some((rarest, buildLeadFilter(Seq(rarest), stats(rarest).docFreq)))
+  // ------------------------------------------------------------ positional
+
+  /** The scored doc set of a positional query: the blocks of its `terms`
+    * (all present in `stats`) cut into the doc-range slices of [[sliced]],
+    * each slice matched by one [[Positional.matchingDocs]] kernel led by
+    * `lead` (empty: every term), and each match `(freq, doclen)` scored by
+    * `score`. */
+  private def positionalFrame(terms: Seq[String], lead: Seq[String], stats: Map[String, TermStats],
+      freq: (String => Array[Int]) => Double, score: (Double, Int) => Double): DataFrame = {
+    val distinct = terms.distinct
+    val leadSet = lead.toSet
+    sliced(distinct, distinct.map(stats(_).docFreq).sum, (rows, lo, hi) =>
+      Positional.matchingDocs(SingleTask.byTerm(rows), leadSet, lo, hi, freq)
+        .map { case (doc, f, dl) => (doc, score(f, dl)) })
   }
 
-  /** Block-prune a term's positional scan by the lead filter (no-op for the
-    * lead term itself — its own scan defines the filter). */
-  private def leapfrogged(term: String,
-      lead: Option[(String, LeadFilter)]): Dataset[PostingBlock] = {
-    val base = blocksOf(term)
-    lead match {
-      case Some((rarest, lf)) if term != rarest =>
-        val overlaps = udf((first: Long, last: Long) => lf.blockOverlaps(first, last))
-        base.filter(overlaps(col("firstDoc"), col("lastDoc")))
-      case _ => base
-    }
-  }
-
-  private def inLeadSet(lead: Option[(String, LeadFilter)]): Long => Boolean = lead match {
-    case Some((_, lf)) => id => lf.contains(id)
-    case None => _ => true
-  }
-
-  /** Per-segment local leapfrog for doc-aligned indexes (every segment owns
-    * the COMPLETE postings of its docs — built/streamed indexes): the query
-    * terms' ENCODED blocks are grouped by segment (one shuffle of compressed
-    * payloads, no per-doc row explosion) and the whole phrase match runs
-    * inside the group, exactly the reference's per-LeafReaderContext
-    * `ExactPhraseMatcher`/`SloppyPhraseMatcher` loop
-    * (`lucene/core/src/java/org/apache/lucene/search/ExactPhraseMatcher.java:39`):
-    * decode the rarest term first, skip every other term's blocks that don't
-    * overlap its doc set, intersect, verify positions. Doc-aligned segments
-    * partition the doc space, so per-segment results union disjointly.
-    *
-    * This is the head-term-safe plan: an all-head phrase never ships exploded
-    * positional rows through a doc-keyed shuffle — the shuffled bytes are the
-    * FOR-compressed blocks of the query terms only, and the rarest-first
-    * decode order skips non-overlapping blocks without decoding them. */
-  private def segmentPhraseFrame(terms: Seq[String], slop: Int,
-      stats: Map[String, TermStats], boost: Double): DataFrame = {
-    val scorer = phraseScorer(terms.map(stats), boost)
-    val distinctTerms = terms.distinct
-    val rarest = distinctTerms.minBy(t => stats(t).docFreq)
-    val termsL = terms.toIndexedSeq
-    val rows = index.postings
-      .filter(col("term").isin(distinctTerms: _*))
-      .select(col("segmentId"), col("term"), explode(col("blocks")).as("b"))
-      .as[(Long, String, PostingBlock)]
-    rows.groupByKey(_._1)
-      .flatMapGroups { (_, it) =>
-        PhraseSegment.matchingDocs(SingleTask.byTerm(it.map(r => (r._2, r._3))),
-          termsL, rarest, slop, scorer)
-      }.toDF("docId", "score")
-  }
-
-  /** Exact and sloppy phrases (`"a b"~slop`): per-term positional postings
-    * unioned, grouped by doc, position-verified (two-phase: cheap doc match,
-    * then the position verify, like
-    * `lucene/core/src/java/org/apache/lucene/search/ExactPhraseMatcher.java:39`).
-    * A sloppy phrase's frequency is the reference's fractional sloppy freq
+  /** Exact and sloppy phrases (`"a b"~slop`), led by the rarest term. A
+    * sloppy phrase's frequency is the reference's fractional sloppy freq
     * (Σ 1/(1+matchLength) over [[SloppyMatcher]]'s greedy minimal-width
     * enumeration — `SloppyPhraseMatcher.java:54`, `PhraseQuery.java:71-101`);
     * its repeated query terms would need the reference's repeat-group
-    * machinery and are rejected. Doc-aligned indexes take
-    * [[segmentPhraseFrame]]'s per-segment local leapfrog; merged
-    * (term-sharded) indexes run the doc-keyed group-by with every non-rarest
-    * term leapfrogged by the rarest term's lead filter. */
+    * machinery and are rejected. */
   private def phraseFrame(terms: Seq[String], slop: Int,
                           stats: Map[String, TermStats], boost: Double): DataFrame = {
     if (slop != 0 && terms.distinct.size != terms.size)
       throw new UnsupportedOperationException(
         "sloppy phrases with repeated terms are not supported (use slop=0)")
-    if (terms.exists(t => !stats.contains(t))) return emptyFrame
-    if (index.docAlignedSegments) return segmentPhraseFrame(terms, slop, stats, boost)
-    val scorer = phraseScorer(terms.map(stats), boost)
-    val lead = rarestLead(terms, stats)
-    val member = inLeadSet(lead)
-    val perTerm = terms.zipWithIndex.map { case (t, i) =>
-      leapfrogged(t, lead)
-        .mapPartitions { it =>
-          it.flatMap { b =>
-            val d = PostingsCodec.decodeBlock(b, withPositions = true)
-            Iterator.tabulate(d.docs.length)(j => PosHit(d.docs(j), d.doclens(j), d.positions(j)))
-              .filter(h => member(h.docId))
-          }
-        }
-        .toDF("docId", "doclen", "positions")
-        .withColumn("idx", lit(i))
-    }
-    val n = terms.size
-    val freqUdf = udf((plists: Seq[Row]) =>
-      PhraseSegment.phraseFreq(plists.sortBy(_.getInt(0)).map(_.getSeq[Int](1).toArray).toArray, slop))
-    val scoreUdf = udf((freq: Double, dl: Int) => scorer(freq, dl))
-    perTerm.reduce(_ unionAll _)
-      .groupBy("docId")
-      .agg(first("doclen").as("doclen"),
-        org.apache.spark.sql.functions.count(lit(1)).as("nterms"),
-        collect_list(struct(col("idx"), col("positions"))).as("plists"))
-      .filter(col("nterms") === lit(n))
-      .withColumn("freq", freqUdf(col("plists")))
-      .filter(col("freq") > 0)
-      .select(col("docId"), scoreUdf(col("freq"), col("doclen")).as("score"))
+    if (terms.isEmpty || terms.exists(t => !stats.contains(t))) return emptyFrame
+    val ts = terms.toArray
+    positionalFrame(terms, Seq(terms.minBy(stats(_).docFreq)), stats, pos => {
+      val arrays = ts.map(pos)
+      if (arrays.contains(null)) 0.0 else PhraseSegment.phraseFreq(arrays, slop)
+    }, phraseScorer(terms.map(stats), boost))
   }
 
   /** Phrase with term alternatives per position
     * (`lucene/core/src/java/org/apache/lucene/search/MultiPhraseQuery.java:54`):
     * a match at start position p requires, for every position index i, some
     * alternative of position i at p+i. freq = number of distinct start
-    * positions; idf = sum over all (present) member terms. */
+    * positions; idf = sum over all (present) member terms. Led by the
+    * alternatives of the position with the smallest summed df: their docs'
+    * union bounds every match. */
   private def multiPhraseFrame(positions: Seq[Seq[String]],
                                stats: Map[String, TermStats], boost: Double): DataFrame = {
     // a position whose alternatives are all absent can never match
-    if (positions.exists(_.forall(t => !stats.contains(t)))) return emptyFrame
+    if (positions.isEmpty || positions.exists(_.forall(t => !stats.contains(t)))) return emptyFrame
     val allTerms = positions.flatten.distinct.filter(stats.contains)
-    val scorer = phraseScorer(allTerms.map(stats), boost)
-    // leapfrog lead: the position index with the smallest summed df — its
-    // alternatives' doc-set union bounds every match (exact or coarse tier
-    // by total df; sentinel name so no real term skips the filter)
-    val leadAlts = positions.map(_.filter(stats.contains))
-      .minBy(_.map(t => stats(t).docFreq).sum)
-    val lead: Option[(String, LeadFilter)] =
-      if (positions.size < 2) None
-      else Some((" lead", buildLeadFilter(leadAlts, leadAlts.map(t => stats(t).docFreq).sum)))
-    val member = inLeadSet(lead)
-    val perPos = positions.zipWithIndex.map { case (alts, i) =>
-      val present = alts.filter(stats.contains)
-      present.map { t =>
-        leapfrogged(t, lead)
-          .mapPartitions { it =>
-            it.flatMap { b =>
-              val d = PostingsCodec.decodeBlock(b, withPositions = true)
-              Iterator.tabulate(d.docs.length)(j => PosHit(d.docs(j), d.doclens(j), d.positions(j)))
-                .filter(h => member(h.docId))
-            }
-          }
-          .toDF("docId", "doclen", "positions")
-          .withColumn("idx", lit(i))
-      }.reduce(_ unionAll _)
-    }
-    val n = positions.size
-    val mpFreqUdf = udf((plists: Seq[Row]) => {
-      // union the alternatives' position sets per index
-      val byIdx: Map[Int, Array[Int]] = plists.groupBy(_.getInt(0)).map { case (i, rows) =>
-        i -> rows.flatMap(_.getSeq[Int](1)).distinct.sorted.toArray
-      }
-      val base = byIdx(0)
-      var count = 0
-      var i = 0
-      while (i < base.length) {
-        val p0 = base(i)
-        var ok = true
-        var j = 1
-        while (ok && j < n) {
-          if (java.util.Arrays.binarySearch(byIdx(j), p0 + j) < 0) ok = false
-          j += 1
-        }
-        if (ok) count += 1
-        i += 1
-      }
-      count
-    })
-    val scoreUdf = udf((freq: Int, dl: Int) => scorer(freq.toDouble, dl))
-    perPos.reduce(_ unionAll _)
-      .groupBy("docId")
-      .agg(first("doclen").as("doclen"),
-        size(array_distinct(collect_list(col("idx")))).as("nidx"),
-        collect_list(struct(col("idx"), col("positions"))).as("plists"))
-      .filter(col("nidx") === lit(n))
-      .withColumn("freq", mpFreqUdf(col("plists")))
-      .filter(col("freq") > 0)
-      .select(col("docId"), scoreUdf(col("freq"), col("doclen")).as("score"))
+    val alts = positions.map(_.filter(stats.contains).toArray).toArray
+    val lead = alts.minBy(_.map(stats(_).docFreq).sum)
+    positionalFrame(allTerms, lead.toSeq, stats, pos => {
+      // each position's alternatives' positions, unioned
+      val byIdx = alts.map(_.flatMap(t => Option(pos(t)).getOrElse(Array.empty[Int])).distinct.sorted)
+      if (byIdx.exists(_.isEmpty)) 0.0 else PhraseSegment.phraseFreq(byIdx, 0)
+    }, phraseScorer(allTerms.map(stats), boost))
   }
 
   /** Span-near: docs where all terms occur within a window of
-    * `terms.size + slop` positions (optionally in order), constant-scored.
-    * Two-phase like the phrase path: cheap doc-level conjunction via the
-    * grouped union, then the positional window verify
-    * (`lucene/queries/src/java/org/apache/lucene/queries/spans/SpanNearQuery.java`).
-    * Duplicate query terms must match *distinct* occurrences. */
+    * `terms.size + slop` positions (optionally in order), constant-scored
+    * (`lucene/queries/src/java/org/apache/lucene/queries/spans/SpanNearQuery.java`),
+    * led by the rarest term. Duplicate query terms must match *distinct*
+    * occurrences. */
   private def spanNearFrame(terms: Seq[String], slop: Int, inOrder: Boolean,
                             stats: Map[String, TermStats], boost: Double): DataFrame = {
-    if (terms.exists(t => !stats.contains(t))) return emptyFrame
+    if (terms.isEmpty || terms.exists(t => !stats.contains(t))) return emptyFrame
+    val ts = terms.toArray
     val window = terms.size + slop
-    val lead = rarestLead(terms, stats)
-    val member = inLeadSet(lead)
-    val perTerm = terms.zipWithIndex.map { case (t, i) =>
-      leapfrogged(t, lead)
-        .mapPartitions { it =>
-          it.flatMap { b =>
-            val d = PostingsCodec.decodeBlock(b, withPositions = true)
-            Iterator.tabulate(d.docs.length)(j => (d.docs(j), d.positions(j)))
-              .filter(h => member(h._1))
-          }
-        }
-        .toDF("docId", "positions")
-        .withColumn("idx", lit(i))
-    }
-    val n = terms.size
-    val matchUdf = udf((plists: Seq[Row]) => {
-      val arrays: Array[Array[Int]] = plists.sortBy(_.getInt(0))
-        .map(_.getSeq[Int](1).toArray).toArray
-      SpanMatcher.matches(arrays, window, inOrder)
-    })
-    perTerm.reduce(_ unionAll _)
-      .groupBy("docId")
-      .agg(org.apache.spark.sql.functions.count(lit(1)).as("nterms"),
-        collect_list(struct(col("idx"), col("positions"))).as("plists"))
-      .filter(col("nterms") === lit(n))
-      .filter(matchUdf(col("plists")))
-      .select(col("docId"), lit(boost).as("score"))
+    positionalFrame(terms, Seq(terms.minBy(stats(_).docFreq)), stats, pos => {
+      val arrays = ts.map(pos)
+      if (!arrays.contains(null) && SpanMatcher.matches(arrays, window, inOrder)) 1.0 else 0.0
+    }, (_, _) => boost)
   }
 
-  /** Interval algebra: candidate docs from the union of present terms'
-    * positional postings, per-doc minimal-interval evaluation executor-side
-    * ([[IntervalEval]]); constant-scored doc set like the span paths. No
-    * doc-level conjunction pre-filter — an `Or` source can match with terms
-    * absent — the evaluator itself rejects docs missing required terms. */
   /** Expand multiterm interval sources (prefix/wildcard) against the term
     * dictionary — the reference's `MultiTermIntervalsSource` rewrite: the
     * matching terms in term order become an [[Intervals.Or]] of term
@@ -729,6 +588,12 @@ final class Searcher(
     }
   }
 
+  /** Interval algebra: per-doc minimal-interval evaluation
+    * ([[IntervalEval]]), constant-scored like the span paths, led by the
+    * rarest required term ([[Intervals.requiredTerms]]). A source with no
+    * required term (an `Or`, at the root or nested) is led by every present
+    * term: an `Or` can match with terms absent, so their docs' union is the
+    * candidate set. */
   private def intervalFrame(src0: IntervalsSource, stats0: Map[String, TermStats],
                             boost: Double): DataFrame = {
     val src = expandIntervalSource(src0)
@@ -737,85 +602,16 @@ final class Searcher(
     val present = src.terms.toSeq.filter(stats.contains)
     if (present.isEmpty) return emptyFrame
     // the doc-level conjunction hidden in the algebra: any required term
-    // absent from the index ⇒ nothing can match; otherwise the rarest
-    // required term leapfrogs every other term's positional scan (the r3
-    // verdict's interval scale fix — no un-leadfiltered positional shuffle)
+    // absent from the index ⇒ nothing can match
     val required = Intervals.requiredTerms(src)
     if (required.exists(t => !stats.contains(t))) return emptyFrame
-    if (index.docAlignedSegments) return segmentIntervalFrame(src, present, required, boost)
-    src match {
-      // Root-level disjunction on a merged index: no required term exists,
-      // so no lead filter is possible and every alternative's FULL positional
-      // postings would union into the doc-keyed shuffle (the r4 verdict's
-      // head-term Or-interval residue). Doc-level semantics decompose
-      // exactly at the root — match(Or(ss)) = ∪ match(s) — so each branch
-      // re-enters with its OWN required set (an Ordered/Unordered branch
-      // gets its rarest-term leapfrog lead), and a bare term alternative is
-      // a doc-ids-only postings decode with no positional shuffle at all.
-      // AtLeast(1, ss) is the same disjunction in different syntax.
-      case Intervals.Term(t) =>
-        return expansionFrame(col("term") === t, boost)
-      case Intervals.Or(ss) if ss.nonEmpty =>
-        return ss.map(b => intervalFrame(b, stats, boost))
-          .reduce(_ unionAll _).select("docId").distinct()
-          .withColumn("score", lit(boost))
-      case Intervals.AtLeast(1, ss) if ss.nonEmpty =>
-        return ss.map(b => intervalFrame(b, stats, boost))
-          .reduce(_ unionAll _).select("docId").distinct()
-          .withColumn("score", lit(boost))
-      case _ =>
-    }
-    val lead: Option[(String, LeadFilter)] =
-      if (required.isEmpty || present.size < 2) None
-      else {
-        val rarest = required.minBy(t => stats(t).docFreq)
-        Some((rarest, buildLeadFilter(Seq(rarest), stats(rarest).docFreq)))
-      }
-    val member = inLeadSet(lead)
-    val perTerm = present.map { t =>
-      leapfrogged(t, lead)
-        .mapPartitions { it =>
-          it.flatMap { b =>
-            val d = PostingsCodec.decodeBlock(b, withPositions = true)
-            Iterator.tabulate(d.docs.length)(j => (d.docs(j), d.positions(j)))
-              .filter(h => member(h._1))
-          }
-        }
-        .toDF("docId", "positions")
-        .withColumn("t", lit(t))
-    }
-    val srcSer = src // stable serializable capture for the UDF closure
-    val matchUdf = udf((plists: Seq[Row]) => {
-      val posMap: Map[String, Array[Int]] =
-        plists.map(r => r.getString(0) -> r.getSeq[Int](1).toArray).toMap
-      IntervalEval.matches(srcSer, posMap)
-    })
-    perTerm.reduce(_ unionAll _)
-      .groupBy("docId")
-      .agg(collect_list(struct(col("t"), col("positions"))).as("plists"))
-      .filter(matchUdf(col("plists")))
-      .select(col("docId"), lit(boost).as("score"))
-  }
-
-  /** Doc-aligned interval path: the query terms' ENCODED blocks group by
-    * segment (compressed payloads shuffle, no per-doc row explosion) and
-    * [[IntervalSegment.matchingDocs]] runs the whole rarest-required-first
-    * leapfrog + interval evaluation inside the group — the
-    * [[segmentPhraseFrame]] shape applied to the interval algebra. */
-  private def segmentIntervalFrame(src: IntervalsSource, present: Seq[String],
-      required: Set[String], boost: Double): DataFrame = {
-    val srcSer = src
-    val reqSer = required
-    val rows = index.postings
-      .filter(col("term").isin(present: _*))
-      .select(col("segmentId"), col("term"), explode(col("blocks")).as("b"))
-      .as[(Long, String, PostingBlock)]
-    rows.groupByKey(_._1)
-      .flatMapGroups { (_, it) =>
-        val byTerm = SingleTask.byTerm(it.map(r => (r._2, r._3)))
-        IntervalSegment.matchingDocs(srcSer, reqSer, byTerm.view.mapValues(_.toSeq).toMap)
-          .map(d => (d, boost))
-      }.toDF("docId", "score")
+    val lead = if (required.isEmpty) Nil else Seq(required.minBy(stats(_).docFreq))
+    val ts = present.toArray
+    positionalFrame(present, lead, stats, pos => {
+      var m = Map.empty[String, Array[Int]]
+      ts.foreach { t => val a = pos(t); if (a != null) m = m.updated(t, a) }
+      if (IntervalEval.matches(src, m)) 1.0 else 0.0
+    }, (_, _) => boost)
   }
 
   /** Multi-term expansion (prefix/range/set/fuzzy/regexp) with constant score
@@ -1121,7 +917,7 @@ final class Searcher(
         // doc set (exact or coarse tier, cliff-free) block-skips and
         // row-filters the filter's expansion scan before any decode
         val lt = exactTerms(scoring).filter(stats.contains).minBy(t => stats(t).docFreq)
-        val lf = buildLeadFilter(Seq(lt), stats(lt).docFreq)
+        val lf = buildLeadFilter(lt, stats(lt).docFreq)
         val overlaps = udf((first: Long, last: Long) => lf.blockOverlaps(first, last))
         expansionBlocks(pred, dictFirst = true) match {
           case None => return emptyFrame
@@ -1241,21 +1037,48 @@ final class Searcher(
   private def topK(hits: DataFrame, k: Int): DataFrame =
     hits.orderBy(desc("score"), asc("docId")).limit(k)
 
-  /** The top-k plan of a flat term query (see the class doc), or None for
-    * any other shape. Its R slices cut the doc-id line at multiples of
+  /** The scored rows of `kernel` over the doc-range slices of `terms`'
+    * blocks (`postings` = their Σdf). R = ceil(postings / 2^16) slices, at
+    * most the default parallelism, cut the doc-id line at multiples of
     * `w = ceil(docCount / R)`: doc d belongs to slice `min(d / w, R − 1)`, a
-    * block goes to every slice its `[firstDoc, lastDoc]` overlaps, and each
-    * slice's kernel keeps only its own docs, so the clamp keeps the slices
-    * exact for any spread of doc ids. R = ceil(Σdf / 2^16), at most the
-    * default parallelism. */
+    * block goes to every slice its `[firstDoc, lastDoc]` overlaps, so each
+    * slice holds the complete postings of its docs on a built index and on a
+    * merged one, and `kernel(rows, lo, hi)` keeps only the docs of
+    * `[lo, hi]`, so the clamp keeps the slices exact for any spread of doc
+    * ids. A [[InvertedIndex.warm]]ed index at R = 1 reads the rows into ONE
+    * partition (one job, one stage, one task); everything else groups them
+    * by slice. Only the query terms' encoded blocks are shuffled. */
+  private def sliced(terms: Seq[String], postings: Long,
+      kernel: (Iterator[(String, PostingBlock)], Long, Long) => Iterator[(Long, Double)]): DataFrame = {
+    val r = math.max(1, math.min((postings + SingleTaskMaxPostings - 1) / SingleTaskMaxPostings,
+      spark.sparkContext.defaultParallelism.toLong).toInt)
+    if (index.warmTermStats.isDefined && r == 1)
+      termBlocks(terms).coalesce(1)
+        .mapPartitions(it => kernel(it, Long.MinValue, Long.MaxValue)).toDF("docId", "score")
+    else {
+      val w = math.max(1L, (cs.docCount + r - 1) / r)
+      val sliceOf: Long => Int = d => math.min(math.max(d / w, 0L), r - 1L).toInt
+      termBlocks(terms)
+        .flatMap { case (t, b) => (sliceOf(b.firstDoc) to sliceOf(b.lastDoc)).iterator.map(s => (s, t, b)) }
+        .groupByKey(_._1)
+        .flatMapGroups { (s, it) =>
+          kernel(it.map(x => (x._2, x._3)),
+            if (s == 0) Long.MinValue else s * w,
+            if (s == r - 1) Long.MaxValue else (s + 1) * w - 1)
+        }.toDF("docId", "score")
+    }
+  }
+
+  /** The top-k plan of a flat term query (see the class doc), or None for
+    * any other shape: one [[SingleTask.flatTopK]] per slice of [[sliced]],
+    * merged by one TakeOrdered. */
   private def flatPlan(q: Query, k: Int): Option[DataFrame] =
     flatten(q).filter(f => f.tie < 0 && (queryCache.isEmpty || !hasFilter(q))).map { f =>
       val stats = lookupStats(f.clauses.map(_.term).toSet)
       val present = f.clauses.map(_.term).distinct.filter(stats.contains)
       val postings = present.map(stats(_).docFreq).sum
-      val warm = index.warmTermStats.isDefined
       if (present.isEmpty) emptyFrame
-      else if (!warm && postings <= pruneThreshold) topK(compile(q, stats, 1.0), k)
+      else if (index.warmTermStats.isEmpty && postings <= pruneThreshold) topK(compile(q, stats, 1.0), k)
       else {
         val clauses = f.clauses.toArray
         val scorers = clauses.map { c =>
@@ -1263,55 +1086,27 @@ final class Searcher(
           else termScorer(stats(c.term), c.boost)
         }
         val (nMust, msm) = (f.nMust, f.msm)
-        val r = math.max(1, math.min((postings + SingleTaskMaxPostings - 1) / SingleTaskMaxPostings,
-          spark.sparkContext.defaultParallelism.toLong).toInt)
-        if (warm && r == 1)
-          topK(termBlocks(present).coalesce(1).mapPartitions { it =>
-            SingleTask.flatTopK(it, clauses, scorers, nMust, msm, k)
-          }.toDF("docId", "score"), k)
-        else {
-          val w = math.max(1L, (cs.docCount + r - 1) / r)
-          val sliceOf: Long => Int = d => math.min(math.max(d / w, 0L), r - 1L).toInt
-          topK(termBlocks(present)
-            .flatMap { case (t, b) => (sliceOf(b.firstDoc) to sliceOf(b.lastDoc)).iterator.map(s => (s, t, b)) }
-            .groupByKey(_._1)
-            .flatMapGroups { (s, it) =>
-              SingleTask.flatTopK(it.map(x => (x._2, x._3)), clauses, scorers, nMust, msm, k,
-                if (s == 0) Long.MinValue else s * w,
-                if (s == r - 1) Long.MaxValue else (s + 1) * w - 1)
-            }.toDF("docId", "score"), k)
-        }
+        topK(sliced(present, postings, (rows, lo, hi) =>
+          SingleTask.flatTopK(rows, clauses, scorers, nMust, msm, k, lo, hi)), k)
       }
     }
 
-  /** The single-task plan of a small phrase or expansion on a warm index, or
-    * None when it takes the multi-stage paths. Routed: the index is
+  /** The single-task plan of a small expansion on a warm index, or None
+    * when it takes the multi-stage paths. Routed: the index is
     * [[InvertedIndex.warm]]ed (its term statistics are driver-resident), the
-    * shape is an exact or sloppy phrase or a prefix / range / term-set
-    * expansion, and its distinct terms hold at most [[SingleTaskMaxPostings]]
-    * postings. The plan reads those terms' posting rows into one partition
-    * and scores them there with one [[SingleTask]] kernel — one job, one
-    * stage, one task, no shuffle, no broadcast and no job before the action. */
+    * shape is a prefix / range / term-set expansion, and its matched terms
+    * hold at most [[SingleTaskMaxPostings]] postings. The plan reads those
+    * terms' posting rows into one partition and keeps the k smallest doc
+    * ids there — one job, one stage, one task, no shuffle, no broadcast and
+    * no job before the action. */
   private def singleTaskPlan(q: Query, k: Int): Option[DataFrame] = {
     if (index.warmTermStats.isEmpty) return None
-    def rows(terms: Seq[String]): Dataset[(String, PostingBlock)] = termBlocks(terms).coalesce(1)
     q match {
-      case PhraseQuery(ts, slop) if ts.size >= 2 && (slop == 0 || ts.distinct.size == ts.size) =>
-        val stats = lookupStats(ts.toSet)
-        if (ts.distinct.flatMap(stats.get).map(_.docFreq).sum > SingleTaskMaxPostings) None
-        else if (ts.exists(t => !stats.contains(t))) Some(emptyFrame)
-        else {
-          val scorer = phraseScorer(ts.map(stats), 1.0)
-          val rarest = ts.distinct.minBy(t => stats(t).docFreq)
-          val terms = ts.toIndexedSeq
-          Some(topK(rows(ts.distinct).mapPartitions { it =>
-            SingleTask.topK(PhraseSegment.matchingDocs(SingleTask.byTerm(it), terms, rarest, slop, scorer), k)
-          }.toDF("docId", "score"), k))
-        }
       case e @ (_: PrefixQuery | _: TermRangeQuery | _: TermInSetQuery) =>
         dictionaryMatches(e).map { terms =>
           if (terms.isEmpty) emptyFrame
-          else topK(rows(terms).mapPartitions(it => SingleTask.smallestDocs(it.map(_._2), k))
+          else topK(termBlocks(terms).coalesce(1)
+            .mapPartitions(it => SingleTask.smallestDocs(it.map(_._2), k))
             .toDF("docId").withColumn("score", lit(1.0)), k)
         }
       case _ => None
@@ -1475,7 +1270,7 @@ final class Searcher(
                   /** expansion/positional queries only join the shared scans
                     * when at least this many share one (below it, their
                     * per-query [[search]] plans — the block-metadata top-k
-                    * of an expansion, the lead-filtered or single-task
+                    * of an expansion, the sliced positional plan of a
                     * phrase — beat an unpruned shared scan, measured on the
                     * 60-query reference set); scored
                     * term/boolean shapes always batch */

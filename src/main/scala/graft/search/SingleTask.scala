@@ -115,89 +115,84 @@ object SingleTask {
   }
 }
 
-/** Exact / sloppy phrase matching over a set of posting blocks that holds
-  * the COMPLETE postings of the docs it covers — one doc-aligned segment, or
-  * the whole index — the reference's per-LeafReaderContext
-  * `ExactPhraseMatcher` / `SloppyPhraseMatcher` loop
-  * (`lucene/core/src/java/org/apache/lucene/search/ExactPhraseMatcher.java:39`):
-  * decode the rarest term first, skip every other term's blocks that don't
-  * overlap its doc set, intersect, verify positions. */
-object PhraseSegment {
+/** The positional-match kernel of every positional query — phrases,
+  * multi-phrases, span-near and interval sources — over a set of posting
+  * blocks that holds the COMPLETE postings of the docs in `[lo, hi]` (one
+  * doc-range slice of [[Searcher]]'s positional plan, on a built index or a
+  * merged one): the reference's per-LeafReaderContext `ExactPhraseMatcher` /
+  * `SloppyPhraseMatcher` / interval-iterator loop
+  * (`lucene/core/src/java/org/apache/lucene/search/ExactPhraseMatcher.java:39`).
+  * The lead terms decode first and their docs in `[lo, hi]` are the
+  * candidates; every other term's block decodes only when its
+  * `[firstDoc, lastDoc]` range holds a candidate — the
+  * `ConjunctionDISIApproximation` advance pattern — and the per-doc
+  * frequency function verifies positions. */
+object Positional {
 
-  /** `(docId, score)` of every doc matching the phrase `terms` within `slop`.
-    * `byTerm` holds the blocks per query term; `rarest` is the term decoded
-    * first (the globally rarest: its docs bound every candidate). */
+  /** `(docId, freq, doclen)` of every candidate doc in `[lo, hi]` whose
+    * `freq` is above 0. `byTerm` holds the blocks per present query term;
+    * `lead` is the term set whose docs' union bounds every match (empty:
+    * every term in `byTerm`). `freq` maps a doc's positions — per term, its
+    * sorted positions or null when the doc lacks the term — to a frequency,
+    * 0 meaning no match. `onDecode` is a test hook counting block decodes. */
   def matchingDocs(byTerm: scala.collection.Map[String, scala.collection.Seq[PostingBlock]],
-      terms: IndexedSeq[String], rarest: String, slop: Int,
-      scorer: (Double, Int) => Double): Iterator[(Long, Double)] = {
-    val distinctTerms = terms.distinct
-    if (!distinctTerms.forall(byTerm.contains)) return Iterator.empty
-    val rdec = byTerm(rarest).sortBy(_.firstDoc).map(b => PostingsCodec.decodeBlock(b, withPositions = true))
-    val nCand = rdec.iterator.map(_.docs.length).sum
-    val candDocs = new Array[Long](nCand)
-    val candLens = new Array[Int](nCand)
-    val candPos = new Array[Array[Int]](nCand)
-    var o = 0
-    rdec.foreach { d =>
-      var i = 0
-      while (i < d.docs.length) {
-        candDocs(o) = d.docs(i); candLens(o) = d.doclens(i); candPos(o) = d.positions(i)
-        o += 1; i += 1
-      }
-    }
-    // one segment's blocks are doc-ordered with disjoint ranges, so the
-    // candidates arrive sorted; blocks gathered across segments or merged
-    // (term, salt) rows overlap and are sorted here
-    if ((1 until nCand).exists(i => candDocs(i - 1) > candDocs(i))) {
-      val order = (0 until nCand).sortBy(candDocs(_))
-      val (ds, ls, ps) = (order.map(candDocs).toArray, order.map(candLens).toArray, order.map(candPos).toArray)
-      System.arraycopy(ds, 0, candDocs, 0, nCand)
-      System.arraycopy(ls, 0, candLens, 0, nCand)
-      System.arraycopy(ps, 0, candPos, 0, nCand)
-    }
-    val posOf = mutable.HashMap.empty[String, java.util.HashMap[Long, Array[Int]]]
-    posOf(rarest) = {
-      val m = new java.util.HashMap[Long, Array[Int]](nCand * 2)
-      var i = 0
-      while (i < nCand) { m.put(candDocs(i), candPos(i)); i += 1 }
-      m
-    }
-    distinctTerms.filter(_ != rarest).foreach { t =>
-      val m = new java.util.HashMap[Long, Array[Int]]()
+      lead: Set[String], lo: Long, hi: Long,
+      freq: (String => Array[Int]) => Double,
+      onDecode: () => Unit = () => ()): Iterator[(Long, Double, Int)] = {
+    val posOf = mutable.HashMap.empty[String, mutable.LongMap[Array[Int]]]
+    val doclens = mutable.LongMap.empty[Int]
+    (if (lead.isEmpty) byTerm.keySet else lead.filter(byTerm.contains)).foreach { t =>
+      val m = mutable.LongMap.empty[Array[Int]]
       byTerm(t).foreach { b =>
-        // skip blocks with no candidate in range — the leapfrog skip,
-        // applied before DECODE (candDocs is sorted)
-        var i = java.util.Arrays.binarySearch(candDocs, b.firstDoc)
-        if (i < 0) i = -i - 1
-        if (i < nCand && candDocs(i) <= b.lastDoc) {
-          val d = PostingsCodec.decodeBlock(b, withPositions = true)
-          var j = 0
-          while (j < d.docs.length) {
-            if (java.util.Arrays.binarySearch(candDocs, d.docs(j)) >= 0)
-              m.put(d.docs(j), d.positions(j))
-            j += 1
-          }
+        onDecode()
+        val d = PostingsCodec.decodeBlock(b, withPositions = true)
+        var i = 0
+        while (i < d.docs.length) {
+          val doc = d.docs(i)
+          if (doc >= lo && doc <= hi) { m.update(doc, d.positions(i)); doclens.update(doc, d.doclens(i)) }
+          i += 1
         }
       }
       posOf(t) = m
     }
-    Iterator.range(0, nCand).flatMap { i =>
-      val doc = candDocs(i)
-      val arrays = new Array[Array[Int]](terms.length)
-      var ok = true
-      var s = 0
-      while (ok && s < terms.length) {
-        val a = posOf(terms(s)).get(doc)
-        if (a == null) ok = false else arrays(s) = a
-        s += 1
-      }
-      if (!ok) None
-      else {
-        val freq = phraseFreq(arrays, slop)
-        if (freq > 0) Some((doc, scorer(freq, candLens(i)))) else None
+    val cands = doclens.keys.toArray
+    if (cands.isEmpty) return Iterator.empty
+    java.util.Arrays.sort(cands)
+    byTerm.foreach { case (t, bs) =>
+      if (!posOf.contains(t)) {
+        val m = mutable.LongMap.empty[Array[Int]]
+        bs.foreach { b =>
+          var i = java.util.Arrays.binarySearch(cands, b.firstDoc)
+          if (i < 0) i = -i - 1
+          if (i < cands.length && cands(i) <= b.lastDoc) {
+            onDecode()
+            val d = PostingsCodec.decodeBlock(b, withPositions = true)
+            var j = 0
+            while (j < d.docs.length) {
+              if (doclens.contains(d.docs(j))) m.update(d.docs(j), d.positions(j))
+              j += 1
+            }
+          }
+        }
+        posOf(t) = m
       }
     }
+    var doc = 0L
+    val positions: String => Array[Int] = t => posOf.get(t) match {
+      case Some(m) => m.getOrNull(doc)
+      case None => null
+    }
+    cands.iterator.flatMap { d =>
+      doc = d
+      val f = freq(positions)
+      if (f > 0) Iterator.single((d, f, doclens(d))) else Iterator.empty
+    }
   }
+}
+
+/** Phrase frequency, shared by [[Searcher]]'s positional plan and its
+  * batched phrase pass. */
+object PhraseSegment {
 
   /** One doc's phrase frequency from its per-term sorted positions (in
     * query order): with slop 0 the number of start positions p where term i

@@ -5,8 +5,9 @@ package graft.search
   * SpanOrQuery.java:33`, `SpanNotQuery.java:38`, `SpanFirstQuery.java:35`,
   * `SpanContainingQuery.java:31`, `SpanWithinQuery.java:31`) — re-expressed
   * as a THIN LOWERING onto the interval algebra ([[Intervals]]), which this
-  * engine already evaluates with rarest-required-term leapfrogs and
-  * segment-local matching.
+  * engine evaluates through its one positional kernel
+  * ([[Positional.matchingDocs]]) over doc-range slices, led by the rarest
+  * required term.
   *
   * Span enumeration and minimal-interval enumeration differ per span (spans
   * can be non-minimal), but they agree at the DOC-MATCH level for

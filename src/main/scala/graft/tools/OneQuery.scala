@@ -7,14 +7,16 @@ import org.apache.spark.sql.SparkSession
   * SQL) without paying the full Verify sweep — the builder's fast local
   * check for a single new gate.
   *
-  * Usage: runMain graft.tools.OneQuery <sfDir> <outDir> <queryName>...
+  * Usage: runMain graft.tools.OneQuery <sfDir> <outDir> <queryName>...;
+  * runs `local[SPARK_GRAFT_CPUS]` (default: the JVM's available processors).
   */
 object OneQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
     val names = args.drop(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

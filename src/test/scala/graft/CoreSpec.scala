@@ -279,6 +279,20 @@ class AnalysisSpec extends AnyFunSuite {
     }
   }
 
+  test("dictionary analyzers resolve only when constructed in this process") {
+    // names no instance in this process carries: a dictionary-less stand-in
+    // would analyze queries unlike the index, so the open must refuse
+    Seq("hunspell:0", "german-compound:0", "dutch-compound:0").foreach { n =>
+      val e = intercept[IllegalArgumentException](Analyzers.byName(n))
+      assert(e.getMessage.contains(n) && e.getMessage.contains("dictionary"), e.getMessage)
+    }
+    val dict = CompoundWordDictionary(Set("win", "dow"))
+    Seq(HunspellAnalyzer(Hunspell.parse("SET UTF-8\nSFX E Y 1\nSFX E 0 e .\n", "1\ntabl/E\n")),
+      GermanAnalyzer(compound = Some(dict)), DutchAnalyzer(compound = Some(dict))).foreach { a =>
+      assert(Analyzers.byName(a.name) eq a, a.name)
+    }
+  }
+
   test("simple analyzer: lowercase alnum runs with consecutive positions") {
     val toks = SimpleAnalyzer.tokenize("The fast-scan, 3.14 JOINs!")
     assert(toks.map(_.term) == Seq("the", "fast", "scan", "3", "14", "joins"))

@@ -24,19 +24,49 @@ class FuzzSpec extends AnyFunSuite {
 
   private def term(rnd: Random): String = vocab(rnd.nextInt(vocab.size))
 
-  private def randQuery(rnd: Random, depth: Int): Query = {
-    val leaf = depth <= 0 || rnd.nextInt(3) == 0
-    if (leaf) rnd.nextInt(8) match {
-      case 0 | 1 => TermQuery(term(rnd))
-      case 2 => PhraseQuery(Seq(term(rnd), term(rnd)))
-      case 3 => PrefixQuery(term(rnd).take(1 + rnd.nextInt(3)))
-      case 4 => TermInSetQuery(Set(term(rnd), term(rnd), term(rnd)))
-      case 5 => FuzzyQuery(term(rnd), 1 + rnd.nextInt(2))
-      case 6 => SynonymQuery(Seq(term(rnd), term(rnd)))
-      case _ =>
-        val a = term(rnd); val b = term(rnd)
-        TermRangeQuery(Some(if (a <= b) a else b), Some(if (a <= b) b else a), true, rnd.nextBoolean())
-    } else rnd.nextInt(4) match {
+  private def randLeaf(rnd: Random): Query = rnd.nextInt(8) match {
+    case 0 | 1 => TermQuery(term(rnd))
+    case 2 => PhraseQuery(Seq(term(rnd), term(rnd)))
+    case 3 => PrefixQuery(term(rnd).take(1 + rnd.nextInt(3)))
+    case 4 => TermInSetQuery(Set(term(rnd), term(rnd), term(rnd)))
+    case 5 => FuzzyQuery(term(rnd), 1 + rnd.nextInt(2))
+    case 6 => SynonymQuery(Seq(term(rnd), term(rnd)))
+    case _ =>
+      val a = term(rnd); val b = term(rnd)
+      TermRangeQuery(Some(if (a <= b) a else b), Some(if (a <= b) b else a), true, rnd.nextBoolean())
+  }
+
+  /** n pairwise-distinct random terms (sloppy phrases reject repeats). */
+  private def distinctTerms(rnd: Random, n: Int): Seq[String] = {
+    val out = scala.collection.mutable.LinkedHashSet.empty[String]
+    while (out.size < n) out += term(rnd)
+    out.toSeq
+  }
+
+  private def randSource(rnd: Random, depth: Int): IntervalsSource =
+    if (depth <= 0 || rnd.nextInt(3) == 0) Intervals.Term(term(rnd))
+    else rnd.nextInt(5) match {
+      case 0 => Intervals.Or(Seq(randSource(rnd, depth - 1), randSource(rnd, depth - 1)))
+      case 1 => Intervals.Ordered(Seq(randSource(rnd, depth - 1), randSource(rnd, depth - 1)))
+      case 2 => Intervals.Unordered(Seq(randSource(rnd, depth - 1), randSource(rnd, depth - 1)))
+      case 3 => Intervals.MaxWidth(2 + rnd.nextInt(6), randSource(rnd, depth - 1))
+      case _ => Intervals.Phrase(Seq(term(rnd), term(rnd)))
+    }
+
+  /** Leaves of the positional pass: sloppy phrases, multi-phrases,
+    * span-near and interval sources, plus the plain leaves. */
+  private def positionalLeaf(rnd: Random): Query = rnd.nextInt(6) match {
+    case 0 => PhraseQuery(distinctTerms(rnd, 2 + rnd.nextInt(2)), slop = 1 + rnd.nextInt(3))
+    case 1 => MultiPhraseQuery(Seq.fill(2 + rnd.nextInt(2))(Seq.fill(1 + rnd.nextInt(3))(term(rnd))))
+    case 2 => SpanNearQuery(Seq.fill(2 + rnd.nextInt(2))(term(rnd)), rnd.nextInt(4), rnd.nextBoolean())
+    case 3 => IntervalQuery(randSource(rnd, 2))
+    case _ => randLeaf(rnd)
+  }
+
+  private def randQuery(rnd: Random, depth: Int, leaf: Random => Query = randLeaf): Query = {
+    val isLeaf = depth <= 0 || rnd.nextInt(3) == 0
+    if (isLeaf) leaf(rnd)
+    else rnd.nextInt(4) match {
       case 0 =>
         val n = 2 + rnd.nextInt(3)
         BooleanQuery((0 until n).map { _ =>
@@ -45,14 +75,14 @@ class FuzzSpec extends AnyFunSuite {
             case 1 | 2 => Occur.MUST
             case _ => Occur.SHOULD
           }
-          occ -> randQuery(rnd, depth - 1)
+          occ -> randQuery(rnd, depth - 1, leaf)
         })
       case 1 =>
         val n = 2 + rnd.nextInt(2)
-        BooleanQuery((0 until n).map(_ => Occur.SHOULD -> randQuery(rnd, depth - 1)),
+        BooleanQuery((0 until n).map(_ => Occur.SHOULD -> randQuery(rnd, depth - 1, leaf)),
           minimumShouldMatch = 1 + rnd.nextInt(2))
-      case 2 => DisjunctionMaxQuery(Seq(randQuery(rnd, depth - 1), randQuery(rnd, depth - 1)))
-      case _ => BoostQuery(randQuery(rnd, depth - 1), 0.5f + rnd.nextInt(4))
+      case 2 => DisjunctionMaxQuery(Seq(randQuery(rnd, depth - 1, leaf), randQuery(rnd, depth - 1, leaf)))
+      case _ => BoostQuery(randQuery(rnd, depth - 1, leaf), 0.5f + rnd.nextInt(4))
     }
   }
 
@@ -74,21 +104,33 @@ class FuzzSpec extends AnyFunSuite {
     }
   }
 
-  test("searcher doc set == per-doc evaluator on 120 random query trees") {
+  /** The searcher's and the per-doc evaluator's doc sets agree on `n`
+    * random trees; returns how many were non-empty. */
+  private def differential(label: String, seed: Long, n: Int, leaf: Random => Query): Int = {
     val searcher = new Searcher(index, ScoringMode.PreciseBM25())
-    val rnd = new Random(20260817)
+    val rnd = new Random(seed)
     var nonEmpty = 0
-    (0 until 120).foreach { i =>
-      val q = randQuery(rnd, depth = 2)
+    (0 until n).foreach { i =>
+      val q = randQuery(rnd, depth = 2, leaf)
       val viaIndex: Set[Long] =
         searcher.scored(q).select("docId").collect().map(_.getLong(0)).toSet
       val viaDocs: Set[Long] =
         views.collect { case (id, v) if Monitor.matches(QueryRewriter.rewrite(q), v) => id }.toSet
       assert(viaIndex == viaDocs,
-        s"fuzz #$i mismatch (idx=${viaIndex.size} docs=${viaDocs.size}) for $q\n" +
+        s"$label #$i mismatch (idx=${viaIndex.size} docs=${viaDocs.size}) for $q\n" +
           s"only-index=${(viaIndex -- viaDocs).take(5)} only-docs=${(viaDocs -- viaIndex).take(5)}")
       if (viaIndex.nonEmpty) nonEmpty += 1
     }
+    nonEmpty
+  }
+
+  test("searcher doc set == per-doc evaluator on 120 random query trees") {
+    val nonEmpty = differential("fuzz", 20260817, 120, randLeaf)
     assert(nonEmpty > 30, s"fuzz corpus too sparse: only $nonEmpty non-empty result sets")
+    // a second pass whose leaves include sloppy phrases, multi-phrases,
+    // span-near and interval sources: the positional kernel against the
+    // per-doc evaluator
+    val positional = differential("positional fuzz", 20261019, 60, positionalLeaf)
+    assert(positional > 15, s"positional fuzz too sparse: only $positional non-empty result sets")
   }
 }

@@ -191,7 +191,7 @@ class IntervalsSpec extends AnyFunSuite {
 
   test("segment matcher leapfrogs: head-term blocks outside the rarest required term's range never decode") {
     import graft.core.PostingsCodec
-    import graft.search.IntervalSegment
+    import graft.search.Positional
     // head term "the" in every doc 0..4095 (32 blocks of 128); rare term
     // "zebra" in two docs of the LAST block only
     val n = 4096
@@ -202,24 +202,34 @@ class IntervalsSpec extends AnyFunSuite {
         Array(1, 1), Array(100, 100), Array(Array(6), Array(99))))
     val totalBlocks = byTerm.values.map(_.size).sum
     assert(totalBlocks == 33)
+    // the positional kernel with an interval source's per-doc function, led
+    // by the rarest required term like the searcher's interval plan
+    def matching(src: graft.search.IntervalsSource, lead: Set[String], onDecode: () => Unit,
+        lo: Long = Long.MinValue, hi: Long = Long.MaxValue): Vector[Long] =
+      Positional.matchingDocs(byTerm, lead, lo, hi, pos => {
+        val m = src.terms.flatMap(t => Option(pos(t)).map(t -> _)).toMap
+        if (IntervalEval.matches(src, m)) 1.0 else 0.0
+      }, onDecode).map(_._1).toVector
     val src = Ordered(Seq(Term("the"), Term("zebra")))
+    assert(requiredTerms(src) == Set("the", "zebra"))
     var decodes = 0
-    val got = IntervalSegment.matchingDocs(src, requiredTerms(src), byTerm,
-      onDecode = () => decodes += 1).toVector
+    val got = matching(src, Set("zebra"), () => decodes += 1)
     assert(got == Vector(4000L, 4090L))
     // 1 zebra block (the lead) + 1 overlapping "the" block; the other 31
     // "the" blocks are skipped undecoded
     assert(decodes == 2, s"decoded $decodes of $totalBlocks blocks (expected 2)")
-    // an un-gated Or over the same terms must decode everything
+    // a doc-range slice keeps only its own candidates
+    assert(matching(src, Set("zebra"), () => (), lo = 0L, hi = 4089L) == Vector(4000L))
+    // an un-gated Or over the same terms (no required term: every present
+    // term leads) must decode everything
     var all = 0
     val orSrc = Or(Seq(Term("the"), Term("zebra")))
-    IntervalSegment.matchingDocs(orSrc, requiredTerms(orSrc), byTerm,
-      onDecode = () => all += 1).length
+    assert(requiredTerms(orSrc).isEmpty)
+    assert(matching(orSrc, Set.empty, () => all += 1).length == n)
     assert(all == totalBlocks)
-    // a required term absent from the segment short-circuits: zero decodes
+    // a lead term absent from the blocks short-circuits: zero decodes
     var none = 0
-    assert(IntervalSegment.matchingDocs(Ordered(Seq(Term("the"), Term("missing"))),
-      Set("the", "missing"), byTerm, onDecode = () => none += 1).isEmpty)
+    assert(matching(Ordered(Seq(Term("the"), Term("missing"))), Set("missing"), () => none += 1).isEmpty)
     assert(none == 0)
   }
 

@@ -49,34 +49,35 @@ class MergeSpec extends AnyFunSuite {
     assert(violations.isEmpty, violations.take(5).mkString("; "))
   }
 
-  test("Or-rooted interval on a MERGED index decomposes per branch: no positional union, results exact") {
+  test("Or and no-required-term intervals on a MERGED index: no positional shuffle, exact") {
     val (merged, _) = mergedPair
     val s = new Searcher(merged, ScoringMode.PreciseBM25())
-    // head-term disjunction — no required term gates the whole source, but
-    // the root decomposes: the bare term branch is a doc-ids-only decode and
-    // the Ordered branch leapfrogs off its own rarest required term
+    // head-term disjunctions — no required term gates the source, so every
+    // present term leads the slice kernel; only encoded blocks shuffle
     def brute(src: graft.search.IntervalsSource): Set[Long] =
       corpus.collect { case (doc, toks)
         if graft.search.IntervalEval.matches(src,
           toks.groupBy(_.term).map { case (t, ts) => t -> ts.map(_.position).toArray.sorted })
         => doc }.toSet
-    // term-only head Or: NO positional decode anywhere — doc-ids-only
-    // postings scans unioned, no collect_list/plists aggregation in the plan
-    val termOr = Intervals.Or(Seq(Intervals.Term("spark"), Intervals.Term("fast")))
-    val termFrame = s.scored(IntervalQuery(termOr))
-    val plan = termFrame.queryExecution.executedPlan.toString
-    assert(!plan.contains("plists") && !plan.contains("collect_list"),
-      s"term-only Or-root interval must not union positional postings into a doc-keyed shuffle:\n$plan")
-    assert(termFrame.collect().map(_.getLong(0)).toSet == brute(termOr))
-    // mixed Or: the Ordered branch re-enters with its OWN required-term lead
-    // (its positional aggregation is the accepted lead-filtered shape); the
-    // union stays exact
-    val mixed = Intervals.Or(Seq(
-      Intervals.Term("spark"),
-      Intervals.Ordered(Seq(Intervals.Term("fast"), Intervals.Term("data")))))
-    val got = s.scored(IntervalQuery(mixed)).collect().map(_.getLong(0)).toSet
-    assert(got == brute(mixed))
-    assert(got.nonEmpty)
+    def or(a: String, b: String) = Intervals.Or(Seq(Intervals.Term(a), Intervals.Term(b)))
+    // a term-only Or at the root, a mixed Or whose Ordered branch has its own
+    // required terms, and an Or nested under an Unordered (no required term
+    // anywhere): none unions positional postings into a doc-keyed shuffle
+    Seq(
+      or("spark", "fast"),
+      Intervals.Or(Seq(
+        Intervals.Term("spark"),
+        Intervals.Ordered(Seq(Intervals.Term("fast"), Intervals.Term("data"))))),
+      Intervals.Unordered(Seq(or("query", "window"), or("scan", "merge")))
+    ).foreach { src =>
+      val frame = s.scored(IntervalQuery(src))
+      val plan = frame.queryExecution.executedPlan.toString
+      assert(!plan.contains("plists") && !plan.contains("collect_list"),
+        s"$src must not union positional postings into a doc-keyed shuffle:\n$plan")
+      val got = frame.collect().map(_.getLong(0)).toSet
+      assert(got == brute(src), s"$src")
+      assert(got.nonEmpty, s"$src")
+    }
   }
 
   test("sliced top-k is exact on a MERGED index") {
@@ -85,8 +86,6 @@ class MergeSpec extends AnyFunSuite {
     // own would sum partial scores — the sliced top-k plan cuts by doc range
     // instead, and pruneThreshold = 1 sends these queries to it
     val (merged, _) = mergedPair
-    assert(fragmented.docAlignedSegments, "built index should be doc-aligned")
-    assert(!merged.docAlignedSegments, "merged index must NOT be doc-aligned")
     val pruned = new Searcher(merged, ScoringMode.PreciseBM25(), pruneThreshold = 1L)
     val plain = new Searcher(merged, ScoringMode.PreciseBM25(), pruneThreshold = Long.MaxValue)
     Seq(Seq("spark", "data"), Seq("the", "dup", "vector")).foreach { ts =>
@@ -111,6 +110,12 @@ class MergeSpec extends AnyFunSuite {
       BooleanQuery.must(TermQuery("data"), TermQuery("dup")),
       BooleanQuery.should(TermQuery("vector"), TermQuery("stream")),
       PhraseQuery(Seq("batch", "batch")),
+      PhraseQuery(Seq("fast", "key"), slop = 2),
+      MultiPhraseQuery(Seq(Seq("the", "a"), Seq("fast", "big"))),
+      SpanNearQuery(Seq("spark", "window"), 1, inOrder = false),
+      IntervalQuery(Intervals.Unordered(Seq(
+        Intervals.Or(Seq(Intervals.Term("query"), Intervals.Term("window"))),
+        Intervals.Or(Seq(Intervals.Term("scan"), Intervals.Term("merge")))))),
       PrefixQuery("st"))
     queries.foreach { q =>
       val ra = a.search(q, 20).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq

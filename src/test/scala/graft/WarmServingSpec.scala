@@ -10,8 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Warm serving: the single-task route a warmed index takes for small
   * queries must return the cold exhaustive top-k, in one job of one stage;
-  * flat queries above its postings bound must take the sliced top-k plan
-  * and return the same top-k; tombstoned indexes keep the multi-stage paths.
+  * flat queries and phrases above its postings bound must take the sliced
+  * plan and return the same top-k; tombstoned indexes anti-join the live
+  * docs.
   * Checked on a built (doc-aligned) index and on its merge. */
 class WarmServingSpec extends AnyFunSuite with BeforeAndAfterAll {
   import SparkTestEnv.spark
@@ -198,6 +199,13 @@ class WarmServingSpec extends AnyFunSuite with BeforeAndAfterAll {
       assertSameTopK(s"$dir: filler disjunction", rows(d), want(0))
       assert(!routed(c) && sliced(c), s"$dir: filler conjunction")
       assert(want(1).nonEmpty && rows(c) == want(1), s"$dir: filler conjunction ${rows(c)} vs ${want(1)}")
+      // every doc carries the fillers in order: the phrase (Σdf 66,000)
+      // takes the positional plan's 2 slices, and each doc matches exactly
+      // once, also where a block spans the slice boundary
+      val p = w.search(PhraseQuery(Fillers), 3000)
+      assert(!routed(p) && sliced(p), s"$dir: filler phrase")
+      val ids = rows(p).map(_._1)
+      assert(ids.sorted == (0L until 2200L), s"$dir: filler phrase matched ${ids.size} rows")
     }
 
     val s = spark
@@ -207,7 +215,7 @@ class WarmServingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val w = new Searcher(warm(baseDir), ScoringMode.PreciseBM25())
     Seq(BooleanQuery.must(TermQuery("w0"), TermQuery("w1")), PhraseQuery(Seq("w0", "w1"))).foreach { q =>
       val got = w.search(q, 10)
-      assert(!routed(got), s"$q")
+      assert(got.queryExecution.executedPlan.toString.contains("LeftAnti"), s"$q")
       val hits = rows(got)
       assert(!hits.exists(h => deleted(h._1)), s"$q returned a deleted doc")
       assertSameTopK(s"tombstoned $q", hits, rows(cold(baseDir).search(q, 10)))
