@@ -243,6 +243,11 @@ object PostingsCodec {
     * 8 pairs bound the metadata at ~40 bytes/block). */
   val MaxImpacts = 8
 
+  /** Bytes of one block's fields: its fixed-width header plus its arrays. */
+  def payloadBytes(b: PostingBlock): Long =
+    25L + 4L * b.impFreqs.length + b.impDlbs.length + b.docDeltas.length +
+      b.freqs.length + b.dlbs.length + b.positions.length
+
   /** Pareto frontier of (freq, quantized-length) over one block's postings:
     * maximal pairs under (freq ≥, length ≤), returned freq-ascending /
     * length-ascending, capped at [[MaxImpacts]] by merging adjacent pairs

@@ -608,6 +608,10 @@ final class InvertedIndex private (
 
   @transient @volatile private var warmStats: Map[String, (Long, Long)] = null
 
+  // @transient like warmStats: task closures capture this index, and the
+  // blocks must not travel with them
+  @transient @volatile private var resident: Map[String, Array[PostingBlock]] = null
+
   /** Serving mode: pin the postings and statistics views in cluster cache
     * (compressed columnar) and materialize them — the analog of a
     * page-cache-resident Lucene index behind a `SearcherManager`. Repeated
@@ -617,19 +621,53 @@ final class InvertedIndex private (
     * small enough (Zipf vocabularies are tiny relative to postings): that
     * removes the per-query term-stats lookup JOB entirely — the
     * `TermStates.build` of a warm reader is a RAM lookup, not an IO — and
-    * lets the searcher size a query's top-k plan before any job runs. */
-  def warm(): this.type = {
+    * lets the searcher size a query's top-k plan before any job runs.
+    *
+    * The encoded posting blocks become driver-resident too ([[residentBlocks]])
+    * when the cached postings fit an eighth of the driver heap — a size Spark
+    * measured while caching them, so the check runs no job. The searcher then
+    * runs a small query's kernel on the driver, with no job at all. The
+    * cluster cache stays: the batch pass and the multi-slice plans read it. */
+  def warm(): this.type = warmWithin(Runtime.getRuntime.maxMemory / 8)
+
+  /** [[warm]] with the resident blocks' byte budget given: the blocks become
+    * resident when [[cachedPostingsBytes]] is within it. */
+  private[graft] def warmWithin(budget: Long): this.type = {
     postings.cache(); termStats.cache(); docs.cache()
     postings.count(); docs.count()
     val n = termStats.count()
     if (n <= 2000000L)
       warmStats = termStats.select("term", "df", "ttf").collect()
         .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+    if (warmStats != null && cachedPostingsBytes <= budget) {
+      import spark.implicits._
+      val byTerm = mutable.HashMap.empty[String, mutable.ArrayBuilder[PostingBlock]]
+      postings.select("term", "blocks").as[(String, Array[PostingBlock])].collect().foreach {
+        case (t, bs) => byTerm.getOrElseUpdate(t, Array.newBuilder[PostingBlock]) ++= bs
+      }
+      resident = byTerm.iterator.map { case (t, b) => t -> b.result() }.toMap
+    }
     this
   }
 
+  /** The in-memory size Spark measured for the cached postings, or
+    * `Long.MaxValue` when they are not cached. */
+  private def cachedPostingsBytes: Long =
+    spark.sharedState.cacheManager
+      .lookupCachedData(postings.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+      .map(_.cachedRepresentation.computeStats().sizeInBytes)
+      .filter(_.isValidLong).map(_.toLong).getOrElse(Long.MaxValue)
+
   /** Driver-resident term dictionary when [[warm]]ed (term → (df, ttf)). */
   def warmTermStats: Option[Map[String, (Long, Long)]] = Option(warmStats)
+
+  /** Driver-resident encoded posting blocks when [[warm]] found the postings
+    * within its budget (term → all of the term's blocks). */
+  def residentBlocks: Option[Map[String, Array[PostingBlock]]] = Option(resident)
+
+  /** Bytes of the [[residentBlocks]] payload; 0 when none are resident. */
+  def residentBytes: Long =
+    residentBlocks.fold(0L)(_.valuesIterator.flatMap(_.iterator).map(PostingsCodec.payloadBytes).sum)
 
   @transient @volatile private var warmSorted: Array[UTF8String] = null
 

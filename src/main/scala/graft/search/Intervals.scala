@@ -174,40 +174,69 @@ object Intervals {
     * `lucene/queries/src/java/org/apache/lucene/queries/intervals/ConjunctionIntervalsSource.java`).
     * Conservative: a returned term is provably required; an empty set means
     * no single term gates the match (e.g. an `Or`, at the root or nested),
-    * and then every present term's docs are candidates. */
+    * and then [[leadTerms]] looks inside the source for a lead set. */
   def requiredTerms(src: IntervalsSource): Set[String] = src match {
     case Term(t) => Set(t)
     case Phrase(ts) => ts.toSet
-    case Ordered(ss) => ss.flatMap(requiredTerms).toSet
-    case Unordered(ss) => ss.flatMap(requiredTerms).toSet
     case Or(ss) =>
       if (ss.isEmpty) Set.empty
       else ss.map(requiredTerms).reduce(_ intersect _)
-    case AtLeast(n, ss) =>
-      if (n >= ss.size) ss.flatMap(requiredTerms).toSet
-      else if (n <= 0) Set.empty
+    case AtLeast(n, ss) if n < ss.size =>
+      if (n <= 0) Set.empty
       else {
         // required iff EVERY n-subset needs it ⇔ required by > (m − n) children
         ss.flatMap(s => requiredTerms(s).toSeq)
           .groupBy(identity).collect { case (t, g) if g.size > ss.size - n => t }
           .toSet
       }
-    case MaxWidth(_, s) => requiredTerms(s)
-    case MaxGaps(_, s) => requiredTerms(s)
-    case FirstEnding(_, s) => requiredTerms(s)
-    case Extend(s, _, _) => requiredTerms(s)
-    case Containing(big, small) => requiredTerms(big) ++ requiredTerms(small)
-    case ContainedBy(small, big) => requiredTerms(small) ++ requiredTerms(big)
-    // subtractive sources: only the positive side is required (the negative
-    // side ABSENT still matches)
-    case NotContaining(m, _) => requiredTerms(m)
-    case NotContainedBy(s, _) => requiredTerms(s)
-    case Overlapping(s, r) => requiredTerms(s) ++ requiredTerms(r)
-    case NonOverlapping(m, _) => requiredTerms(m)
-    case NotNear(_, _, m, _) => requiredTerms(m)
-    case Before(s, r) => requiredTerms(s) ++ requiredTerms(r)
-    case After(s, r) => requiredTerms(s) ++ requiredTerms(r)
     case _: Prefix | _: Wildcard => Set.empty // unknown until expansion
+    case other => conjuncts(other).flatMap(requiredTerms).toSet
+  }
+
+  /** A term set whose docs' union holds every doc `src` matches — the
+    * searcher's positional kernel decodes these terms first and takes their
+    * docs as its candidates (empty: no bound found, every term leads).
+    * `df` is a term's document frequency (0 when absent from the index):
+    *  - a source with required terms leads with its rarest required term;
+    *  - an `Or` with the union of its branches' lead sets (every match
+    *    matches some branch);
+    *  - a conjunctive source with no required term with the cheapest
+    *    (smallest Σdf) lead set among the children it needs to match;
+    *  - anything else has none. */
+  def leadTerms(src: IntervalsSource, df: String => Long): Set[String] = {
+    val required = requiredTerms(src)
+    if (required.nonEmpty) Set(required.minBy(t => (df(t), t)))
+    else src match {
+      case Or(ss) =>
+        val leads = ss.map(leadTerms(_, df))
+        if (leads.isEmpty || leads.exists(_.isEmpty)) Set.empty else leads.reduce(_ ++ _)
+      case other =>
+        conjuncts(other).map(leadTerms(_, df)).filter(_.nonEmpty)
+          .minByOption(_.iterator.map(df).sum).getOrElse(Set.empty)
+    }
+  }
+
+  /** The children a source needs to match for it to match. */
+  private def conjuncts(src: IntervalsSource): Seq[IntervalsSource] = src match {
+    case Ordered(ss) => ss
+    case Unordered(ss) => ss
+    case AtLeast(n, ss) if n >= ss.size => ss
+    case MaxWidth(_, s) => Seq(s)
+    case MaxGaps(_, s) => Seq(s)
+    case FirstEnding(_, s) => Seq(s)
+    case Extend(s, _, _) => Seq(s)
+    case Containing(big, small) => Seq(big, small)
+    case ContainedBy(small, big) => Seq(small, big)
+    // subtractive sources need only their positive side (the negative side
+    // ABSENT still matches)
+    case NotContaining(m, _) => Seq(m)
+    case NotContainedBy(s, _) => Seq(s)
+    case Overlapping(s, r) => Seq(s, r)
+    case NonOverlapping(m, _) => Seq(m)
+    case NotNear(_, _, m, _) => Seq(m)
+    case Before(s, r) => Seq(s, r)
+    case After(s, r) => Seq(s, r)
+    case _ => Nil
   }
 }
 

@@ -3,7 +3,11 @@ package graft.search
 import graft.core._
 import graft.index.InvertedIndex
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import org.apache.spark.unsafe.hash.Murmur3_x86_32
+import scala.jdk.CollectionConverters._
 
 /** Positional window matcher for span-near verification (executor-side). */
 object SpanMatcher extends Serializable {
@@ -136,12 +140,10 @@ object ScoringMode {
   * the query's `(term, block)` rows are cut into R doc-range slices, each
   * slice is scored by one [[SingleTask.flatTopK]] kernel that keeps only its
   * own docs, and one TakeOrdered merges the slices. R grows with the
-  * query's postings (Σdf) up to the default parallelism. A
-  * [[InvertedIndex.warm]]ed index always takes the plan, and at R = 1 it
-  * reads the rows into ONE partition: one job, one stage, one task, no job
-  * before the action. A cold index takes it above `pruneThreshold`
-  * postings, after its one statistics lookup, and runs the exhaustive join
-  * plan below.
+  * query's postings (Σdf) up to the default parallelism; slice s runs in
+  * reduce task s. A [[InvertedIndex.warm]]ed index always takes the plan.
+  * A cold index takes it above `pruneThreshold` postings, after its one
+  * statistics lookup, and runs the exhaustive join plan below.
   *
   * Positional queries — exact and sloppy phrases, multi-phrases, span-near
   * and interval / span sources — have one plan on every index layout
@@ -152,13 +154,24 @@ object ScoringMode {
   * first, decodes another term's block only where it holds a candidate
   * doc, and verifies positions per candidate. Only the query terms' encoded
   * blocks are shuffled, so the shuffle is bounded by the query's postings
-  * whatever the shape; a warm index at R = 1 runs it in one task. The plan
-  * yields every match; top-k takes TakeOrdered over it.
+  * whatever the shape. The plan yields every match; top-k takes
+  * TakeOrdered over it.
   *
   * Prefix / range / term-set expansions of at most 4,096 terms on a warm
-  * index take a one-task plan ([[singleTaskPlan]]) while their terms hold
-  * at most 2^16 postings (Σdf, the `SingleTaskMaxPostings` bound). Pending
-  * tombstones send every query to the exhaustive plan.
+  * index take the same slices ([[expansionPlan]]) while their terms hold at
+  * most 2^16 postings (Σdf, the `SingleTaskMaxPostings` bound), one
+  * [[SingleTask.smallestDocs]] kernel keeping the k smallest doc ids.
+  *
+  * Driver route: a warm index whose encoded blocks fit the driver
+  * ([[InvertedIndex.residentBlocks]]) answers every R = 1 query of these
+  * three families — the reference's `IndexSearcher` over a
+  * page-cache-resident reader, one thread and one collector. The kernel runs
+  * on the driver over the resident blocks, and the rows come back as a
+  * local relation; top-k ranks them there, so `search` and its `collect`
+  * run no Spark job. A local relation inside a larger plan (a phrase in a
+  * boolean) is an ordinary DataFrame. A warm index without resident blocks
+  * reads the R = 1 rows into ONE partition instead: one job, one stage, one
+  * task. Pending tombstones send every query to the exhaustive plan.
   */
 final class Searcher(
     val index: InvertedIndex,
@@ -344,8 +357,15 @@ final class Searcher(
       }
     }.toDF("docId", "score")
 
-  private def emptyFrame: DataFrame =
-    spark.emptyDataset[(Long, Double)].toDF("docId", "score")
+  private def emptyFrame: DataFrame = localFrame(Iterator.empty)
+
+  private val ScoredSchema = StructType(Seq(
+    StructField("docId", LongType, nullable = false), StructField("score", DoubleType, nullable = false)))
+
+  /** `(docId, score)` rows held on the driver as a local relation: collecting
+    * it, or taking its top-k with [[topK]], runs no job. */
+  private def localFrame(rows: Iterator[(Long, Double)]): DataFrame =
+    spark.createDataFrame(rows.map { case (d, sc) => Row(d, sc) }.toSeq.asJava, ScoredSchema)
 
   /** Single-term scored doc set. */
   private def termFrame(term: String, stats: Map[String, TermStats], boost: Double): DataFrame =
@@ -388,15 +408,16 @@ final class Searcher(
 
   /** Matched-term bound of an expansion's plan: [[searchBatch]] sends wider
     * expansions to per-query [[search]] (its broadcast plan table stays
-    * small), and the single-task route leaves them to [[expansionTopK]]
-    * (its `term IN (...)` list stays small). */
+    * small), and [[expansionPlan]] leaves them to [[expansionTopK]] (its
+    * `term IN (...)` list stays small). */
   private val ExpansionCap = 4096
 
-  /** Postings (Σdf of the distinct terms) scored by one task: the
-    * single-task route's bound ([[singleTaskPlan]]) and the slice size of
-    * [[sliced]]. One task must stay cheaper than the jobs and stages it
-    * replaces (≈ 60 ms per job on a 4-vCPU host). The scoring loops alone
-    * run ≈ 9M postings/s (≈ 7 ms at the bound); moving the rows into the one
+  /** Postings (Σdf of the distinct terms) scored by one task or on the
+    * driver: the slice size of [[sliced]] and the bound of
+    * [[expansionPlan]]. One slice must stay cheaper than the jobs and
+    * stages it replaces (the bare one-job floor, `spark.range(1).collect()`,
+    * is ≈ 21 ms, p50 of 31 at `local[4]` on a 4-vCPU host). The scoring
+    * loops alone run ≈ 9M postings/s (≈ 7 ms at the bound); moving the rows into the one
     * task and decoding them raises that to ≈ 0.8 µs per posting. Measured at
     * 100k pages (warm merged index, `local[4]`), p50 of the single-task plan
     * vs the former two-pass pruned plan for the same query: a head term
@@ -589,11 +610,11 @@ final class Searcher(
   }
 
   /** Interval algebra: per-doc minimal-interval evaluation
-    * ([[IntervalEval]]), constant-scored like the span paths, led by the
-    * rarest required term ([[Intervals.requiredTerms]]). A source with no
-    * required term (an `Or`, at the root or nested) is led by every present
-    * term: an `Or` can match with terms absent, so their docs' union is the
-    * candidate set. */
+    * ([[IntervalEval]]), constant-scored like the span paths, led by
+    * [[Intervals.leadTerms]]: the rarest required term, or for a source with
+    * none (an `Or`, at the root or nested) a term set whose docs' union
+    * holds every match — every present term only when no such set is
+    * found. */
   private def intervalFrame(src0: IntervalsSource, stats0: Map[String, TermStats],
                             boost: Double): DataFrame = {
     val src = expandIntervalSource(src0)
@@ -605,9 +626,9 @@ final class Searcher(
     // absent from the index ⇒ nothing can match
     val required = Intervals.requiredTerms(src)
     if (required.exists(t => !stats.contains(t))) return emptyFrame
-    val lead = if (required.isEmpty) Nil else Seq(required.minBy(stats(_).docFreq))
+    val lead = Intervals.leadTerms(src, t => stats.get(t).map(_.docFreq).getOrElse(0L))
     val ts = present.toArray
-    positionalFrame(present, lead, stats, pos => {
+    positionalFrame(present, lead.toSeq, stats, pos => {
       var m = Map.empty[String, Array[Int]]
       ts.foreach { t => val a = pos(t); if (a != null) m = m.updated(t, a) }
       if (IntervalEval.matches(src, m)) 1.0 else 0.0
@@ -1034,8 +1055,28 @@ final class Searcher(
       .select(col("term"), explode(col("blocks")).as("b"))
       .as[(String, PostingBlock)]
 
-  private def topK(hits: DataFrame, k: Int): DataFrame =
-    hits.orderBy(desc("score"), asc("docId")).limit(k)
+  /** The k best rows by score desc, docId asc. Rows on the driver (a
+    * [[localFrame]]) are ranked there and stay local: a sort planned over
+    * them would run a job. */
+  private def topK(hits: DataFrame, k: Int): DataFrame = hits.queryExecution.logical match {
+    case l: LocalRelation if l.output.map(_.name) == ScoredSchema.fieldNames.toSeq =>
+      localFrame(SingleTask.topK(l.data.iterator.map(r => (r.getLong(0), r.getDouble(1))), k))
+    case _ => hits.orderBy(desc("score"), asc("docId")).limit(k)
+  }
+
+  /** `keys(s)` is an int key that Spark's hash partitioning into `r`
+    * partitions (`pmod(murmur3(key, seed 42), r)`) sends to partition s. */
+  private def partitionKeys(r: Int): Array[Int] = {
+    val keys = Array.fill(r)(-1)
+    var found = 0
+    var i = 0
+    while (found < r) {
+      val p = Math.floorMod(Murmur3_x86_32.hashInt(i, 42), r)
+      if (keys(p) < 0) { keys(p) = i; found += 1 }
+      i += 1
+    }
+    keys
+  }
 
   /** The scored rows of `kernel` over the doc-range slices of `terms`'
     * blocks (`postings` = their Σdf). R = ceil(postings / 2^16) slices, at
@@ -1045,27 +1086,43 @@ final class Searcher(
     * slice holds the complete postings of its docs on a built index and on a
     * merged one, and `kernel(rows, lo, hi)` keeps only the docs of
     * `[lo, hi]`, so the clamp keeps the slices exact for any spread of doc
-    * ids. A [[InvertedIndex.warm]]ed index at R = 1 reads the rows into ONE
-    * partition (one job, one stage, one task); everything else groups them
-    * by slice. Only the query terms' encoded blocks are shuffled. */
+    * ids. At R = 1 a [[InvertedIndex.warm]]ed index runs the kernel on the
+    * driver over its [[InvertedIndex.residentBlocks]] and returns a
+    * [[localFrame]] (no job), or, when its blocks are not resident, reads
+    * the rows into ONE partition (one job, one stage, one task). Everything
+    * else shuffles the query terms' encoded blocks into R partitions, slice
+    * s to reduce task s. */
   private def sliced(terms: Seq[String], postings: Long,
       kernel: (Iterator[(String, PostingBlock)], Long, Long) => Iterator[(Long, Double)]): DataFrame = {
     val r = math.max(1, math.min((postings + SingleTaskMaxPostings - 1) / SingleTaskMaxPostings,
       spark.sparkContext.defaultParallelism.toLong).toInt)
-    if (index.warmTermStats.isDefined && r == 1)
-      termBlocks(terms).coalesce(1)
-        .mapPartitions(it => kernel(it, Long.MinValue, Long.MaxValue)).toDF("docId", "score")
-    else {
-      val w = math.max(1L, (cs.docCount + r - 1) / r)
-      val sliceOf: Long => Int = d => math.min(math.max(d / w, 0L), r - 1L).toInt
-      termBlocks(terms)
-        .flatMap { case (t, b) => (sliceOf(b.firstDoc) to sliceOf(b.lastDoc)).iterator.map(s => (s, t, b)) }
-        .groupByKey(_._1)
-        .flatMapGroups { (s, it) =>
-          kernel(it.map(x => (x._2, x._3)),
-            if (s == 0) Long.MinValue else s * w,
-            if (s == r - 1) Long.MaxValue else (s + 1) * w - 1)
-        }.toDF("docId", "score")
+    index.residentBlocks match {
+      case Some(blocks) if r == 1 =>
+        localFrame(kernel(terms.iterator.flatMap(t =>
+          blocks.getOrElse(t, Array.empty[PostingBlock]).iterator.map(b => (t, b))),
+          Long.MinValue, Long.MaxValue))
+      case _ if r == 1 && index.warmTermStats.isDefined =>
+        termBlocks(terms).coalesce(1)
+          .mapPartitions(it => kernel(it, Long.MinValue, Long.MaxValue)).toDF("docId", "score")
+      case _ =>
+        val w = math.max(1L, (cs.docCount + r - 1) / r)
+        val sliceOf: Long => Int = d => math.min(math.max(d / w, 0L), r - 1L).toInt
+        val keys = partitionKeys(r)
+        // an explicit partition count: AQE leaves the shuffle uncoalesced
+        termBlocks(terms)
+          .flatMap { case (t, b) =>
+            (sliceOf(b.firstDoc) to sliceOf(b.lastDoc)).iterator.map(s => (keys(s), s, t, b)) }
+          .repartition(r, col("_1"))
+          .mapPartitions { it =>
+            val rows = it.buffered
+            if (!rows.hasNext) Iterator.empty
+            else {
+              val s = rows.head._2
+              kernel(rows.map(x => (x._3, x._4)),
+                if (s == 0) Long.MinValue else s * w,
+                if (s == r - 1) Long.MaxValue else (s + 1) * w - 1)
+            }
+          }.toDF("docId", "score")
     }
   }
 
@@ -1091,23 +1148,21 @@ final class Searcher(
       }
     }
 
-  /** The single-task plan of a small expansion on a warm index, or None
-    * when it takes the multi-stage paths. Routed: the index is
+  /** The top-k plan of a small expansion on a warm index, or None when it
+    * takes the multi-stage paths. Routed: the index is
     * [[InvertedIndex.warm]]ed (its term statistics are driver-resident), the
     * shape is a prefix / range / term-set expansion, and its matched terms
-    * hold at most [[SingleTaskMaxPostings]] postings. The plan reads those
-    * terms' posting rows into one partition and keeps the k smallest doc
-    * ids there — one job, one stage, one task, no shuffle, no broadcast and
-    * no job before the action. */
-  private def singleTaskPlan(q: Query, k: Int): Option[DataFrame] = {
+    * hold at most [[SingleTaskMaxPostings]] postings. Their blocks take
+    * [[sliced]]'s one-slice route, where [[SingleTask.smallestDocs]] keeps
+    * the k smallest doc ids. */
+  private def expansionPlan(q: Query, k: Int): Option[DataFrame] = {
     if (index.warmTermStats.isEmpty) return None
     q match {
       case e @ (_: PrefixQuery | _: TermRangeQuery | _: TermInSetQuery) =>
-        dictionaryMatches(e).map { terms =>
+        dictionaryMatches(e).map { case (terms, postings) =>
           if (terms.isEmpty) emptyFrame
-          else topK(termBlocks(terms).coalesce(1)
-            .mapPartitions(it => SingleTask.smallestDocs(it.map(_._2), k))
-            .toDF("docId").withColumn("score", lit(1.0)), k)
+          else topK(sliced(terms, postings, (rows, lo, hi) =>
+            SingleTask.smallestDocs(rows.map(_._2), k, lo, hi).map(d => (d, 1.0))), k)
         }
       case _ => None
     }
@@ -1120,12 +1175,12 @@ final class Searcher(
   }
 
   /** The terms a prefix / range / term-set query matches in the warm
-    * dictionary, or None past [[ExpansionCap]] terms or
-    * [[SingleTaskMaxPostings]] postings. Prefix and range bounds compare in
-    * UTF-8 byte order over [[InvertedIndex.warmSortedTerms]], so the matches
-    * equal Catalyst's `startsWith` and string comparisons in
+    * dictionary and their postings (Σdf), or None past [[ExpansionCap]]
+    * terms or [[SingleTaskMaxPostings]] postings. Prefix and range bounds
+    * compare in UTF-8 byte order over [[InvertedIndex.warmSortedTerms]], so
+    * the matches equal Catalyst's `startsWith` and string comparisons in
     * [[expansionPred]]. */
-  private def dictionaryMatches(q: Query): Option[Seq[String]] = {
+  private def dictionaryMatches(q: Query): Option[(Seq[String], Long)] = {
     import org.apache.spark.unsafe.types.UTF8String
     val stats = index.warmTermStats.get
     val dict = index.warmSortedTerms.get
@@ -1155,7 +1210,7 @@ final class Searcher(
       if (n > ExpansionCap || postings > SingleTaskMaxPostings) return None
       out += t
     }
-    Some(out.result())
+    Some((out.result(), postings))
   }
 
   // ---------------------------------------------------------------- public
@@ -1238,7 +1293,7 @@ final class Searcher(
     // the top-k plans read postings directly and would count tombstoned docs
     // toward k — take the exhaustive path until a merge purges them
     if (tombstones.isDefined) return topK(scored(rewritten), k)
-    flatPlan(rewritten, k).orElse(singleTaskPlan(rewritten, k)).getOrElse(rewritten match {
+    flatPlan(rewritten, k).orElse(expansionPlan(rewritten, k)).getOrElse(rewritten match {
       // constant-score expansions: top-k = k smallest doc ids, block-metadata
       // pruned (see expansionTopK) — the r1 p95 tail was wide prefix/range
       // expansions decoding much of the vocabulary for 10 rows

@@ -15,9 +15,9 @@ final case class FlatClause(term: String, boost: Double, kind: Int)
   * score is `max + tie·(sum − max)` instead of the sum. */
 final case class FlatQuery(clauses: Seq[FlatClause], nMust: Int, msm: Int, tie: Double)
 
-/** Executor-side top-k kernels: each consumes one query's posting blocks
-  * inside one task — all of them, or one doc-range slice's — the
-  * reference's one thread, one collector loop (`IndexSearcher.search` →
+/** Top-k kernels: each consumes one query's posting blocks in one task or
+  * on the driver — all of them, or one doc-range slice's — the reference's
+  * one thread, one collector loop (`IndexSearcher.search` →
   * `TopScoreDocCollector`) — and emits at most k rows. */
 object SingleTask {
 
@@ -104,11 +104,12 @@ object SingleTask {
       .map(s => (sorted(s), score(s))), k)
   }
 
-  /** The k smallest distinct doc ids of the blocks — a constant-score
-    * expansion's top-k (score ties break docId asc). */
-  def smallestDocs(blocks: Iterator[PostingBlock], k: Int): Iterator[Long] = {
+  /** The k smallest distinct doc ids of the blocks in `[lo, hi]` — a
+    * constant-score expansion's top-k (score ties break docId asc). */
+  def smallestDocs(blocks: Iterator[PostingBlock], k: Int,
+      lo: Long = Long.MinValue, hi: Long = Long.MaxValue): Iterator[Long] = {
     val all = new LongBuf()
-    blocks.foreach(b => PostingsCodec.decodeDocIds(b).foreach(all.add))
+    blocks.foreach(b => PostingsCodec.decodeDocIds(b).foreach(d => if (d >= lo && d <= hi) all.add(d)))
     val docs = all.toArray
     java.util.Arrays.sort(docs)
     docs.iterator.distinct.take(math.max(k, 0))

@@ -7,13 +7,16 @@ import org.apache.spark.sql.functions._
 
 /** Diagnostic: isolate the cost phases of a small-corpus index build —
   * tokenize-only vs segment-flush vs parquet write (zstd vs snappy).
-  * Usage: runMain graft.tools.BuildProbe [sfDir]. */
+  * Usage: runMain graft.tools.BuildProbe [sfDir]; runs
+  * `local[SPARK_GRAFT_CPUS]` (default: the JVM's available processors). */
 object BuildProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -21,7 +24,7 @@ object BuildProbe {
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id").as("docId"), col("text")).as[InputDoc]
-      .repartition(32).cache()
+      .repartition(cpus).cache()
     println("docs=" + docs.count())
 
     def timed[T](name: String)(f: => T): T = {

@@ -10,12 +10,15 @@ import org.apache.spark.sql.SparkSession
   * greps them for the properties that matter at scale — parquet filter
   * pushdown on `term` (the term-dictionary pruning analog), partition
   * pruning on `kind`, column pruning (ReadSchema), and whole-stage codegen
-  * coverage. Run: runMain graft.tools.PlanAudit */
+  * coverage. Run: runMain graft.tools.PlanAudit; runs
+  * `local[SPARK_GRAFT_CPUS]` (default: the JVM's available processors). */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
     val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -6,15 +6,18 @@ import scala.collection.mutable
 /** Diagnostic: run one SparkEntry query by name with a stage-level listener,
   * printing per-stage wall time, task time, and task count — pinpoints which
   * exchange/stage dominates a slow gate query.
-  * Usage: runMain graft.tools.QueryProbe <queryName> [sfDir] [runs]. */
+  * Usage: runMain graft.tools.QueryProbe <queryName> [sfDir] [runs]; runs
+  * `local[SPARK_GRAFT_CPUS]` (default: the JVM's available processors). */
 object QueryProbe {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 2
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

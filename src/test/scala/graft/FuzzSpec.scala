@@ -1,8 +1,10 @@
 package graft
 
 import graft.core.SimpleAnalyzer
+import graft.index.InvertedIndex
 import graft.search._
 import graft.streaming.Monitor
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import scala.util.Random
 
@@ -12,9 +14,28 @@ import scala.util.Random
   * analog) — must agree on the matching doc set. The reference uses the
   * same trick with `RandomIndexWriter` + dual-codec cross-checks
   * (`lucene/test-framework/src/java/org/apache/lucene/tests/index/RandomIndexWriter.java:53`).
+  * The flat booleans and the positional trees also run `search(q, k)` on a
+  * warmed reader whose blocks are driver-resident, against the cold
+  * exhaustive top-k.
   */
-class FuzzSpec extends AnyFunSuite {
+class FuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
   import SparkTestEnv._
+
+  private var warmed: Option[InvertedIndex] = None
+  private lazy val warmIndex: InvertedIndex = {
+    val w = InvertedIndex.open(spark, index.dir).warm()
+    warmed = Some(w)
+    assert(w.residentBlocks.isDefined, "the fuzz index should be driver-resident when warm")
+    w
+  }
+  private lazy val residentSearcher = new Searcher(warmIndex, ScoringMode.PreciseBM25())
+  private lazy val exhaustive = new Searcher(index, ScoringMode.PreciseBM25(), pruneThreshold = Long.MaxValue)
+
+  override def afterAll(): Unit =
+    warmed.foreach { w => w.postings.unpersist(); w.termStats.unpersist(); w.docs.unpersist() }
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
+    df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
 
   private lazy val vocab: IndexedSeq[String] =
     corpus.values.flatMap(_.map(_.term)).toSet.toIndexedSeq.sorted
@@ -96,17 +117,21 @@ class FuzzSpec extends AnyFunSuite {
       val occ = if (rnd.nextBoolean()) Occur.MUST else Occur.SHOULD
       val k = Seq(1, 3, 10)(rnd.nextInt(3))
       val q = BooleanQuery(ts.map(t => occ -> TermQuery(t)))
-      val a = pruned.search(q, k).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       val b = plain.search(q, k).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      assert(a.map(_._1) == b.map(_._1), s"fuzz-pruned #$i: $occ $ts k=$k")
-      a.zip(b).foreach { case ((_, sa), (_, sb)) =>
-        assert(math.abs(sa - sb) < 1e-9, s"fuzz-pruned #$i score: $occ $ts k=$k") }
+      Seq("pruned" -> pruned, "resident" -> residentSearcher).foreach { case (label, s) =>
+        val a = rows(s.search(q, k))
+        assert(a.map(_._1) == b.map(_._1), s"fuzz-$label #$i: $occ $ts k=$k")
+        a.zip(b).foreach { case ((_, sa), (_, sb)) =>
+          assert(math.abs(sa - sb) < 1e-9, s"fuzz-$label #$i score: $occ $ts k=$k") }
+      }
     }
   }
 
   /** The searcher's and the per-doc evaluator's doc sets agree on `n`
-    * random trees; returns how many were non-empty. */
-  private def differential(label: String, seed: Long, n: Int, leaf: Random => Query): Int = {
+    * random trees, and with `resident` the resident reader's top-10 equals
+    * the cold exhaustive one; returns how many were non-empty. */
+  private def differential(label: String, seed: Long, n: Int, leaf: Random => Query,
+      resident: Boolean = false): Int = {
     val searcher = new Searcher(index, ScoringMode.PreciseBM25())
     val rnd = new Random(seed)
     var nonEmpty = 0
@@ -119,6 +144,9 @@ class FuzzSpec extends AnyFunSuite {
       assert(viaIndex == viaDocs,
         s"$label #$i mismatch (idx=${viaIndex.size} docs=${viaDocs.size}) for $q\n" +
           s"only-index=${(viaIndex -- viaDocs).take(5)} only-docs=${(viaDocs -- viaIndex).take(5)}")
+      if (resident)
+        TopKAssertions.assertSameTopK(s"$label #$i resident top-10 of $q",
+          rows(residentSearcher.search(q, 10)), rows(exhaustive.search(q, 10)))
       if (viaIndex.nonEmpty) nonEmpty += 1
     }
     nonEmpty
@@ -130,7 +158,7 @@ class FuzzSpec extends AnyFunSuite {
     // a second pass whose leaves include sloppy phrases, multi-phrases,
     // span-near and interval sources: the positional kernel against the
     // per-doc evaluator
-    val positional = differential("positional fuzz", 20261019, 60, positionalLeaf)
+    val positional = differential("positional fuzz", 20261019, 60, positionalLeaf, resident = true)
     assert(positional > 15, s"positional fuzz too sparse: only $positional non-empty result sets")
   }
 }

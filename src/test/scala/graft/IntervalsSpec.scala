@@ -233,6 +233,51 @@ class IntervalsSpec extends AnyFunSuite {
     assert(none == 0)
   }
 
+  test("leadTerms: a source with no required term still leads with a bounded term set") {
+    import graft.core.PostingsCodec
+    import graft.search.Positional
+    // heads h1, h2 in every doc 0..4095 (32 blocks of 128 each); rare r1 in
+    // doc 4000, r2 in docs 4010 and 4090 — all in the last head block
+    val n = 4096
+    def head(p: Int) = PostingsCodec.encodeBlocks(Array.tabulate(n)(_.toLong),
+      Array.fill(n)(1), Array.fill(n)(100), Array.fill(n)(Array(p)))
+    val blocks = Map(
+      "h1" -> head(5), "h2" -> head(7),
+      "r1" -> PostingsCodec.encodeBlocks(Array[Long](4000), Array(1), Array(100), Array(Array(6))),
+      "r2" -> PostingsCodec.encodeBlocks(Array[Long](4010, 4090), Array(1, 1), Array(100, 100),
+        Array(Array(9), Array(9))))
+    val df = Map("h1" -> n.toLong, "h2" -> n.toLong, "r1" -> 1L, "r2" -> 2L)
+    /** (matching docs, blocks decoded) of the kernel over `src`'s terms. */
+    def run(src: graft.search.IntervalsSource, lead: Set[String]): (Vector[Long], Int) = {
+      var decodes = 0
+      val byTerm = blocks.filter { case (t, _) => src.terms(t) }
+      val docs = Positional.matchingDocs(byTerm, lead, Long.MinValue, Long.MaxValue, pos => {
+        val m = src.terms.flatMap(t => Option(pos(t)).map(t -> _)).toMap
+        if (IntervalEval.matches(src, m)) 1.0 else 0.0
+      }, () => decodes += 1).map(_._1).toVector
+      (docs, decodes)
+    }
+    val conj = Unordered(Seq(Or(Seq(Term("r1"), Term("r2"))), Or(Seq(Term("h1"), Term("h2")))))
+    val disj = Or(Seq(Term("r1"), Ordered(Seq(Term("h1"), Term("r2")))))
+    assert(requiredTerms(conj).isEmpty && requiredTerms(disj).isEmpty)
+    // the conjunction's cheapest child; the union of the Or's branches
+    assert(leadTerms(conj, df) == Set("r1", "r2"))
+    assert(leadTerms(disj, df) == Set("r1", "r2"))
+    Seq(conj -> 4, disj -> 3).foreach { case (src, bound) =>
+      val (all, allDecodes) = run(src, Set.empty)
+      val (led, ledDecodes) = run(src, leadTerms(src, df))
+      assert(all == Vector(4000L, 4010L, 4090L), s"$src")
+      assert(led == all, s"$src")
+      // the rare terms' blocks plus one head block per head term, of all
+      assert(allDecodes == src.terms.toSeq.map(blocks(_).size).sum)
+      assert(ledDecodes == bound, s"$src decoded $ledDecodes blocks, expected $bound")
+    }
+    // an Or branch without a bound leaves the whole Or unbounded
+    assert(leadTerms(Or(Seq(Term("r1"), AtLeast(1, Seq(Term("h1"), Term("h2"))))), df).isEmpty)
+    // a term absent from the index (df 0) is the cheapest lead
+    assert(leadTerms(Ordered(Seq(Term("h1"), Term("gone"))), df.withDefaultValue(0L)) == Set("gone"))
+  }
+
   test("minimality: no returned interval properly contains another") {
     val rnd = new Random(23)
     (0 until 500).foreach { _ =>

@@ -4,15 +4,19 @@ import graft.core._
 import graft.index._
 import graft.search._
 import org.apache.spark.JobExecutionStatus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LocalTableScanExec
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import TopKAssertions.assertSameTopK
 
-/** Warm serving: the single-task route a warmed index takes for small
-  * queries must return the cold exhaustive top-k, in one job of one stage;
-  * flat queries and phrases above its postings bound must take the sliced
-  * plan and return the same top-k; tombstoned indexes anti-join the live
-  * docs.
+/** Warm serving: the driver route a warmed index with resident blocks
+  * takes for small queries must return the cold exhaustive top-k with no
+  * Spark job; an index warmed over its resident-block budget must keep the
+  * one-task plan and the same top-k; flat queries and phrases above the
+  * postings bound must take the sliced plan, one slice per reduce task, and
+  * return the same top-k; tombstoned indexes anti-join the live docs.
   * Checked on a built (doc-aligned) index and on its merge. */
 class WarmServingSpec extends AnyFunSuite with BeforeAndAfterAll {
   import SparkTestEnv.spark
@@ -65,6 +69,13 @@ class WarmServingSpec extends AnyFunSuite with BeforeAndAfterAll {
     warmed += idx
     idx
   }
+  /** Warmed with a 1-byte resident-block budget: its blocks stay off the
+    * driver. */
+  private def warmOverBudget(dir: String): InvertedIndex = {
+    val idx = InvertedIndex.open(spark, dir).warmWithin(1L)
+    warmed += idx
+    idx
+  }
   private def cold(dir: String) =
     new Searcher(InvertedIndex.open(spark, dir), ScoringMode.PreciseBM25(), pruneThreshold = Long.MaxValue)
 
@@ -76,27 +87,17 @@ class WarmServingSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def rows(df: DataFrame): Seq[(Long, Double)] =
     df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
 
-  /** The single-task plan is the only one with a coalesce to one partition. */
+  /** The driver route returns a local relation. */
   private def routed(df: DataFrame): Boolean =
+    df.queryExecution.executedPlan.isInstanceOf[LocalTableScanExec]
+
+  /** The one-task plan is the only one with a coalesce to one partition. */
+  private def oneTask(df: DataFrame): Boolean =
     df.queryExecution.executedPlan.toString.contains("Coalesce 1")
 
-  /** The sliced top-k plan groups its rows by slice. */
+  /** The sliced top-k plan shuffles its rows into one partition per slice. */
   private def sliced(df: DataFrame): Boolean =
-    df.queryExecution.executedPlan.toString.contains("MapGroups")
-
-  private def close(a: Double, b: Double): Boolean =
-    math.abs(a - b) <= 1e-9 * math.max(math.abs(a), math.abs(b))
-
-  /** Equal top-k up to float noise: scores agree rank by rank within 1e-9
-    * relative, and docs differ only among those tied with the last score. */
-  private def assertSameTopK(label: String, got: Seq[(Long, Double)], want: Seq[(Long, Double)]): Unit = {
-    assert(got.size == want.size, s"$label: ${got.size} hits, expected ${want.size}")
-    got.zip(want).foreach { case (g, w) => assert(close(g._2, w._2), s"$label: $got vs $want") }
-    if (want.nonEmpty) {
-      def above(xs: Seq[(Long, Double)]) = xs.filterNot(h => close(h._2, want.last._2)).map(_._1).toSet
-      assert(above(got) == above(want), s"$label: $got vs $want")
-    }
-  }
+    df.queryExecution.executedPlan.toString.contains("REPARTITION_BY_NUM")
 
   private val queries: Seq[Query] = Seq(
     TermQuery("w0"),
@@ -137,7 +138,7 @@ class WarmServingSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("warm top-k == cold exhaustive top-k, routed to the single-task plan") {
+  test("warm top-k == cold exhaustive top-k, routed to the driver") {
     // the merged index scores exactly like the one it merges (MergeSpec), so
     // one cold reference serves both
     val c = cold(baseDir)
@@ -147,7 +148,7 @@ class WarmServingSpec extends AnyFunSuite with BeforeAndAfterAll {
       warmSearchers.foreach { w =>
         val df = w.search(q, 20)
         assertSameTopK(s"${w.index.dir}: $q", rows(df), want)
-        if (want.nonEmpty) assert(routed(df), s"$q should take the single-task plan")
+        if (want.nonEmpty) assert(routed(df), s"$q should take the driver route")
       }
     }
     // the supplementary-plane term sorts above the fullwidth ones
@@ -163,24 +164,92 @@ class WarmServingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = try s.search(q, 10) finally sc.clearJobGroup()
     sc.setJobGroup(s"$tag-execute", "collect")
     try df.collect() finally sc.clearJobGroup()
-    // the status tracker is fed by the listener bus: wait until the collect's
-    // jobs are seen finished (events arrive in order, so any job inside
-    // `search` has been seen by then)
+    // the status tracker is fed by the listener bus, in order: once a marker
+    // job run after the collect is seen finished, every job before it has
+    // been seen finished too
+    sc.setJobGroup(s"$tag-marker", "marker")
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
     val st = sc.statusTracker
-    def executed = st.getJobIdsForGroup(s"$tag-execute").toSeq.flatMap(st.getJobInfo(_))
+    def jobs(group: String) = st.getJobIdsForGroup(s"$tag-$group").toSeq.flatMap(st.getJobInfo(_))
     val deadline = System.nanoTime() + 10000000000L
-    while ((executed.isEmpty || executed.exists(_.status != JobExecutionStatus.SUCCEEDED)) &&
-      System.nanoTime() < deadline) Thread.sleep(20)
-    (st.getJobIdsForGroup(s"$tag-construct").length, executed.size, executed.map(_.stageIds.length).sum)
+    while (!jobs("marker").exists(_.status == JobExecutionStatus.SUCCEEDED) && System.nanoTime() < deadline)
+      Thread.sleep(20)
+    val executed = jobs("execute")
+    (jobs("construct").length, executed.size, executed.map(_.stageIds.length).sum)
   }
 
-  test("a routed query runs one job of one stage, and no job inside search()") {
+  /** Tasks that read shuffled rows while `df` is collected. */
+  private def shuffleReadingTasks(df: DataFrame): Int = {
+    val sc = spark.sparkContext
+    val group = s"warm-serving-reduce-${System.nanoTime()}"
+    val jobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val readers = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          jobs.add(e.jobId)
+          e.stageIds.foreach(stages.add)
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.add(e.jobId)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null &&
+          e.taskMetrics.shuffleReadMetrics.recordsRead > 0) readers.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "reduce tasks")
+      try df.collect() finally sc.clearJobGroup()
+      // the listener sees a job's task ends before its end
+      val deadline = System.nanoTime() + 10000000000L
+      while ((jobs.isEmpty || !ended.containsAll(jobs)) && System.nanoTime() < deadline) Thread.sleep(20)
+      readers.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a routed query runs no job, inside search() or in its collect") {
     val w = new Searcher(warm(mergedDir), ScoringMode.PreciseBM25())
     Seq(TermQuery("w0"), BooleanQuery.must(TermQuery("w1"), TermQuery("w2")),
       PhraseQuery(Seq("w0", "w1")), PrefixQuery("w1"),
       TermRangeQuery(Some("w2"), Some("w25"), includeLower = true, includeUpper = false)).foreach { q =>
-      assert(jobProfile(w, q) == ((0, 1, 1)), s"$q")
+      assert(jobProfile(w, q) == ((0, 0, 0)), s"$q")
     }
+  }
+
+  test("an index warmed over its resident-block budget keeps the one-task plan and equals cold") {
+    val c = cold(baseDir)
+    Seq(baseDir, mergedDir).foreach { dir =>
+      val idx = warmOverBudget(dir)
+      assert(idx.residentBlocks.isEmpty && idx.residentBytes == 0L)
+      val w = new Searcher(idx, ScoringMode.PreciseBM25())
+      queries.foreach { q =>
+        val want = rows(c.search(q, 20))
+        val df = w.search(q, 20)
+        assertSameTopK(s"$dir over budget: $q", rows(df), want)
+        if (want.nonEmpty) assert(oneTask(df) && !routed(df), s"$q should take the one-task plan")
+      }
+    }
+  }
+
+  test("resident blocks: residentBytes counts them, and they do not travel with the index") {
+    def serializedSize(idx: InvertedIndex): Int = {
+      val bytes = new java.io.ByteArrayOutputStream()
+      val out = new java.io.ObjectOutputStream(bytes)
+      out.writeObject(idx)
+      out.close()
+      bytes.size
+    }
+    val coldIdx = InvertedIndex.open(spark, mergedDir)
+    val idx = warm(mergedDir)
+    assert(coldIdx.residentBytes == 0L && coldIdx.residentBlocks.isEmpty)
+    assert(idx.residentBytes > 0L)
+    // every term of the dictionary is resident with all of its postings
+    val blocks = idx.residentBlocks.get
+    assert(blocks.keySet == idx.warmTermStats.get.keySet)
+    assert(blocks.forall { case (t, bs) => bs.map(_.count.toLong).sum == idx.warmTermStats.get(t)._1 })
+    val (c, r) = (serializedSize(coldIdx), serializedSize(idx))
+    assert(r <= c + 1024, s"a resident index serializes to $r bytes, a cold one to $c")
   }
 
   // runs last: it tombstones docs of the shared index
@@ -198,6 +267,8 @@ class WarmServingSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(!routed(d) && sliced(d), s"$dir: filler disjunction")
       assertSameTopK(s"$dir: filler disjunction", rows(d), want(0))
       assert(!routed(c) && sliced(c), s"$dir: filler conjunction")
+      // one slice per reduce task: the 2 slices' rows go to 2 tasks
+      Seq(d, c).foreach(df => assert(shuffleReadingTasks(df) == 2, s"$dir: ${df.queryExecution.executedPlan}"))
       assert(want(1).nonEmpty && rows(c) == want(1), s"$dir: filler conjunction ${rows(c)} vs ${want(1)}")
       // every doc carries the fillers in order: the phrase (Σdf 66,000)
       // takes the positional plan's 2 slices, and each doc matches exactly
