@@ -278,9 +278,10 @@ object Bench {
       }.sorted
       val p50 = lat(lat.size / 2)
       val p95 = lat(math.min(lat.size - 1, (lat.size * 0.95).toInt))
-      // batched mode: the SAME query set as ONE postings pass — the
-      // throughput shape where the distributed engine wins (vs per-query
-      // scheduling floors); unsupported shapes fall back internally
+      // batched mode: the SAME query set in one call — on this warm index
+      // the queries whose postings fit one slice run their kernels on the
+      // driver with no job, the rest share one postings pass (unsupported
+      // shapes fall back internally)
       val tb = System.nanoTime()
       val batchRows = searcher.searchBatch(
         queries.zipWithIndex.map { case (q, i) => (s"q$i", q) }, 10).count()

@@ -548,14 +548,19 @@ object Analyzers {
       val sep = rest.indexOf(':')
       WordDelimiterGraphAnalyzer(byName(rest.substring(sep + 1)),
         rest.substring(0, sep).toInt)
+    // word-delimiter-protected:<flags>:<URL-encoded w1,w2,..>:<inner>
+    case s if s.startsWith("word-delimiter-protected:") =>
+      val Array(flags, words, inner) = s.stripPrefix("word-delimiter-protected:").split(":", 3)
+      WordDelimiterGraphAnalyzer(byName(inner), flags.toInt,
+        words.split(",", -1).map(java.net.URLDecoder.decode(_, "UTF-8")).toSet)
     case s if s.startsWith("english-excl:") => // english-excl:<w1,w2,...>
       EnglishAnalyzer(stemExclusions = s.stripPrefix("english-excl:").split(',').toSet)
     case s if s.startsWith("payload-delim-") => // payload-delim-<char>
       DelimitedPayloadAnalyzer(s.stripPrefix("payload-delim-").head)
-    case s if s.startsWith("pattern:") => // pattern:<group>:<regex>
-      val rest = s.stripPrefix("pattern:")
-      val sep = rest.indexOf(':')
-      PatternAnalyzer(rest.substring(sep + 1), rest.substring(0, sep).toInt)
+    case s if s.startsWith("pattern:") || s.startsWith("pattern-cased:") =>
+      // pattern[-cased]:<group>:<regex>
+      val Array(kind, group, regex) = s.split(":", 3)
+      PatternAnalyzer(regex, group.toInt, toLower = kind == "pattern")
     case s if s.startsWith("ngram-") => // "ngram-<min>-<max>" over SimpleAnalyzer
       val parts = s.stripPrefix("ngram-").split("-")
       NGramAnalyzer(SimpleAnalyzer, parts(0).toInt, parts(1).toInt)

@@ -95,8 +95,9 @@ final case class CommonGramsQueryAnalyzer(inner: Analyzer, commonWords: Set[Stri
   * PatternTokenizer + LowerCaseFilter composition). */
 final case class PatternAnalyzer(pattern: String, group: Int = -1,
                                  toLower: Boolean = true) extends Analyzer {
-  // registry-parseable: pattern:<group>:<regex>
-  override val name = s"pattern:$group:$pattern"
+  // registry-parseable: pattern:<group>:<regex>, or pattern-cased:<group>:<regex>
+  // when tokens keep their case
+  override val name = s"${if (toLower) "pattern" else "pattern-cased"}:$group:$pattern"
   @transient private lazy val re = java.util.regex.Pattern.compile(pattern)
 
   override def tokenize(text: String): IndexedSeq[Token] = {

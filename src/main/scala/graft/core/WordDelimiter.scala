@@ -129,7 +129,13 @@ final case class WordDelimiterGraphAnalyzer(inner: Analyzer, flags: Int,
                                             protWords: Set[String] = Set.empty)
     extends Analyzer {
   import WordDelimiter._
-  override val name = s"word-delimiter:$flags:${inner.name}"
+  // registry-parseable: word-delimiter:<flags>:<inner>, or with protected
+  // words word-delimiter-protected:<flags>:<w1,w2,..>:<inner>, the words
+  // sorted and URL-encoded so that none holds a ':' or ','
+  override val name =
+    if (protWords.isEmpty) s"word-delimiter:$flags:${inner.name}"
+    else s"word-delimiter-protected:$flags:" +
+      protWords.toSeq.sorted.map(java.net.URLEncoder.encode(_, "UTF-8")).mkString(",") + s":${inner.name}"
 
   override def tokenize(text: String): IndexedSeq[Token] = {
     val out = Vector.newBuilder[Token]

@@ -216,6 +216,17 @@ object Intervals {
     }
   }
 
+  /** True when `src` holds a [[Prefix]] or [[Wildcard]] source: its terms
+    * are known only after expansion against the term dictionary. */
+  def hasMultiTerm(src: IntervalsSource): Boolean = src match {
+    case _: Prefix | _: Wildcard => true
+    case p: Product => p.productIterator.exists {
+      case s: IntervalsSource => hasMultiTerm(s)
+      case ss: Seq[_] => ss.exists { case s: IntervalsSource => hasMultiTerm(s); case _ => false }
+      case _ => false
+    }
+  }
+
   /** The children a source needs to match for it to match. */
   private def conjuncts(src: IntervalsSource): Seq[IntervalsSource] = src match {
     case Ordered(ss) => ss

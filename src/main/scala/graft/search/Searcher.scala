@@ -5,7 +5,7 @@ import graft.index.InvertedIndex
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.hash.Murmur3_x86_32
 import scala.jdk.CollectionConverters._
 
@@ -123,6 +123,13 @@ object ScoringMode {
   final case class PreciseDFIChiSquared() extends ScoringMode
 }
 
+/** A query answered by one kernel over the posting blocks of `terms`
+  * (`postings` = their Σdf): `kernel(rows, lo, hi)` scores the docs in
+  * `[lo, hi]` of the `(term, block)` rows it is given. No terms: no rows.
+  * [[Searcher]] plans it as doc-range slices or runs it on the driver. */
+private[search] final case class Routed(terms: Seq[String], postings: Long,
+    kernel: (Iterator[(String, PostingBlock)], Long, Long) => Iterator[(Long, Double)])
+
 /** Distributed query execution over an [[InvertedIndex]].
   *
   * Every query compiles to a DataFrame of `(docId: long, score: double)`;
@@ -147,7 +154,7 @@ object ScoringMode {
   *
   * Positional queries — exact and sloppy phrases, multi-phrases, span-near
   * and interval / span sources — have one plan on every index layout
-  * ([[positionalFrame]]): the same doc-range slices, each matched by one
+  * ([[positionalRoute]]): the same doc-range slices, each matched by one
   * [[Positional.matchingDocs]] kernel, the reference's one phrase matcher
   * or interval iterator per leaf. The kernel decodes the query's lead (its
   * rarest term, or for a multi-phrase the cheapest position's alternatives)
@@ -158,7 +165,7 @@ object ScoringMode {
   * TakeOrdered over it.
   *
   * Prefix / range / term-set expansions of at most 4,096 terms on a warm
-  * index take the same slices ([[expansionPlan]]) while their terms hold at
+  * index take the same slices ([[expansionRoute]]) while their terms hold at
   * most 2^16 postings (Σdf, the `SingleTaskMaxPostings` bound), one
   * [[SingleTask.smallestDocs]] kernel keeping the k smallest doc ids.
   *
@@ -166,12 +173,15 @@ object ScoringMode {
   * ([[InvertedIndex.residentBlocks]]) answers every R = 1 query of these
   * three families — the reference's `IndexSearcher` over a
   * page-cache-resident reader, one thread and one collector. The kernel runs
-  * on the driver over the resident blocks, and the rows come back as a
-  * local relation; top-k ranks them there, so `search` and its `collect`
-  * run no Spark job. A local relation inside a larger plan (a phrase in a
-  * boolean) is an ordinary DataFrame. A warm index without resident blocks
-  * reads the R = 1 rows into ONE partition instead: one job, one stage, one
-  * task. Pending tombstones send every query to the exhaustive plan.
+  * on the driver over the resident blocks ([[onDriver]]), and the rows come
+  * back as a local relation; top-k ranks them there, so `search` and its
+  * `collect` run no Spark job. [[searchBatch]] answers the same queries
+  * from the same kernels, their rows gathered into one local relation, so
+  * a batch of them runs no job either. A local relation inside a larger
+  * plan (a phrase in a boolean) is an ordinary DataFrame. A warm index
+  * without resident blocks reads the R = 1 rows into ONE partition instead:
+  * one job, one stage, one task. Pending tombstones send every query to the
+  * exhaustive plan.
   */
 final class Searcher(
     val index: InvertedIndex,
@@ -408,13 +418,13 @@ final class Searcher(
 
   /** Matched-term bound of an expansion's plan: [[searchBatch]] sends wider
     * expansions to per-query [[search]] (its broadcast plan table stays
-    * small), and [[expansionPlan]] leaves them to [[expansionTopK]] (its
+    * small), and [[expansionRoute]] leaves them to [[expansionTopK]] (its
     * `term IN (...)` list stays small). */
   private val ExpansionCap = 4096
 
   /** Postings (Σdf of the distinct terms) scored by one task or on the
     * driver: the slice size of [[sliced]] and the bound of
-    * [[expansionPlan]]. One slice must stay cheaper than the jobs and
+    * [[expansionRoute]]. One slice must stay cheaper than the jobs and
     * stages it replaces (the bare one-job floor, `spark.range(1).collect()`,
     * is ≈ 21 ms, p50 of 31 at `local[4]` on a 4-vCPU host). The scoring
     * loops alone run ≈ 9M postings/s (≈ 7 ms at the bound); moving the rows into the one
@@ -481,18 +491,28 @@ final class Searcher(
 
   // ------------------------------------------------------------ positional
 
-  /** The scored doc set of a positional query: the blocks of its `terms`
-    * (all present in `stats`) cut into the doc-range slices of [[sliced]],
-    * each slice matched by one [[Positional.matchingDocs]] kernel led by
-    * `lead` (empty: every term), and each match `(freq, doclen)` scored by
-    * `score`. */
-  private def positionalFrame(terms: Seq[String], lead: Seq[String], stats: Map[String, TermStats],
-      freq: (String => Array[Int]) => Double, score: (Double, Int) => Double): DataFrame = {
+  /** The route of a positional query: the blocks of its `terms` (all
+    * present in `stats`) matched by one [[Positional.matchingDocs]] kernel
+    * per doc-range slice of [[sliced]], led by `lead` (empty: every term),
+    * and each match `(freq, doclen)` scored by `score`. */
+  private def positionalRoute(terms: Seq[String], lead: Seq[String], stats: Map[String, TermStats],
+      freq: (String => Array[Int]) => Double, score: (Double, Int) => Double): Routed = {
     val distinct = terms.distinct
     val leadSet = lead.toSet
-    sliced(distinct, distinct.map(stats(_).docFreq).sum, (rows, lo, hi) =>
+    Routed(distinct, distinct.map(stats(_).docFreq).sum, (rows, lo, hi) =>
       Positional.matchingDocs(SingleTask.byTerm(rows), leadSet, lo, hi, freq)
         .map { case (doc, f, dl) => (doc, score(f, dl)) })
+  }
+
+  /** The route of a phrase, multi-phrase, span-near, interval or span query
+    * (see [[positionalRoute]]). */
+  private def positional(q: Query, stats: Map[String, TermStats], boost: Double): Routed = q match {
+    case PhraseQuery(ts, slop) => phraseRoute(ts, slop, stats, boost)
+    case MultiPhraseQuery(ps) => multiPhraseRoute(ps, stats, boost)
+    case SpanNearQuery(ts, slop, inOrder) => spanNearRoute(ts, slop, inOrder, stats, boost)
+    case IntervalQuery(src) => intervalRoute(src, stats, boost)
+    case SpanQuery(s) => intervalRoute(Spans.toIntervals(s), stats, boost)
+    case other => throw new IllegalArgumentException(s"not a positional query: $other")
   }
 
   /** Exact and sloppy phrases (`"a b"~slop`), led by the rarest term. A
@@ -501,14 +521,14 @@ final class Searcher(
     * enumeration — `SloppyPhraseMatcher.java:54`, `PhraseQuery.java:71-101`);
     * its repeated query terms would need the reference's repeat-group
     * machinery and are rejected. */
-  private def phraseFrame(terms: Seq[String], slop: Int,
-                          stats: Map[String, TermStats], boost: Double): DataFrame = {
+  private def phraseRoute(terms: Seq[String], slop: Int,
+                          stats: Map[String, TermStats], boost: Double): Routed = {
     if (slop != 0 && terms.distinct.size != terms.size)
       throw new UnsupportedOperationException(
         "sloppy phrases with repeated terms are not supported (use slop=0)")
-    if (terms.isEmpty || terms.exists(t => !stats.contains(t))) return emptyFrame
+    if (terms.isEmpty || terms.exists(t => !stats.contains(t))) return NoRows
     val ts = terms.toArray
-    positionalFrame(terms, Seq(terms.minBy(stats(_).docFreq)), stats, pos => {
+    positionalRoute(terms, Seq(terms.minBy(stats(_).docFreq)), stats, pos => {
       val arrays = ts.map(pos)
       if (arrays.contains(null)) 0.0 else PhraseSegment.phraseFreq(arrays, slop)
     }, phraseScorer(terms.map(stats), boost))
@@ -521,14 +541,14 @@ final class Searcher(
     * positions; idf = sum over all (present) member terms. Led by the
     * alternatives of the position with the smallest summed df: their docs'
     * union bounds every match. */
-  private def multiPhraseFrame(positions: Seq[Seq[String]],
-                               stats: Map[String, TermStats], boost: Double): DataFrame = {
+  private def multiPhraseRoute(positions: Seq[Seq[String]],
+                               stats: Map[String, TermStats], boost: Double): Routed = {
     // a position whose alternatives are all absent can never match
-    if (positions.isEmpty || positions.exists(_.forall(t => !stats.contains(t)))) return emptyFrame
+    if (positions.isEmpty || positions.exists(_.forall(t => !stats.contains(t)))) return NoRows
     val allTerms = positions.flatten.distinct.filter(stats.contains)
     val alts = positions.map(_.filter(stats.contains).toArray).toArray
     val lead = alts.minBy(_.map(stats(_).docFreq).sum)
-    positionalFrame(allTerms, lead.toSeq, stats, pos => {
+    positionalRoute(allTerms, lead.toSeq, stats, pos => {
       // each position's alternatives' positions, unioned
       val byIdx = alts.map(_.flatMap(t => Option(pos(t)).getOrElse(Array.empty[Int])).distinct.sorted)
       if (byIdx.exists(_.isEmpty)) 0.0 else PhraseSegment.phraseFreq(byIdx, 0)
@@ -540,12 +560,12 @@ final class Searcher(
     * (`lucene/queries/src/java/org/apache/lucene/queries/spans/SpanNearQuery.java`),
     * led by the rarest term. Duplicate query terms must match *distinct*
     * occurrences. */
-  private def spanNearFrame(terms: Seq[String], slop: Int, inOrder: Boolean,
-                            stats: Map[String, TermStats], boost: Double): DataFrame = {
-    if (terms.isEmpty || terms.exists(t => !stats.contains(t))) return emptyFrame
+  private def spanNearRoute(terms: Seq[String], slop: Int, inOrder: Boolean,
+                            stats: Map[String, TermStats], boost: Double): Routed = {
+    if (terms.isEmpty || terms.exists(t => !stats.contains(t))) return NoRows
     val ts = terms.toArray
     val window = terms.size + slop
-    positionalFrame(terms, Seq(terms.minBy(stats(_).docFreq)), stats, pos => {
+    positionalRoute(terms, Seq(terms.minBy(stats(_).docFreq)), stats, pos => {
       val arrays = ts.map(pos)
       if (!arrays.contains(null) && SpanMatcher.matches(arrays, window, inOrder)) 1.0 else 0.0
     }, (_, _) => boost)
@@ -615,20 +635,20 @@ final class Searcher(
     * none (an `Or`, at the root or nested) a term set whose docs' union
     * holds every match — every present term only when no such set is
     * found. */
-  private def intervalFrame(src0: IntervalsSource, stats0: Map[String, TermStats],
-                            boost: Double): DataFrame = {
+  private def intervalRoute(src0: IntervalsSource, stats0: Map[String, TermStats],
+                            boost: Double): Routed = {
     val src = expandIntervalSource(src0)
     // multiterm expansion can introduce terms the pre-gathered stats lack
     val stats = stats0 ++ lookupStats(src.terms -- stats0.keySet)
     val present = src.terms.toSeq.filter(stats.contains)
-    if (present.isEmpty) return emptyFrame
+    if (present.isEmpty) return NoRows
     // the doc-level conjunction hidden in the algebra: any required term
     // absent from the index ⇒ nothing can match
     val required = Intervals.requiredTerms(src)
-    if (required.exists(t => !stats.contains(t))) return emptyFrame
+    if (required.exists(t => !stats.contains(t))) return NoRows
     val lead = Intervals.leadTerms(src, t => stats.get(t).map(_.docFreq).getOrElse(0L))
     val ts = present.toArray
-    positionalFrame(present, lead.toSeq, stats, pos => {
+    positionalRoute(present, lead.toSeq, stats, pos => {
       var m = Map.empty[String, Array[Int]]
       ts.foreach { t => val a = pos(t); if (a != null) m = m.updated(t, a) }
       if (IntervalEval.matches(src, m)) 1.0 else 0.0
@@ -844,12 +864,8 @@ final class Searcher(
       index.docs.select(col("docId")).withColumn("score", lit(boost))
     case TermQuery(t) => termFrame(t, stats, boost)
     case SynonymQuery(ts) => synonymFrame(ts, stats, boost)
-    case PhraseQuery(ts, slop) =>
-      phraseFrame(ts, slop, stats, boost)
-    case MultiPhraseQuery(ps) => multiPhraseFrame(ps, stats, boost)
-    case SpanNearQuery(ts, slop, inOrder) => spanNearFrame(ts, slop, inOrder, stats, boost)
-    case IntervalQuery(src) => intervalFrame(src, stats, boost)
-    case SpanQuery(s) => intervalFrame(Spans.toIntervals(s), stats, boost)
+    case p @ (_: PhraseQuery | _: MultiPhraseQuery | _: SpanNearQuery | _: IntervalQuery | _: SpanQuery) =>
+      sliced(positional(p, stats, boost))
     case DocIdRangeQuery(TermQuery(t), lo, hi) =>
       // sorted-index range: block-level skip on (firstDoc, lastDoc) metadata
       // before any decode — only boundary blocks need the per-doc filter
@@ -1078,33 +1094,47 @@ final class Searcher(
     keys
   }
 
-  /** The scored rows of `kernel` over the doc-range slices of `terms`'
-    * blocks (`postings` = their Σdf). R = ceil(postings / 2^16) slices, at
-    * most the default parallelism, cut the doc-id line at multiples of
-    * `w = ceil(docCount / R)`: doc d belongs to slice `min(d / w, R − 1)`, a
-    * block goes to every slice its `[firstDoc, lastDoc]` overlaps, so each
-    * slice holds the complete postings of its docs on a built index and on a
-    * merged one, and `kernel(rows, lo, hi)` keeps only the docs of
-    * `[lo, hi]`, so the clamp keeps the slices exact for any spread of doc
-    * ids. At R = 1 a [[InvertedIndex.warm]]ed index runs the kernel on the
-    * driver over its [[InvertedIndex.residentBlocks]] and returns a
+  private val NoRows = Routed(Nil, 0L, (_, _, _) => Iterator.empty)
+
+  /** R = ceil(postings / 2^16) doc-range slices, at most the default
+    * parallelism. */
+  private def sliceCount(postings: Long): Int =
+    math.max(1, math.min((postings + SingleTaskMaxPostings - 1) / SingleTaskMaxPostings,
+      spark.sparkContext.defaultParallelism.toLong).toInt)
+
+  /** `route`'s rows computed on the driver over the
+    * [[InvertedIndex.residentBlocks]] — when the index holds them and the
+    * route is one slice (R = 1) — else None. Builds no DataFrame and runs
+    * no job. */
+  private def onDriver(route: Routed): Option[Iterator[(Long, Double)]] =
+    index.residentBlocks.filter(_ => sliceCount(route.postings) == 1).map { blocks =>
+      route.kernel(route.terms.iterator.flatMap(t =>
+        blocks.getOrElse(t, Array.empty[PostingBlock]).iterator.map(b => (t, b))),
+        Long.MinValue, Long.MaxValue)
+    }
+
+  /** The scored rows of `route`'s kernel over the doc-range slices of its
+    * terms' blocks. R slices ([[sliceCount]]) cut the doc-id line at
+    * multiples of `w = ceil(docCount / R)`: doc d belongs to slice
+    * `min(d / w, R − 1)`, a block goes to every slice its
+    * `[firstDoc, lastDoc]` overlaps, so each slice holds the complete
+    * postings of its docs on a built index and on a merged one, and the
+    * kernel keeps only the docs of `[lo, hi]`, so the clamp keeps the slices
+    * exact for any spread of doc ids. At R = 1 a [[InvertedIndex.warm]]ed
+    * index runs the kernel on the driver ([[onDriver]]) and returns a
     * [[localFrame]] (no job), or, when its blocks are not resident, reads
     * the rows into ONE partition (one job, one stage, one task). Everything
     * else shuffles the query terms' encoded blocks into R partitions, slice
     * s to reduce task s. */
-  private def sliced(terms: Seq[String], postings: Long,
-      kernel: (Iterator[(String, PostingBlock)], Long, Long) => Iterator[(Long, Double)]): DataFrame = {
-    val r = math.max(1, math.min((postings + SingleTaskMaxPostings - 1) / SingleTaskMaxPostings,
-      spark.sparkContext.defaultParallelism.toLong).toInt)
-    index.residentBlocks match {
-      case Some(blocks) if r == 1 =>
-        localFrame(kernel(terms.iterator.flatMap(t =>
-          blocks.getOrElse(t, Array.empty[PostingBlock]).iterator.map(b => (t, b))),
-          Long.MinValue, Long.MaxValue))
-      case _ if r == 1 && index.warmTermStats.isDefined =>
+  private def sliced(route: Routed): DataFrame =
+    if (route.terms.isEmpty) emptyFrame
+    else onDriver(route).map(localFrame).getOrElse {
+      val Routed(terms, postings, kernel) = route
+      val r = sliceCount(postings)
+      if (r == 1 && index.warmTermStats.isDefined)
         termBlocks(terms).coalesce(1)
           .mapPartitions(it => kernel(it, Long.MinValue, Long.MaxValue)).toDF("docId", "score")
-      case _ =>
+      else {
         val w = math.max(1L, (cs.docCount + r - 1) / r)
         val sliceOf: Long => Int = d => math.min(math.max(d / w, 0L), r - 1L).toInt
         val keys = partitionKeys(r)
@@ -1123,50 +1153,75 @@ final class Searcher(
                 if (s == r - 1) Long.MaxValue else (s + 1) * w - 1)
             }
           }.toDF("docId", "score")
-    }
-  }
-
-  /** The top-k plan of a flat term query (see the class doc), or None for
-    * any other shape: one [[SingleTask.flatTopK]] per slice of [[sliced]],
-    * merged by one TakeOrdered. */
-  private def flatPlan(q: Query, k: Int): Option[DataFrame] =
-    flatten(q).filter(f => f.tie < 0 && (queryCache.isEmpty || !hasFilter(q))).map { f =>
-      val stats = lookupStats(f.clauses.map(_.term).toSet)
-      val present = f.clauses.map(_.term).distinct.filter(stats.contains)
-      val postings = present.map(stats(_).docFreq).sum
-      if (present.isEmpty) emptyFrame
-      else if (index.warmTermStats.isEmpty && postings <= pruneThreshold) topK(compile(q, stats, 1.0), k)
-      else {
-        val clauses = f.clauses.toArray
-        val scorers = clauses.map { c =>
-          if (c.kind == 2 || c.boost == 0.0 || !stats.contains(c.term)) null
-          else termScorer(stats(c.term), c.boost)
-        }
-        val (nMust, msm) = (f.nMust, f.msm)
-        topK(sliced(present, postings, (rows, lo, hi) =>
-          SingleTask.flatTopK(rows, clauses, scorers, nMust, msm, k, lo, hi)), k)
       }
     }
 
-  /** The top-k plan of a small expansion on a warm index, or None when it
-    * takes the multi-stage paths. Routed: the index is
-    * [[InvertedIndex.warm]]ed (its term statistics are driver-resident), the
-    * shape is a prefix / range / term-set expansion, and its matched terms
-    * hold at most [[SingleTaskMaxPostings]] postings. Their blocks take
-    * [[sliced]]'s one-slice route, where [[SingleTask.smallestDocs]] keeps
-    * the k smallest doc ids. */
-  private def expansionPlan(q: Query, k: Int): Option[DataFrame] = {
+  /** A flat term query's statistics and route (see the class doc): one
+    * [[SingleTask.flatTopK]] per slice; None for any other shape. */
+  private def flatRoute(q: Query, k: Int): Option[(Map[String, TermStats], Routed)] =
+    flatten(q).filter(f => f.tie < 0 && (queryCache.isEmpty || !hasFilter(q))).map { f =>
+      val stats = lookupStats(f.clauses.map(_.term).toSet)
+      val present = f.clauses.map(_.term).distinct.filter(stats.contains)
+      val clauses = f.clauses.toArray
+      val scorers = clauses.map { c =>
+        if (c.kind == 2 || c.boost == 0.0 || !stats.contains(c.term)) null
+        else termScorer(stats(c.term), c.boost)
+      }
+      val (nMust, msm) = (f.nMust, f.msm)
+      (stats, Routed(present, present.map(stats(_).docFreq).sum, (rows, lo, hi) =>
+        SingleTask.flatTopK(rows, clauses, scorers, nMust, msm, k, lo, hi)))
+    }
+
+  /** The top-k plan of a flat term query, merged by one TakeOrdered over
+    * its slices, or None for any other shape. A cold index runs the
+    * exhaustive join plan up to `pruneThreshold` postings. */
+  private def flatPlan(q: Query, k: Int): Option[DataFrame] = flatRoute(q, k).map { case (stats, route) =>
+    if (index.warmTermStats.isEmpty && route.terms.nonEmpty && route.postings <= pruneThreshold)
+      topK(compile(q, stats, 1.0), k)
+    else topK(sliced(route), k)
+  }
+
+  /** The route of a small expansion on a warm index, or None when it takes
+    * the multi-stage paths. Routed: the index is [[InvertedIndex.warm]]ed
+    * (its term statistics are driver-resident), the shape is a prefix /
+    * range / term-set expansion, and its matched terms hold at most
+    * [[SingleTaskMaxPostings]] postings, so [[sliced]] takes its one-slice
+    * route, where [[SingleTask.smallestDocs]] keeps the k smallest doc
+    * ids. */
+  private def expansionRoute(q: Query, k: Int): Option[Routed] = {
     if (index.warmTermStats.isEmpty) return None
     q match {
       case e @ (_: PrefixQuery | _: TermRangeQuery | _: TermInSetQuery) =>
         dictionaryMatches(e).map { case (terms, postings) =>
-          if (terms.isEmpty) emptyFrame
-          else topK(sliced(terms, postings, (rows, lo, hi) =>
-            SingleTask.smallestDocs(rows.map(_._2), k, lo, hi).map(d => (d, 1.0))), k)
+          Routed(terms, postings, (rows, lo, hi) =>
+            SingleTask.smallestDocs(rows.map(_._2), k, lo, hi).map(d => (d, 1.0)))
         }
       case _ => None
     }
   }
+
+  /** The route of a (boosted) positional query whose terms the dictionary
+    * knows without a job — no prefix or wildcard interval source — or
+    * None. */
+  private def positionalTopRoute(q: Query, boost: Double = 1.0): Option[Routed] = q match {
+    case BoostQuery(inner, b) => positionalTopRoute(inner, boost * b)
+    case IntervalQuery(src) if Intervals.hasMultiTerm(src) => None
+    case SpanQuery(s) if Intervals.hasMultiTerm(Spans.toIntervals(s)) => None
+    case p @ (_: PhraseQuery | _: MultiPhraseQuery | _: SpanNearQuery | _: IntervalQuery | _: SpanQuery) =>
+      Some(positional(p, lookupStats(exactTerms(p)), boost))
+    case _ => None
+  }
+
+  /** The top-k rows of the rewritten query `q`, by score desc, docId asc,
+    * when a resident index answers it on the driver: a flat term query, a
+    * small prefix / range / term-set expansion or a positional query whose
+    * postings make one slice ([[onDriver]]), on an index without pending
+    * tombstones. None for every other query. Builds no DataFrame and runs no
+    * job; the rows equal [[search]]'s, which takes the same routes. */
+  private def driverTopK(q: Query, k: Int): Option[Iterator[(Long, Double)]] =
+    if (index.residentBlocks.isEmpty || tombstones.isDefined) None
+    else flatRoute(q, k).map(_._2).orElse(expansionRoute(q, k)).orElse(positionalTopRoute(q))
+      .flatMap(onDriver).map(SingleTask.topK(_, k))
 
   private def hasFilter(q: Query): Boolean = q match {
     case BooleanQuery(clauses, _) => clauses.exists(_._1 == Occur.FILTER)
@@ -1293,43 +1348,77 @@ final class Searcher(
     // the top-k plans read postings directly and would count tombstoned docs
     // toward k — take the exhaustive path until a merge purges them
     if (tombstones.isDefined) return topK(scored(rewritten), k)
-    flatPlan(rewritten, k).orElse(expansionPlan(rewritten, k)).getOrElse(rewritten match {
-      // constant-score expansions: top-k = k smallest doc ids, block-metadata
-      // pruned (see expansionTopK) — the r1 p95 tail was wide prefix/range
-      // expansions decoding much of the vocabulary for 10 rows
-      case e @ (_: PrefixQuery | _: TermRangeQuery | _: TermInSetQuery) =>
-        expansionTopK(expansionPred(e), 1.0, k, dictFirst = false)
-      case e @ (_: FuzzyQuery | _: RegexpQuery) =>
-        expansionTopK(expansionPred(e), 1.0, k, dictFirst = true)
-      case other => topK(scored(other), k)
-    })
+    flatPlan(rewritten, k)
+      .orElse(expansionRoute(rewritten, k).map(r => topK(sliced(r), k)))
+      .getOrElse(rewritten match {
+        // constant-score expansions: top-k = k smallest doc ids, block-metadata
+        // pruned (see expansionTopK) — the r1 p95 tail was wide prefix/range
+        // expansions decoding much of the vocabulary for 10 rows
+        case e @ (_: PrefixQuery | _: TermRangeQuery | _: TermInSetQuery) =>
+          expansionTopK(expansionPred(e), 1.0, k, dictFirst = false)
+        case e @ (_: FuzzyQuery | _: RegexpQuery) =>
+          expansionTopK(expansionPred(e), 1.0, k, dictFirst = true)
+        case other => topK(scored(other), k)
+      })
   }
 
-  /** Batched top-k for a SET of queries in one postings pass — the
-    * throughput shape a distributed columnar engine wins at (the reference
-    * runs queries one at a time per searcher thread; here N queries cost one
-    * scan + one aggregation, not N jobs).
+  private val BatchSchema = StructType(Seq(
+    StructField("queryId", StringType, nullable = false), StructField("docId", LongType, nullable = false),
+    StructField("score", DoubleType, nullable = false), StructField("rank", LongType, nullable = false)))
+
+  /** Batched top-k for a SET of queries. Output: `(queryId, docId, score,
+    * rank)`, rank 1..k per query, each query's rows equal to [[search]]'s.
     *
-    * Supported shapes: TermQuery and flat same-occur MUST/SHOULD booleans of
-    * TermQuery (optionally boosted) — the high-QPS head of real workloads.
-    * Anything else falls back to per-query [[search]] and is unioned in.
+    * Driver-served queries: on an index with resident blocks
+    * ([[InvertedIndex.residentBlocks]]) and no pending tombstones, every
+    * query that [[search]] answers on the driver — a flat term query, a
+    * small prefix / range / term-set expansion, a positional query, each
+    * with postings for one slice — runs its kernel on the driver here too,
+    * one collector per query like the reference's `IndexSearcher` over a
+    * resident reader. Their ranked rows form one local relation: collecting
+    * it runs no job.
     *
-    * Plan: ONE scan of postings filtered to the union of all queries' terms
+    * Every other query shares passes — the throughput shape a distributed
+    * columnar engine wins at (N queries cost one scan + one aggregation,
+    * not N jobs). Term queries and flat booleans / dismaxes of (boosted)
+    * terms take ONE scan of postings filtered to the union of their terms
     * (term-dictionary pushdown), per-(term, doc) scores computed once, then
     * a broadcast join against the tiny (queryId, term, boost, nTerms) plan
     * table fans each term-doc row out to the queries that want it;
     * sum-aggregate by (queryId, docId); MUST queries keep docs carrying all
-    * their terms; per-query top-k is one doc-partitioned window. Output:
-    * `(queryId, docId, score, rank)`, rank 1..k per query. */
+    * their terms; per-query top-k is one doc-partitioned window. Expansions
+    * and phrases join shared passes of their own at volume
+    * (`minSharedScan`); anything else runs its own [[search]] and is
+    * unioned in. */
   def searchBatch(queries: Seq[(String, Query)], k: Int,
-                  /** expansion/positional queries only join the shared scans
-                    * when at least this many share one (below it, their
-                    * per-query [[search]] plans — the block-metadata top-k
-                    * of an expansion, the sliced positional plan of a
-                    * phrase — beat an unpruned shared scan, measured on the
-                    * 60-query reference set); scored
+                  /** expansion/positional queries that are not driver-served
+                    * only join the shared scans when at least this many
+                    * share one (below it, their per-query [[search]] plans
+                    * — the block-metadata top-k of an expansion, the sliced
+                    * positional plan of a phrase — beat an unpruned shared
+                    * scan, measured on the 60-query reference set); scored
                     * term/boolean shapes always batch */
                   minSharedScan: Int = 32): DataFrame = {
+    val served = Vector.newBuilder[Row]
+    val rest = Vector.newBuilder[(String, Query)]
+    queries.foreach { case (qid, q) =>
+      driverTopK(QueryRewriter.rewrite(q), k) match {
+        case Some(hits) => hits.zipWithIndex.foreach { case ((d, sc), i) => served += Row(qid, d, sc, i + 1L) }
+        case None => rest += ((qid, q))
+      }
+    }
+    val rows = served.result()
+    val local = spark.createDataFrame(rows.asJava, BatchSchema)
+    sharedBatch(rest.result(), k, minSharedScan) match {
+      case Some(shared) if rows.nonEmpty => local.unionAll(shared)
+      case Some(shared) => shared
+      case None => local
+    }
+  }
+
+  /** [[searchBatch]]'s shared passes and per-query fallbacks over `queries`,
+    * or None when there are none. */
+  private def sharedBatch(queries: Seq[(String, Query)], k: Int, minSharedScan: Int): Option[DataFrame] = {
     import org.apache.spark.sql.expressions.Window
 
     // One plan row per flat term clause. kind: 0 = required (MUST/FILTER,
@@ -1484,7 +1573,7 @@ final class Searcher(
     // term's positions decoded ONCE, slot plan fanned out by broadcast join,
     // per-(query, doc) freq = the same exact/sloppy enumeration the
     // per-query path uses. Queries with an absent term yield no rows, like
-    // phraseFrame's emptyFrame.
+    // phraseRoute's empty route.
     val phraseScored: Option[DataFrame] = {
       val ps = phrases.result()
       if (ps.isEmpty) None
@@ -1555,8 +1644,6 @@ final class Searcher(
         .select(col("queryId"), col("docId"), col("score"), col("rank").cast("long").as("rank"))
     }
     (batchScored.toSeq ++ fallbackDf).reduceOption(_ unionAll _)
-      .getOrElse(spark.emptyDataset[(String, Long, Double, Long)]
-        .toDF("queryId", "docId", "score", "rank"))
   }
 
   /** Keyset pagination: top-k strictly after a previous (score, docId) anchor

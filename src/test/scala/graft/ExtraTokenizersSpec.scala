@@ -92,4 +92,14 @@ class ExtraTokenizersSpec extends AnyFunSuite {
     assert(withPos(PatternAnalyzer("st[a-z]+", group = 0), "stream customer fast")
       == Seq(("stream", 0), ("stomer", 1)))
   }
+
+  test("PatternTokenizer: registry round-trip keeps the group, the regex and the case") {
+    // the default (lowercasing) name is unchanged, so existing indexes open
+    assert(PatternAnalyzer("[ \t]+").name == "pattern:-1:[ \t]+")
+    Seq(PatternAnalyzer("[ \t]+"), PatternAnalyzer("[ \t]+", toLower = false),
+      PatternAnalyzer("a:(b:c)", group = 1), PatternAnalyzer("a:(b:c)", group = 1, toLower = false))
+      .foreach(p => assert(Analyzers.byName(p.name) == p, p.name))
+    assert(terms(Analyzers.byName(PatternAnalyzer(" ", toLower = false).name), "Mixed Case") ==
+      Seq("Mixed", "Case"))
+  }
 }

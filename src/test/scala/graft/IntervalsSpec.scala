@@ -189,6 +189,14 @@ class IntervalsSpec extends AnyFunSuite {
     assert(requiredTerms(Prefix("qu")) == Set.empty)
   }
 
+  test("hasMultiTerm: prefix and wildcard leaves at any depth") {
+    assert(!hasMultiTerm(Ordered(Seq(Term("a"), Or(Seq(Phrase(Seq("b", "c")), Term("d")))))))
+    assert(!hasMultiTerm(NotNear(1, 2, Term("a"), MaxGaps(1, Unordered(Seq(Term("b"), Term("c")))))))
+    assert(hasMultiTerm(Prefix("qu")))
+    assert(hasMultiTerm(Ordered(Seq(Term("a"), Or(Seq(Term("b"), Wildcard("c?d")))))))
+    assert(hasMultiTerm(ContainedBy(Term("a"), Extend(AtLeast(1, Seq(Term("b"), Prefix("x"))), 1, 1))))
+  }
+
   test("segment matcher leapfrogs: head-term blocks outside the rarest required term's range never decode") {
     import graft.core.PostingsCodec
     import graft.search.Positional

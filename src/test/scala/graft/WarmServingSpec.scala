@@ -13,10 +13,11 @@ import TopKAssertions.assertSameTopK
 
 /** Warm serving: the driver route a warmed index with resident blocks
   * takes for small queries must return the cold exhaustive top-k with no
-  * Spark job; an index warmed over its resident-block budget must keep the
-  * one-task plan and the same top-k; flat queries and phrases above the
-  * postings bound must take the sliced plan, one slice per reduce task, and
-  * return the same top-k; tombstoned indexes anti-join the live docs.
+  * Spark job, for one query and for a batch of them; an index warmed over
+  * its resident-block budget must keep the one-task plan and the same
+  * top-k; flat queries and phrases above the postings bound must take the
+  * sliced plan, one slice per reduce task, and return the same top-k;
+  * tombstoned indexes anti-join the live docs.
   * Checked on a built (doc-aligned) index and on its merge. */
 class WarmServingSpec extends AnyFunSuite with BeforeAndAfterAll {
   import SparkTestEnv.spark
@@ -156,12 +157,13 @@ class WarmServingSpec extends AnyFunSuite with BeforeAndAfterAll {
       TermRangeQuery(Some(Full), None, includeLower = false, includeUpper = true), 20)).nonEmpty)
   }
 
-  /** (jobs run inside `search`, jobs run by `collect`, stages of those jobs). */
-  private def jobProfile(s: Searcher, q: Query): (Int, Int, Int) = {
+  /** (jobs run while `construct` builds the frame, jobs run by its
+    * `collect`, stages of those jobs). */
+  private def jobProfile(construct: => DataFrame): (Int, Int, Int) = {
     val sc = spark.sparkContext
     val tag = s"warm-serving-${System.nanoTime()}"
-    sc.setJobGroup(s"$tag-construct", "search")
-    val df = try s.search(q, 10) finally sc.clearJobGroup()
+    sc.setJobGroup(s"$tag-construct", "construct")
+    val df = try construct finally sc.clearJobGroup()
     sc.setJobGroup(s"$tag-execute", "collect")
     try df.collect() finally sc.clearJobGroup()
     // the status tracker is fed by the listener bus, in order: once a marker
@@ -213,7 +215,69 @@ class WarmServingSpec extends AnyFunSuite with BeforeAndAfterAll {
     Seq(TermQuery("w0"), BooleanQuery.must(TermQuery("w1"), TermQuery("w2")),
       PhraseQuery(Seq("w0", "w1")), PrefixQuery("w1"),
       TermRangeQuery(Some("w2"), Some("w25"), includeLower = true, includeUpper = false)).foreach { q =>
-      assert(jobProfile(w, q) == ((0, 0, 0)), s"$q")
+      assert(jobProfile(w.search(q, 10)) == ((0, 0, 0)), s"$q")
+    }
+  }
+
+  /** A batch's rows per query id, in rank order; asserts the ranks run
+    * 1..n. */
+  private def byQuery(batch: DataFrame): Map[String, Seq[(Long, Double)]] =
+    batch.collect().groupBy(_.getString(0)).map { case (id, rs) =>
+      val ranked = rs.sortBy(_.getLong(3)).toSeq
+      assert(ranked.map(_.getLong(3)) == (1L to ranked.size.toLong), s"$id ranks")
+      id -> ranked.map(r => (r.getLong(1), r.getDouble(2)))
+    }
+
+  private val batchQueries: Seq[(String, Query)] = queries.zipWithIndex.map { case (q, i) => (s"q$i", q) }
+
+  test("a batch on a resident index is served on the driver: search's rows, cold's top-k, no job") {
+    val c = cold(baseDir)
+    Seq(baseDir, mergedDir).foreach { dir =>
+      val w = new Searcher(warm(dir), ScoringMode.PreciseBM25())
+      val batch = w.searchBatch(batchQueries, 20)
+      assert(routed(batch), s"$dir: ${batch.queryExecution.executedPlan}")
+      val got = byQuery(batch)
+      batchQueries.foreach { case (id, q) =>
+        val hits = got.getOrElse(id, Nil)
+        assert(hits == rows(w.search(q, 20)), s"$dir: $q")
+        assertSameTopK(s"$dir batch: $q", hits, rows(c.search(q, 20)))
+      }
+      assert(jobProfile(w.searchBatch(batchQueries, 20)) == ((0, 0, 0)), dir)
+    }
+  }
+
+  test("a mixed batch unions the driver-served rows with the shared pass") {
+    val dismax = DisjunctionMaxQuery(Seq(TermQuery("w1"), TermQuery("w2"), TermQuery("w5")), 0.3f)
+    val disjunction = BooleanQuery.should(Fillers.map(TermQuery): _*)
+    // an interval source with a prefix leaf expands with a dictionary job, so
+    // the batch runs it through search
+    val prefixed = IntervalQuery(Intervals.Ordered(Seq(Intervals.Term("w0"), Intervals.Prefix("w1"))))
+    val mixed = Seq("served" -> BooleanQuery.must(TermQuery("w1"), TermQuery("w2")),
+      "dismax" -> dismax, "fillers" -> disjunction, "phrase" -> PhraseQuery(Seq("w0", "w1")),
+      "prefixed" -> prefixed)
+    val c = cold(baseDir)
+    Seq(baseDir, mergedDir).foreach { dir =>
+      val w = new Searcher(warm(dir), ScoringMode.PreciseBM25())
+      val batch = w.searchBatch(mixed, 10)
+      assert(!routed(batch), s"$dir: the dismax and the fillers take the shared pass")
+      val got = byQuery(batch)
+      mixed.foreach { case (id, q) =>
+        assertSameTopK(s"$dir mixed batch: $q", got.getOrElse(id, Nil), rows(c.search(q, 10)))
+      }
+      assert(got("served") == rows(w.search(mixed.head._2, 10)), dir)
+    }
+  }
+
+  test("a batch on an index warmed over its budget plans Spark work and equals cold") {
+    val c = cold(baseDir)
+    Seq(baseDir, mergedDir).foreach { dir =>
+      val w = new Searcher(warmOverBudget(dir), ScoringMode.PreciseBM25())
+      val batch = w.searchBatch(batchQueries, 20)
+      assert(!routed(batch), s"$dir over budget: ${batch.queryExecution.executedPlan}")
+      val got = byQuery(batch)
+      batchQueries.foreach { case (id, q) =>
+        assertSameTopK(s"$dir over budget batch: $q", got.getOrElse(id, Nil), rows(c.search(q, 20)))
+      }
     }
   }
 

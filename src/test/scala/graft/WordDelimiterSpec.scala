@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.{PatternAnalyzer, WordDelimiter, WordDelimiterGraphAnalyzer}
+import graft.core.{Analyzers, PatternAnalyzer, WordDelimiter, WordDelimiterGraphAnalyzer}
 import graft.core.WordDelimiter._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -75,5 +75,18 @@ class WordDelimiterSpec extends AnyFunSuite {
     val p = WordDelimiterGraphAnalyzer(ws, split, protWords = Set("basic-split"))
     assert(p.tokenize("basic-split other-x").map(_.term) ==
       Seq("basic-split", "other", "x"))
+  }
+
+  test("registry round-trip keeps the flags, the protected words and the inner analyzer's case") {
+    val plain = a(split)
+    assert(plain.name == s"word-delimiter:$split:pattern-cased:-1:[ \t\n\r]+")
+    val odd = Set("basic-split", "a:b,c", "x y+z%", "", "Straße")
+    Seq(plain, WordDelimiterGraphAnalyzer(ws, split, protWords = Set("basic-split")),
+      WordDelimiterGraphAnalyzer(ws, split, protWords = odd),
+      WordDelimiterGraphAnalyzer(PatternAnalyzer(":"), 0, protWords = Set("k"))).foreach { w =>
+      assert(Analyzers.byName(w.name) == w, w.name)
+    }
+    val reopened = Analyzers.byName(WordDelimiterGraphAnalyzer(ws, split, protWords = odd).name)
+    assert(reopened.tokenize("a:b,c camelCase").map(_.term) == Seq("a:b,c", "camel", "Case"))
   }
 }
