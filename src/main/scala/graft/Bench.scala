@@ -280,8 +280,8 @@ object Bench {
       val p95 = lat(math.min(lat.size - 1, (lat.size * 0.95).toInt))
       // batched mode: the SAME query set in one call — on this warm index
       // the queries whose postings fit one slice run their kernels on the
-      // driver with no job, the rest share one postings pass (unsupported
-      // shapes fall back internally)
+      // driver with no job, the other routed ones share one slice plan, and
+      // the shapes without a route run their own search
       val tb = System.nanoTime()
       val batchRows = searcher.searchBatch(
         queries.zipWithIndex.map { case (q, i) => (s"q$i", q) }, 10).count()

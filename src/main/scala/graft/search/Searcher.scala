@@ -2,8 +2,9 @@ package graft.search
 
 import graft.core._
 import graft.index.InvertedIndex
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.hash.Murmur3_x86_32
@@ -123,12 +124,20 @@ object ScoringMode {
   final case class PreciseDFIChiSquared() extends ScoringMode
 }
 
-/** A query answered by one kernel over the posting blocks of `terms`
-  * (`postings` = their Σdf): `kernel(rows, lo, hi)` scores the docs in
-  * `[lo, hi]` of the `(term, block)` rows it is given. No terms: no rows.
+/** A query answered by one kernel over the posting blocks of its terms
+  * (`dfs`: term → df): `kernel(rows, lo, hi)` scores the docs in `[lo, hi]`
+  * of the `(term, block)` rows it is given. No terms: no rows.
   * [[Searcher]] plans it as doc-range slices or runs it on the driver. */
-private[search] final case class Routed(terms: Seq[String], postings: Long,
-    kernel: (Iterator[(String, PostingBlock)], Long, Long) => Iterator[(Long, Double)])
+private[search] final case class Routed(dfs: Map[String, Long],
+    kernel: (Iterator[(String, PostingBlock)], Long, Long) => Iterator[(Long, Double)]) {
+
+  /** Σdf of the terms. */
+  def postings: Long = dfs.valuesIterator.sum
+
+  /** The kernel over the blocks `blocks(t)` of each term t, in `[lo, hi]`. */
+  def over(blocks: String => Iterator[PostingBlock], lo: Long, hi: Long): Iterator[(Long, Double)] =
+    kernel(dfs.keysIterator.flatMap(t => blocks(t).map(b => (t, b))), lo, hi)
+}
 
 /** Distributed query execution over an [[InvertedIndex]].
   *
@@ -177,11 +186,12 @@ private[search] final case class Routed(terms: Seq[String], postings: Long,
   * back as a local relation; top-k ranks them there, so `search` and its
   * `collect` run no Spark job. [[searchBatch]] answers the same queries
   * from the same kernels, their rows gathered into one local relation, so
-  * a batch of them runs no job either. A local relation inside a larger
-  * plan (a phrase in a boolean) is an ordinary DataFrame. A warm index
-  * without resident blocks reads the R = 1 rows into ONE partition instead:
-  * one job, one stage, one task. Pending tombstones send every query to the
-  * exhaustive plan.
+  * a batch of them runs no job either; its other routed queries share ONE
+  * slice plan, every slice running each query's kernel. A local relation
+  * inside a larger plan (a phrase in a boolean) is an ordinary DataFrame.
+  * A warm index without resident blocks reads the R = 1 rows into ONE
+  * partition instead: one job, one stage, one task. Pending tombstones send
+  * every query to the exhaustive plan.
   */
 final class Searcher(
     val index: InvertedIndex,
@@ -416,10 +426,9 @@ final class Searcher(
     * broadcast regardless of lead df — the cliff-free upper tier. */
   private val CoarseLeadBuckets = 16 // log2
 
-  /** Matched-term bound of an expansion's plan: [[searchBatch]] sends wider
-    * expansions to per-query [[search]] (its broadcast plan table stays
-    * small), and [[expansionRoute]] leaves them to [[expansionTopK]] (its
-    * `term IN (...)` list stays small). */
+  /** Matched-term bound of an expansion's route: [[expansionRoute]] leaves
+    * wider expansions to [[expansionTopK]], so the `term IN (...)` list of
+    * its plan stays small. */
   private val ExpansionCap = 4096
 
   /** Postings (Σdf of the distinct terms) scored by one task or on the
@@ -497,9 +506,8 @@ final class Searcher(
     * and each match `(freq, doclen)` scored by `score`. */
   private def positionalRoute(terms: Seq[String], lead: Seq[String], stats: Map[String, TermStats],
       freq: (String => Array[Int]) => Double, score: (Double, Int) => Double): Routed = {
-    val distinct = terms.distinct
     val leadSet = lead.toSet
-    Routed(distinct, distinct.map(stats(_).docFreq).sum, (rows, lo, hi) =>
+    Routed(terms.map(t => t -> stats(t).docFreq).toMap, (rows, lo, hi) =>
       Positional.matchingDocs(SingleTask.byTerm(rows), leadSet, lo, hi, freq)
         .map { case (doc, f, dl) => (doc, score(f, dl)) })
   }
@@ -639,7 +647,7 @@ final class Searcher(
                             boost: Double): Routed = {
     val src = expandIntervalSource(src0)
     // multiterm expansion can introduce terms the pre-gathered stats lack
-    val stats = stats0 ++ lookupStats(src.terms -- stats0.keySet)
+    val stats = if (Intervals.hasMultiTerm(src0)) stats0 ++ lookupStats(src.terms -- stats0.keySet) else stats0
     val present = src.terms.toSeq.filter(stats.contains)
     if (present.isEmpty) return NoRows
     // the doc-level conjunction hidden in the algebra: any required term
@@ -1029,8 +1037,8 @@ final class Searcher(
     case _ => None
   }
 
-  /** Flatten a term query, a boolean of (boosted) term clauses or a dismax of
-    * (boosted) terms into [[FlatQuery]] clauses; None for any other shape.
+  /** Flatten a term query or a boolean of (boosted) term clauses into
+    * [[FlatQuery]] clauses; None for any other shape.
     * The match rule is [[compileBoolean]]'s: FILTER clauses are required with
     * boost 0, MUST_NOT clauses carry boost 0, pure disjunctions need at least
     * one optional match, and `minimumShouldMatch` is ignored when there are
@@ -1038,7 +1046,7 @@ final class Searcher(
     * and is not flattened. */
   private def flatten(q: Query, mult: Double = 1.0): Option[FlatQuery] = q match {
     case BoostQuery(inner, b) => flatten(inner, mult * b)
-    case TermQuery(t) => Some(FlatQuery(Seq(FlatClause(t, mult, 1)), 0, 1, -1.0))
+    case TermQuery(t) => Some(FlatQuery(Seq(FlatClause(t, mult, 1)), 0, 1))
     case BooleanQuery(clauses, msm)
         if clauses.nonEmpty &&
           clauses.forall { case (_, c) => flatTerm(c, 1.0).isDefined } &&
@@ -1052,13 +1060,7 @@ final class Searcher(
       val hasMust = clauses.exists(_._1 == Occur.MUST)
       val hasShould = clauses.exists(_._1 == Occur.SHOULD)
       val msmEff = if (!hasShould) 0 else if (!hasMust) math.max(msm, 1) else msm
-      Some(FlatQuery(flat, flat.count(_.kind == 0), msmEff, -1.0))
-    case DisjunctionMaxQuery(members, tie)
-        if members.nonEmpty && members.forall(flatTerm(_, 1.0).isDefined) =>
-      Some(FlatQuery(members.map { m =>
-        val (t, b) = flatTerm(m, mult).get
-        FlatClause(t, b, 1)
-      }, 0, 1, tie.toDouble))
+      Some(FlatQuery(flat, flat.count(_.kind == 0), msmEff))
     case _ => None
   }
 
@@ -1094,7 +1096,7 @@ final class Searcher(
     keys
   }
 
-  private val NoRows = Routed(Nil, 0L, (_, _, _) => Iterator.empty)
+  private val NoRows = Routed(Map.empty, (_, _, _) => Iterator.empty)
 
   /** R = ceil(postings / 2^16) doc-range slices, at most the default
     * parallelism. */
@@ -1108,75 +1110,81 @@ final class Searcher(
     * no job. */
   private def onDriver(route: Routed): Option[Iterator[(Long, Double)]] =
     index.residentBlocks.filter(_ => sliceCount(route.postings) == 1).map { blocks =>
-      route.kernel(route.terms.iterator.flatMap(t =>
-        blocks.getOrElse(t, Array.empty[PostingBlock]).iterator.map(b => (t, b))),
-        Long.MinValue, Long.MaxValue)
+      route.over(t => blocks.get(t).iterator.flatMap(_.iterator), Long.MinValue, Long.MaxValue)
     }
 
   /** The scored rows of `route`'s kernel over the doc-range slices of its
-    * terms' blocks. R slices ([[sliceCount]]) cut the doc-id line at
+    * terms' blocks ([[slices]]); at R = 1 a resident index runs the kernel on
+    * the driver ([[onDriver]]) and returns a [[localFrame]] (no job). */
+  private def sliced(route: Routed): DataFrame =
+    if (route.dfs.isEmpty) emptyFrame
+    else onDriver(route).map(localFrame)
+      .getOrElse(slices(route.dfs, route.kernel).toDF("docId", "score"))
+
+  /** `kernel`'s rows over the doc-range slices of the blocks of `dfs`'
+    * terms. R slices ([[sliceCount]] of their Σdf) cut the doc-id line at
     * multiples of `w = ceil(docCount / R)`: doc d belongs to slice
     * `min(d / w, R − 1)`, a block goes to every slice its
     * `[firstDoc, lastDoc]` overlaps, so each slice holds the complete
     * postings of its docs on a built index and on a merged one, and the
     * kernel keeps only the docs of `[lo, hi]`, so the clamp keeps the slices
     * exact for any spread of doc ids. At R = 1 a [[InvertedIndex.warm]]ed
-    * index runs the kernel on the driver ([[onDriver]]) and returns a
-    * [[localFrame]] (no job), or, when its blocks are not resident, reads
-    * the rows into ONE partition (one job, one stage, one task). Everything
-    * else shuffles the query terms' encoded blocks into R partitions, slice
-    * s to reduce task s. */
-  private def sliced(route: Routed): DataFrame =
-    if (route.terms.isEmpty) emptyFrame
-    else onDriver(route).map(localFrame).getOrElse {
-      val Routed(terms, postings, kernel) = route
-      val r = sliceCount(postings)
-      if (r == 1 && index.warmTermStats.isDefined)
-        termBlocks(terms).coalesce(1)
-          .mapPartitions(it => kernel(it, Long.MinValue, Long.MaxValue)).toDF("docId", "score")
-      else {
-        val w = math.max(1L, (cs.docCount + r - 1) / r)
-        val sliceOf: Long => Int = d => math.min(math.max(d / w, 0L), r - 1L).toInt
-        val keys = partitionKeys(r)
-        // an explicit partition count: AQE leaves the shuffle uncoalesced
-        termBlocks(terms)
-          .flatMap { case (t, b) =>
-            (sliceOf(b.firstDoc) to sliceOf(b.lastDoc)).iterator.map(s => (keys(s), s, t, b)) }
-          .repartition(r, col("_1"))
-          .mapPartitions { it =>
-            val rows = it.buffered
-            if (!rows.hasNext) Iterator.empty
-            else {
-              val s = rows.head._2
-              kernel(rows.map(x => (x._3, x._4)),
-                if (s == 0) Long.MinValue else s * w,
-                if (s == r - 1) Long.MaxValue else (s + 1) * w - 1)
-            }
-          }.toDF("docId", "score")
-      }
+    * index reads the rows into ONE partition (one job, one stage, one
+    * task). Everything else shuffles the terms' encoded blocks into R
+    * partitions, slice s to reduce task s. */
+  private def slices[T: Encoder](dfs: Map[String, Long],
+      kernel: (Iterator[(String, PostingBlock)], Long, Long) => Iterator[T]): Dataset[T] = {
+    val terms = dfs.keys.toSeq
+    val r = sliceCount(dfs.valuesIterator.sum)
+    if (r == 1 && index.warmTermStats.isDefined)
+      termBlocks(terms).coalesce(1).mapPartitions(it => kernel(it, Long.MinValue, Long.MaxValue))
+    else {
+      val w = math.max(1L, (cs.docCount + r - 1) / r)
+      val sliceOf: Long => Int = d => math.min(math.max(d / w, 0L), r - 1L).toInt
+      val keys = partitionKeys(r)
+      // an explicit partition count: AQE leaves the shuffle uncoalesced
+      termBlocks(terms)
+        .flatMap { case (t, b) =>
+          (sliceOf(b.firstDoc) to sliceOf(b.lastDoc)).iterator.map(s => (keys(s), s, t, b)) }
+        .repartition(r, col("_1"))
+        .mapPartitions { it =>
+          val rows = it.buffered
+          if (!rows.hasNext) Iterator.empty
+          else {
+            val s = rows.head._2
+            kernel(rows.map(x => (x._3, x._4)),
+              if (s == 0) Long.MinValue else s * w,
+              if (s == r - 1) Long.MaxValue else (s + 1) * w - 1)
+          }
+        }
     }
+  }
 
-  /** A flat term query's statistics and route (see the class doc): one
-    * [[SingleTask.flatTopK]] per slice; None for any other shape. */
-  private def flatRoute(q: Query, k: Int): Option[(Map[String, TermStats], Routed)] =
-    flatten(q).filter(f => f.tie < 0 && (queryCache.isEmpty || !hasFilter(q))).map { f =>
-      val stats = lookupStats(f.clauses.map(_.term).toSet)
-      val present = f.clauses.map(_.term).distinct.filter(stats.contains)
-      val clauses = f.clauses.toArray
-      val scorers = clauses.map { c =>
-        if (c.kind == 2 || c.boost == 0.0 || !stats.contains(c.term)) null
-        else termScorer(stats(c.term), c.boost)
-      }
-      val (nMust, msm) = (f.nMust, f.msm)
-      (stats, Routed(present, present.map(stats(_).docFreq).sum, (rows, lo, hi) =>
-        SingleTask.flatTopK(rows, clauses, scorers, nMust, msm, k, lo, hi)))
+  /** `q` flattened for [[flatRoute]], or None: other shapes, and FILTER
+    * clauses under a `queryCache`, take the compiled plans. */
+  private def flatQuery(q: Query): Option[FlatQuery] =
+    flatten(q).filter(_ => queryCache.isEmpty || !hasFilter(q))
+
+  /** A flat term query's route over the terms `stats` holds (see the class
+    * doc): one [[SingleTask.flatTopK]] per slice. */
+  private def flatRoute(f: FlatQuery, stats: Map[String, TermStats], k: Int): Routed = {
+    val clauses = f.clauses.toArray
+    val scorers = clauses.map { c =>
+      if (c.kind == 2 || c.boost == 0.0 || !stats.contains(c.term)) null
+      else termScorer(stats(c.term), c.boost)
     }
+    val (nMust, msm) = (f.nMust, f.msm)
+    val dfs = clauses.iterator.map(_.term).filter(stats.contains).map(t => t -> stats(t).docFreq).toMap
+    Routed(dfs, (rows, lo, hi) => SingleTask.flatTopK(rows, clauses, scorers, nMust, msm, k, lo, hi))
+  }
 
   /** The top-k plan of a flat term query, merged by one TakeOrdered over
     * its slices, or None for any other shape. A cold index runs the
     * exhaustive join plan up to `pruneThreshold` postings. */
-  private def flatPlan(q: Query, k: Int): Option[DataFrame] = flatRoute(q, k).map { case (stats, route) =>
-    if (index.warmTermStats.isEmpty && route.terms.nonEmpty && route.postings <= pruneThreshold)
+  private def flatPlan(q: Query, k: Int): Option[DataFrame] = flatQuery(q).map { f =>
+    val stats = lookupStats(f.clauses.map(_.term).toSet)
+    val route = flatRoute(f, stats, k)
+    if (index.warmTermStats.isEmpty && route.dfs.nonEmpty && route.postings <= pruneThreshold)
       topK(compile(q, stats, 1.0), k)
     else topK(sliced(route), k)
   }
@@ -1192,36 +1200,31 @@ final class Searcher(
     if (index.warmTermStats.isEmpty) return None
     q match {
       case e @ (_: PrefixQuery | _: TermRangeQuery | _: TermInSetQuery) =>
-        dictionaryMatches(e).map { case (terms, postings) =>
-          Routed(terms, postings, (rows, lo, hi) =>
-            SingleTask.smallestDocs(rows.map(_._2), k, lo, hi).map(d => (d, 1.0)))
-        }
+        dictionaryMatches(e).map(dfs => Routed(dfs, (rows, lo, hi) =>
+          SingleTask.smallestDocs(rows.map(_._2), k, lo, hi).map(d => (d, 1.0))))
       case _ => None
     }
   }
 
   /** The route of a (boosted) positional query whose terms the dictionary
     * knows without a job — no prefix or wildcard interval source — or
-    * None. */
-  private def positionalTopRoute(q: Query, boost: Double = 1.0): Option[Routed] = q match {
-    case BoostQuery(inner, b) => positionalTopRoute(inner, boost * b)
+    * None. `stats` covers its exact terms. */
+  private def positionalTopRoute(q: Query, stats: Map[String, TermStats],
+      boost: Double = 1.0): Option[Routed] = q match {
+    case BoostQuery(inner, b) => positionalTopRoute(inner, stats, boost * b)
     case IntervalQuery(src) if Intervals.hasMultiTerm(src) => None
     case SpanQuery(s) if Intervals.hasMultiTerm(Spans.toIntervals(s)) => None
     case p @ (_: PhraseQuery | _: MultiPhraseQuery | _: SpanNearQuery | _: IntervalQuery | _: SpanQuery) =>
-      Some(positional(p, lookupStats(exactTerms(p)), boost))
+      Some(positional(p, stats, boost))
     case _ => None
   }
 
-  /** The top-k rows of the rewritten query `q`, by score desc, docId asc,
-    * when a resident index answers it on the driver: a flat term query, a
-    * small prefix / range / term-set expansion or a positional query whose
-    * postings make one slice ([[onDriver]]), on an index without pending
-    * tombstones. None for every other query. Builds no DataFrame and runs no
-    * job; the rows equal [[search]]'s, which takes the same routes. */
-  private def driverTopK(q: Query, k: Int): Option[Iterator[(Long, Double)]] =
-    if (index.residentBlocks.isEmpty || tombstones.isDefined) None
-    else flatRoute(q, k).map(_._2).orElse(expansionRoute(q, k)).orElse(positionalTopRoute(q))
-      .flatMap(onDriver).map(SingleTask.topK(_, k))
+  /** The route of the rewritten query `q` — a flat term query, a small
+    * prefix / range / term-set expansion on a warm index or a positional
+    * query — or None. `stats` covers its exact terms. */
+  private def route(q: Query, stats: Map[String, TermStats], k: Int): Option[Routed] =
+    flatQuery(q).map(flatRoute(_, stats, k)).orElse(expansionRoute(q, k))
+      .orElse(positionalTopRoute(q, stats))
 
   private def hasFilter(q: Query): Boolean = q match {
     case BooleanQuery(clauses, _) => clauses.exists(_._1 == Occur.FILTER)
@@ -1230,12 +1233,12 @@ final class Searcher(
   }
 
   /** The terms a prefix / range / term-set query matches in the warm
-    * dictionary and their postings (Σdf), or None past [[ExpansionCap]]
+    * dictionary with their dfs, or None past [[ExpansionCap]]
     * terms or [[SingleTaskMaxPostings]] postings. Prefix and range bounds
     * compare in UTF-8 byte order over [[InvertedIndex.warmSortedTerms]], so
     * the matches equal Catalyst's `startsWith` and string comparisons in
     * [[expansionPred]]. */
-  private def dictionaryMatches(q: Query): Option[(Seq[String], Long)] = {
+  private def dictionaryMatches(q: Query): Option[Map[String, Long]] = {
     import org.apache.spark.unsafe.types.UTF8String
     val stats = index.warmTermStats.get
     val dict = index.warmSortedTerms.get
@@ -1255,17 +1258,18 @@ final class Searcher(
       case TermInSetQuery(ts) => ts.iterator.filter(stats.contains)
       case _ => Iterator.empty
     }
-    val out = Vector.newBuilder[String]
+    val out = Map.newBuilder[String, Long]
     var n = 0
     var postings = 0L
     while (candidates.hasNext) {
       val t = candidates.next()
+      val df = stats(t)._1
       n += 1
-      postings += stats(t)._1
+      postings += df
       if (n > ExpansionCap || postings > SingleTaskMaxPostings) return None
-      out += t
+      out += t -> df
     }
-    Some((out.result(), postings))
+    Some(out.result())
   }
 
   // ---------------------------------------------------------------- public
@@ -1366,284 +1370,72 @@ final class Searcher(
     StructField("queryId", StringType, nullable = false), StructField("docId", LongType, nullable = false),
     StructField("score", DoubleType, nullable = false), StructField("rank", LongType, nullable = false)))
 
-  /** Batched top-k for a SET of queries. Output: `(queryId, docId, score,
-    * rank)`, rank 1..k per query, each query's rows equal to [[search]]'s.
+  /** Batched top-k for a SET of queries, each with a distinct id. Output:
+    * `(queryId, docId, score, rank)`, rank 1..k per query, each query's rows
+    * equal to [[search]]'s.
     *
-    * Driver-served queries: on an index with resident blocks
-    * ([[InvertedIndex.residentBlocks]]) and no pending tombstones, every
-    * query that [[search]] answers on the driver — a flat term query, a
-    * small prefix / range / term-set expansion, a positional query, each
-    * with postings for one slice — runs its kernel on the driver here too,
-    * one collector per query like the reference's `IndexSearcher` over a
-    * resident reader. Their ranked rows form one local relation: collecting
-    * it runs no job.
-    *
-    * Every other query shares passes — the throughput shape a distributed
-    * columnar engine wins at (N queries cost one scan + one aggregation,
-    * not N jobs). Term queries and flat booleans / dismaxes of (boosted)
-    * terms take ONE scan of postings filtered to the union of their terms
-    * (term-dictionary pushdown), per-(term, doc) scores computed once, then
-    * a broadcast join against the tiny (queryId, term, boost, nTerms) plan
-    * table fans each term-doc row out to the queries that want it;
-    * sum-aggregate by (queryId, docId); MUST queries keep docs carrying all
-    * their terms; per-query top-k is one doc-partitioned window. Expansions
-    * and phrases join shared passes of their own at volume
-    * (`minSharedScan`); anything else runs its own [[search]] and is
-    * unioned in. */
-  def searchBatch(queries: Seq[(String, Query)], k: Int,
-                  /** expansion/positional queries that are not driver-served
-                    * only join the shared scans when at least this many
-                    * share one (below it, their per-query [[search]] plans
-                    * — the block-metadata top-k of an expansion, the sliced
-                    * positional plan of a phrase — beat an unpruned shared
-                    * scan, measured on the 60-query reference set); scored
-                    * term/boolean shapes always batch */
-                  minSharedScan: Int = 32): DataFrame = {
+    * The batch rewrites every query and looks up the statistics of all of
+    * their exact terms at once, then routes each query as [[search]] does: a
+    * flat term query, a small prefix / range / term-set expansion on a warm
+    * index, a positional query. On an index with resident blocks
+    * ([[InvertedIndex.residentBlocks]]) a route of one slice runs its kernel
+    * on the driver, one collector per query like the reference's
+    * `IndexSearcher` over a resident reader; those ranked rows form one local
+    * relation, and a batch of only such queries runs no job. Every other
+    * route joins ONE slice plan ([[slices]]) over the blocks of all of their
+    * terms: each slice runs every route's kernel over its own terms and
+    * keeps that query's top-k of the slice — the reference's per-slice
+    * collectors — and one window ranks each query's rows. Queries without a
+    * route, and every query on an index with pending tombstones, run their
+    * own [[search]], unioned in. */
+  def searchBatch(queries: Seq[(String, Query)], k: Int): DataFrame = {
+    val ids = queries.map(_._1)
+    require(ids.distinct.size == ids.size,
+      s"searchBatch: duplicate query ids ${ids.diff(ids.distinct).distinct.mkString(", ")}")
+    val rewritten = queries.map { case (id, q) => (id, QueryRewriter.rewrite(q)) }
+    lazy val stats = lookupStats(rewritten.iterator.flatMap(q => exactTerms(q._2)).toSet)
     val served = Vector.newBuilder[Row]
-    val rest = Vector.newBuilder[(String, Query)]
-    queries.foreach { case (qid, q) =>
-      driverTopK(QueryRewriter.rewrite(q), k) match {
-        case Some(hits) => hits.zipWithIndex.foreach { case ((d, sc), i) => served += Row(qid, d, sc, i + 1L) }
-        case None => rest += ((qid, q))
+    val planned = Vector.newBuilder[(String, Routed)]
+    val rest = Vector.newBuilder[DataFrame]
+    rewritten.foreach { case (id, q) =>
+      // the routes read postings directly and would count tombstoned docs
+      // toward k: on a tombstoned index every query takes search()'s plan
+      (if (tombstones.isDefined) None else route(q, stats, k)) match {
+        case Some(r) => onDriver(r) match {
+          case Some(hits) =>
+            SingleTask.topK(hits, k).zipWithIndex.foreach { case ((d, sc), i) => served += Row(id, d, sc, i + 1L) }
+          case None => if (r.dfs.nonEmpty) planned += ((id, r))
+        }
+        case None => rest += search(q, k).select(lit(id).as("queryId"), col("docId"), col("score"))
       }
     }
-    val rows = served.result()
-    val local = spark.createDataFrame(rows.asJava, BatchSchema)
-    sharedBatch(rest.result(), k, minSharedScan) match {
-      case Some(shared) if rows.nonEmpty => local.unionAll(shared)
-      case Some(shared) => shared
-      case None => local
+    val servedRows = served.result()
+    val local = spark.createDataFrame(servedRows.asJava, BatchSchema)
+    val routes = planned.result()
+    val others = (if (routes.isEmpty) Nil else Seq(slicedBatch(routes, k))) ++ rest.result()
+    if (others.isEmpty) local
+    else {
+      val w = Window.partitionBy("queryId").orderBy(desc("score"), asc("docId"))
+      val ranked = others.reduce(_ unionAll _)
+        .withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+        .select(col("queryId"), col("docId"), col("score"), col("rank").cast("long").as("rank"))
+      if (servedRows.isEmpty) ranked else local.unionAll(ranked)
     }
   }
 
-  /** [[searchBatch]]'s shared passes and per-query fallbacks over `queries`,
-    * or None when there are none. */
-  private def sharedBatch(queries: Seq[(String, Query)], k: Int, minSharedScan: Int): Option[DataFrame] = {
-    import org.apache.spark.sql.expressions.Window
-
-    // One plan row per flat term clause. kind: 0 = required (MUST/FILTER,
-    // FILTER carries boost 0 so it gates without scoring), 1 = optional
-    // (SHOULD / dismax member / constant-score expansion), 2 = MUST_NOT.
-    // Per-query constants ride on every row: nMust (#required clauses), msm
-    // (min optional matches), tie (>= 0 marks dismax combination).
-    final case class Plan(queryId: String, term: String, boost: Double,
-                          kind: Int, nMust: Int, msm: Int, tie: Double,
-                          const: Boolean)
-    val plans = Vector.newBuilder[Plan]
-    val expansions = Vector.newBuilder[(String, Query)]
-    val phrases = Vector.newBuilder[(String, Seq[String], Int)]
-    val fallback = Vector.newBuilder[(String, Query)]
-
-    // route one query into shared-scan plan rows; false → caller falls back
-    def route(qid: String, q: Query): Boolean = flatten(q) match {
-      case Some(f) =>
-        f.clauses.foreach(c => plans += Plan(qid, c.term, c.boost, c.kind, f.nMust, f.msm, f.tie, const = false))
-        true
-      case None => false
-    }
-    queries.foreach { case (qid, q0) =>
-      // pending deletes: the shared scans read postings directly and would
-      // return tombstoned docs — route through search(), which anti-joins
-      // liveDocs (the policy of every search() top-k plan under deletions)
-      if (tombstones.isDefined) fallback += ((qid, q0))
-      else QueryRewriter.rewrite(q0) match {
-        case e @ (_: PrefixQuery | _: TermRangeQuery | _: TermInSetQuery |
-                  _: FuzzyQuery | _: RegexpQuery) =>
-          expansions += ((qid, e))
-        case PhraseQuery(ts, slop) if ts.size >= 2 &&
-            (slop == 0 || ts.distinct.size == ts.size) =>
-          phrases += ((qid, ts, slop))
-        case other => if (!route(qid, other)) fallback += ((qid, other))
+  /** `(queryId, docId, score)`: each route's top-k per doc-range slice of
+    * ONE slice plan over the blocks of all of the routes' terms. Each slice
+    * groups its blocks by term once and runs every route's kernel over that
+    * route's terms. */
+  private def slicedBatch(routes: Seq[(String, Routed)], k: Int): DataFrame = {
+    val rs = routes.toArray
+    slices(routes.map(_._2.dfs).reduce(_ ++ _), (rows, lo, hi) => {
+      val byTerm = SingleTask.byTerm(rows)
+      rs.iterator.flatMap { case (id, r) =>
+        SingleTask.topK(r.over(t => byTerm.get(t).iterator.flatMap(_.iterator), lo, hi), k)
+          .map { case (d, sc) => (id, d, sc) }
       }
-    }
-    // Adaptive routing: below minSharedScan, expansion/positional queries
-    // run their per-query search() plans (faster — metadata skipping beats
-    // scan sharing at small counts); at volume they join the shared passes.
-    locally {
-      val exp = expansions.result()
-      if (exp.size < minSharedScan) { exp.foreach(fallback += _); expansions.clear() }
-    }
-    locally {
-      val ph = phrases.result()
-      if (ph.size < minSharedScan) {
-        ph.foreach { case (qid, ts, slop) => fallback += ((qid, PhraseQuery(ts, slop))) }
-        phrases.clear()
-      }
-    }
-    // Expansion queries: ONE dictionary scan evaluates every query's term
-    // predicate (array-of-structs + higher-order filter), yielding the
-    // (queryId, matched term) pairs — the batched IntersectTermsEnum. Each
-    // pair joins the same postings pass as the scored plans, scored
-    // constant (per doc, not per matched term). Queries whose expansion
-    // exceeds the broadcast-safe cap fall back to per-query search.
-    val expansionRows: Seq[Plan] = {
-      val exp = expansions.result()
-      if (exp.isEmpty) Nil
-      else {
-        val arr = array(exp.map { case (qid, q) =>
-          struct(lit(qid).as("qid"), expansionPred(q).as("m")) }: _*)
-        // cap IN-PLAN before the collect: a degenerate predicate (`/.*/`)
-        // must not pull the whole vocabulary's match rows into the driver —
-        // per-query row_number keeps ≤ cap+1 rows (the +1 marks over-cap
-        // queries for fallback), so the collect is bounded at
-        // queries × (cap+1) regardless of vocabulary size
-        val w = Window.partitionBy(col("qid")).orderBy(col("term"))
-        val matched = index.termStats
-          .select(col("term"),
-            explode(org.apache.spark.sql.functions.filter(arr, s => s.getField("m"))).as("x"))
-          .select(col("x.qid").as("qid"), col("term"))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= ExpansionCap + 1)
-          .select("qid", "term")
-          .collect().map(r => (r.getString(0), r.getString(1)))
-        val byQ = matched.groupBy(_._1)
-        val (ok, tooWide) = exp.partition { case (qid, _) =>
-          byQ.getOrElse(qid, Array.empty).length <= ExpansionCap }
-        tooWide.foreach(fallback += _)
-        val okIds = ok.map(_._1).toSet
-        matched.collect { case (qid, t) if okIds(qid) =>
-          Plan(qid, t, 1.0, 1, 0, 1, -1.0, const = true) }.toSeq
-      }
-    }
-    val planRows = plans.result() ++ expansionRows
-    val batched: Option[DataFrame] =
-      if (planRows.isEmpty) None
-      else {
-        val allTerms = planRows.map(_.term).distinct
-        val stats = lookupStats(allTerms.toSet)
-        val present = allTerms.filter(stats.contains)
-        // (term, docId, base score) — each term's postings decoded ONCE for
-        // the whole batch, boost applied after the broadcast fan-out. Terms
-        // wanted ONLY by constant-score queries take the docs-only decode
-        // (delta chain only; freqs/norms untouched — the expansion fast path)
-        val scorers = present.map(t => t -> termScorer(stats(t), 1.0)).toMap
-        // MUST_NOT and constant-score terms need doc ids only — skip the
-        // freq/norm decode unless some query scores the term
-        val sumTerms = planRows.iterator
-          .filter(p => !p.const && p.kind < 2).map(_.term).toSet
-        val termDoc = index.postings
-          .filter(col("term").isin(present: _*))
-          .select(col("term"), explode(col("blocks")).as("b"))
-          .as[(String, PostingBlock)]
-          .mapPartitions { it =>
-            it.flatMap { case (t, b) =>
-              if (sumTerms.contains(t)) {
-                val f = scorers(t)
-                val d = PostingsCodec.decodeBlock(b)
-                Iterator.tabulate(d.docs.length)(i => (t, d.docs(i), f(d.freqs(i), d.doclens(i))))
-              } else {
-                PostingsCodec.decodeDocIds(b).iterator.map(doc => (t, doc, 1.0))
-              }
-            }
-          }.toDF("term", "docId", "base")
-        val planDf = spark.createDataFrame(planRows.map(p =>
-          (p.queryId, p.term, p.boost, p.kind, p.nMust, p.msm, p.tie, p.const)))
-          .toDF("queryId", "term", "boost", "kind", "nMust", "msm", "tie", "const")
-        // One aggregation mirrors compileBoolean exactly: MUST_NOT and FILTER
-        // rows carry boost 0 so sumScore is untouched by them; the filter
-        // enforces (all required matched) ∧ (≥ msm optional matched) ∧ (no
-        // prohibited matched). A required term absent from the index leaves
-        // nReq < nMust forever — the query matches nothing, like sumJoin.
-        val perQueryDoc = termDoc
-          .join(broadcast(planDf), "term")
-          .groupBy(col("queryId"), col("docId"))
-          .agg(sum(col("base") * col("boost")).as("sumScore"),
-            max(col("base") * col("boost")).as("maxScore"),
-            sum(when(col("kind") === 0, 1).otherwise(0)).as("nReq"),
-            sum(when(col("kind") === 1, 1).otherwise(0)).as("nOpt"),
-            sum(when(col("kind") === 2, 1).otherwise(0)).as("nNot"),
-            first(col("nMust")).as("nMust"),
-            first(col("msm")).as("msm"),
-            first(col("tie")).as("tie"),
-            first(col("const")).as("const"),
-            first(col("boost")).as("boost0"))
-          .filter(col("nNot") === 0 && col("nReq") === col("nMust") &&
-            col("nOpt") >= col("msm"))
-          // constant-score (expansion) queries score the DOC, not the sum of
-          // its matched terms — exactly expansionTopK's contract; dismax
-          // (tie ≥ 0) combines as max + tie·(sum − max), like compile()
-          .withColumn("score",
-            when(col("const"), col("boost0"))
-              .when(col("tie") >= 0,
-                col("maxScore") + col("tie") * (col("sumScore") - col("maxScore")))
-              .otherwise(col("sumScore")))
-        Some(perQueryDoc.select(col("queryId"), col("docId"), col("score")))
-      }
-    // Positional queries batch through their own single scan: every phrase
-    // term's positions decoded ONCE, slot plan fanned out by broadcast join,
-    // per-(query, doc) freq = the same exact/sloppy enumeration the
-    // per-query path uses. Queries with an absent term yield no rows, like
-    // phraseRoute's empty route.
-    val phraseScored: Option[DataFrame] = {
-      val ps = phrases.result()
-      if (ps.isEmpty) None
-      else {
-        val pstats = lookupStats(ps.flatMap(_._2).toSet)
-        val live = ps.filter(_._2.forall(pstats.contains))
-        if (live.isEmpty) None
-        else {
-          val meta: Map[String, (Int, Int, (Double, Int) => Double)] =
-            live.map { case (qid, ts, slop) =>
-              qid -> ((slop, ts.size, phraseScorer(ts.map(pstats), 1.0)))
-            }.toMap
-          val slotRows = live.flatMap { case (qid, ts, _) =>
-            ts.zipWithIndex.map { case (t, slot) => (qid, t, slot) } }
-          val pterms = slotRows.map(_._2).distinct
-          val posRows = index.postings
-            .filter(col("term").isin(pterms: _*))
-            .select(col("term"), explode(col("blocks")).as("b"))
-            .as[(String, PostingBlock)]
-            .mapPartitions { it =>
-              it.flatMap { case (t, b) =>
-                val d = PostingsCodec.decodeBlock(b, withPositions = true)
-                Iterator.tabulate(d.docs.length)(i =>
-                  (t, d.docs(i), d.doclens(i), d.positions(i).toSeq))
-              }
-            }.toDF("term", "docId", "doclen", "positions")
-          val slotDf = spark.createDataFrame(slotRows).toDF("queryId", "term", "slot")
-          val nSlotsDf = spark.createDataFrame(
-            live.map { case (qid, ts, _) => (qid, ts.size) }).toDF("queryId", "nSlots")
-          val bcMeta = spark.sparkContext.broadcast(meta)
-          val scoreUdf = udf((qid: String, plists: Seq[org.apache.spark.sql.Row], dl: Int) => {
-            val (slop, nSlots, scorer) = bcMeta.value(qid)
-            val arrays = plists.sortBy(_.getInt(0)).map(_.getSeq[Int](1).toArray).toArray
-            // Catalyst may reorder this UDF before the cnt==nSlots filter
-            // (UDFs are assumed deterministic & cheap): bail on partial rows
-            if (arrays.length != nSlots) -1.0
-            else {
-            val freq = PhraseSegment.phraseFreq(arrays, slop)
-            if (freq > 0) scorer(freq, dl) else -1.0
-            }
-          })
-          Some(posRows.join(broadcast(slotDf), "term")
-            .groupBy(col("queryId"), col("docId"))
-            .agg(first(col("doclen")).as("doclen"),
-              org.apache.spark.sql.functions.count(lit(1)).as("cnt"),
-              collect_list(struct(col("slot"), col("positions"))).as("plists"))
-            .join(broadcast(nSlotsDf), "queryId")
-            .filter(col("cnt") === col("nSlots"))
-            .select(col("queryId"), col("docId"),
-              scoreUdf(col("queryId"), col("plists"), col("doclen")).as("score"))
-            .filter(col("score") > -0.5))
-        }
-      }
-    }
-    val batchScored = (batched.toSeq ++ phraseScored.toSeq).reduceOption(_ unionAll _)
-      .map { scoredAll =>
-        val w = Window.partitionBy("queryId").orderBy(desc("score"), asc("docId"))
-        scoredAll.withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= k)
-          .select(col("queryId"), col("docId"), col("score"), col("rank").cast("long").as("rank"))
-      }
-    // conjunctions whose terms are absent: requireAll + missing stats yields
-    // no rows, matching search(); fallback shapes run individually
-    val fallbackDf = fallback.result().map { case (qid, q) =>
-      val w = Window.partitionBy("queryId").orderBy(desc("score"), asc("docId"))
-      search(q, k).withColumn("queryId", lit(qid))
-        .withColumn("rank", row_number().over(w))
-        .select(col("queryId"), col("docId"), col("score"), col("rank").cast("long").as("rank"))
-    }
-    (batchScored.toSeq ++ fallbackDf).reduceOption(_ unionAll _)
+    }).toDF("queryId", "docId", "score")
   }
 
   /** Keyset pagination: top-k strictly after a previous (score, docId) anchor

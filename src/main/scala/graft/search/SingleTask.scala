@@ -5,15 +5,13 @@ import scala.collection.mutable
 
 /** One flat term clause of a query (see [[Searcher]]'s flattening).
   * `kind`: 0 = required (MUST, or FILTER with boost 0 so it gates without
-  * scoring), 1 = optional (SHOULD, dismax member), 2 = prohibited
-  * (MUST_NOT). */
+  * scoring), 1 = optional (SHOULD), 2 = prohibited (MUST_NOT). */
 final case class FlatClause(term: String, boost: Double, kind: Int)
 
 /** A query flattened to term clauses under `compileBoolean`'s match rule: a
   * doc matches when it carries all `nMust` required clauses, at least `msm`
-  * optional ones and no prohibited one. `tie >= 0` marks a dismax, whose
-  * score is `max + tie·(sum − max)` instead of the sum. */
-final case class FlatQuery(clauses: Seq[FlatClause], nMust: Int, msm: Int, tie: Double)
+  * optional ones and no prohibited one; its score is the sum. */
+final case class FlatQuery(clauses: Seq[FlatClause], nMust: Int, msm: Int)
 
 /** Top-k kernels: each consumes one query's posting blocks in one task or
   * on the driver — all of them, or one doc-range slice's — the reference's
@@ -191,8 +189,7 @@ object Positional {
   }
 }
 
-/** Phrase frequency, shared by [[Searcher]]'s positional plan and its
-  * batched phrase pass. */
+/** Phrase frequency of [[Searcher]]'s phrase and multi-phrase kernels. */
 object PhraseSegment {
 
   /** One doc's phrase frequency from its per-term sorted positions (in

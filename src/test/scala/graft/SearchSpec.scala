@@ -232,21 +232,16 @@ class SearcherSpec extends AnyFunSuite {
         Seq(TermQuery("vector"), BoostQuery(TermQuery("stream"), 2f)), tieBreaker = 0f),
       "mustnot_absent" -> BooleanQuery(Seq(
         Occur.MUST -> TermQuery("data"), Occur.MUST_NOT -> TermQuery("zzznothere"))))
-    // both routings: shared-scan forced (minSharedScan=0) and the default
-    // adaptive routing (small counts -> per-query pruned paths)
-    Seq(0, 32).foreach { minShared =>
-      val got = searcher().searchBatch(qs, 10, minSharedScan = minShared).collect()
-        .map(r => (r.getString(0), r.getLong(3)) -> (r.getLong(1), r.getDouble(2))).toMap
-      qs.foreach { case (qid, q) =>
-        val want = searcher().search(q, 10).collect()
-          .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-        val gotQ = (1 to want.size).map(rank => got((qid, rank.toLong)))
-        assert(gotQ.map(_._1) == want.map(_._1), s"$qid doc ids (minShared=$minShared)")
-        gotQ.zip(want).foreach { case ((_, sa), (_, sb)) =>
-          assert(math.abs(sa - sb) < 1e-9, s"$qid scores (minShared=$minShared)") }
-        assert(!got.keys.exists(k => k._1 == qid && k._2 > want.size),
-          s"$qid extra rows (minShared=$minShared)")
-      }
+    val got = searcher().searchBatch(qs, 10).collect()
+      .map(r => (r.getString(0), r.getLong(3)) -> (r.getLong(1), r.getDouble(2))).toMap
+    qs.foreach { case (qid, q) =>
+      val want = searcher().search(q, 10).collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      val gotQ = (1 to want.size).map(rank => got((qid, rank.toLong)))
+      assert(gotQ.map(_._1) == want.map(_._1), s"$qid doc ids")
+      gotQ.zip(want).foreach { case ((_, sa), (_, sb)) =>
+        assert(math.abs(sa - sb) < 1e-9, s"$qid scores") }
+      assert(!got.keys.exists(k => k._1 == qid && k._2 > want.size), s"$qid extra rows")
     }
   }
 

@@ -3,7 +3,7 @@ package graft
 import graft.core._
 import graft.index._
 import graft.search._
-import org.apache.spark.JobExecutionStatus
+import org.apache.spark.{JobExecutionStatus, SparkJobInfo}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LocalTableScanExec
@@ -160,6 +160,21 @@ class WarmServingSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** (jobs run while `construct` builds the frame, jobs run by its
     * `collect`, stages of those jobs). */
   private def jobProfile(construct: => DataFrame): (Int, Int, Int) = {
+    val (built, executed) = jobsOf(construct)
+    (built.size, executed.size, executed.map(_.stageIds.length).sum)
+  }
+
+  /** (jobs, stages, tasks) run by collecting `df`. */
+  private def collectWork(df: => DataFrame): (Int, Int, Int) = {
+    val executed = jobsOf(df)._2
+    val stages = executed.flatMap(_.stageIds)
+    (executed.size, stages.size,
+      stages.flatMap(spark.sparkContext.statusTracker.getStageInfo(_)).map(_.numTasks).sum)
+  }
+
+  /** (jobs run while `construct` builds the frame, jobs run by its
+    * `collect`). */
+  private def jobsOf(construct: => DataFrame): (Seq[SparkJobInfo], Seq[SparkJobInfo]) = {
     val sc = spark.sparkContext
     val tag = s"warm-serving-${System.nanoTime()}"
     sc.setJobGroup(s"$tag-construct", "construct")
@@ -176,8 +191,7 @@ class WarmServingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val deadline = System.nanoTime() + 10000000000L
     while (!jobs("marker").exists(_.status == JobExecutionStatus.SUCCEEDED) && System.nanoTime() < deadline)
       Thread.sleep(20)
-    val executed = jobs("execute")
-    (jobs("construct").length, executed.size, executed.map(_.stageIds.length).sum)
+    (jobs("construct"), jobs("execute"))
   }
 
   /** Tasks that read shuffled rows while `df` is collected. */
@@ -246,7 +260,7 @@ class WarmServingSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("a mixed batch unions the driver-served rows with the shared pass") {
+  test("a mixed batch unions the driver-served rows with the batched slice plan") {
     val dismax = DisjunctionMaxQuery(Seq(TermQuery("w1"), TermQuery("w2"), TermQuery("w5")), 0.3f)
     val disjunction = BooleanQuery.should(Fillers.map(TermQuery): _*)
     // an interval source with a prefix leaf expands with a dictionary job, so
@@ -259,7 +273,7 @@ class WarmServingSpec extends AnyFunSuite with BeforeAndAfterAll {
     Seq(baseDir, mergedDir).foreach { dir =>
       val w = new Searcher(warm(dir), ScoringMode.PreciseBM25())
       val batch = w.searchBatch(mixed, 10)
-      assert(!routed(batch), s"$dir: the dismax and the fillers take the shared pass")
+      assert(!routed(batch), s"$dir: the fillers take the slice plan, the dismax its own search")
       val got = byQuery(batch)
       mixed.foreach { case (id, q) =>
         assertSameTopK(s"$dir mixed batch: $q", got.getOrElse(id, Nil), rows(c.search(q, 10)))
@@ -278,6 +292,35 @@ class WarmServingSpec extends AnyFunSuite with BeforeAndAfterAll {
       batchQueries.foreach { case (id, q) =>
         assertSameTopK(s"$dir over budget batch: $q", got.getOrElse(id, Nil), rows(c.search(q, 20)))
       }
+    }
+  }
+
+  test("a batch on an over-budget index runs as many jobs, stages and tasks as a batch of 2 of its queries") {
+    Seq(baseDir, mergedDir).foreach { dir =>
+      val w = new Searcher(warmOverBudget(dir), ScoringMode.PreciseBM25())
+      val all = collectWork(w.searchBatch(batchQueries, 20))
+      val two = collectWork(w.searchBatch(batchQueries.take(2), 20))
+      assert(all == two, s"$dir: ${batchQueries.size} queries $all, 2 queries $two (jobs, stages, tasks)")
+    }
+  }
+
+  test("building a cold batch of flat and positional queries runs one job: the statistics lookup") {
+    val flatAndPositional = batchQueries.filter(_._2 match {
+      case _: PrefixQuery | _: TermRangeQuery | _: TermInSetQuery => false
+      case _ => true
+    })
+    Seq(baseDir, mergedDir).foreach { dir =>
+      val c = cold(dir)
+      // open the reader's views first: their parquet schema reads are jobs
+      Seq(c.index.postings, c.index.termStats).foreach(_.schema)
+      assert(jobProfile(c.searchBatch(flatAndPositional, 20))._1 == 1, dir)
+    }
+  }
+
+  test("searchBatch rejects duplicate query ids on a resident reader and on a cold one") {
+    val dup = Seq("a" -> TermQuery("w0"), "b" -> PhraseQuery(Seq("w0", "w1")), "a" -> TermQuery("w1"))
+    Seq(new Searcher(warm(mergedDir), ScoringMode.PreciseBM25()), cold(mergedDir)).foreach { s =>
+      intercept[IllegalArgumentException](s.searchBatch(dup, 10))
     }
   }
 
