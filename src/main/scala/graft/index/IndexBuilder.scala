@@ -2,8 +2,9 @@ package graft.index
 
 import graft.core._
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import scala.collection.mutable
 
@@ -108,7 +109,7 @@ object IndexBuilder {
 
     val completedPartitions: Set[Int] =
       if (resume && new java.io.File(s"$dir/data").exists()) {
-        spark.read.parquet(s"$dir/data").filter($"kind" === 2)
+        readData(spark, dir).filter($"kind" === 2)
           .select($"partitionId").distinct().as[Int].collect().toSet
       } else Set.empty
 
@@ -284,7 +285,7 @@ object IndexBuilder {
     * its postings. */
   def refreshStats(spark: SparkSession, dir: String, version: Int = 0): Unit = {
     import spark.implicits._
-    val data = spark.read.parquet(s"$dir/data")
+    val data = readData(spark, dir)
     termStatsFrame(data)
       .write.mode("overwrite").parquet(statsPath(dir, "term_stats", version))
     data.filter($"kind" === 2)
@@ -298,7 +299,7 @@ object IndexBuilder {
   private[graft] def refreshStatsFromDocs(spark: SparkSession, dir: String,
                                           version: Int = 0): Unit = {
     import spark.implicits._
-    val data = spark.read.parquet(s"$dir/data")
+    val data = readData(spark, dir)
     termStatsFrame(data)
       .write.mode("overwrite").parquet(statsPath(dir, "term_stats", version))
     data.filter($"kind" === 0)
@@ -314,6 +315,20 @@ object IndexBuilder {
     * a child dir would confuse unversioned parquet directory scans. */
   private[graft] def statsPath(dir: String, table: String, version: Int): String =
     if (version <= 0) s"$dir/$table" else s"$dir/${table}_v$version"
+
+  /** The `data` table's schema: the [[StageRow]] columns plus the `batchNs`
+    * namespace partition column. */
+  private val DataSchema: StructType = Encoders.product[StageRow].schema.add("batchNs", LongType)
+
+  /** Readers of the engine's own tables with the schemas it writes them
+    * with, so no read runs Spark's one-task parquet schema-inference job.
+    * Columns the files hold beyond the schema are not read. */
+  private[graft] def readData(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema(DataSchema).parquet(s"$dir/data")
+  private[graft] def readTermStats(spark: SparkSession, dir: String, version: Int): DataFrame =
+    spark.read.schema("term STRING, df BIGINT, ttf BIGINT").parquet(statsPath(dir, "term_stats", version))
+  private[graft] def readStats(spark: SparkSession, dir: String, version: Int): DataFrame =
+    spark.read.schema("docCount BIGINT, sumTotalTermFreq BIGINT").parquet(statsPath(dir, "stats", version))
 
   /** Per-partition segment accumulator (the DWPT analog). Streams input docs,
     * flushes a segment whenever the doc budget is reached, and emits one
@@ -554,7 +569,7 @@ final class InvertedIndex private (
   // closures; DataFrames must not) — one instance per view means a caller's
   // `.cache()` (see [[warm]]) applies to every subsequent query.
   @transient private lazy val data: DataFrame = {
-    val all = spark.read.parquet(s"$dir/data")
+    val all = IndexBuilder.readData(spark, dir)
     snapshot.filter(_.namespaces.nonEmpty) match {
       // partition pruning on the batchNs directory column — invisible
       // namespaces are never listed, let alone scanned
@@ -588,9 +603,7 @@ final class InvertedIndex private (
     * same: only these three are read. */
   @transient lazy val termStats: DataFrame = parent match {
     case Some(p) => p.termStats
-    case None => spark.read.parquet(
-      IndexBuilder.statsPath(dir, "term_stats", snapshot.map(_.version).getOrElse(0)))
-      .select("term", "df", "ttf")
+    case None => IndexBuilder.readTermStats(spark, dir, snapshot.map(_.version).getOrElse(0))
   }
 
   /** Tombstoned doc ids (`docId` column) pending physical purge, or None.
@@ -719,8 +732,7 @@ object InvertedIndex {
       Analyzers.byName(java.nio.file.Files.readString(
         java.nio.file.Paths.get(s"$dir/analyzer")).trim))
     val stats = parent.map(_.collectionStats).getOrElse {
-      val statsRow = spark.read.parquet(
-        IndexBuilder.statsPath(dir, "stats", snapshot.map(_.version).getOrElse(0))).collect()(0)
+      val statsRow = IndexBuilder.readStats(spark, dir, snapshot.map(_.version).getOrElse(0)).collect()(0)
       CollectionStats(statsRow.getLong(0), statsRow.getLong(1))
     }
     new InvertedIndex(spark, dir, analyzer, stats, parent, snapshot)

@@ -4,7 +4,9 @@ import graft.core._
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.CollectionAccumulator
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Streams consecutive equal-key runs of a (key-sorted) row iterator as
   * (key, rows-of-run) — the bounded-memory reduce-group iterator. */
@@ -84,6 +86,26 @@ object SegmentMerger {
         StageRow.postings(segmentId, term, salt * 100000 + gi, df, ttf, grp)
     }
 
+  /** The merged rows of reduce partition `pid`, adding its lineage
+    * `(pid, rows, blocks, postings)` to `lineage` once they are exhausted
+    * (partitions that write no row add none). */
+  private def counted(pid: Int, rows: Iterator[StageRow],
+      lineage: CollectionAccumulator[(Int, Long, Long, Long)]): Iterator[StageRow] =
+    new Iterator[StageRow] {
+      private var n, blocks, postings = 0L
+      private var added = false
+      override def hasNext: Boolean = rows.hasNext || {
+        if (!added && n > 0) lineage.add((pid, n, blocks, postings))
+        added = true
+        false
+      }
+      override def next(): StageRow = {
+        val r = rows.next()
+        n += 1; blocks += r.nblocks; postings += r.df
+        r
+      }
+    }
+
   /** Merge `index` into compacted segments at `targetDir`. Returns the opened
     * merged index plus driver-side metrics; per-output-partition lineage
     * (merge round, rows/blocks/postings written) lands in
@@ -128,6 +150,10 @@ object SegmentMerger {
     val saltedTerms =
       if (computeMetrics) headFrame.count().toInt else -1
     val mergedSegBase = 1000000000L * mergeRound
+    // Per-output-partition lineage, counted by the reduce tasks as they
+    // write: the write's result stage applies each partition's update once,
+    // so task retries do not double-count.
+    val lineage = spark.sparkContext.collectionAccumulator[(Int, Long, Long, Long)]("merge lineage")
 
     // (4) per-group decode → merge-sort by doc → re-encode dense blocks.
     //
@@ -160,7 +186,7 @@ object SegmentMerger {
           .mapPartitions { rows =>
             val pid = TaskContext.getPartitionId()
             val grouped = new GroupedIterator(rows)
-            grouped.flatMap { case ((term, salt), rowBlocks) =>
+            counted(pid, grouped.flatMap { case ((term, salt), rowBlocks) =>
               val decoded = rowBlocks.iterator.flatten.map { b =>
                 PostingsCodec.decodeBlock(b, withPositions = b.positions.nonEmpty)
               }.toVector
@@ -188,7 +214,7 @@ object SegmentMerger {
                   if (hasPos) order.map(pos) else null)
                 encodedRows(mergedSegBase + pid, term, salt, blocks)
               }
-            }
+            }, lineage)
           }
       } else {
         // purge-merge (forceMergeDeletes): postings are decoded MAP-SIDE to
@@ -225,7 +251,7 @@ object SegmentMerger {
           .mapPartitions { rows =>
             val pid = TaskContext.getPartitionId()
             val it = rows.buffered
-            new Iterator[Iterator[StageRow]] {
+            counted(pid, new Iterator[Iterator[StageRow]] {
               override def hasNext: Boolean = it.hasNext
               override def next(): Iterator[StageRow] = {
                 val (term, salt, _, _, _, _) = it.head
@@ -246,7 +272,7 @@ object SegmentMerger {
                   Array.tabulate(n)(dls(_)), if (hasPos) pos.toArray else null)
                 encodedRows(mergedSegBase + pid, term, salt, blocks)
               }
-            }.flatten
+            }.flatten, lineage)
           }
       }
 
@@ -265,7 +291,7 @@ object SegmentMerger {
       val owner = docsOwner(index)
       val delDf = index.deletedDocs.get.select(col("docId").as("delId")).distinct()
       val ownerDocs = {
-        val all = spark.read.parquet(s"${owner.dir}/data").filter(col("kind") === 0)
+        val all = IndexBuilder.readData(spark, owner.dir).filter(col("kind") === 0)
         // pin to the SOURCE reader's committed namespaces: an uncommitted
         // batchNs partition (crashed/in-flight micro-batch before
         // commitAppend) or a post-open commit must not resurrect into the
@@ -306,19 +332,10 @@ object SegmentMerger {
 
     val out = InvertedIndex.open(spark, targetDir)
 
-    // Per-output-partition merge lineage, derived from the committed data so
-    // it never double-counts on task retries.
-    out.postings.filter(col("segmentId") >= mergedSegBase)
-      .groupBy(col("segmentId"))
-      .agg(
-        lit(mergeRound).as("mergeRound"),
-        (col("segmentId") - mergedSegBase).cast("int").as("partitionId"),
-        count(lit(1)).as("rowsOut"),
-        // nblocks is a scalar column: this lineage aggregation column-prunes
-        // to integers and never re-reads the merged postings payload
-        sum(col("nblocks")).as("blocksOut"),
-        sum(col("df")).as("postings"))
-      .drop("segmentId")
+    lineage.value.asScala.toSeq.sortBy(_._1)
+      .map { case (pid, rows, blocks, postings) => (mergeRound, pid, rows, blocks, postings) }
+      .toDF("mergeRound", "partitionId", "rowsOut", "blocksOut", "postings")
+      .coalesce(1) // one file: a local relation writes one per task
       .write.mode("append").parquet(s"$targetDir/merge_manifest")
 
     val rowsOut = if (computeMetrics) out.postings.count() else -1L

@@ -154,8 +154,10 @@ private[search] final case class Routed(dfs: Map[String, Long],
   * slice merged by `TopDocs.merge`
   * (`lucene/core/src/java/org/apache/lucene/search/IndexSearcher.java:106`):
   * the query's `(term, block)` rows are cut into R doc-range slices, each
-  * slice is scored by one [[SingleTask.flatTopK]] kernel that keeps only its
-  * own docs, and one TakeOrdered merges the slices. R grows with the
+  * slice is scored by one [[SingleTask.flatTopK]] kernel — a doc-at-a-time
+  * merge of per-clause cursors over its own docs into one bounded heap, the
+  * reference's `DisjunctionSumScorer` feeding a `TopScoreDocCollector` —
+  * and one TakeOrdered merges the slices. R grows with the
   * query's postings (Σdf) up to the default parallelism; slice s runs in
   * reduce task s. A [[InvertedIndex.warm]]ed index always takes the plan.
   * A cold index takes it above `pruneThreshold` postings, after its one

@@ -14,9 +14,18 @@ final case class FlatClause(term: String, boost: Double, kind: Int)
 final case class FlatQuery(clauses: Seq[FlatClause], nMust: Int, msm: Int)
 
 /** Top-k kernels: each consumes one query's posting blocks in one task or
-  * on the driver — all of them, or one doc-range slice's — the reference's
-  * one thread, one collector loop (`IndexSearcher.search` →
-  * `TopScoreDocCollector`) — and emits at most k rows. */
+  * on the driver — all of them, or one doc-range slice's — and emits at
+  * most k rows, the reference's one thread, one collector loop
+  * (`IndexSearcher.search` → `TopScoreDocCollector`).
+  *
+  * [[flatTopK]] is doc-at-a-time, like the reference's `BooleanWeight`
+  * scorers in one leaf: one cursor per clause over the clause's decoded
+  * postings (`DisjunctionSumScorer` over a `DisiPriorityQueue`, or a
+  * `ConjunctionDISI` led by the rarest required clause), the clauses on the
+  * current doc summed in clause order, and the doc offered to one bounded
+  * heap of primitive arrays that only replaces its worst entry
+  * (`TopScoreDocCollector` / `HitQueue`). [[topK]] ranks any other hit
+  * stream with the same heap. */
 object SingleTask {
 
   /** Group `(term, block)` rows by term. */
@@ -28,78 +37,45 @@ object SingleTask {
   }
 
   /** The k best `(docId, score)` by score desc, docId asc, emitted in that
-    * order (bounded heap, worst on top). */
+    * order. */
   def topK(hits: Iterator[(Long, Double)], k: Int): Iterator[(Long, Double)] = {
     if (k <= 0) return Iterator.empty
-    val heap = new java.util.PriorityQueue[(Double, Long)](k, (a: (Double, Long), b: (Double, Long)) =>
-      if (a._1 != b._1) java.lang.Double.compare(a._1, b._1) else java.lang.Long.compare(b._2, a._2))
-    hits.foreach { case (doc, score) =>
-      if (heap.size < k) heap.add((score, doc))
-      else {
-        val worst = heap.peek()
-        if (score > worst._1 || (score == worst._1 && doc < worst._2)) {
-          heap.poll(); heap.add((score, doc))
-        }
-      }
-    }
-    val out = new Array[(Long, Double)](heap.size)
-    var i = out.length - 1
-    while (i >= 0) { val e = heap.poll(); out(i) = (e._2, e._1); i -= 1 }
-    out.iterator
+    val heap = new TopHeap(k)
+    hits.foreach(h => heap.offer(h._1, h._2))
+    heap.drain()
   }
 
-  /** Flat term boolean top-k by per-doc accumulation over the docs in
-    * `[lo, hi]` (one doc-range slice; postings outside it are skipped).
-    * `scorers(c)` scores clause c (null: the clause only gates — MUST_NOT,
-    * FILTER). Each term's blocks decode once whatever its clause count;
-    * doc-ids-only when no clause scores the term. */
+  /** Flat term boolean top-k over the docs in `[lo, hi]` (one doc-range
+    * slice; postings outside it are skipped, blocks wholly outside it are
+    * not decoded). `scorers(c)` scores clause c (null: the clause only
+    * gates — MUST_NOT, FILTER). A term lists each doc at most once.
+    *
+    * Each term's blocks decode once, in `firstDoc` order, into primitive
+    * doc / freq / doc-length arrays (doc ids only when no clause scores the
+    * term), sorted by doc only when the blocks overlap (salted merge rows).
+    * Clauses on one term share its arrays and its cursor. The cursors visit
+    * the candidate docs in ascending order: every doc of a required or
+    * optional clause, or — when every required clause must match — only
+    * the docs the rarest required term leads the others to. On each doc the
+    * clauses are counted and their scores summed in clause order, so a
+    * doc's score is the same floating-point sum however the postings
+    * arrive; the doc matches with all `nMust` required clauses, at least
+    * `msm` optional ones and no prohibited one, and is offered to the
+    * bounded heap. Rows of terms no clause names are ignored. */
   def flatTopK(rows: Iterator[(String, PostingBlock)], clauses: Array[FlatClause],
       scorers: Array[(Int, Int) => Double], nMust: Int, msm: Int, k: Int,
       lo: Long = Long.MinValue, hi: Long = Long.MaxValue): Iterator[(Long, Double)] = {
+    if (k <= 0) return Iterator.empty
     val blocks = byTerm(rows)
-    final class Decoded(val docs: Array[Long], val freqs: Array[Int], val doclens: Array[Int])
-    val decoded = blocks.map { case (t, bs) =>
+    val terms = clauses.iterator.map(_.term).filter(blocks.contains).toArray.distinct
+    val lists = terms.map { t =>
       val scored = clauses.indices.exists(c => clauses(c).term == t && scorers(c) != null)
-      if (!scored) t -> new Decoded(bs.iterator.flatMap(b => PostingsCodec.decodeDocIds(b)).toArray, null, null)
-      else {
-        val ds = bs.map(b => PostingsCodec.decodeBlock(b))
-        t -> new Decoded(ds.iterator.flatMap(_.docs).toArray,
-          ds.iterator.flatMap(_.freqs).toArray, ds.iterator.flatMap(_.doclens).toArray)
-      }
+      PostingList.decode(blocks(t), scored, lo, hi)
     }
-    // the slice's doc universe, sorted and distinct: one slot per candidate doc
-    val all = new LongBuf(decoded.valuesIterator.map(_.docs.length).sum + 1)
-    decoded.valuesIterator.foreach(_.docs.foreach(d => if (d >= lo && d <= hi) all.add(d)))
-    val sorted = all.toArray
-    java.util.Arrays.sort(sorted)
-    var n = 0
-    var i = 0
-    while (i < sorted.length) {
-      if (n == 0 || sorted(n - 1) != sorted(i)) { sorted(n) = sorted(i); n += 1 }
-      i += 1
-    }
-    val score = new Array[Double](n)
-    val nReq = new Array[Int](n)
-    val nOpt = new Array[Int](n)
-    val nNot = new Array[Int](n)
-    clauses.indices.foreach { c =>
-      decoded.get(clauses(c).term).foreach { d =>
-        val f = scorers(c)
-        val counts = clauses(c).kind match { case 0 => nReq; case 1 => nOpt; case _ => nNot }
-        var j = 0
-        while (j < d.docs.length) {
-          val slot = java.util.Arrays.binarySearch(sorted, 0, n, d.docs(j))
-          if (slot >= 0) {
-            counts(slot) += 1
-            if (f != null) score(slot) += f(d.freqs(j), d.doclens(j))
-          }
-          j += 1
-        }
-      }
-    }
-    topK(Iterator.range(0, n)
-      .filter(s => nNot(s) == 0 && nReq(s) == nMust && nOpt(s) >= msm)
-      .map(s => (sorted(s), score(s))), k)
+    val heap = new TopHeap(k)
+    new ClauseMerge(clauses, scorers, clauses.map(c => terms.indexOf(c.term)), lists,
+      nMust, msm).run(heap)
+    heap.drain()
   }
 
   /** The k smallest distinct doc ids of the blocks in `[lo, hi]` — a
@@ -111,6 +87,235 @@ object SingleTask {
     val docs = all.toArray
     java.util.Arrays.sort(docs)
     docs.iterator.distinct.take(math.max(k, 0))
+  }
+
+  /** One term's postings in `[lo, hi]`, ascending by doc; `freqs` and
+    * `doclens` are null when the term was decoded doc ids only. */
+  private final class PostingList(val docs: Array[Long], val freqs: Array[Int],
+      val doclens: Array[Int], val n: Int)
+
+  private object PostingList {
+    def decode(bs: Iterable[PostingBlock], scored: Boolean, lo: Long, hi: Long): PostingList = {
+      val inRange = bs.iterator.filter(b => b.lastDoc >= lo && b.firstDoc <= hi).toArray
+      java.util.Arrays.sort(inRange, (a: PostingBlock, b: PostingBlock) =>
+        java.lang.Long.compare(a.firstDoc, b.firstDoc))
+      val cap = inRange.iterator.map(_.count).sum
+      var docs = new Array[Long](cap)
+      var freqs = if (scored) new Array[Int](cap) else null
+      var doclens = if (scored) new Array[Int](cap) else null
+      var n = 0
+      var sorted = true
+      inRange.foreach { b =>
+        val d = if (scored) PostingsCodec.decodeBlock(b) else null
+        val ds = if (scored) d.docs else PostingsCodec.decodeDocIds(b)
+        var i = 0
+        while (i < ds.length) {
+          val doc = ds(i)
+          if (doc >= lo && doc <= hi) {
+            if (n > 0 && doc < docs(n - 1)) sorted = false
+            docs(n) = doc
+            if (scored) { freqs(n) = d.freqs(i); doclens(n) = d.doclens(i) }
+            n += 1
+          }
+          i += 1
+        }
+      }
+      if (!sorted) {
+        // overlapping blocks (salted merge rows): a rare path, boxed sort
+        val order = Array.range(0, n).sortBy(i => docs(i))
+        docs = order.map(docs)
+        if (scored) { freqs = order.map(freqs); doclens = order.map(doclens) }
+      }
+      new PostingList(docs, freqs, doclens, n)
+    }
+  }
+
+  /** The doc-at-a-time merge of one flat query's clause cursors (see
+    * [[flatTopK]]). `termOf(c)` is clause c's index into `lists`, -1 when
+    * the slice holds no posting block of its term; `pos(t)` is term t's
+    * cursor. */
+  private final class ClauseMerge(clauses: Array[FlatClause],
+      scorers: Array[(Int, Int) => Double], termOf: Array[Int],
+      lists: Array[PostingList], nMust: Int, msm: Int) {
+    private val nTerms = lists.length
+    private val pos = new Array[Int](nTerms)
+    private val kinds = clauses.map(_.kind)
+
+    private def termsOf(kind: Int => Boolean): Array[Int] =
+      (0 until nTerms).filter(t => termOf.indices.exists(c => termOf(c) == t && kind(kinds(c)))).toArray
+
+    def run(heap: TopHeap): Unit = {
+      // a doc on no required or optional clause's term carries only
+      // prohibited clauses and cannot match: those terms drive the merge
+      val drivers = termsOf(_ != 2)
+      if (nMust > 0 && nMust == kinds.count(_ == 0)) {
+        // every required clause must be on the doc
+        if (termOf.indices.exists(c => kinds(c) == 0 && termOf(c) < 0)) return
+        val required = termsOf(_ == 0)
+        val lead = required.minBy(lists(_).n)
+        leapfrog(lead, required.filter(_ != lead), heap)
+      } else if (drivers.length == 1) leapfrog(drivers(0), Array.empty, heap)
+      else disjunction(drivers, heap)
+    }
+
+    /** First index at or after `pos(t)` whose doc is ≥ `target`
+      * (galloping, then binary search). */
+    private def advance(t: Int, target: Long): Int = {
+      val l = lists(t)
+      var from = pos(t)
+      if (from >= l.n || l.docs(from) >= target) return from
+      var step = 1
+      var to = from + 1
+      while (to < l.n && l.docs(to) < target) { from = to; step <<= 1; to = from + step }
+      val i = java.util.Arrays.binarySearch(l.docs, from + 1, math.min(to, l.n), target)
+      if (i >= 0) i else -i - 1
+    }
+
+    /** Moves the cursors of `ts` to `doc` or past it. */
+    private def follow(ts: Array[Int], doc: Long): Unit = {
+      var i = 0
+      while (i < ts.length) { pos(ts(i)) = advance(ts(i), doc); i += 1 }
+    }
+
+    /** Every doc of `drivers`, in ascending order (`DisjunctionSumScorer`);
+      * the other terms follow. */
+    private def disjunction(drivers: Array[Int], heap: TopHeap): Unit = {
+      val followers = (0 until nTerms).filterNot(drivers.contains).toArray
+      var more = true
+      while (more) {
+        var doc = 0L
+        more = false
+        var i = 0
+        while (i < drivers.length) {
+          val l = lists(drivers(i))
+          val p = pos(drivers(i))
+          if (p < l.n && (!more || l.docs(p) < doc)) { doc = l.docs(p); more = true }
+          i += 1
+        }
+        if (more) {
+          follow(followers, doc)
+          collect(doc, heap)
+          i = 0
+          while (i < drivers.length) {
+            val t = drivers(i)
+            if (pos(t) < lists(t).n && lists(t).docs(pos(t)) == doc) pos(t) += 1
+            i += 1
+          }
+        }
+      }
+    }
+
+    /** The docs of `lead` that every term of `others` holds too
+      * (`ConjunctionDISI`): the others advance to the lead's doc or past it,
+      * which moves the lead on. The remaining terms follow each match. */
+    private def leapfrog(lead: Int, others: Array[Int], heap: TopHeap): Unit = {
+      val followers = (0 until nTerms).filter(t => t != lead && !others.contains(t)).toArray
+      val l = lists(lead)
+      while (pos(lead) < l.n) {
+        val doc = l.docs(pos(lead))
+        var next = doc
+        var i = 0
+        while (i < others.length && next == doc) {
+          val t = others(i)
+          pos(t) = advance(t, doc)
+          if (pos(t) >= lists(t).n) return
+          next = lists(t).docs(pos(t))
+          i += 1
+        }
+        if (next == doc) {
+          follow(followers, doc)
+          collect(doc, heap)
+          pos(lead) += 1
+        } else pos(lead) = advance(lead, next)
+      }
+    }
+
+    /** Counts and scores the clauses whose cursor sits on `doc`, in clause
+      * order, and offers a match to `heap`. */
+    private def collect(doc: Long, heap: TopHeap): Unit = {
+      var nReq = 0
+      var nOpt = 0
+      var nNot = 0
+      var score = 0.0
+      var c = 0
+      while (c < termOf.length) {
+        val t = termOf(c)
+        if (t >= 0) {
+          val l = lists(t)
+          val p = pos(t)
+          if (p < l.n && l.docs(p) == doc) {
+            kinds(c) match {
+              case 0 => nReq += 1
+              case 1 => nOpt += 1
+              case _ => nNot += 1
+            }
+            val f = scorers(c)
+            if (f != null) score += f(l.freqs(p), l.doclens(p))
+          }
+        }
+        c += 1
+      }
+      if (nNot == 0 && nReq == nMust && nOpt >= msm) heap.offer(doc, score)
+    }
+  }
+
+  /** A bounded min-heap of the k best `(docId, score)` in parallel
+    * primitive arrays, worst on top: lower score, then larger docId, is
+    * worse. A hit enters a full heap only when it beats the top. */
+  private final class TopHeap(k: Int) {
+    private var docs = new Array[Long](math.min(k, 64))
+    private var scores = new Array[Double](docs.length)
+    private var n = 0
+
+    private def worse(i: Int, j: Int): Boolean =
+      if (scores(i) != scores(j)) java.lang.Double.compare(scores(i), scores(j)) < 0
+      else docs(i) > docs(j)
+
+    private def swap(i: Int, j: Int): Unit = {
+      val d = docs(i); docs(i) = docs(j); docs(j) = d
+      val s = scores(i); scores(i) = scores(j); scores(j) = s
+    }
+
+    private def siftDown(from: Int): Unit = {
+      var i = from
+      var done = false
+      while (!done) {
+        val l = 2 * i + 1
+        if (l >= n) done = true
+        else {
+          val c = if (l + 1 < n && worse(l + 1, l)) l + 1 else l
+          if (worse(c, i)) { swap(c, i); i = c } else done = true
+        }
+      }
+    }
+
+    def offer(doc: Long, score: Double): Unit =
+      if (n < k) {
+        if (n == docs.length) {
+          val cap = math.min(k.toLong, docs.length * 2L).toInt
+          docs = java.util.Arrays.copyOf(docs, cap)
+          scores = java.util.Arrays.copyOf(scores, cap)
+        }
+        docs(n) = doc; scores(n) = score
+        var i = n
+        n += 1
+        while (i > 0 && worse(i, (i - 1) / 2)) { swap(i, (i - 1) / 2); i = (i - 1) / 2 }
+      } else if (score > scores(0) || (score == scores(0) && doc < docs(0))) {
+        docs(0) = doc; scores(0) = score
+        siftDown(0)
+      }
+
+    /** The heap's hits, best first; empties the heap. */
+    def drain(): Iterator[(Long, Double)] = {
+      val out = new Array[(Long, Double)](n)
+      while (n > 0) {
+        out(n - 1) = (docs(0), scores(0))
+        n -= 1
+        swap(0, n)
+        siftDown(0)
+      }
+      out.iterator
+    }
   }
 }
 

@@ -169,6 +169,32 @@ class MergeSpec extends AnyFunSuite {
     val totalRows = rows.map(r => r.getLong(r.fieldIndex("rowsOut"))).sum
     assert(totalRows == m.rowsOut)
   }
+
+  test("merge manifest rows == the per-partition counts of the merged postings (append and purge)") {
+    import spark.implicits._
+    // the lineage the reduce tasks count, against a recount of what they wrote
+    def manifest(ix: InvertedIndex): Set[(Int, Int, Long, Long, Long)] =
+      spark.read.parquet(s"${ix.dir}/merge_manifest").collect().map(r =>
+        (r.getAs[Int]("mergeRound"), r.getAs[Int]("partitionId"), r.getAs[Long]("rowsOut"),
+          r.getAs[Long]("blocksOut"), r.getAs[Long]("postings"))).toSet
+    def recount(ix: InvertedIndex, round: Int): Set[(Int, Int, Long, Long, Long)] =
+      ix.postings.filter(col("segmentId") >= 1000000000L * round).groupBy("segmentId")
+        .agg(count(lit(1)), sum("nblocks"), sum("df")).collect().map(r =>
+          (round, (r.getLong(0) - 1000000000L * round).toInt, r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+    val (merged, _) = mergedPair
+    assert(manifest(merged).nonEmpty)
+    assert(manifest(merged) == recount(merged, 1))
+
+    val dir = java.nio.file.Files.createTempDirectory("graft-purge-lineage-").toString
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      .select(col("doc_id").as("docId"), col("text")).repartition(4).as[InputDoc]
+    val built = IndexBuilder.build(docs, dir, IndexConfig(graft.core.SimpleAnalyzer, flushDocBudget = 64))
+    Deletes.tombstone(spark, dir, built.docs.select(col("docId")).as[Long].limit(25).map(java.lang.Long.valueOf(_)))
+    val (purged, _) = SegmentMerger.merge(InvertedIndex.open(spark, dir), dir + "-purged",
+      mergeRound = 2, computeMetrics = false)
+    assert(manifest(purged).nonEmpty)
+    assert(manifest(purged) == recount(purged, 2))
+  }
 }
 
 /** Top-k of a cold searcher with `pruneThreshold = 1` (every flat query takes
