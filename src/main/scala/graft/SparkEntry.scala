@@ -472,9 +472,9 @@ object Indexes {
         .as[InputDoc]
       IndexBuilder.build(all.filter(_.docId % 2 == 0), dir,
         IndexConfig(SimpleAnalyzer, withPositions = true))
-      IndexBuilder.appendBatch(all.filter(_.docId % 2 == 1), dir,
+      val added = IndexBuilder.appendBatch(all.filter(_.docId % 2 == 1), dir,
         IndexConfig(SimpleAnalyzer, withPositions = true), segNamespace = 1L << 40)
-      IndexBuilder.commitAppend(spark, dir, 1L << 40)
+      IndexBuilder.commitAppend(spark, dir, 1L << 40, added)
       InvertedIndex.open(spark, dir)
     })
 }

@@ -117,27 +117,39 @@ object BitPack {
   }
 
   def unpack(bytes: Array[Byte], n: Int): Array[Long] = {
-    val w = bytes(0).toInt
     val out = new Array[Long](n)
-    var bitPos = 0
-    var i = 0
-    while (i < n) {
-      var v = 0L
-      var done = 0
-      var p = bitPos
-      while (done < w) {
-        val avail = 8 - (p & 7)
-        val take = math.min(avail, w - done)
-        val chunk = ((bytes(1 + (p >> 3)) >> (p & 7)) & ((1 << take) - 1)).toLong
-        v |= chunk << done
-        done += take
-        p += take
-      }
-      out(i) = v
-      bitPos += w
-      i += 1
-    }
+    unpackInto(bytes, n, out, 0)
     out
+  }
+
+  /** The `i`-th `w`-bit value of a packed frame. */
+  @inline private def valueAt(bytes: Array[Byte], w: Int, i: Int): Long = {
+    var v = 0L
+    var done = 0
+    var p = i * w
+    while (done < w) {
+      val avail = 8 - (p & 7)
+      val take = math.min(avail, w - done)
+      val chunk = ((bytes(1 + (p >> 3)) >> (p & 7)) & ((1 << take) - 1)).toLong
+      v |= chunk << done
+      done += take
+      p += take
+    }
+    v
+  }
+
+  /** [[unpack]] into `out(off until off + n)`. */
+  def unpackInto(bytes: Array[Byte], n: Int, out: Array[Long], off: Int): Unit = {
+    val w = bytes(0).toInt
+    var i = 0
+    while (i < n) { out(off + i) = valueAt(bytes, w, i); i += 1 }
+  }
+
+  /** [[unpackInts]] into `out(off until off + n)`. */
+  def unpackIntsInto(bytes: Array[Byte], n: Int, out: Array[Int], off: Int): Unit = {
+    val w = bytes(0).toInt
+    var i = 0
+    while (i < n) { out(off + i) = valueAt(bytes, w, i).toInt; i += 1 }
   }
 
   def packInts(xs: Array[Int]): Array[Byte] = {
@@ -148,10 +160,8 @@ object BitPack {
   }
 
   def unpackInts(bytes: Array[Byte], n: Int): Array[Int] = {
-    val longs = unpack(bytes, n)
     val out = new Array[Int](n)
-    var i = 0
-    while (i < n) { out(i) = longs(i).toInt; i += 1 }
+    unpackIntsInto(bytes, n, out, 0)
     out
   }
 }
@@ -373,29 +383,39 @@ object PostingsCodec {
     * for constant-score doc-set paths (term expansion, field-exists) where
     * decoding the full block would triple the work. */
   def decodeDocIds(b: PostingBlock): Array[Long] = {
-    val deltas = BitPack.unpack(b.docDeltas, b.count)
     val docs = new Array[Long](b.count)
-    var acc = b.firstDoc
-    var i = 0
-    while (i < b.count) { acc += deltas(i); docs(i) = acc; i += 1 }
+    decodeInto(b, docs, null, null, 0)
     docs
   }
 
-  def decodeBlock(b: PostingBlock, withPositions: Boolean = false): DecodedBlock = {
-    val deltas = BitPack.unpack(b.docDeltas, b.count)
-    val docs = new Array[Long](b.count)
+  /** Decodes block `b` into the caller's arrays at `off`: its doc ids, and
+    * its frequencies and quantized doc lengths unless `freqs` / `doclens`
+    * are null — the values [[decodeBlock]] returns, with no array
+    * allocated. Each array needs room for `b.count` values from `off`. */
+  def decodeInto(b: PostingBlock, docs: Array[Long], freqs: Array[Int], doclens: Array[Int],
+      off: Int): Unit = {
+    BitPack.unpackInto(b.docDeltas, b.count, docs, off)
     var acc = b.firstDoc
-    var i = 0
-    while (i < b.count) { acc += deltas(i); docs(i) = acc; i += 1 }
-    val freqs = BitPack.unpackInts(b.freqs, b.count)
+    var i = off
+    val end = off + b.count
+    while (i < end) { acc += docs(i); docs(i) = acc; i += 1 }
+    if (freqs != null) BitPack.unpackIntsInto(b.freqs, b.count, freqs, off)
+    if (doclens != null) {
+      i = 0
+      while (i < b.count) { doclens(off + i) = SmallFloat.LengthTable(b.dlbs(i) & 0xFF); i += 1 }
+    }
+  }
+
+  def decodeBlock(b: PostingBlock, withPositions: Boolean = false): DecodedBlock = {
+    val docs = new Array[Long](b.count)
+    val freqs = new Array[Int](b.count)
     val doclens = new Array[Int](b.count)
-    i = 0
-    while (i < b.count) { doclens(i) = SmallFloat.LengthTable(b.dlbs(i) & 0xFF); i += 1 }
+    decodeInto(b, docs, freqs, doclens, 0)
+    var i = 0
     val positions =
       if (!withPositions || b.positions.isEmpty) Array.empty[Array[Int]]
       else {
         var total = 0
-        i = 0
         while (i < b.count) { total += freqs(i); i += 1 }
         val flat = BitPack.unpackInts(b.positions, total)
         val out = new Array[Array[Int]](b.count)

@@ -7,6 +7,10 @@ package graft.core
 final case class CollectionStats(docCount: Long, sumTotalTermFreq: Long) {
   /** avgdl computed exactly like the reference: long/long in double, cast to float. */
   def avgFieldLength: Float = (sumTotalTermFreq / docCount.toDouble).toFloat
+
+  /** The statistics of the union of two disjoint doc sets. */
+  def +(o: CollectionStats): CollectionStats =
+    CollectionStats(docCount + o.docCount, sumTotalTermFreq + o.sumTotalTermFreq)
 }
 
 /** Per-term statistics (df = number of docs containing the term). */

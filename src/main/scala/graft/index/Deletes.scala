@@ -13,9 +13,9 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   *    KEEP counting tombstoned docs — exactly the reference's semantics,
   *    where docFreq/docCount ignore deletions until segments are rewritten;
   *  - [[SegmentMerger.merge]] purges: tombstoned postings are dropped during
-  *    the rewrite, docs rows are filtered, statistics recomputed — the merged
-  *    index is standalone (no parent link) and tombstone-free, the
-  *    `forceMergeDeletes` analog.
+  *    the rewrite, docs rows are filtered and counted as they are rewritten,
+  *    term statistics recomputed — the merged index is standalone (no parent
+  *    link) and tombstone-free, the `forceMergeDeletes` analog.
   *
   * Updating a document keeps the reference's shape: tombstone the doc id,
   * purge via merge, then append the new version (the external doc id is the
@@ -40,14 +40,8 @@ object Deletes {
       newVersions.map(d => java.lang.Long.valueOf(d.docId)))
     val reopened = InvertedIndex.open(index.spark, index.dir)
     val (purged, _) = SegmentMerger.merge(reopened, mergedDir, computeMetrics = false)
-    IndexBuilder.appendBatch(newVersions, mergedDir, config, segNamespace)
-    // a purged dir carries no base segment-manifest rows (its doc rows were
-    // rewritten standalone), so stats must aggregate doc rows, not manifests
-    val prior = Snapshots.latest(mergedDir)
-    IndexBuilder.refreshStatsFromDocs(index.spark, mergedDir,
-      version = prior.map(_.version + 1).getOrElse(1))
-    Snapshots.commit(mergedDir, "append",
-      prior.map(_.namespaces).getOrElse(Seq(0L)) :+ segNamespace)
+    val added = IndexBuilder.appendBatch(newVersions, mergedDir, config, segNamespace)
+    IndexBuilder.commitAppend(index.spark, mergedDir, segNamespace, added)
     InvertedIndex.open(index.spark, purged.dir)
   }
 }

@@ -3,9 +3,11 @@ package graft.index
 import graft.core._
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.LongAccumulator
 import scala.collection.mutable
 
 /** One input document: external id (globally unique) + field text. */
@@ -98,8 +100,32 @@ final case class IndexConfig(
   *    resumable: a re-run skips partitions whose manifest rows exist,
   *    mirroring the reference's two-phase commit
   *    (`lucene/core/src/java/org/apache/lucene/index/IndexWriter.java:3582,4063`).
+  *  - The collection statistics (doc count, Σdoclen) are counted by the
+  *    write's own tasks from the manifest rows they emit ([[DocCounter]]) and
+  *    recorded in the snapshot the build commits ([[Snapshots]]): no job
+  *    re-reads them, and opening the index reads them from that file.
   */
 object IndexBuilder {
+
+  /** Doc count and Σdoclen of the docs a write emits, added up by the
+    * write's tasks as its rows pass. Read [[stats]] once the write is done:
+    * the write's result stage applies each partition's update once, so task
+    * retries do not double-count. */
+  private[index] final case class DocCounter(docs: LongAccumulator, doclen: LongAccumulator) {
+    def add(n: Long, len: Long): Unit = { docs.add(n); doclen.add(len) }
+
+    /** `rows`, counting the docs of each segment manifest row. */
+    def manifests(rows: Iterator[StageRow]): Iterator[StageRow] =
+      rows.map { r => if (r.kind == 2) add(r.numDocs, r.sumDoclen); r }
+
+    def stats: CollectionStats = CollectionStats(docs.value, doclen.value)
+  }
+
+  private[index] object DocCounter {
+    def apply(spark: SparkSession): DocCounter =
+      DocCounter(spark.sparkContext.longAccumulator("docCount"),
+        spark.sparkContext.longAccumulator("sumDoclen"))
+  }
 
   /** Build (or resume) an index over `input` at `dir`. Returns the opened index. */
   def build(input: Dataset[InputDoc], dir: String, config: IndexConfig = IndexConfig(),
@@ -107,19 +133,22 @@ object IndexBuilder {
     val spark = input.sparkSession
     import spark.implicits._
 
-    val completedPartitions: Set[Int] =
+    // (partitionId, numDocs, sumDoclen) of every segment a resumed build
+    // keeps: it skips those partitions and counts their docs from these rows
+    val completed: Array[(Int, Long, Long)] =
       if (resume && new java.io.File(s"$dir/data").exists()) {
-        readData(spark, dir).filter($"kind" === 2)
-          .select($"partitionId").distinct().as[Int].collect().toSet
-      } else Set.empty
+        readData(spark, dir).filter($"kind" === 2 && $"batchNs" === 0L)
+          .select($"partitionId", $"numDocs", $"sumDoclen").as[(Int, Long, Long)].collect()
+      } else Array.empty
 
-    val bc = spark.sparkContext.broadcast((config, completedPartitions))
+    val bc = spark.sparkContext.broadcast((config, completed.map(_._1).toSet))
+    val counter = DocCounter(spark)
 
     val staged: Dataset[StageRow] = input.mapPartitions { docs =>
       val (cfg, done) = bc.value
       val pid = TaskContext.getPartitionId()
       if (done.contains(pid)) Iterator.empty
-      else new SegmentFlusher(cfg, 0L, pid, docs)
+      else counter.manifests(new SegmentFlusher(cfg, 0L, pid, docs))
     }
 
     staged.toDF().withColumn("batchNs", lit(0L)).write
@@ -138,10 +167,13 @@ object IndexBuilder {
     // snapshot log: fresh build = v1 over the base namespace; a resumed build
     // completes the SAME commit, so it must not stack a second version
     if (!resume) Snapshots.clear(dir)
-    refreshStats(spark, dir, version = 1)
+    refreshTermStats(spark, dir, version = 1)
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$dir/analyzer"), config.analyzer.name)
-    if (Snapshots.latest(dir).isEmpty) Snapshots.commit(dir, "build", Seq(0L))
+    if (Snapshots.latest(dir).isEmpty) {
+      val stats = completed.map { case (_, n, len) => CollectionStats(n, len) }.foldLeft(counter.stats)(_ + _)
+      Snapshots.commit(dir, "build", Map(0L -> stats))
+    }
 
     InvertedIndex.open(spark, dir)
   }
@@ -157,15 +189,17 @@ object IndexBuilder {
     * partition instead of appending duplicates — no other batch or base-build
     * partition is touched (ADVICE r1 #1).
     *
-    * Does NOT refresh global stats; callers batch that via [[refreshStats]]
-    * (the `SearcherManager.maybeRefresh` analog). */
+    * Returns the doc count and Σdoclen of the batch, counted as it is
+    * written. Publishes nothing: [[commitAppend]] records them with the
+    * batch's namespace (the `SearcherManager.maybeRefresh` analog). */
   private[graft] def appendBatch(batch: Dataset[InputDoc], dir: String,
-                                 config: IndexConfig, segNamespace: Long): Unit = {
+                                 config: IndexConfig, segNamespace: Long): CollectionStats = {
     val spark = batch.sparkSession
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(config)
+    val counter = DocCounter(spark)
     batch.mapPartitions { docs =>
-      new SegmentFlusher(bc.value, segNamespace, TaskContext.getPartitionId(), docs)
+      counter.manifests(new SegmentFlusher(bc.value, segNamespace, TaskContext.getPartitionId(), docs))
     }.toDF().withColumn("batchNs", lit(segNamespace))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
@@ -173,21 +207,23 @@ object IndexBuilder {
       .option("parquet.block.size", 32 * 1024 * 1024)
       .option("compression", "zstd")
       .parquet(s"$dir/data")
+    counter.stats
   }
 
-  /** Publish an appended micro-batch: refresh global statistics, then commit
-    * a snapshot whose namespace set is the previous snapshot's plus
-    * `segNamespace` — the Iceberg append commit. Until this runs, the
-    * batch's `batchNs` partition exists on disk but no reader sees it
+  /** Publish an appended micro-batch: refresh the term statistics, then
+    * commit a snapshot whose namespaces are the previous snapshot's plus
+    * `segNamespace`, recorded with the batch's `stats` ([[appendBatch]]'s
+    * result) — the Iceberg append commit. A replayed batch's namespace is
+    * already named: its entry is replaced. Until this runs, the batch's
+    * `batchNs` partition exists on disk but no reader sees it
     * (snapshot-pinned opens filter to their committed namespaces), which is
     * what makes the at-least-once `foreachBatch` replay invisible. */
-  private[graft] def commitAppend(spark: SparkSession, dir: String,
-                                  segNamespace: Long): Snapshots.Snapshot = {
+  private[graft] def commitAppend(spark: SparkSession, dir: String, segNamespace: Long,
+                                  stats: CollectionStats): Snapshots.Snapshot = {
     val prior = Snapshots.latest(dir)
-    val nextVersion = prior.map(_.version + 1).getOrElse(1)
-    refreshStats(spark, dir, version = nextVersion)
+    refreshTermStats(spark, dir, version = prior.map(_.version + 1).getOrElse(1))
     Snapshots.commit(dir, "append",
-      prior.map(_.namespaces).getOrElse(Seq(0L)) :+ segNamespace)
+      prior.fold(Map.empty[Long, CollectionStats])(_.stats) + (segNamespace -> stats))
   }
 
   /** Index-level ingest WITHOUT re-analysis — the reference's
@@ -202,9 +238,10 @@ object IndexBuilder {
     *  - adoption is an Iceberg-style append commit: the source's rows land
     *    in a fresh `batchNs` partition with relocated segment ids (segment
     *    identity stays unique in the target — same 2^28 namespace stride as
-    *    streaming appends), statistics refresh, and ONE snapshot commit
-    *    publishes atomically; readers pinned to earlier snapshots never see
-    *    a partial adoption.
+    *    streaming appends), term statistics refresh, and ONE snapshot commit
+    *    records the new namespace with the source's collection statistics
+    *    and publishes atomically; readers pinned to earlier snapshots never
+    *    see a partial adoption.
     *
     * Postings payloads move UNDECODED — adopting N TB of postings is a
     * columnar copy, never a re-index (not even a block re-encode), because
@@ -260,10 +297,9 @@ object IndexBuilder {
       d.select("docId").write.mode("append").parquet(s"$targetDir/deletes")
     }
     val prior = Snapshots.latest(targetDir)
-    val nextVersion = prior.map(_.version + 1).getOrElse(1)
-    refreshStats(spark, targetDir, version = nextVersion)
+    refreshTermStats(spark, targetDir, version = prior.map(_.version + 1).getOrElse(1))
     Snapshots.commit(targetDir, "addIndexes",
-      prior.map(_.namespaces).getOrElse(Seq(0L)) :+ newNs)
+      prior.fold(Map.empty[Long, CollectionStats])(_.stats) + (newNs -> source.collectionStats))
   }
 
   /** Diagnostic hook: a raw SegmentFlusher iterator (graft.tools.BuildProbe). */
@@ -271,50 +307,22 @@ object IndexBuilder {
                                 docs: Iterator[InputDoc]): Iterator[StageRow] =
     new SegmentFlusher(cfg, segNamespace, pid, docs)
 
-  /** The `term_stats` aggregation shared by both refresh variants: per-term
-    * df/ttf, summed from the postings rows' scalar partials (map-side
-    * combined; the nested `blocks` payload is never read). */
-  private def termStatsFrame(data: DataFrame): DataFrame =
-    data.filter(col("kind") === 1)
+  /** Recompute the global term statistics (per-term df/ttf) of snapshot
+    * `version` from the segment data, summed from the postings rows' scalar
+    * partials (the nested `blocks` payload is never read). The only shuffle
+    * of the build; partial (map-side) aggregation makes it skew-proof — a
+    * head term contributes one partial count per task, not its postings. */
+  private[graft] def refreshTermStats(spark: SparkSession, dir: String, version: Int): Unit =
+    readData(spark, dir).filter(col("kind") === 1)
       .groupBy(col("term"))
       .agg(sum(col("df")).cast("long").as("df"), sum(col("ttf")).as("ttf"))
+      .write.mode("overwrite").parquet(termStatsPath(dir, version))
 
-  /** Recompute global term/collection statistics from the committed segment
-    * data. The only shuffle of the build; partial (map-side) aggregation makes
-    * it skew-proof — a head term contributes one partial count per task, not
-    * its postings. */
-  def refreshStats(spark: SparkSession, dir: String, version: Int = 0): Unit = {
-    import spark.implicits._
-    val data = readData(spark, dir)
-    termStatsFrame(data)
-      .write.mode("overwrite").parquet(statsPath(dir, "term_stats", version))
-    data.filter($"kind" === 2)
-      .agg(sum($"numDocs").as("docCount"), sum($"sumDoclen").as("sumTotalTermFreq"))
-      .write.mode("overwrite").parquet(statsPath(dir, "stats", version))
-  }
-
-  /** [[refreshStats]] for an index whose doc rows were rewritten without
-    * per-segment manifest rows (a purge-merge): collection stats aggregate
-    * the kind=0 doc rows (scalar columns only) instead of kind=2 manifests. */
-  private[graft] def refreshStatsFromDocs(spark: SparkSession, dir: String,
-                                          version: Int = 0): Unit = {
-    import spark.implicits._
-    val data = readData(spark, dir)
-    termStatsFrame(data)
-      .write.mode("overwrite").parquet(statsPath(dir, "term_stats", version))
-    data.filter($"kind" === 0)
-      .agg(count(lit(1)).as("docCount"), sum($"doclen").cast("long").as("sumTotalTermFreq"))
-      .write.mode("overwrite").parquet(statsPath(dir, "stats", version))
-  }
-
-  /** Statistics tables are IMMUTABLE per snapshot version (`stats/v<N>`) —
-    * refreshing for a new commit never touches the files a reader pinned to
-    * an older snapshot still scans (the Iceberg immutable-metadata rule).
-    * version 0 = legacy unversioned path (pre-snapshot-log dirs). Versioned
-    * tables are SIBLINGS (`stats_v1`), not children, of the legacy path —
-    * a child dir would confuse unversioned parquet directory scans. */
-  private[graft] def statsPath(dir: String, table: String, version: Int): String =
-    if (version <= 0) s"$dir/$table" else s"$dir/${table}_v$version"
+  /** Term statistics tables are IMMUTABLE per snapshot version
+    * (`term_stats_v<N>`) — refreshing for a new commit never touches the
+    * files a reader pinned to an older snapshot still scans (the Iceberg
+    * immutable-metadata rule). */
+  private[graft] def termStatsPath(dir: String, version: Int): String = s"$dir/term_stats_v$version"
 
   /** The `data` table's schema: the [[StageRow]] columns plus the `batchNs`
     * namespace partition column. */
@@ -326,9 +334,7 @@ object IndexBuilder {
   private[graft] def readData(spark: SparkSession, dir: String): DataFrame =
     spark.read.schema(DataSchema).parquet(s"$dir/data")
   private[graft] def readTermStats(spark: SparkSession, dir: String, version: Int): DataFrame =
-    spark.read.schema("term STRING, df BIGINT, ttf BIGINT").parquet(statsPath(dir, "term_stats", version))
-  private[graft] def readStats(spark: SparkSession, dir: String, version: Int): DataFrame =
-    spark.read.schema("docCount BIGINT, sumTotalTermFreq BIGINT").parquet(statsPath(dir, "stats", version))
+    spark.read.schema("term STRING, df BIGINT, ttf BIGINT").parquet(termStatsPath(dir, version))
 
   /** Per-partition segment accumulator (the DWPT analog). Streams input docs,
     * flushes a segment whenever the doc budget is reached, and emits one
@@ -547,10 +553,10 @@ final class InvertedIndex private (
       * a merge is a postings rewrite + manifest swap, the Iceberg commit
       * model; no bulk copying of unchanged sections) */
     val parent: Option[InvertedIndex],
-    /** the snapshot this reader is pinned to (None: pre-snapshot-log dirs —
-      * read everything); namespaces fix the visible `batchNs` partitions for
-      * this reader's whole lifetime (snapshot isolation) */
-    val snapshot: Option[Snapshots.Snapshot] = None) extends Serializable {
+    /** the snapshot this reader is pinned to; its namespaces fix the
+      * visible `batchNs` partitions for this reader's whole lifetime
+      * (snapshot isolation) */
+    val snapshot: Snapshots.Snapshot) extends Serializable {
 
   /** Stable identity of this reader's VISIBLE data: directory + pinned
     * snapshot version + parent chain. Segment data is immutable and a
@@ -562,21 +568,16 @@ final class InvertedIndex private (
     * delete/append/merge commits a NEW snapshot version, so a reader over
     * the refreshed index gets a different key and refuses the stale cache). */
   lazy val identityKey: String =
-    s"$dir@${snapshot.map(_.version).getOrElse(-1)}" +
+    s"$dir@${snapshot.version}" +
       parent.map(p => "<-" + p.identityKey).getOrElse("")
 
   // Shared plan instances (@transient: an InvertedIndex travels into task
   // closures; DataFrames must not) — one instance per view means a caller's
   // `.cache()` (see [[warm]]) applies to every subsequent query.
-  @transient private lazy val data: DataFrame = {
-    val all = IndexBuilder.readData(spark, dir)
-    snapshot.filter(_.namespaces.nonEmpty) match {
-      // partition pruning on the batchNs directory column — invisible
-      // namespaces are never listed, let alone scanned
-      case Some(s) => all.filter(col("batchNs").isin(s.namespaces: _*))
-      case None => all
-    }
-  }
+  // partition pruning on the batchNs directory column — invisible
+  // namespaces are never listed, let alone scanned
+  @transient private lazy val data: DataFrame =
+    IndexBuilder.readData(spark, dir).filter(col("batchNs").isin(snapshot.namespaces: _*))
 
   @transient lazy val postings: DataFrame =
     data.filter(col("kind") === 1)
@@ -596,14 +597,14 @@ final class InvertedIndex private (
   }
 
   /** term statistics (`term`, `df`, `ttf`) are merge-invariant — resolved
-    * through the parent chain. Each snapshot's stats tables are immutable
-    * (`term_stats_v<N>`), so a pinned or time-traveled reader scans exactly
-    * the files its commit wrote, no matter how many later commits refresh
-    * the latest stats. Indexes written with extra per-term columns open the
-    * same: only these three are read. */
+    * through the parent chain. Each snapshot's term statistics table is
+    * immutable (`term_stats_v<N>`), so a pinned or time-traveled reader
+    * scans exactly the files its commit wrote, no matter how many later
+    * commits refresh the latest stats. Indexes written with extra per-term
+    * columns open the same: only these three are read. */
   @transient lazy val termStats: DataFrame = parent match {
     case Some(p) => p.termStats
-    case None => IndexBuilder.readTermStats(spark, dir, snapshot.map(_.version).getOrElse(0))
+    case None => IndexBuilder.readTermStats(spark, dir, snapshot.version)
   }
 
   /** Tombstoned doc ids (`docId` column) pending physical purge, or None.
@@ -647,9 +648,10 @@ final class InvertedIndex private (
     * resident when [[cachedPostingsBytes]] is within it. */
   private[graft] def warmWithin(budget: Long): this.type = {
     postings.cache(); termStats.cache(); docs.cache()
-    postings.count(); docs.count()
-    val n = termStats.count()
-    if (n <= 2000000L)
+    // one scan of each fills its cache (a count() plans an aggregate: two to
+    // four jobs under AQE); Spark counts the rows while it caches them
+    Seq(postings, termStats, docs).foreach(cached(_).foreach(_.cacheBuilder.cachedColumnBuffers.foreach(_ => ())))
+    if (cached(termStats).flatMap(_.computeStats().rowCount).exists(_ <= 2000000))
       warmStats = termStats.select("term", "df", "ttf").collect()
         .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     if (warmStats != null && cachedPostingsBytes <= budget) {
@@ -663,12 +665,17 @@ final class InvertedIndex private (
     this
   }
 
+  /** The cluster cache entry of `df`, when it is cached. Once filled, its
+    * statistics hold the measured size and row count. */
+  private def cached(df: DataFrame): Option[InMemoryRelation] =
+    spark.sharedState.cacheManager
+      .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+      .map(_.cachedRepresentation)
+
   /** The in-memory size Spark measured for the cached postings, or
     * `Long.MaxValue` when they are not cached. */
   private def cachedPostingsBytes: Long =
-    spark.sharedState.cacheManager
-      .lookupCachedData(postings.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
-      .map(_.cachedRepresentation.computeStats().sizeInBytes)
+    cached(postings).map(_.computeStats().sizeInBytes)
       .filter(_.isValidLong).map(_.toLong).getOrElse(Long.MaxValue)
 
   /** Driver-resident term dictionary when [[warm]]ed (term → (df, ttf)). */
@@ -716,25 +723,20 @@ object InvertedIndex {
     * the latest committed snapshot when `asOf` is None. A pinned reader's
     * visible data partitions never change, no matter how many micro-batches
     * commit after it opened (snapshot isolation — the Iceberg read model).
-    * Statistics of a time-traveled reader are re-derived from its pinned
-    * partitions, so scores match what a reader at that commit computed. */
+    * Its collection statistics are the sum of the entries its snapshot
+    * recorded for those partitions, so scores match what a reader at that
+    * commit computed; opening runs no Spark job. */
   def open(spark: SparkSession, dir: String, asOf: Option[Int]): InvertedIndex = {
     val parentPath = java.nio.file.Paths.get(s"$dir/parent")
     val parent =
       if (java.nio.file.Files.exists(parentPath))
         Some(open(spark, java.nio.file.Files.readString(parentPath).trim))
       else None
-    val snapshot = asOf match {
-      case Some(v) => Some(Snapshots.read(dir, v))
-      case None => Snapshots.latest(dir)
-    }
+    val snapshot = asOf.map(Snapshots.read(dir, _)).orElse(Snapshots.latest(dir))
+      .getOrElse(throw new IllegalStateException(s"$dir: no committed snapshot"))
     val analyzer = parent.map(_.analyzer).getOrElse(
       Analyzers.byName(java.nio.file.Files.readString(
         java.nio.file.Paths.get(s"$dir/analyzer")).trim))
-    val stats = parent.map(_.collectionStats).getOrElse {
-      val statsRow = IndexBuilder.readStats(spark, dir, snapshot.map(_.version).getOrElse(0)).collect()(0)
-      CollectionStats(statsRow.getLong(0), statsRow.getLong(1))
-    }
-    new InvertedIndex(spark, dir, analyzer, stats, parent, snapshot)
+    new InvertedIndex(spark, dir, analyzer, snapshot.collectionStats, parent, snapshot)
   }
 }

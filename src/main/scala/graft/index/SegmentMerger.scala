@@ -69,10 +69,13 @@ final case class MergeMetrics(
   *     ordering (only intra-block ordering, which re-encoding guarantees), so
   *     bucket independence costs nothing in correctness.
   *
-  * Global `term_stats` / collection `stats` are invariant under merge (same
-  * postings, different layout) and are copied, as are the `docs` rows — like
-  * the reference, a merge rewrites the segment wholesale
-  * (`SegmentMerger.java:143-208`).
+  * Global `term_stats` and the collection statistics are invariant under
+  * merge (same postings, different layout): the merged index reads the
+  * `term_stats` and `docs` rows through its parent link, and its snapshot
+  * records the source reader's collection statistics. A purge-merge
+  * rewrites the surviving doc rows, counts them as it writes them, and
+  * recomputes `term_stats` — like the reference, a merge that drops docs
+  * rewrites the segment wholesale (`SegmentMerger.java:143-208`).
   */
 object SegmentMerger {
 
@@ -282,10 +285,11 @@ object SegmentMerger {
       .option("compression", "zstd")
       .parquet(s"$targetDir/data")
 
-    if (purge) {
+    val stats = if (purge) {
       // Deletes applied: the merged index is standalone. Doc rows are
-      // filtered and rewritten, statistics recomputed over the survivors,
-      // and no tombstones carry over — the forceMergeDeletes contract.
+      // filtered and rewritten (counted as they are written), term
+      // statistics recomputed over the survivors, and no tombstones carry
+      // over — the forceMergeDeletes contract.
       def docsOwner(ix: InvertedIndex): InvertedIndex =
         ix.parent.map(docsOwner).getOrElse(ix)
       val owner = docsOwner(index)
@@ -297,14 +301,14 @@ object SegmentMerger {
         // commitAppend) or a post-open commit must not resurrect into the
         // purged docs table — the merged postings above already read only the
         // snapshot-filtered index.postings (ADVICE r2 #1)
-        owner.snapshot.filter(_.namespaces.nonEmpty) match {
-          case Some(sn) => all.filter(col("batchNs").isin(sn.namespaces: _*))
-          case None => all
-        }
+        all.filter(col("batchNs").isin(owner.snapshot.namespaces: _*))
       }
+      val counter = IndexBuilder.DocCounter(spark)
       ownerDocs
         .join(delDf, col("docId") === col("delId"), "left_anti")
-        .drop("delId")
+        .drop("delId", "batchNs")
+        .as[StageRow]
+        .mapPartitions(_.map { r => counter.add(1L, r.doclen); r })
         // rewritten rows all belong to the merged base namespace — keeping
         // the SOURCE batchNs would hide appended docs from the purged dir's
         // snapshot (which names only namespace 0)
@@ -314,7 +318,8 @@ object SegmentMerger {
         .parquet(s"$targetDir/data")
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"$targetDir/analyzer"), index.analyzer.name)
-      IndexBuilder.refreshStatsFromDocs(spark, targetDir, version = 1)
+      IndexBuilder.refreshTermStats(spark, targetDir, version = 1)
+      counter.stats
     } else {
       // Docs, segment manifests and global stats are merge-invariant: the
       // merged index references them through a parent link instead of
@@ -323,12 +328,13 @@ object SegmentMerger {
       // files (`lucene/core/src/java/org/apache/lucene/index/SegmentInfos.java:114`).
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"$targetDir/parent"), index.dir)
+      index.collectionStats
     }
 
     // merge commit in the target dir's snapshot log (history starts fresh in
     // the rewritten dir; the parent link preserves cross-dir lineage)
     Snapshots.clear(targetDir)
-    Snapshots.commit(targetDir, if (purge) "purge" else "merge", Seq(0L))
+    Snapshots.commit(targetDir, if (purge) "purge" else "merge", Map(0L -> stats))
 
     val out = InvertedIndex.open(spark, targetDir)
 

@@ -1,5 +1,7 @@
 package graft.index
 
+import graft.core.CollectionStats
+
 /** Iceberg-style snapshot log for an index directory.
   *
   * Every committed state of the index (base build, each streamed
@@ -9,20 +11,36 @@ package graft.index
   * (SURVEY.md §1.4; the reference's `SegmentInfos` generation files,
   * `lucene/core/src/java/org/apache/lucene/index/SegmentInfos.java:60`).
   *
+  * Each namespace entry also records the doc count and Σdoclen of the docs
+  * it holds, counted by the pass that wrote them. A reader's collection
+  * statistics are the sum over its snapshot's entries, read from this file
+  * with no Spark job — like the reference reading its `SegmentInfo` doc
+  * counts from the commit point (`SegmentInfos.java:55-64,114`) instead of
+  * scanning the segments.
+  *
   * This is what makes appends ATOMIC for readers: `appendBatch` first lands
   * its rows under a fresh `batchNs=<ns>` partition (invisible — no snapshot
-  * names it), stats are refreshed, and only then does the commit file appear.
-  * A reader opened against snapshot v sees exactly v's namespaces forever
-  * (snapshot isolation), and `InvertedIndex.open(spark, dir, asOf = Some(v))`
-  * time-travels to any retained version.
+  * names it), term statistics are refreshed, and only then does the commit
+  * file appear. A reader opened against snapshot v sees exactly v's
+  * namespaces forever (snapshot isolation), and
+  * `InvertedIndex.open(spark, dir, asOf = Some(v))` time-travels to any
+  * retained version.
   *
   * Commit files are written via temp file + atomic rename; versions are
-  * monotonically increasing. The format is a single flat JSON object —
+  * monotonically increasing. The format is a single flat JSON object, with
+  * `docCounts` / `sumDoclens` parallel to the ascending `namespaces` —
   * parsed with string ops, not a JSON library (zero added dependencies).
   */
 object Snapshots {
 
-  final case class Snapshot(version: Int, operation: String, namespaces: Seq[Long])
+  /** One committed state: namespace → statistics of the docs it holds. */
+  final case class Snapshot(version: Int, operation: String, stats: Map[Long, CollectionStats]) {
+    /** The `batchNs` data partitions this snapshot names, ascending. */
+    def namespaces: Seq[Long] = stats.keys.toSeq.sorted
+
+    /** The statistics of every doc the snapshot holds. */
+    def collectionStats: CollectionStats = stats.valuesIterator.foldLeft(CollectionStats(0L, 0L))(_ + _)
+  }
 
   private def snapDir(dir: String) = java.nio.file.Paths.get(dir, "snapshots")
 
@@ -72,24 +90,34 @@ object Snapshots {
         .getOrElse(throw new IllegalStateException(s"snapshot v$version: missing $name"))
         .group(1)
     }
-    val op = field("operation").stripPrefix("\"").stripSuffix("\"")
-    val ns = field("namespaces").stripPrefix("[").stripSuffix("]").trim match {
+    def longs(name: String): Seq[Long] = field(name).stripPrefix("[").stripSuffix("]").trim match {
       case "" => Nil
       case s => s.split(",").map(_.trim.toLong).toSeq
     }
-    Snapshot(field("version").toInt, op, ns)
+    val op = field("operation").stripPrefix("\"").stripSuffix("\"")
+    val ns = longs("namespaces")
+    val docCounts = longs("docCounts")
+    val sumDoclens = longs("sumDoclens")
+    if (docCounts.size != ns.size || sumDoclens.size != ns.size)
+      throw new IllegalStateException(s"snapshot v$version: statistics do not match its namespaces")
+    Snapshot(field("version").toInt, op,
+      ns.indices.map(i => ns(i) -> CollectionStats(docCounts(i), sumDoclens(i))).toMap)
   }
 
-  /** Append a snapshot naming the full namespace set of the new state.
-    * Returns the committed snapshot. */
-  def commit(dir: String, operation: String, namespaces: Seq[Long]): Snapshot = {
+  /** Append a snapshot naming the full namespace set of the new state, each
+    * namespace with the statistics of its docs. Returns the committed
+    * snapshot. */
+  def commit(dir: String, operation: String, stats: Map[Long, CollectionStats]): Snapshot = {
     val d = snapDir(dir)
     java.nio.file.Files.createDirectories(d)
     val version = latest(dir).map(_.version + 1).getOrElse(1)
-    val snap = Snapshot(version, operation, namespaces.distinct.sorted)
+    val snap = Snapshot(version, operation, stats)
+    val ns = snap.namespaces
     val json =
       s"""{"version":${snap.version},"operation":"${snap.operation}",""" +
-        s""""namespaces":[${snap.namespaces.mkString(",")}]}"""
+        s""""namespaces":[${ns.mkString(",")}],""" +
+        s""""docCounts":[${ns.map(stats(_).docCount).mkString(",")}],""" +
+        s""""sumDoclens":[${ns.map(stats(_).sumTotalTermFreq).mkString(",")}]}"""
     val tmp = java.nio.file.Files.createTempFile(d, ".tmp-snap", ".json")
     java.nio.file.Files.writeString(tmp, json)
     java.nio.file.Files.move(tmp, d.resolve(f"v$version%08d.json"),
@@ -100,7 +128,7 @@ object Snapshots {
   /** Expire all but the newest `keepLast` snapshots — the
     * `expire_snapshots` maintenance action of the Iceberg model (and the
     * reference's deletion of superseded `segments_N` generations). Removes
-    * the expired commit files, their per-version stats tables, and any
+    * the expired commit files, their per-version `term_stats` tables, and any
     * `batchNs=<ns>` data partition no retained snapshot references (orphan
     * GC). Time travel to an expired version stops working, by design; the
     * latest snapshot and every retained one are untouched.
@@ -127,8 +155,7 @@ object Snapshots {
       }
     expired.foreach { s =>
       java.nio.file.Files.deleteIfExists(snapDir(dir).resolve(f"v${s.version}%08d.json"))
-      rmTree(java.nio.file.Paths.get(IndexBuilder.statsPath(dir, "term_stats", s.version)))
-      rmTree(java.nio.file.Paths.get(IndexBuilder.statsPath(dir, "stats", s.version)))
+      rmTree(java.nio.file.Paths.get(IndexBuilder.termStatsPath(dir, s.version)))
     }
     // orphaned data partitions: namespaces only expired snapshots referenced
     deadNs.foreach { ns =>

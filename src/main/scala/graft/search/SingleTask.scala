@@ -106,15 +106,16 @@ object SingleTask {
       var n = 0
       var sorted = true
       inRange.foreach { b =>
-        val d = if (scored) PostingsCodec.decodeBlock(b) else null
-        val ds = if (scored) d.docs else PostingsCodec.decodeDocIds(b)
-        var i = 0
-        while (i < ds.length) {
-          val doc = ds(i)
+        // decode in place after the kept postings, then keep those in range
+        PostingsCodec.decodeInto(b, docs, freqs, doclens, n)
+        var i = n
+        val end = n + b.count
+        while (i < end) {
+          val doc = docs(i)
           if (doc >= lo && doc <= hi) {
             if (n > 0 && doc < docs(n - 1)) sorted = false
             docs(n) = doc
-            if (scored) { freqs(n) = d.freqs(i); doclens(n) = d.doclens(i) }
+            if (scored) { freqs(n) = freqs(i); doclens(n) = doclens(i) }
             n += 1
           }
           i += 1

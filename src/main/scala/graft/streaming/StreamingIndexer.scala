@@ -12,9 +12,12 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *  - each micro-batch flushes new immutable segments (append-only parquet
   *    under a per-batch segment-id namespace — exactly the "flushed but not
   *    yet merged" DWPT segments of the reference);
-  *  - global term/collection statistics are refreshed after each batch, so a
-  *    reader that re-opens the index (`InvertedIndex.open`) sees a consistent
-  *    point-in-time view — the `maybeRefresh` analog;
+  *  - each batch's commit records the batch's doc count and Σdoclen, counted
+  *    while its segments were written, in the snapshot it publishes, and
+  *    refreshes the global term statistics; a reader that re-opens the
+  *    index ([[reopen]]) sums the snapshot's entries, so it sees a
+  *    consistent point-in-time view with no Spark job — the `maybeRefresh`
+  *    analog;
   *  - foreachBatch is at-least-once, so replay safety comes from the SINK:
   *    each batch writes into its own `batchNs` partition with dynamic
   *    partition overwrite ([[graft.index.IndexBuilder.appendBatch]]), so a
@@ -26,12 +29,12 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *    [[graft.index.SegmentMerger]], the `TieredMergePolicy` analog — run it
   *    out-of-band like the reference's background merge threads.
   *
-  * Scale note: at production scale the per-batch stats refresh is the only
-  * non-append work; it is a map-side-combined aggregation over segment
-  * metadata rows (not postings payloads), so batch latency stays bounded by
-  * batch size, not by accumulated index size — except for the term-stats
-  * re-aggregation, which can be made incremental (per-batch partial stats
-  * unioned at read time) when refresh latency matters.
+  * Scale note: at production scale the per-batch term-stats refresh is the
+  * only non-append work. It is a map-side-combined aggregation over the
+  * postings rows' scalar columns (not their payloads), but it re-reads the
+  * whole index, so it grows with the accumulated index size; it can be made
+  * incremental (per-batch partial stats unioned at read time) when refresh
+  * latency matters.
   */
 object StreamingIndexer {
 
@@ -40,7 +43,7 @@ object StreamingIndexer {
   private[graft] def namespace(batchId: Long): Long = (1L << 40) + batchId * (1L << 28)
 
   /** Start an indexing stream over `input`. Each micro-batch appends segments
-    * to `dir` and refreshes statistics. */
+    * to `dir` and commits them with their statistics. */
   def start(input: Dataset[InputDoc], dir: String, config: IndexConfig,
             checkpointDir: String): StreamingQuery = {
     val spark = input.sparkSession
@@ -50,16 +53,17 @@ object StreamingIndexer {
     input.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[InputDoc], batchId: Long) =>
-        IndexBuilder.appendBatch(batch, dir, config, namespace(batchId))
-        // stats refresh + snapshot commit: the batch becomes visible to new
-        // readers only here; snapshot-pinned readers never see it
-        IndexBuilder.commitAppend(spark, dir, namespace(batchId))
+        val added = IndexBuilder.appendBatch(batch, dir, config, namespace(batchId))
+        // term-stats refresh + snapshot commit: the batch becomes visible to
+        // new readers only here; snapshot-pinned readers never see it
+        IndexBuilder.commitAppend(spark, dir, namespace(batchId), added)
         ()
       }
       .start()
   }
 
-  /** Re-open the latest committed view (the `openIfChanged` analog). */
+  /** Re-open the latest committed view (the `openIfChanged` analog). Reads
+    * the snapshot log and runs no Spark job. */
   def reopen(spark: SparkSession, dir: String): InvertedIndex =
     InvertedIndex.open(spark, dir)
 }

@@ -92,8 +92,9 @@ object WebIndex {
   /** Build (or resume) the inverted index over a pages table at `dir`.
     *
     * Layout written under `dir`:
-    *  - `data/`, `term_stats/`, `stats/`, `analyzer` — the [[IndexBuilder]]
-    *    index proper;
+    *  - `data/`, `term_stats_v<N>/`, `snapshots/`, `analyzer` — the
+    *    [[IndexBuilder]] index proper (the snapshot files carry the
+    *    collection statistics);
     *  - `urlmap/` — `(docId, url, warc_ts, lang)`.
     */
   def build(pages: Dataset[Page], dir: String,

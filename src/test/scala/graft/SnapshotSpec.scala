@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.SimpleAnalyzer
+import graft.core.{CollectionStats, SimpleAnalyzer}
 import graft.index._
 import graft.search._
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,6 +19,12 @@ class SnapshotSpec extends AnyFunSuite {
     rows.filter(d => pred(d.docId)).repartition(4)
   }
 
+  /** Append the odd doc ids as one committed micro-batch. */
+  private def appendOdd(dir: String, cfg: IndexConfig): Unit = {
+    val added = IndexBuilder.appendBatch(docsOf(_ % 2 == 1), dir, cfg, segNamespace = 1L << 40)
+    IndexBuilder.commitAppend(spark, dir, 1L << 40, added)
+  }
+
   private def topDocs(ix: InvertedIndex): Seq[(Long, Double)] =
     new Searcher(ix, ScoringMode.PreciseBM25())
       .search(TermQuery("spark"), 10).collect()
@@ -35,10 +41,10 @@ class SnapshotSpec extends AnyFunSuite {
     val before = topDocs(pinned)
     val statsBefore = pinned.collectionStats
 
-    IndexBuilder.appendBatch(docsOf(_ % 2 == 1), dir, cfg, segNamespace = 1L << 40)
+    val added = IndexBuilder.appendBatch(docsOf(_ % 2 == 1), dir, cfg, segNamespace = 1L << 40)
     // batch files exist but are uncommitted: a NEW reader still sees v1
-    assert(InvertedIndex.open(spark, dir).snapshot.map(_.version) == Some(1))
-    IndexBuilder.commitAppend(spark, dir, 1L << 40)
+    assert(InvertedIndex.open(spark, dir).snapshot.version == 1)
+    IndexBuilder.commitAppend(spark, dir, 1L << 40, added)
 
     val snaps = Snapshots.list(dir)
     assert(snaps.map(_.version) == Seq(1, 2))
@@ -60,8 +66,7 @@ class SnapshotSpec extends AnyFunSuite {
     IndexBuilder.build(docsOf(_ % 2 == 0), dir, cfg)
     val expected = topDocs(InvertedIndex.open(spark, dir))
     val expectedStats = InvertedIndex.open(spark, dir).collectionStats
-    IndexBuilder.appendBatch(docsOf(_ % 2 == 1), dir, cfg, segNamespace = 1L << 40)
-    IndexBuilder.commitAppend(spark, dir, 1L << 40)
+    appendOdd(dir, cfg)
 
     val tt = InvertedIndex.open(spark, dir, asOf = Some(1))
     assert(tt.collectionStats == expectedStats, "time-traveled stats differ")
@@ -73,17 +78,28 @@ class SnapshotSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-snap-exp-").toString
     val cfg = IndexConfig(SimpleAnalyzer, withPositions = true)
     IndexBuilder.build(docsOf(_ % 2 == 0), dir, cfg)
-    IndexBuilder.appendBatch(docsOf(_ % 2 == 1), dir, cfg, segNamespace = 1L << 40)
-    IndexBuilder.commitAppend(spark, dir, 1L << 40)
+    appendOdd(dir, cfg)
     val latestBefore = topDocs(InvertedIndex.open(spark, dir))
+    // each version records the doc count and Σdoclen of every namespace it
+    // names: v1 the even ids, v2 those plus the odd ids
+    val v1 = Snapshots.read(dir, 1)
+    val evens = InvertedIndex.open(spark, dir, asOf = Some(1)).docs
+      .agg(org.apache.spark.sql.functions.count("*"), org.apache.spark.sql.functions.sum("doclen"))
+      .as[(Long, Long)].head()
+    assert(v1.stats == Map(0L -> CollectionStats(evens._1, evens._2)))
 
     Snapshots.expire(dir, keepLast = 1)
     assert(Snapshots.list(dir).map(_.version) == Seq(2))
-    // v1 stats gone, v2 intact; namespace 0 still referenced by v2, retained
+    // v1 term stats gone, v2 intact with the counts it recorded; namespace 0
+    // still referenced by v2, retained
     assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(IndexBuilder.statsPath(dir, "stats", 1))))
+      java.nio.file.Paths.get(IndexBuilder.termStatsPath(dir, 1))))
     assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(IndexBuilder.statsPath(dir, "stats", 2))))
+      java.nio.file.Paths.get(IndexBuilder.termStatsPath(dir, 2))))
+    val v2 = Snapshots.read(dir, 2)
+    assert(v2.namespaces == Seq(0L, 1L << 40))
+    assert(v2.stats(0L) == v1.stats(0L))
+    assert(v2.collectionStats.docCount == docCount)
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$dir/data/kind=0/batchNs=0")))
     // latest reader unaffected
@@ -98,8 +114,7 @@ class SnapshotSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-snap-purge-").toString
     val cfg = IndexConfig(SimpleAnalyzer, withPositions = true)
     IndexBuilder.build(docsOf(_ % 2 == 0), dir, cfg)
-    IndexBuilder.appendBatch(docsOf(_ % 2 == 1), dir, cfg, segNamespace = 1L << 40)
-    IndexBuilder.commitAppend(spark, dir, 1L << 40)
+    appendOdd(dir, cfg)
     val full = InvertedIndex.open(spark, dir)
     val victim = spark.read.parquet(s"$sfDir/documents.parquet")
       .select($"doc_id").as[Long].collect().min
