@@ -3,7 +3,7 @@ package graft
 import graft.core._
 import graft.index._
 import graft.search._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Per-process cache of built indexes, keyed by testdata dir. */
@@ -23,18 +23,34 @@ object Indexes {
       g
     })
 
-  def documentsIndex(spark: SparkSession, sfDir: String): InvertedIndex =
-    cache.getOrElseUpdate(sfDir, {
+  /** An index of the `documents.parquet` rows that `filter` keeps, their
+    * `text` column replaced by `text`, built through `analyzer` into a
+    * fresh temp dir once per process under the cache key `sfDir#tag` (the
+    * untagged documents index: `sfDir`). `parallel` spreads a small input
+    * over the cluster first ([[graft.pipeline.TextOps.parallelized]]). */
+  private def variantIndex(spark: SparkSession, sfDir: String, tag: String, analyzer: Analyzer,
+      filter: Column = lit(true), text: Column = col("text"), withPositions: Boolean = true,
+      parallel: Boolean = false): InvertedIndex =
+    cache.getOrElseUpdate(if (tag.isEmpty) sfDir else s"$sfDir#$tag", {
       import spark.implicits._
-      val dir = java.nio.file.Files.createTempDirectory("graft-index-").toString
-      // a small corpus is one parquet file = one scan partition; spread the
-      // tokenize-heavy build over the cluster (no-op at real input scale)
-      val docs = graft.pipeline.TextOps.parallelized(
-          spark.read.parquet(s"$sfDir/documents.parquet"))
-        .select(col("doc_id").as("docId"), col("text"))
+      val dir = java.nio.file.Files.createTempDirectory(
+        if (tag.isEmpty) "graft-index-" else s"graft-index-$tag-").toString
+      val raw = spark.read.parquet(s"$sfDir/documents.parquet")
+      val docs = (if (parallel) graft.pipeline.TextOps.parallelized(raw) else raw)
+        .filter(filter)
+        .select(col("doc_id").as("docId"), text.as("text"))
         .as[InputDoc]
-      IndexBuilder.build(docs, dir, IndexConfig(SimpleAnalyzer, withPositions = true))
+      IndexBuilder.build(docs, dir, IndexConfig(analyzer, withPositions))
     })
+
+  /** The `doc_id % divisor = mod` shard. */
+  private def shard(mod: Int, divisor: Int = 7): Column = col("doc_id") % divisor === mod
+
+  // a small corpus is one parquet file = one scan partition; the shared
+  // documents index spreads its tokenize-heavy build over the cluster (no-op
+  // at real input scale)
+  def documentsIndex(spark: SparkSession, sfDir: String): InvertedIndex =
+    variantIndex(spark, sfDir, "", SimpleAnalyzer, parallel = true)
 
   def searcher(spark: SparkSession, sfDir: String): Searcher =
     new Searcher(documentsIndex(spark, sfDir), ScoringMode.PreciseBM25())
@@ -72,16 +88,7 @@ object Indexes {
     * phrases cannot match across a stopword, exactly the reference's
     * StopFilter semantics. */
   def stopIndex(spark: SparkSession, sfDir: String): InvertedIndex =
-    cache.getOrElseUpdate(sfDir + "#stop", {
-      import spark.implicits._
-      val dir = java.nio.file.Files.createTempDirectory("graft-index-stop-").toString
-      val docs = graft.pipeline.TextOps.parallelized(
-          spark.read.parquet(s"$sfDir/documents.parquet"))
-        .select(col("doc_id").as("docId"), col("text"))
-        .as[InputDoc]
-      IndexBuilder.build(docs, dir,
-        IndexConfig(SimpleStopAnalyzer(Analyzers.EnglishStopWords), withPositions = true))
-    })
+    variantIndex(spark, sfDir, "stop", SimpleStopAnalyzer(Analyzers.EnglishStopWords), parallel = true)
 
   /** A second indexed field — the first 5 tokens of `text` (a "title"
     * pseudo-field) — giving the multi-field operators (BM25F, blended term)
@@ -105,46 +112,22 @@ object Indexes {
     * acceleration (a shingled TermQuery answers what a positional
     * PhraseQuery computes at query time). */
   def shingleIndex(spark: SparkSession, sfDir: String): InvertedIndex =
-    cache.getOrElseUpdate(sfDir + "#shingle", {
-      import spark.implicits._
-      val dir = java.nio.file.Files.createTempDirectory("graft-index-shingle-").toString
-      val docs = graft.pipeline.TextOps.parallelized(
-          spark.read.parquet(s"$sfDir/documents.parquet"))
-        .select(col("doc_id").as("docId"), col("text"))
-        .as[InputDoc]
-      IndexBuilder.build(docs, dir,
-        IndexConfig(ShingleAnalyzer(SimpleAnalyzer, 2), withPositions = false))
-    })
+    variantIndex(spark, sfDir, "shingle", ShingleAnalyzer(SimpleAnalyzer, 2),
+      withPositions = false, parallel = true)
 
   /** Documents indexed through a char-trigram [[NGramAnalyzer]]: the
     * vocabulary is every 3-gram of every token — substring search becomes a
     * TermQuery (the reference's NGramTokenFilter use case). */
   def ngramIndex(spark: SparkSession, sfDir: String): InvertedIndex =
-    cache.getOrElseUpdate(sfDir + "#ngram", {
-      import spark.implicits._
-      val dir = java.nio.file.Files.createTempDirectory("graft-index-ngram-").toString
-      val docs = graft.pipeline.TextOps.parallelized(
-          spark.read.parquet(s"$sfDir/documents.parquet"))
-        .select(col("doc_id").as("docId"), col("text"))
-        .as[InputDoc]
-      IndexBuilder.build(docs, dir,
-        IndexConfig(NGramAnalyzer(SimpleAnalyzer, 3, 3), withPositions = false))
-    })
+    variantIndex(spark, sfDir, "ngram", NGramAnalyzer(SimpleAnalyzer, 3, 3),
+      withPositions = false, parallel = true)
 
   /** The `lang='de'` corpus slice indexed through the German analysis chain
     * ([[graft.core.GermanAnalyzer]]: tokenize → lowercase → stop(DE, position
     * increments kept) → light stem) — the per-language registry exercised end
     * to end with its own statistics. */
   def germanIndex(spark: SparkSession, sfDir: String): InvertedIndex =
-    cache.getOrElseUpdate(sfDir + "#de", {
-      import spark.implicits._
-      val dir = java.nio.file.Files.createTempDirectory("graft-index-de-").toString
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        .filter(col("lang") === "de")
-        .select(col("doc_id").as("docId"), col("text"))
-        .as[InputDoc]
-      IndexBuilder.build(docs, dir, IndexConfig(GermanAnalyzer(), withPositions = true))
-    })
+    variantIndex(spark, sfDir, "de", GermanAnalyzer(), col("lang") === "de")
 
   /** The `lang='de'` slice through the German chain WITH compound-word
     * decomposition ([[graft.core.CompoundWordDictionary]], the
@@ -155,44 +138,18 @@ object Indexes {
     * the oracle: customer→{cust,tom}, window→{win,dow}, spark→{park},
     * table→{tab,able}, column→{col,umn}. */
   def compoundGermanIndex(spark: SparkSession, sfDir: String): InvertedIndex =
-    cache.getOrElseUpdate(sfDir + "#decompound", {
-      import spark.implicits._
-      val dir = java.nio.file.Files.createTempDirectory("graft-index-decomp-").toString
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        .filter(col("lang") === "de")
-        .select(col("doc_id").as("docId"), col("text"))
-        .as[InputDoc]
-      IndexBuilder.build(docs, dir, IndexConfig(
-        GermanAnalyzer(compound = Some(CompoundWordDictionary(Set(
-          "cust", "tom", "win", "dow", "park", "tab", "able", "col", "umn")))),
-        withPositions = true))
-    })
+    variantIndex(spark, sfDir, "decompound", GermanAnalyzer(compound = Some(CompoundWordDictionary(Set(
+      "cust", "tom", "win", "dow", "park", "tab", "able", "col", "umn")))), col("lang") === "de")
 
   /** `lang='fr'` slice through the French chain ([[graft.core.FrenchAnalyzer]]:
     * tokenize → lowercase → elision → stop(FR) → light stem). */
   def frenchIndex(spark: SparkSession, sfDir: String): InvertedIndex =
-    cache.getOrElseUpdate(sfDir + "#fr", {
-      import spark.implicits._
-      val dir = java.nio.file.Files.createTempDirectory("graft-index-fr-").toString
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        .filter(col("lang") === "fr")
-        .select(col("doc_id").as("docId"), col("text"))
-        .as[InputDoc]
-      IndexBuilder.build(docs, dir, IndexConfig(FrenchAnalyzer(), withPositions = true))
-    })
+    variantIndex(spark, sfDir, "fr", FrenchAnalyzer(), col("lang") === "fr")
 
   /** `lang='es'` slice through the Spanish chain ([[graft.core.SpanishAnalyzer]]:
     * tokenize → lowercase → stop(ES) → light stem). */
   def spanishIndex(spark: SparkSession, sfDir: String): InvertedIndex =
-    cache.getOrElseUpdate(sfDir + "#es", {
-      import spark.implicits._
-      val dir = java.nio.file.Files.createTempDirectory("graft-index-es-").toString
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        .filter(col("lang") === "es")
-        .select(col("doc_id").as("docId"), col("text"))
-        .as[InputDoc]
-      IndexBuilder.build(docs, dir, IndexConfig(SpanishAnalyzer(), withPositions = true))
-    })
+    variantIndex(spark, sfDir, "es", SpanishAnalyzer(), col("lang") === "es")
 
   /** The `doc_id % 5 = 2` shard indexed through the Italian chain
     * ([[graft.core.ItalianAnalyzer]]: tokenize → elision → lowercase →
@@ -200,179 +157,121 @@ object Indexes {
     * deterministic shard stands in; the stemmer itself is pinned to the
     * reference's shipped itlight.txt vocabulary by ItalianPortugueseSpec. */
   def italianIndex(spark: SparkSession, sfDir: String): InvertedIndex =
-    cache.getOrElseUpdate(sfDir + "#it", {
-      import spark.implicits._
-      val dir = java.nio.file.Files.createTempDirectory("graft-index-it-").toString
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        .filter(col("doc_id") % 5 === 2)
-        .select(col("doc_id").as("docId"), col("text"))
-        .as[InputDoc]
-      IndexBuilder.build(docs, dir, IndexConfig(ItalianAnalyzer(), withPositions = true))
-    })
+    variantIndex(spark, sfDir, "it", ItalianAnalyzer(), shard(2, 5))
 
   /** The `doc_id % 5 = 4` shard through the Portuguese chain
     * ([[graft.core.PortugueseAnalyzer]]: tokenize → lowercase → stop(PT) →
     * light stem), pinned to ptlight.txt like [[italianIndex]]. */
   def portugueseIndex(spark: SparkSession, sfDir: String): InvertedIndex =
-    cache.getOrElseUpdate(sfDir + "#pt", {
-      import spark.implicits._
-      val dir = java.nio.file.Files.createTempDirectory("graft-index-pt-").toString
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        .filter(col("doc_id") % 5 === 4)
-        .select(col("doc_id").as("docId"), col("text"))
-        .as[InputDoc]
-      IndexBuilder.build(docs, dir, IndexConfig(PortugueseAnalyzer(), withPositions = true))
-    })
+    variantIndex(spark, sfDir, "pt", PortugueseAnalyzer(), shard(4, 5))
 
   /** The `doc_id % 5 = 1` shard through the Swedish chain
     * ([[graft.core.SwedishAnalyzer]]: tokenize → lowercase → stop(SV) →
     * light stem), pinned to the reference's svlight.txt vocabulary by
     * LightStemmersSpec. */
   def swedishIndex(spark: SparkSession, sfDir: String): InvertedIndex =
-    cache.getOrElseUpdate(sfDir + "#sv", {
-      import spark.implicits._
-      val dir = java.nio.file.Files.createTempDirectory("graft-index-sv-").toString
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        .filter(col("doc_id") % 5 === 1)
-        .select(col("doc_id").as("docId"), col("text"))
-        .as[InputDoc]
-      IndexBuilder.build(docs, dir, IndexConfig(SwedishAnalyzer(), withPositions = true))
-    })
+    variantIndex(spark, sfDir, "sv", SwedishAnalyzer(), shard(1, 5))
 
   /** The `doc_id % 5 = 3` shard through the Norwegian Bokmål chain
     * ([[graft.core.NorwegianAnalyzer]]: tokenize → lowercase → stop(NO) →
     * light stem, `NorwegianLightStemFilter`'s Bokmål-only default), pinned
     * to the reference's nb_light.txt vectors by LightStemmersSpec. */
   def norwegianIndex(spark: SparkSession, sfDir: String): InvertedIndex =
-    cache.getOrElseUpdate(sfDir + "#no", {
-      import spark.implicits._
-      val dir = java.nio.file.Files.createTempDirectory("graft-index-no-").toString
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        .filter(col("doc_id") % 5 === 3)
-        .select(col("doc_id").as("docId"), col("text"))
-        .as[InputDoc]
-      IndexBuilder.build(docs, dir, IndexConfig(NorwegianAnalyzer(), withPositions = true))
-    })
+    variantIndex(spark, sfDir, "no", NorwegianAnalyzer(), shard(3, 5))
 
   /** `doc_id % 7` shards through the five Snowball-family chains
     * ([[graft.core.DanishAnalyzer]] / [[graft.core.DutchAnalyzer]] /
     * [[graft.core.RomanianAnalyzer]] / [[graft.core.TurkishAnalyzer]] /
     * [[graft.core.GreekAnalyzer]]), each stemmer pinned to the reference
     * implementation's output over a generated vocabulary by SnowballSpec. */
-  private def snowballShard(spark: SparkSession, sfDir: String, tag: String,
-      mod: Int, analyzer: graft.core.Analyzer, divisor: Int = 7): InvertedIndex =
-    cache.getOrElseUpdate(sfDir + "#" + tag, {
-      import spark.implicits._
-      val dir = java.nio.file.Files.createTempDirectory(s"graft-index-$tag-").toString
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        .filter(col("doc_id") % divisor === mod)
-        .select(col("doc_id").as("docId"), col("text"))
-        .as[InputDoc]
-      IndexBuilder.build(docs, dir, IndexConfig(analyzer, withPositions = true))
-    })
-
   def danishIndex(spark: SparkSession, sfDir: String): InvertedIndex =
-    snowballShard(spark, sfDir, "da", 1, DanishAnalyzer())
+    variantIndex(spark, sfDir, "da", DanishAnalyzer(), shard(1))
   def dutchIndex(spark: SparkSession, sfDir: String): InvertedIndex =
-    snowballShard(spark, sfDir, "nl", 2, DutchAnalyzer())
+    variantIndex(spark, sfDir, "nl", DutchAnalyzer(), shard(2))
   def romanianIndex(spark: SparkSession, sfDir: String): InvertedIndex =
-    snowballShard(spark, sfDir, "ro", 3, RomanianAnalyzer())
+    variantIndex(spark, sfDir, "ro", RomanianAnalyzer(), shard(3))
   def turkishIndex(spark: SparkSession, sfDir: String): InvertedIndex =
-    snowballShard(spark, sfDir, "tr", 4, TurkishAnalyzer())
+    variantIndex(spark, sfDir, "tr", TurkishAnalyzer(), shard(4))
   def greekIndex(spark: SparkSession, sfDir: String): InvertedIndex =
-    snowballShard(spark, sfDir, "el", 5, GreekAnalyzer())
+    variantIndex(spark, sfDir, "el", GreekAnalyzer(), shard(5))
   def bulgarianIndex(spark: SparkSession, sfDir: String): InvertedIndex =
-    snowballShard(spark, sfDir, "bg", 1, BulgarianAnalyzer(), divisor = 11)
+    variantIndex(spark, sfDir, "bg", BulgarianAnalyzer(), shard(1, 11))
   def latvianIndex(spark: SparkSession, sfDir: String): InvertedIndex =
-    snowballShard(spark, sfDir, "lv", 2, LatvianAnalyzer(), divisor = 11)
+    variantIndex(spark, sfDir, "lv", LatvianAnalyzer(), shard(2, 11))
   def hindiIndex(spark: SparkSession, sfDir: String): InvertedIndex =
-    snowballShard(spark, sfDir, "hi", 3, HindiAnalyzer(), divisor = 11)
+    variantIndex(spark, sfDir, "hi", HindiAnalyzer(), shard(3, 11))
   def bengaliIndex(spark: SparkSession, sfDir: String): InvertedIndex =
-    snowballShard(spark, sfDir, "bn", 4, BengaliAnalyzer(), divisor = 11)
+    variantIndex(spark, sfDir, "bn", BengaliAnalyzer(), shard(4, 11))
   def irishIndex(spark: SparkSession, sfDir: String): InvertedIndex =
-    snowballShard(spark, sfDir, "ga", 5, IrishAnalyzer(), divisor = 11)
+    variantIndex(spark, sfDir, "ga", IrishAnalyzer(), shard(5, 11))
   def armenianIndex(spark: SparkSession, sfDir: String): InvertedIndex =
-    snowballShard(spark, sfDir, "hy", 6, ArmenianAnalyzer(), divisor = 11)
+    variantIndex(spark, sfDir, "hy", ArmenianAnalyzer(), shard(6, 11))
   def lithuanianIndex(spark: SparkSession, sfDir: String): InvertedIndex =
-    snowballShard(spark, sfDir, "lt", 7, LithuanianAnalyzer(), divisor = 11)
+    variantIndex(spark, sfDir, "lt", LithuanianAnalyzer(), shard(7, 11))
   def catalanIndex(spark: SparkSession, sfDir: String): InvertedIndex =
-    snowballShard(spark, sfDir, "ca", 8, CatalanAnalyzer(), divisor = 11)
+    variantIndex(spark, sfDir, "ca", CatalanAnalyzer(), shard(8, 11))
   def basqueIndex(spark: SparkSession, sfDir: String): InvertedIndex =
-    snowballShard(spark, sfDir, "eu", 9, BasqueAnalyzer(), divisor = 11)
+    variantIndex(spark, sfDir, "eu", BasqueAnalyzer(), shard(9, 11))
   def estonianIndex(spark: SparkSession, sfDir: String): InvertedIndex =
-    snowballShard(spark, sfDir, "et", 10, EstonianAnalyzer(), divisor = 11)
+    variantIndex(spark, sfDir, "et", EstonianAnalyzer(), shard(10, 11))
 
   def teluguIndex(spark: SparkSession, sfDir: String): InvertedIndex =
-    snowballShard(spark, sfDir, "te", 7, TeluguAnalyzer(), divisor = 13)
+    variantIndex(spark, sfDir, "te", TeluguAnalyzer(), shard(7, 13))
 
   def nepaliIndex(spark: SparkSession, sfDir: String): InvertedIndex =
-    snowballShard(spark, sfDir, "ne", 8, NepaliAnalyzer(), divisor = 13)
+    variantIndex(spark, sfDir, "ne", NepaliAnalyzer(), shard(8, 13))
 
   def tamilIndex(spark: SparkSession, sfDir: String): InvertedIndex =
-    snowballShard(spark, sfDir, "ta", 9, TamilAnalyzer(), divisor = 13)
+    variantIndex(spark, sfDir, "ta", TamilAnalyzer(), shard(9, 13))
 
   def serbianIndex(spark: SparkSession, sfDir: String): InvertedIndex =
-    snowballShard(spark, sfDir, "sr", 10, SerbianAnalyzer(), divisor = 13)
+    variantIndex(spark, sfDir, "sr", SerbianAnalyzer(), shard(10, 13))
 
   def phoneticIndex(spark: SparkSession, sfDir: String): InvertedIndex =
-    snowballShard(spark, sfDir, "phonetic", 0,
-      DoubleMetaphoneAnalyzer(maxCodeLength = 4, inject = false), divisor = 13)
+    variantIndex(spark, sfDir, "phonetic",
+      DoubleMetaphoneAnalyzer(maxCodeLength = 4, inject = false), shard(0, 13))
 
   def soundexIndex(spark: SparkSession, sfDir: String): InvertedIndex =
-    snowballShard(spark, sfDir, "soundex", 6,
-      PhoneticAnalyzer("Soundex", inject = true), divisor = 17)
+    variantIndex(spark, sfDir, "soundex", PhoneticAnalyzer("Soundex", inject = true), shard(6, 17))
 
   /** Reversed side index: `*suffix` queries become PREFIX scans of the
     * reversed dictionary — dictionary-pruned instead of a full term scan. */
   def reversedIndex(spark: SparkSession, sfDir: String): InvertedIndex =
-    snowballShard(spark, sfDir, "reversed", 8,
-      ReverseStringAnalyzer(SimpleAnalyzer), divisor = 17)
+    variantIndex(spark, sfDir, "reversed", ReverseStringAnalyzer(SimpleAnalyzer), shard(8, 17))
 
   /** Hunspell dictionary gate: a user `.aff`/`.dic` asset whose SFX E rule
     * unmunches merge/table/value back to their dictionary stems; every other
     * corpus word passes through (no stems → original token). */
   def hunspellIndex(spark: SparkSession, sfDir: String): InvertedIndex =
-    snowballShard(spark, sfDir, "hunspell", 1,
-      HunspellAnalyzer(graft.core.Hunspell.parse(
-        "SET UTF-8\nSFX E Y 1\nSFX E 0 e .\n",
-        "4\nmerg/E\ntabl/E\nvalu/E\nspark\n")), divisor = 13)
+    variantIndex(spark, sfDir, "hunspell", HunspellAnalyzer(graft.core.Hunspell.parse(
+      "SET UTF-8\nSFX E Y 1\nSFX E 0 e .\n",
+      "4\nmerg/E\ntabl/E\nvalu/E\nspark\n")), shard(1, 13))
 
   /** WordDelimiterGraph gate: every doc's text dash-joined into ONE token,
     * split back into its word parts by the filter — the parts reconstruct
     * the original token stream exactly (same terms, same positions), so
     * the plain-tokenization oracle applies. */
   def wordDelimiterIndex(spark: SparkSession, sfDir: String): InvertedIndex =
-    cache.getOrElseUpdate(sfDir + "#wdgf", {
-      import spark.implicits._
-      val dir = java.nio.file.Files.createTempDirectory("graft-index-wdgf-").toString
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        .filter(col("doc_id") % 17 === 7)
-        .select(col("doc_id").as("docId"),
-          translate(col("text"), " ", "-").as("text"))
-        .as[InputDoc]
-      IndexBuilder.build(docs, dir, IndexConfig(
-        WordDelimiterGraphAnalyzer(PatternAnalyzer("[ \\t\\n\\r]+"),
-          WordDelimiter.GENERATE_WORD_PARTS),
-        withPositions = true))
-    })
+    variantIndex(spark, sfDir, "wdgf",
+      WordDelimiterGraphAnalyzer(PatternAnalyzer("[ \\t\\n\\r]+"), WordDelimiter.GENERATE_WORD_PARTS),
+      shard(7, 17), translate(col("text"), " ", "-"))
 
   def englishExclusionIndex(spark: SparkSession, sfDir: String): InvertedIndex =
-    snowballShard(spark, sfDir, "en-excl", 2,
-      EnglishAnalyzer(stemExclusions = Set("merge", "query")), divisor = 13)
+    variantIndex(spark, sfDir, "en-excl",
+      EnglishAnalyzer(stemExclusions = Set("merge", "query")), shard(2, 13))
 
   def commonGramsIndex(spark: SparkSession, sfDir: String): InvertedIndex =
-    snowballShard(spark, sfDir, "cgrams", 5,
-      CommonGramsAnalyzer(SimpleAnalyzer, Set("a", "the")), divisor = 13)
+    variantIndex(spark, sfDir, "cgrams",
+      CommonGramsAnalyzer(SimpleAnalyzer, Set("a", "the")), shard(5, 13))
 
   def patternIndex(spark: SparkSession, sfDir: String): InvertedIndex =
-    snowballShard(spark, sfDir, "pattern", 4,
-      PatternAnalyzer("st[a-z]+", group = 0), divisor = 13)
+    variantIndex(spark, sfDir, "pattern", PatternAnalyzer("st[a-z]+", group = 0), shard(4, 13))
 
   def galicianIndex(spark: SparkSession, sfDir: String): InvertedIndex =
-    snowballShard(spark, sfDir, "gl", 11, GalicianAnalyzer(), divisor = 13)
+    variantIndex(spark, sfDir, "gl", GalicianAnalyzer(), shard(11, 13))
 
   def brazilianIndex(spark: SparkSession, sfDir: String): InvertedIndex =
-    snowballShard(spark, sfDir, "br", 12, BrazilianAnalyzer(), divisor = 13)
+    variantIndex(spark, sfDir, "br", BrazilianAnalyzer(), shard(12, 13))
 
   /** The reference's `TestThaiAnalyzer` phrase appended to every doc of the
     * `doc_id % 13 = 6` shard, indexed through the Thai chain
@@ -383,16 +282,8 @@ object Indexes {
     * at their stop-hole positions; segmentation itself is pinned by
     * ThaiSpec's reference vectors. */
   def thaiIndex(spark: SparkSession, sfDir: String): InvertedIndex =
-    cache.getOrElseUpdate(sfDir + "#th", {
-      import spark.implicits._
-      val dir = java.nio.file.Files.createTempDirectory("graft-index-th-").toString
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        .filter(col("doc_id") % 13 === 6)
-        .select(col("doc_id").as("docId"),
-          concat(col("text"), lit(" การที่ได้ต้องแสดงว่างานดี")).as("text"))
-        .as[InputDoc]
-      IndexBuilder.build(docs, dir, IndexConfig(ThaiAnalyzer(), withPositions = true))
-    })
+    variantIndex(spark, sfDir, "th", ThaiAnalyzer(), shard(6, 13),
+      concat(col("text"), lit(" การที่ได้ต้องแสดงว่างานดี")))
 
   /** The `lang='zh'` corpus slice indexed through the CJK chain
     * ([[graft.core.CjkAnalyzer]]: tokenize → width fold → lowercase → CJK
@@ -401,15 +292,7 @@ object Indexes {
     * word+stop (the DuckDB oracle replays exactly that); the bigram/width
     * machinery itself is pinned by CjkSpec's reference test vectors. */
   def cjkIndex(spark: SparkSession, sfDir: String): InvertedIndex =
-    cache.getOrElseUpdate(sfDir + "#zh", {
-      import spark.implicits._
-      val dir = java.nio.file.Files.createTempDirectory("graft-index-zh-").toString
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        .filter(col("lang") === "zh")
-        .select(col("doc_id").as("docId"), col("text"))
-        .as[InputDoc]
-      IndexBuilder.build(docs, dir, IndexConfig(CjkAnalyzer(), withPositions = true))
-    })
+    variantIndex(spark, sfDir, "zh", CjkAnalyzer(), col("lang") === "zh")
 
   /** Doc-major term vectors over the shared documents index
     * ([[graft.index.TermVectors]]): one postings transpose, cached. */

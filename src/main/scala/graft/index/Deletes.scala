@@ -8,8 +8,9 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   *
   *  - [[tombstone]] appends deleted doc ids under `dir/deletes` — a commit
   *    of intent, no data rewritten. A reopened [[InvertedIndex]] exposes
-  *    them and [[graft.search.Searcher]] anti-joins every match set against
-  *    them (the liveDocs filter). Collection/term statistics intentionally
+  *    them ([[InvertedIndex.deadDocIds]]): [[graft.search.Searcher]]'s
+  *    kernels skip them and its exhaustive plans anti-join them (the
+  *    liveDocs filter). Collection/term statistics intentionally
   *    KEEP counting tombstoned docs — exactly the reference's semantics,
   *    where docFreq/docCount ignore deletions until segments are rewritten;
   *  - [[SegmentMerger.merge]] purges: tombstoned postings are dropped during

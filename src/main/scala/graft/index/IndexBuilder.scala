@@ -167,7 +167,7 @@ object IndexBuilder {
     // snapshot log: fresh build = v1 over the base namespace; a resumed build
     // completes the SAME commit, so it must not stack a second version
     if (!resume) Snapshots.clear(dir)
-    refreshTermStats(spark, dir, version = 1)
+    refreshTermStats(spark, dir, version = 1, namespaces = Seq(0L))
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$dir/analyzer"), config.analyzer.name)
     if (Snapshots.latest(dir).isEmpty) {
@@ -221,9 +221,9 @@ object IndexBuilder {
   private[graft] def commitAppend(spark: SparkSession, dir: String, segNamespace: Long,
                                   stats: CollectionStats): Snapshots.Snapshot = {
     val prior = Snapshots.latest(dir)
-    refreshTermStats(spark, dir, version = prior.map(_.version + 1).getOrElse(1))
-    Snapshots.commit(dir, "append",
-      prior.fold(Map.empty[Long, CollectionStats])(_.stats) + (segNamespace -> stats))
+    val committed = prior.fold(Map.empty[Long, CollectionStats])(_.stats) + (segNamespace -> stats)
+    refreshTermStats(spark, dir, version = prior.map(_.version + 1).getOrElse(1), committed.keys)
+    Snapshots.commit(dir, "append", committed)
   }
 
   /** Index-level ingest WITHOUT re-analysis — the reference's
@@ -297,9 +297,9 @@ object IndexBuilder {
       d.select("docId").write.mode("append").parquet(s"$targetDir/deletes")
     }
     val prior = Snapshots.latest(targetDir)
-    refreshTermStats(spark, targetDir, version = prior.map(_.version + 1).getOrElse(1))
-    Snapshots.commit(targetDir, "addIndexes",
-      prior.fold(Map.empty[Long, CollectionStats])(_.stats) + (newNs -> source.collectionStats))
+    val committed = prior.fold(Map.empty[Long, CollectionStats])(_.stats) + (newNs -> source.collectionStats)
+    refreshTermStats(spark, targetDir, version = prior.map(_.version + 1).getOrElse(1), committed.keys)
+    Snapshots.commit(targetDir, "addIndexes", committed)
   }
 
   /** Diagnostic hook: a raw SegmentFlusher iterator (graft.tools.BuildProbe). */
@@ -308,12 +308,15 @@ object IndexBuilder {
     new SegmentFlusher(cfg, segNamespace, pid, docs)
 
   /** Recompute the global term statistics (per-term df/ttf) of snapshot
-    * `version` from the segment data, summed from the postings rows' scalar
-    * partials (the nested `blocks` payload is never read). The only shuffle
-    * of the build; partial (map-side) aggregation makes it skew-proof — a
-    * head term contributes one partial count per task, not its postings. */
-  private[graft] def refreshTermStats(spark: SparkSession, dir: String, version: Int): Unit =
-    readData(spark, dir).filter(col("kind") === 1)
+    * `version` from the segment data of its `namespaces`, summed from the
+    * postings rows' scalar partials (the nested `blocks` payload is never
+    * read). A `batchNs` partition the snapshot does not name — a micro-batch
+    * written but never committed — is not counted. The only shuffle of the
+    * build; partial (map-side) aggregation makes it skew-proof — a head term
+    * contributes one partial count per task, not its postings. */
+  private[graft] def refreshTermStats(spark: SparkSession, dir: String, version: Int,
+                                      namespaces: Iterable[Long]): Unit =
+    readData(spark, dir).filter(col("kind") === 1 && col("batchNs").isin(namespaces.toSeq: _*))
       .groupBy(col("term"))
       .agg(sum(col("df")).cast("long").as("df"), sum(col("ttf")).as("ttf"))
       .write.mode("overwrite").parquet(termStatsPath(dir, version))
@@ -620,6 +623,16 @@ final class InvertedIndex private (
       .reduceOption(_ unionAll _).map(_.distinct())
   }
 
+  /** The ids of [[deletedDocs]], sorted: the docs the search kernels skip
+    * (`graft.search.Accept`). Collected on the driver by [[warm]], else on
+    * first use; empty, with no job, when no tombstone is pending. Read it
+    * on the driver only: a task's copy of the index does not hold it. */
+  @transient lazy val deadDocIds: Array[Long] = deletedDocs.fold(Array.emptyLongArray) { d =>
+    val ids = d.select(col("docId").cast("long")).collect().map(_.getLong(0))
+    java.util.Arrays.sort(ids)
+    ids
+  }
+
   @transient @volatile private var warmStats: Map[String, (Long, Long)] = null
 
   // @transient like warmStats: task closures capture this index, and the
@@ -641,7 +654,8 @@ final class InvertedIndex private (
     * when the cached postings fit an eighth of the driver heap — a size Spark
     * measured while caching them, so the check runs no job. The searcher then
     * runs a small query's kernel on the driver, with no job at all. The
-    * cluster cache stays: the batch pass and the multi-slice plans read it. */
+    * cluster cache stays: the batch pass and the multi-slice plans read it.
+    * The pending tombstones' ids ([[deadDocIds]]) are collected too. */
   def warm(): this.type = warmWithin(Runtime.getRuntime.maxMemory / 8)
 
   /** [[warm]] with the resident blocks' byte budget given: the blocks become
@@ -662,6 +676,7 @@ final class InvertedIndex private (
       }
       resident = byTerm.iterator.map { case (t, b) => t -> b.result() }.toMap
     }
+    deadDocIds // collected now, not by the first query
     this
   }
 

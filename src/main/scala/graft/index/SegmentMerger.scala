@@ -318,7 +318,7 @@ object SegmentMerger {
         .parquet(s"$targetDir/data")
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"$targetDir/analyzer"), index.analyzer.name)
-      IndexBuilder.refreshTermStats(spark, targetDir, version = 1)
+      IndexBuilder.refreshTermStats(spark, targetDir, version = 1, namespaces = Seq(0L))
       counter.stats
     } else {
       // Docs, segment manifests and global stats are merge-invariant: the

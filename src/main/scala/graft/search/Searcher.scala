@@ -2,6 +2,7 @@ package graft.search
 
 import graft.core._
 import graft.index.InvertedIndex
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.expressions.Window
@@ -125,18 +126,18 @@ object ScoringMode {
 }
 
 /** A query answered by one kernel over the posting blocks of its terms
-  * (`dfs`: term → df): `kernel(rows, lo, hi)` scores the docs in `[lo, hi]`
-  * of the `(term, block)` rows it is given. No terms: no rows.
+  * (`dfs`: term → df): `kernel(rows, accept)` scores the docs `accept`
+  * holds of the `(term, block)` rows it is given. No terms: no rows.
   * [[Searcher]] plans it as doc-range slices or runs it on the driver. */
 private[search] final case class Routed(dfs: Map[String, Long],
-    kernel: (Iterator[(String, PostingBlock)], Long, Long) => Iterator[(Long, Double)]) {
+    kernel: (Iterator[(String, PostingBlock)], Accept) => Iterator[(Long, Double)]) {
 
   /** Σdf of the terms. */
   def postings: Long = dfs.valuesIterator.sum
 
-  /** The kernel over the blocks `blocks(t)` of each term t, in `[lo, hi]`. */
-  def over(blocks: String => Iterator[PostingBlock], lo: Long, hi: Long): Iterator[(Long, Double)] =
-    kernel(dfs.keysIterator.flatMap(t => blocks(t).map(b => (t, b))), lo, hi)
+  /** The kernel over the blocks `blocks(t)` of each term t. */
+  def over(blocks: String => Iterator[PostingBlock], accept: Accept): Iterator[(Long, Double)] =
+    kernel(dfs.keysIterator.flatMap(t => blocks(t).map(b => (t, b))), accept)
 }
 
 /** Distributed query execution over an [[InvertedIndex]].
@@ -192,8 +193,10 @@ private[search] final case class Routed(dfs: Map[String, Long],
   * slice plan, every slice running each query's kernel. A local relation
   * inside a larger plan (a phrase in a boolean) is an ordinary DataFrame.
   * A warm index without resident blocks reads the R = 1 rows into ONE
-  * partition instead: one job, one stage, one task. Pending tombstones send
-  * every query to the exhaustive plan.
+  * partition instead: one job, one stage, one task. Pending tombstones
+  * change no plan: each kernel's [[Accept]] holds the deleted ids
+  * ([[InvertedIndex.deadDocIds]], the reference's `liveDocs` passed to
+  * `BulkScorer.score`); only the exhaustive join plans anti-join them.
   */
 final class Searcher(
     val index: InvertedIndex,
@@ -371,6 +374,10 @@ final class Searcher(
       .select("b.*")
       .as[PostingBlock]
 
+  /** The doc ids of `blocks`, decoded without freqs or norms. */
+  private def docIds(blocks: Dataset[PostingBlock]): Dataset[Long] =
+    blocks.mapPartitions(it => it.flatMap(b => PostingsCodec.decodeDocIds(b).iterator))
+
   private def decodeScored(blocks: Dataset[PostingBlock], scorer: (Int, Int) => Double): DataFrame =
     blocks.mapPartitions { it =>
       it.flatMap { b =>
@@ -477,8 +484,7 @@ final class Searcher(
   /** Build the lead filter over `term`'s postings (`df` of them). */
   private def buildLeadFilter(term: String, df: Long): LeadFilter = {
     if (df <= LeapfrogMaxDf) {
-      val docs = blocksOf(term)
-        .mapPartitions(it => it.flatMap(b => PostingsCodec.decodeDocIds(b).iterator)).collect()
+      val docs = docIds(blocksOf(term)).collect()
       java.util.Arrays.sort(docs)
       new LeadFilter(spark.sparkContext.broadcast(docs), 0)
     } else {
@@ -509,8 +515,8 @@ final class Searcher(
   private def positionalRoute(terms: Seq[String], lead: Seq[String], stats: Map[String, TermStats],
       freq: (String => Array[Int]) => Double, score: (Double, Int) => Double): Routed = {
     val leadSet = lead.toSet
-    Routed(terms.map(t => t -> stats(t).docFreq).toMap, (rows, lo, hi) =>
-      Positional.matchingDocs(SingleTask.byTerm(rows), leadSet, lo, hi, freq)
+    Routed(terms.map(t => t -> stats(t).docFreq).toMap, (rows, accept) =>
+      Positional.matchingDocs(SingleTask.byTerm(rows), leadSet, accept, freq)
         .map { case (doc, f, dl) => (doc, score(f, dl)) })
   }
 
@@ -704,44 +710,35 @@ final class Searcher(
     expansionBlocks(termPred, dictFirst) match {
       case None => emptyFrame
       case Some(blocks) =>
-        blocks
-          // doc-ids-only decode: a wide expansion (e.g. [a TO z]) touches much
-          // of the vocabulary — skipping freq/norm decode cuts the scan ~3x
-          .mapPartitions(it => it.flatMap(b => PostingsCodec.decodeDocIds(b).iterator))
-          .toDF("docId")
+        // doc-ids-only decode: a wide expansion (e.g. [a TO z]) touches much
+        // of the vocabulary — skipping freq/norm decode cuts the scan ~3x
+        docIds(blocks).toDF("docId")
           .distinct()
           .withColumn("score", lit(boost))
     }
 
-  /** Top-k of a constant-score expansion = the k smallest matching doc ids
-    * (score ties break docId asc). Metadata-pruned: the k smallest DISTINCT
-    * `firstDoc` values f₁<…<f_k of the matching blocks are themselves real
-    * matching doc ids, so the k-th result doc ≤ f_k =: T, and every result
-    * doc lives in a block with `firstDoc ≤ T` — only those blocks are
-    * decoded. A wide range query on a sorted corpus decodes a handful of
-    * blocks instead of much of the vocabulary (the r1 p95 tail). */
+  /** Top-k of a constant-score expansion = the k smallest live matching
+    * doc ids (score ties break docId asc). Metadata-pruned: the n = k + D
+    * smallest DISTINCT `firstDoc` values f₁<…<f_n of the matching blocks (D
+    * pending tombstones) are themselves real matching doc ids, at least k
+    * of them live, so the k-th result doc ≤ f_n =: T, and every result doc
+    * lives in a block with `firstDoc ≤ T` — only those blocks are decoded.
+    * A wide range query on a sorted corpus decodes a handful of blocks
+    * instead of much of the vocabulary (the r1 p95 tail). */
   private def expansionTopK(termPred: org.apache.spark.sql.Column, boost: Double,
                             k: Int, dictFirst: Boolean): DataFrame =
     expansionBlocks(termPred, dictFirst) match {
       case None => emptyFrame
       case Some(blocks) =>
+        val n = withDeletes(k)
         val firsts = blocks.select(col("firstDoc")).distinct()
-          .orderBy(asc("firstDoc")).limit(k).as[Long].collect()
-        val full = () => blocks
-          .mapPartitions(it => it.flatMap(b => PostingsCodec.decodeDocIds(b).iterator))
-          .toDF("docId").distinct()
+          .orderBy(asc("firstDoc")).limit(n).as[Long].collect()
+        // fewer than n blocks: every doc is a candidate
+        val t = if (firsts.length < n) Long.MaxValue else firsts.last
+        val candidates = docIds(blocks.filter(col("firstDoc") <= lit(t))).filter(col("value") <= lit(t))
+        applyLive(candidates.toDF("docId").distinct())
           .orderBy(asc("docId")).limit(k)
           .withColumn("score", lit(boost))
-        if (firsts.length < k) full()
-        else {
-          val t = firsts.last
-          blocks.filter(col("firstDoc") <= lit(t))
-            .mapPartitions(it => it.flatMap(b => PostingsCodec.decodeDocIds(b).iterator))
-            .filter(col("value") <= lit(t))
-            .toDF("docId").distinct()
-            .orderBy(asc("docId")).limit(k)
-            .withColumn("score", lit(boost))
-        }
     }
 
   /** Scored fuzzy ([[ScoredFuzzyQuery]]) — the reference's default
@@ -849,17 +846,21 @@ final class Searcher(
 
   // ------------------------------------------------------------- compile
 
-  /** Pending tombstones of this index version ([[graft.index.Deletes]]). */
-  private lazy val tombstones: Option[DataFrame] = index.deletedDocs
-
-  /** liveDocs filter: drop tombstoned docs from a match set. Statistics stay
+  /** liveDocs filter of the exhaustive plans: drop tombstoned docs
+    * ([[graft.index.Deletes]]) from a match set. Statistics stay
     * deletion-blind by design — the reference's docFreq/docCount also count
     * deleted docs until segments are rewritten. */
-  private def applyLive(df: DataFrame): DataFrame = tombstones match {
+  private def applyLive(df: DataFrame): DataFrame = index.deletedDocs match {
     case Some(d) => df.join(broadcast(d.select(col("docId").as("delId"))),
       col("docId") === col("delId"), "left_anti").drop("delId")
     case None => df
   }
+
+  /** [[InvertedIndex.deadDocIds]] for the tasks of the slice plans and [[searchByIndexOrder]]. */
+  private lazy val deadIds: Broadcast[Array[Long]] = spark.sparkContext.broadcast(index.deadDocIds)
+
+  /** k + D, D pending tombstones: that many distinct matches hold k live. */
+  private def withDeletes(k: Int): Int = math.min(k.toLong + index.deadDocIds.length, Int.MaxValue).toInt
 
   /** Compile a query to its full scored doc set `(docId, score)`. */
   def scored(q: Query): DataFrame = {
@@ -1098,7 +1099,7 @@ final class Searcher(
     keys
   }
 
-  private val NoRows = Routed(Map.empty, (_, _, _) => Iterator.empty)
+  private val NoRows = Routed(Map.empty, (_, _) => Iterator.empty)
 
   /** R = ceil(postings / 2^16) doc-range slices, at most the default
     * parallelism. */
@@ -1112,7 +1113,7 @@ final class Searcher(
     * no job. */
   private def onDriver(route: Routed): Option[Iterator[(Long, Double)]] =
     index.residentBlocks.filter(_ => sliceCount(route.postings) == 1).map { blocks =>
-      route.over(t => blocks.get(t).iterator.flatMap(_.iterator), Long.MinValue, Long.MaxValue)
+      route.over(t => blocks.get(t).iterator.flatMap(_.iterator), Accept(dead = index.deadDocIds))
     }
 
   /** The scored rows of `route`'s kernel over the doc-range slices of its
@@ -1129,17 +1130,19 @@ final class Searcher(
     * `min(d / w, R − 1)`, a block goes to every slice its
     * `[firstDoc, lastDoc]` overlaps, so each slice holds the complete
     * postings of its docs on a built index and on a merged one, and the
-    * kernel keeps only the docs of `[lo, hi]`, so the clamp keeps the slices
-    * exact for any spread of doc ids. At R = 1 a [[InvertedIndex.warm]]ed
+    * kernel keeps only the docs of `[lo, hi]` (its [[Accept]], which also
+    * holds the broadcast deleted ids), so the clamp keeps the slices exact
+    * for any spread of doc ids. At R = 1 a [[InvertedIndex.warm]]ed
     * index reads the rows into ONE partition (one job, one stage, one
     * task). Everything else shuffles the terms' encoded blocks into R
     * partitions, slice s to reduce task s. */
   private def slices[T: Encoder](dfs: Map[String, Long],
-      kernel: (Iterator[(String, PostingBlock)], Long, Long) => Iterator[T]): Dataset[T] = {
+      kernel: (Iterator[(String, PostingBlock)], Accept) => Iterator[T]): Dataset[T] = {
     val terms = dfs.keys.toSeq
     val r = sliceCount(dfs.valuesIterator.sum)
+    val dead = deadIds
     if (r == 1 && index.warmTermStats.isDefined)
-      termBlocks(terms).coalesce(1).mapPartitions(it => kernel(it, Long.MinValue, Long.MaxValue))
+      termBlocks(terms).coalesce(1).mapPartitions(it => kernel(it, Accept(dead = dead.value)))
     else {
       val w = math.max(1L, (cs.docCount + r - 1) / r)
       val sliceOf: Long => Int = d => math.min(math.max(d / w, 0L), r - 1L).toInt
@@ -1154,9 +1157,9 @@ final class Searcher(
           if (!rows.hasNext) Iterator.empty
           else {
             val s = rows.head._2
-            kernel(rows.map(x => (x._3, x._4)),
+            kernel(rows.map(x => (x._3, x._4)), Accept(
               if (s == 0) Long.MinValue else s * w,
-              if (s == r - 1) Long.MaxValue else (s + 1) * w - 1)
+              if (s == r - 1) Long.MaxValue else (s + 1) * w - 1, dead.value))
           }
         }
     }
@@ -1177,17 +1180,17 @@ final class Searcher(
     }
     val (nMust, msm) = (f.nMust, f.msm)
     val dfs = clauses.iterator.map(_.term).filter(stats.contains).map(t => t -> stats(t).docFreq).toMap
-    Routed(dfs, (rows, lo, hi) => SingleTask.flatTopK(rows, clauses, scorers, nMust, msm, k, lo, hi))
+    Routed(dfs, (rows, accept) => SingleTask.flatTopK(rows, clauses, scorers, nMust, msm, k, accept))
   }
 
   /** The top-k plan of a flat term query, merged by one TakeOrdered over
     * its slices, or None for any other shape. A cold index runs the
-    * exhaustive join plan up to `pruneThreshold` postings. */
+    * exhaustive join plan, live docs only, up to `pruneThreshold` postings. */
   private def flatPlan(q: Query, k: Int): Option[DataFrame] = flatQuery(q).map { f =>
     val stats = lookupStats(f.clauses.map(_.term).toSet)
     val route = flatRoute(f, stats, k)
     if (index.warmTermStats.isEmpty && route.dfs.nonEmpty && route.postings <= pruneThreshold)
-      topK(compile(q, stats, 1.0), k)
+      topK(applyLive(compile(q, stats, 1.0)), k)
     else topK(sliced(route), k)
   }
 
@@ -1202,8 +1205,8 @@ final class Searcher(
     if (index.warmTermStats.isEmpty) return None
     q match {
       case e @ (_: PrefixQuery | _: TermRangeQuery | _: TermInSetQuery) =>
-        dictionaryMatches(e).map(dfs => Routed(dfs, (rows, lo, hi) =>
-          SingleTask.smallestDocs(rows.map(_._2), k, lo, hi).map(d => (d, 1.0))))
+        dictionaryMatches(e).map(dfs => Routed(dfs, (rows, accept) =>
+          SingleTask.smallestDocs(rows.map(_._2), k, accept).map(d => (d, 1.0))))
       case _ => None
     }
   }
@@ -1211,7 +1214,7 @@ final class Searcher(
   /** The route of a (boosted) positional query whose terms the dictionary
     * knows without a job — no prefix or wildcard interval source — or
     * None. `stats` covers its exact terms. */
-  private def positionalTopRoute(q: Query, stats: Map[String, TermStats],
+  private def positionalTopRoute(q: Query, stats: => Map[String, TermStats],
       boost: Double = 1.0): Option[Routed] = q match {
     case BoostQuery(inner, b) => positionalTopRoute(inner, stats, boost * b)
     case IntervalQuery(src) if Intervals.hasMultiTerm(src) => None
@@ -1223,8 +1226,9 @@ final class Searcher(
 
   /** The route of the rewritten query `q` — a flat term query, a small
     * prefix / range / term-set expansion on a warm index or a positional
-    * query — or None. `stats` covers its exact terms. */
-  private def route(q: Query, stats: Map[String, TermStats], k: Int): Option[Routed] =
+    * query — or None. `stats` covers its exact terms; other shapes do not
+    * read it. */
+  private def route(q: Query, stats: => Map[String, TermStats], k: Int): Option[Routed] =
     flatQuery(q).map(flatRoute(_, stats, k)).orElse(expansionRoute(q, k))
       .orElse(positionalTopRoute(q, stats))
 
@@ -1323,39 +1327,33 @@ final class Searcher(
     * `canEarlyTerminate`; each segment stops collecting after k hits because
     * docs arrive already in sort order).
     *
-    * Relational form: a term's k smallest matching doc ids live entirely in
-    * the k blocks with the smallest `firstDoc` — every block's `firstDoc` is
-    * a real posting and one term never lists a doc twice, so any doc in a
-    * later block is preceded by ≥ k distinct matches. One TakeOrdered over
-    * BLOCK METADATA (no payloads) picks those candidates; only they are
-    * decoded. Work is O(k·blockSize) regardless of df — the early
-    * termination the index sort buys, vs decoding all df/128 blocks.
-    *
-    * Under pending tombstones a decoded prefix might not cover k LIVE docs
-    * (the reference's early termination counts live collected hits, which a
-    * fixed block prefix can't know) — fall back to the exhaustive path, the
-    * same degradation policy as [[search]]. */
-  def searchByIndexOrder(t: String, k: Int): DataFrame = {
-    val stats = lookupStats(Set(t))
-    stats.get(t) match {
+    * Relational form: a term's k smallest live doc ids live entirely in the
+    * k + D blocks with the smallest `firstDoc`, D being the number of
+    * pending tombstones — every block's `firstDoc` is a real posting and one
+    * term never lists a doc twice, so those blocks hold k + D distinct
+    * matches, at least k of them live, ahead of any doc in a later block.
+    * One TakeOrdered over BLOCK METADATA (no payloads) picks those
+    * candidates; only they are decoded, dead docs dropped as they decode.
+    * Work is O((k + D)·blockSize) regardless of df — the early termination
+    * the index sort buys, vs decoding all df/128 blocks. */
+  def searchByIndexOrder(t: String, k: Int): DataFrame =
+    lookupStats(Set(t)).get(t) match {
       case None => emptyFrame
-      case Some(_) if tombstones.isDefined =>
-        scored(TermQuery(t)).orderBy(asc("docId")).limit(k)
       case Some(ts) =>
-        val candidates = blocksOf(t).orderBy(asc("firstDoc")).limit(k)
-        decodeScored(candidates, termScorer(ts, 1.0)).orderBy(asc("docId")).limit(k)
+        val candidates = blocksOf(t).orderBy(asc("firstDoc")).limit(withDeletes(k))
+        val dead = deadIds
+        val live = udf((d: Long) => java.util.Arrays.binarySearch(dead.value, d) < 0)
+        decodeScored(candidates, termScorer(ts, 1.0)).filter(live(col("docId")))
+          .orderBy(asc("docId")).limit(k)
     }
-  }
 
   /** Top-k search: `(docId, score)` ordered by score desc, docId asc —
-    * the reference's `TopDocs.merge` tiebreak. */
+    * the reference's `TopDocs.merge` tiebreak. Routed shapes take their
+    * route (see the class doc); other shapes rank [[scored]]'s doc set. */
   def search(q: Query, k: Int): DataFrame = {
     val rewritten = QueryRewriter.rewrite(q)
-    // the top-k plans read postings directly and would count tombstoned docs
-    // toward k — take the exhaustive path until a merge purges them
-    if (tombstones.isDefined) return topK(scored(rewritten), k)
     flatPlan(rewritten, k)
-      .orElse(expansionRoute(rewritten, k).map(r => topK(sliced(r), k)))
+      .orElse(route(rewritten, lookupStats(exactTerms(rewritten)), k).map(r => topK(sliced(r), k)))
       .getOrElse(rewritten match {
         // constant-score expansions: top-k = k smallest doc ids, block-metadata
         // pruned (see expansionTopK) — the r1 p95 tail was wide prefix/range
@@ -1388,8 +1386,8 @@ final class Searcher(
     * terms: each slice runs every route's kernel over its own terms and
     * keeps that query's top-k of the slice — the reference's per-slice
     * collectors — and one window ranks each query's rows. Queries without a
-    * route, and every query on an index with pending tombstones, run their
-    * own [[search]], unioned in. */
+    * route run their own [[search]], unioned in. Pending tombstones change
+    * no route: the kernels skip the deleted docs. */
   def searchBatch(queries: Seq[(String, Query)], k: Int): DataFrame = {
     val ids = queries.map(_._1)
     require(ids.distinct.size == ids.size,
@@ -1400,9 +1398,7 @@ final class Searcher(
     val planned = Vector.newBuilder[(String, Routed)]
     val rest = Vector.newBuilder[DataFrame]
     rewritten.foreach { case (id, q) =>
-      // the routes read postings directly and would count tombstoned docs
-      // toward k: on a tombstoned index every query takes search()'s plan
-      (if (tombstones.isDefined) None else route(q, stats, k)) match {
+      route(q, stats, k) match {
         case Some(r) => onDriver(r) match {
           case Some(hits) =>
             SingleTask.topK(hits, k).zipWithIndex.foreach { case ((d, sc), i) => served += Row(id, d, sc, i + 1L) }
@@ -1431,10 +1427,10 @@ final class Searcher(
     * route's terms. */
   private def slicedBatch(routes: Seq[(String, Routed)], k: Int): DataFrame = {
     val rs = routes.toArray
-    slices(routes.map(_._2.dfs).reduce(_ ++ _), (rows, lo, hi) => {
+    slices(routes.map(_._2.dfs).reduce(_ ++ _), (rows, accept) => {
       val byTerm = SingleTask.byTerm(rows)
       rs.iterator.flatMap { case (id, r) =>
-        SingleTask.topK(r.over(t => byTerm.get(t).iterator.flatMap(_.iterator), lo, hi), k)
+        SingleTask.topK(r.over(t => byTerm.get(t).iterator.flatMap(_.iterator), accept), k)
           .map { case (d, sc) => (id, d, sc) }
       }
     }).toDF("queryId", "docId", "score")
@@ -1457,14 +1453,14 @@ final class Searcher(
     *    delta-chain-only decode ([[PostingsCodec.decodeDocIds]]) — no freq or
     *    norm decode and no scoring in the plan, ~⅓ the scan work;
     *  - everything else falls back to the scored doc set.
-    * With pending tombstones counts must exclude deleted docs while df is
-    * deletion-blind, so the deletion-aware exhaustive path runs instead. */
+    * With pending tombstones the count must exclude deleted docs, but the
+    * short-circuits above return the deletion-blind df (the reference's
+    * `TermWeight.count` likewise answers `docFreq` only for a leaf without
+    * deletions), so the deletion-aware exhaustive path runs instead. */
   def count(q: Query): Long = {
     val rewritten = QueryRewriter.rewrite(q)
-    if (tombstones.isDefined) return scored(rewritten).count()
-    def docIdsOf(t: String): DataFrame =
-      blocksOf(t).mapPartitions(it => it.flatMap(b => PostingsCodec.decodeDocIds(b).iterator))
-        .toDF("docId")
+    if (index.deletedDocs.isDefined) return scored(rewritten).count()
+    def docIdsOf(t: String): DataFrame = docIds(blocksOf(t)).toDF("docId")
     rewritten match {
       case TermQuery(t) =>
         lookupStats(Set(t)).get(t).map(_.docFreq).getOrElse(0L)

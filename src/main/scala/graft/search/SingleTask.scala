@@ -13,6 +13,29 @@ final case class FlatClause(term: String, boost: Double, kind: Int)
   * optional ones and no prohibited one; its score is the sum. */
 final case class FlatQuery(clauses: Seq[FlatClause], nMust: Int, msm: Int)
 
+/** The docs a kernel may return: those in `[lo, hi]` (one doc-range
+  * slice) that are not in `dead`, the sorted ids of the pending tombstones —
+  * the reference's `(acceptDocs, min, max)` of `BulkScorer.score`. A dead
+  * doc is in no clause's decoded postings, so it is never a candidate, a
+  * lead or a hit. */
+final class Accept(val lo: Long, val hi: Long, val dead: Array[Long]) {
+
+  def apply(doc: Long): Boolean =
+    doc >= lo && doc <= hi && (dead.length == 0 || java.util.Arrays.binarySearch(dead, doc) < 0)
+
+  /** Whether `b`'s doc range meets `[lo, hi]`: a block outside it is not
+    * decoded. */
+  def overlaps(b: PostingBlock): Boolean = b.lastDoc >= lo && b.firstDoc <= hi
+}
+
+object Accept {
+  def apply(lo: Long = Long.MinValue, hi: Long = Long.MaxValue,
+      dead: Array[Long] = Array.emptyLongArray): Accept = new Accept(lo, hi, dead)
+
+  /** Every doc. */
+  val All: Accept = Accept()
+}
+
 /** Top-k kernels: each consumes one query's posting blocks in one task or
   * on the driver — all of them, or one doc-range slice's — and emits at
   * most k rows, the reference's one thread, one collector loop
@@ -45,10 +68,11 @@ object SingleTask {
     heap.drain()
   }
 
-  /** Flat term boolean top-k over the docs in `[lo, hi]` (one doc-range
-    * slice; postings outside it are skipped, blocks wholly outside it are
-    * not decoded). `scorers(c)` scores clause c (null: the clause only
-    * gates — MUST_NOT, FILTER). A term lists each doc at most once.
+  /** Flat term boolean top-k over the docs `accept` holds (one doc-range
+    * slice less the pending tombstones; other postings are skipped, blocks
+    * wholly outside the slice are not decoded). `scorers(c)` scores clause
+    * c (null: the clause only gates — MUST_NOT, FILTER). A term lists each
+    * doc at most once.
     *
     * Each term's blocks decode once, in `firstDoc` order, into primitive
     * doc / freq / doc-length arrays (doc ids only when no clause scores the
@@ -64,13 +88,13 @@ object SingleTask {
     * bounded heap. Rows of terms no clause names are ignored. */
   def flatTopK(rows: Iterator[(String, PostingBlock)], clauses: Array[FlatClause],
       scorers: Array[(Int, Int) => Double], nMust: Int, msm: Int, k: Int,
-      lo: Long = Long.MinValue, hi: Long = Long.MaxValue): Iterator[(Long, Double)] = {
+      accept: Accept = Accept.All): Iterator[(Long, Double)] = {
     if (k <= 0) return Iterator.empty
     val blocks = byTerm(rows)
     val terms = clauses.iterator.map(_.term).filter(blocks.contains).toArray.distinct
     val lists = terms.map { t =>
       val scored = clauses.indices.exists(c => clauses(c).term == t && scorers(c) != null)
-      PostingList.decode(blocks(t), scored, lo, hi)
+      PostingList.decode(blocks(t), scored, accept)
     }
     val heap = new TopHeap(k)
     new ClauseMerge(clauses, scorers, clauses.map(c => terms.indexOf(c.term)), lists,
@@ -78,25 +102,25 @@ object SingleTask {
     heap.drain()
   }
 
-  /** The k smallest distinct doc ids of the blocks in `[lo, hi]` — a
+  /** The k smallest distinct doc ids of the blocks that `accept` holds — a
     * constant-score expansion's top-k (score ties break docId asc). */
-  def smallestDocs(blocks: Iterator[PostingBlock], k: Int,
-      lo: Long = Long.MinValue, hi: Long = Long.MaxValue): Iterator[Long] = {
+  def smallestDocs(blocks: Iterator[PostingBlock], k: Int, accept: Accept = Accept.All): Iterator[Long] = {
     val all = new LongBuf()
-    blocks.foreach(b => PostingsCodec.decodeDocIds(b).foreach(d => if (d >= lo && d <= hi) all.add(d)))
+    blocks.filter(accept.overlaps)
+      .foreach(b => PostingsCodec.decodeDocIds(b).foreach(d => if (accept(d)) all.add(d)))
     val docs = all.toArray
     java.util.Arrays.sort(docs)
     docs.iterator.distinct.take(math.max(k, 0))
   }
 
-  /** One term's postings in `[lo, hi]`, ascending by doc; `freqs` and
+  /** One term's accepted postings, ascending by doc; `freqs` and
     * `doclens` are null when the term was decoded doc ids only. */
   private final class PostingList(val docs: Array[Long], val freqs: Array[Int],
       val doclens: Array[Int], val n: Int)
 
   private object PostingList {
-    def decode(bs: Iterable[PostingBlock], scored: Boolean, lo: Long, hi: Long): PostingList = {
-      val inRange = bs.iterator.filter(b => b.lastDoc >= lo && b.firstDoc <= hi).toArray
+    def decode(bs: Iterable[PostingBlock], scored: Boolean, accept: Accept): PostingList = {
+      val inRange = bs.iterator.filter(accept.overlaps).toArray
       java.util.Arrays.sort(inRange, (a: PostingBlock, b: PostingBlock) =>
         java.lang.Long.compare(a.firstDoc, b.firstDoc))
       val cap = inRange.iterator.map(_.count).sum
@@ -106,13 +130,13 @@ object SingleTask {
       var n = 0
       var sorted = true
       inRange.foreach { b =>
-        // decode in place after the kept postings, then keep those in range
+        // decode in place after the kept postings, then keep the accepted ones
         PostingsCodec.decodeInto(b, docs, freqs, doclens, n)
         var i = n
         val end = n + b.count
         while (i < end) {
           val doc = docs(i)
-          if (doc >= lo && doc <= hi) {
+          if (accept(doc)) {
             if (n > 0 && doc < docs(n - 1)) sorted = false
             docs(n) = doc
             if (scored) { freqs(n) = freqs(i); doclens(n) = doclens(i) }
@@ -322,26 +346,26 @@ object SingleTask {
 
 /** The positional-match kernel of every positional query — phrases,
   * multi-phrases, span-near and interval sources — over a set of posting
-  * blocks that holds the COMPLETE postings of the docs in `[lo, hi]` (one
-  * doc-range slice of [[Searcher]]'s positional plan, on a built index or a
-  * merged one): the reference's per-LeafReaderContext `ExactPhraseMatcher` /
+  * blocks that holds the COMPLETE postings of the docs in one doc-range
+  * slice of [[Searcher]]'s positional plan, on a built index or a merged
+  * one: the reference's per-LeafReaderContext `ExactPhraseMatcher` /
   * `SloppyPhraseMatcher` / interval-iterator loop
   * (`lucene/core/src/java/org/apache/lucene/search/ExactPhraseMatcher.java:39`).
-  * The lead terms decode first and their docs in `[lo, hi]` are the
-  * candidates; every other term's block decodes only when its
-  * `[firstDoc, lastDoc]` range holds a candidate — the
+  * The lead terms decode first and their docs that the slice's [[Accept]]
+  * holds are the candidates; every other term's block decodes only when
+  * its `[firstDoc, lastDoc]` range holds a candidate — the
   * `ConjunctionDISIApproximation` advance pattern — and the per-doc
   * frequency function verifies positions. */
 object Positional {
 
-  /** `(docId, freq, doclen)` of every candidate doc in `[lo, hi]` whose
+  /** `(docId, freq, doclen)` of every candidate doc `accept` holds whose
     * `freq` is above 0. `byTerm` holds the blocks per present query term;
     * `lead` is the term set whose docs' union bounds every match (empty:
     * every term in `byTerm`). `freq` maps a doc's positions — per term, its
     * sorted positions or null when the doc lacks the term — to a frequency,
     * 0 meaning no match. `onDecode` is a test hook counting block decodes. */
   def matchingDocs(byTerm: scala.collection.Map[String, scala.collection.Seq[PostingBlock]],
-      lead: Set[String], lo: Long, hi: Long,
+      lead: Set[String], accept: Accept,
       freq: (String => Array[Int]) => Double,
       onDecode: () => Unit = () => ()): Iterator[(Long, Double, Int)] = {
     val posOf = mutable.HashMap.empty[String, mutable.LongMap[Array[Int]]]
@@ -354,7 +378,7 @@ object Positional {
         var i = 0
         while (i < d.docs.length) {
           val doc = d.docs(i)
-          if (doc >= lo && doc <= hi) { m.update(doc, d.positions(i)); doclens.update(doc, d.doclens(i)) }
+          if (accept(doc)) { m.update(doc, d.positions(i)); doclens.update(doc, d.doclens(i)) }
           i += 1
         }
       }

@@ -167,4 +167,19 @@ class CollectionStatsSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("an appended batch that was never committed is in no term statistics") {
+    val dir = tempDir("graft-cs-orphan-")
+    IndexBuilder.build(Seq(InputDoc(0L, "alpha beta"), InputDoc(1L, "beta gamma")).toDS(), dir, cfg)
+    // written, never committed: a crash between appendBatch and commitAppend
+    IndexBuilder.appendBatch(Seq(InputDoc(2L, "zzorphan beta")).toDS(), dir, cfg, segNamespace = 1L << 40)
+    val ns = 2L << 40
+    val added = IndexBuilder.appendBatch(Seq(InputDoc(3L, "delta")).toDS(), dir, cfg, segNamespace = ns)
+    IndexBuilder.commitAppend(spark, dir, ns, added)
+    val ix = InvertedIndex.open(spark, dir)
+    val dfs = ix.termStats.select("term", "df").as[(String, Long)].collect().toMap
+    assert(!dfs.contains("zzorphan"), s"term statistics $dfs")
+    assert(dfs("beta") == 2L && dfs("delta") == 1L, s"term statistics $dfs")
+    assertConsistent(ix, dir)
+  }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.core.SimpleAnalyzer
-import graft.index.InvertedIndex
+import graft.index.{Deletes, IndexBuilder, IndexConfig, InputDoc, InvertedIndex}
 import graft.search._
 import graft.streaming.Monitor
 import org.scalatest.BeforeAndAfterAll
@@ -16,23 +16,29 @@ import scala.util.Random
   * (`lucene/test-framework/src/java/org/apache/lucene/tests/index/RandomIndexWriter.java:53`).
   * The flat booleans and the positional trees also run `search(q, k)` on a
   * warmed reader whose blocks are driver-resident, against the cold
-  * exhaustive top-k.
+  * exhaustive top-k. A copy of the index with random tombstones checks that
+  * `search` and `searchBatch` on a cold, a resident and an over-budget
+  * reader equal `scored`'s live top-k.
   */
 class FuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
   import SparkTestEnv._
 
-  private var warmed: Option[InvertedIndex] = None
+  private var warmed: Seq[InvertedIndex] = Nil
   private lazy val warmIndex: InvertedIndex = {
     val w = InvertedIndex.open(spark, index.dir).warm()
-    warmed = Some(w)
+    warmed :+= w
     assert(w.residentBlocks.isDefined, "the fuzz index should be driver-resident when warm")
     w
   }
   private lazy val residentSearcher = new Searcher(warmIndex, ScoringMode.PreciseBM25())
   private lazy val exhaustive = new Searcher(index, ScoringMode.PreciseBM25(), pruneThreshold = Long.MaxValue)
 
-  override def afterAll(): Unit =
+  private var tombstonedDir: Option[String] = None
+
+  override def afterAll(): Unit = {
     warmed.foreach { w => w.postings.unpersist(); w.termStats.unpersist(); w.docs.unpersist() }
+    tombstonedDir.foreach(graft.tools.Rm.rmTree)
+  }
 
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
     df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -160,5 +166,51 @@ class FuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
     // per-doc evaluator
     val positional = differential("positional fuzz", 20261019, 60, positionalLeaf, resident = true)
     assert(positional > 15, s"positional fuzz too sparse: only $positional non-empty result sets")
+  }
+
+  test("tombstoned readers: search and searchBatch equal scored's live top-10") {
+    val s = spark
+    import s.implicits._
+    // the fuzz corpus indexed into its own dir, so the shared index stays delete-free
+    val dir = java.nio.file.Files.createTempDirectory("graft-fuzz-tomb-").toString
+    tombstonedDir = Some(dir)
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      .select(org.apache.spark.sql.functions.col("doc_id").as("docId"),
+        org.apache.spark.sql.functions.col("text")).as[InputDoc]
+    IndexBuilder.build(docs.repartition(4), dir, IndexConfig(SimpleAnalyzer))
+    val rnd = new Random(20261020)
+    val deleted = corpus.keys.filter(_ => rnd.nextDouble() < 0.2).toSet
+    Deletes.tombstone(spark, dir, deleted.toSeq.map(java.lang.Long.valueOf).toDS())
+    val reference = new Searcher(InvertedIndex.open(spark, dir), ScoringMode.PreciseBM25())
+    val flat = Seq.fill(10) {
+      val ts = Seq.fill(2 + rnd.nextInt(3))(term(rnd)).distinct
+      val occ = if (rnd.nextBoolean()) Occur.MUST else Occur.SHOULD
+      BooleanQuery(ts.map(t => occ -> TermQuery(t)))
+    }
+    val queries = (flat ++ Seq.fill(15)(randLeaf(rnd)) ++ Seq.fill(15)(positionalLeaf(rnd)))
+      .zipWithIndex.map { case (q, i) => (s"q$i", q) }
+    val want = queries.map { case (_, q) =>
+      rows(reference.scored(q).orderBy(org.apache.spark.sql.functions.desc("score"),
+        org.apache.spark.sql.functions.asc("docId")).limit(10))
+    }
+    assert(want.count(_.nonEmpty) > 20, "the tombstoned fuzz queries must match docs")
+    val readers = Seq(
+      "cold" -> InvertedIndex.open(spark, dir),
+      "resident" -> InvertedIndex.open(spark, dir).warm(),
+      "over budget" -> InvertedIndex.open(spark, dir).warmWithin(1L))
+    warmed ++= readers.tail.map(_._2)
+    assert(readers(1)._2.residentBlocks.isDefined && readers(2)._2.residentBlocks.isEmpty)
+    readers.foreach { case (label, idx) =>
+      val searcher = new Searcher(idx, ScoringMode.PreciseBM25())
+      val batch = searcher.searchBatch(queries, 10).collect()
+        .groupBy(_.getString(0))
+        .map { case (id, rs) => id -> rs.sortBy(_.getLong(3)).map(r => (r.getLong(1), r.getDouble(2))).toSeq }
+      queries.zip(want).foreach { case ((id, q), top) =>
+        val hits = rows(searcher.search(q, 10))
+        assert(!hits.exists(h => deleted(h._1)), s"$label: $q returned a deleted doc")
+        TopKAssertions.assertSameTopK(s"$label tombstoned $q", hits, top)
+        TopKAssertions.assertSameTopK(s"$label tombstoned batch $q", batch.getOrElse(id, Nil), top)
+      }
+    }
   }
 }

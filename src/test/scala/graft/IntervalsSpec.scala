@@ -214,7 +214,7 @@ class IntervalsSpec extends AnyFunSuite {
     // by the rarest required term like the searcher's interval plan
     def matching(src: graft.search.IntervalsSource, lead: Set[String], onDecode: () => Unit,
         lo: Long = Long.MinValue, hi: Long = Long.MaxValue): Vector[Long] =
-      Positional.matchingDocs(byTerm, lead, lo, hi, pos => {
+      Positional.matchingDocs(byTerm, lead, graft.search.Accept(lo, hi), pos => {
         val m = src.terms.flatMap(t => Option(pos(t)).map(t -> _)).toMap
         if (IntervalEval.matches(src, m)) 1.0 else 0.0
       }, onDecode).map(_._1).toVector
@@ -259,7 +259,7 @@ class IntervalsSpec extends AnyFunSuite {
     def run(src: graft.search.IntervalsSource, lead: Set[String]): (Vector[Long], Int) = {
       var decodes = 0
       val byTerm = blocks.filter { case (t, _) => src.terms(t) }
-      val docs = Positional.matchingDocs(byTerm, lead, Long.MinValue, Long.MaxValue, pos => {
+      val docs = Positional.matchingDocs(byTerm, lead, graft.search.Accept.All, pos => {
         val m = src.terms.flatMap(t => Option(pos(t)).map(t -> _)).toMap
         if (IntervalEval.matches(src, m)) 1.0 else 0.0
       }, () => decodes += 1).map(_._1).toVector

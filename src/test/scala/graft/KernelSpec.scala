@@ -1,15 +1,17 @@
 package graft
 
 import graft.core.{PostingBlock, PostingsCodec}
-import graft.search.{FlatClause, SingleTask}
+import graft.search.{Accept, FlatClause, PhraseSegment, Positional, SingleTask}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** `SingleTask.flatTopK` and `SingleTask.topK` against a brute-force
   * per-doc evaluator over random posting blocks, no Spark session: doc ids
   * must match exactly and scores must be equal with `==`. The evaluator
-  * visits every doc of the clause terms in `[lo, hi]`, counts and sums its
-  * clauses in clause order, applies the `nMust` / `msm` / no-prohibited
-  * rule, and ranks by score desc, docId asc. */
+  * visits every live doc of the clause terms in `[lo, hi]`, counts and sums
+  * its clauses in clause order, applies the `nMust` / `msm` /
+  * no-prohibited rule, and ranks by score desc, docId asc.
+  * `SingleTask.smallestDocs` and `Positional.matchingDocs` are checked the
+  * same way against the docs they may return. */
 class KernelSpec extends AnyFunSuite {
 
   private type Hit = (Long, Double)
@@ -58,10 +60,20 @@ class KernelSpec extends AnyFunSuite {
   private def ranked(hits: Iterable[Hit], k: Int): List[Hit] =
     hits.toList.sortWith((a, b) => a._2 > b._2 || (a._2 == b._2 && a._1 < b._1)).take(math.max(k, 0))
 
+  /** A random sorted set of dead doc ids in `[0, maxDoc)`: none half the
+    * time. */
+  private def randomDead(rnd: scala.util.Random, maxDoc: Int): Array[Long] =
+    if (rnd.nextBoolean()) Array.emptyLongArray
+    else {
+      val p = rnd.nextDouble() * 0.5
+      (0L until maxDoc.toLong).filter(_ => rnd.nextDouble() < p).toArray
+    }
+
   private def bruteForce(postings: Map[String, Map[Long, (Int, Int)]], clauses: Array[FlatClause],
-      scorers: Array[(Int, Int) => Double], nMust: Int, msm: Int, k: Int, lo: Long, hi: Long): List[Hit] = {
+      scorers: Array[(Int, Int) => Double], nMust: Int, msm: Int, k: Int, lo: Long, hi: Long,
+      dead: Set[Long]): List[Hit] = {
     val universe = clauses.iterator.flatMap(c => postings.getOrElse(c.term, Map.empty).keysIterator)
-      .filter(d => d >= lo && d <= hi).toSet
+      .filter(d => d >= lo && d <= hi && !dead(d)).toSet
     val hits = universe.flatMap { doc =>
       var nReq, nOpt, nNot = 0
       var score = 0.0
@@ -110,16 +122,18 @@ class KernelSpec extends AnyFunSuite {
       val (lo, hi) =
         if (rnd.nextBoolean()) (Long.MinValue, Long.MaxValue)
         else { val a = rnd.nextInt(maxDoc).toLong; (a, a + rnd.nextInt(maxDoc)) }
-      val all = bruteForce(postings, clauses, scorers, nMust, msm, Int.MaxValue, lo, hi)
+      val dead = randomDead(rnd, maxDoc)
+      val all = bruteForce(postings, clauses, scorers, nMust, msm, Int.MaxValue, lo, hi, dead.toSet)
       matched += all.size
       val ks = Seq(0, 1, 10, all.size + 3, rnd.nextInt(all.size + 2))
       ks.foreach { k =>
         // the rows of the clause terms, as a route passes them
         val rows = rnd.shuffle(blocks.toSeq.filter(tb => clauses.exists(_.term == tb._1))
           .flatMap { case (t, bs) => bs.map(b => (t, b)) })
-        val got = SingleTask.flatTopK(rows.iterator, clauses, scorers, nMust, msm, k, lo, hi).toList
-        assertSame(got, all.take(k),
-          s"trial $trial: ${clauses.mkString(", ")} nMust=$nMust msm=$msm k=$k [$lo, $hi]")
+        val got = SingleTask.flatTopK(rows.iterator, clauses, scorers, nMust, msm, k,
+          Accept(lo, hi, dead)).toList
+        assertSame(got, all.take(k), s"trial $trial: ${clauses.mkString(", ")} nMust=$nMust msm=$msm " +
+          s"k=$k [$lo, $hi] dead=${dead.mkString(",")}")
       }
     }
     assert(matched > 10000, "the random queries must match docs")
@@ -139,6 +153,64 @@ class KernelSpec extends AnyFunSuite {
     assert(got.head._2 == s(2, shortLen) + s(2, shortLen))
     // a prohibited clause on the same term excludes every doc
     assert(SingleTask.flatTopK(rows(), clauses :+ FlatClause("a", 0.0, 2), scorers :+ null, 1, 1, 10).isEmpty)
+  }
+
+  /** Two doc-range slices of `[0, maxDoc)` cut at a random point, and the
+    * whole range. */
+  private def slicesOf(rnd: scala.util.Random, maxDoc: Int): Seq[(Long, Long)] = {
+    val cut = rnd.nextInt(maxDoc + 1).toLong
+    Seq((Long.MinValue, cut - 1), (cut, Long.MaxValue), (Long.MinValue, Long.MaxValue))
+  }
+
+  test("smallestDocs keeps the k smallest live docs of a slice, dead ids in and out of it") {
+    val rnd = new scala.util.Random(20261020)
+    (0 until 400).foreach { trial =>
+      val maxDoc = 1 + rnd.nextInt(if (rnd.nextBoolean()) 40 else 700)
+      // an expansion's terms: their blocks in one stream, a doc on several terms
+      val blocks = Seq.fill(1 + rnd.nextInt(3))(encode(rnd, randomPostings(rnd, maxDoc))).flatten
+      val docs = decoded(blocks).keys.toSeq.sorted
+      val dead = randomDead(rnd, maxDoc)
+      slicesOf(rnd, maxDoc).foreach { case (lo, hi) =>
+        val live = docs.filter(d => d >= lo && d <= hi && java.util.Arrays.binarySearch(dead, d) < 0)
+        Seq(0, 1, 10, live.size, live.size + 2).foreach { k =>
+          val got = SingleTask.smallestDocs(rnd.shuffle(blocks).iterator, k, Accept(lo, hi, dead)).toList
+          assert(got == live.take(k).toList, s"trial $trial k=$k [$lo, $hi] dead=${dead.mkString(",")}")
+        }
+      }
+    }
+  }
+
+  test("matchingDocs returns the live candidates of a slice, dead ids in and out of it") {
+    val rnd = new scala.util.Random(20261021)
+    (0 until 300).foreach { trial =>
+      val maxDoc = 1 + rnd.nextInt(if (rnd.nextBoolean()) 40 else 700)
+      // two terms with positions; the query is the exact phrase "a b", led by "a"
+      val positions = Seq("a", "b").map { t =>
+        val p = randomPostings(rnd, maxDoc)
+        t -> p.docs.indices.map(i => p.docs(i) -> Array.fill(p.freqs(i))(rnd.nextInt(6)).distinct.sorted).toMap
+      }.toMap
+      val doclens = (0L until maxDoc.toLong).map(d => d -> Seq(8, 40)(rnd.nextInt(2))).toMap
+      val byTerm = positions.map { case (t, m) =>
+        val ds = m.keys.toArray.sorted
+        t -> PostingsCodec.encodeBlocks(ds, ds.map(m(_).length), ds.map(d => doclens(d)), ds.map(m))
+      }
+      val dl = decoded(byTerm.values.flatten.toSeq).map { case (d, (_, l)) => d -> l }
+      val dead = randomDead(rnd, maxDoc)
+      val freq: (String => Array[Int]) => Double = pos => {
+        val arrays = Array("a", "b").map(pos)
+        if (arrays.contains(null)) 0.0 else PhraseSegment.phraseFreq(arrays, 0)
+      }
+      slicesOf(rnd, maxDoc).foreach { case (lo, hi) =>
+        val want = positions("a").keys.toSeq.sorted
+          .filter(d => d >= lo && d <= hi && java.util.Arrays.binarySearch(dead, d) < 0)
+          .flatMap { d =>
+            val f = freq(t => positions(t).getOrElse(d, null))
+            if (f > 0) Some((d, f, dl(d))) else None
+          }
+        val got = Positional.matchingDocs(byTerm, Set("a"), Accept(lo, hi, dead), freq).toList
+        assert(got == want.toList, s"trial $trial [$lo, $hi] dead=${dead.mkString(",")}")
+      }
+    }
   }
 
   test("topK == a full sort over random hit streams with tied scores") {

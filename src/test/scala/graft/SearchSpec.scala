@@ -268,7 +268,7 @@ class SearcherSpec extends AnyFunSuite {
     gotB.zip(want).foreach { case ((_, a), (_, b)) => assert(math.abs(a - b) < 1e-9) }
   }
 
-  test("searchBatch respects tombstones (routes through liveDocs-filtered search)") {
+  test("searchBatch and search skip tombstoned docs and equal scored's live top-k") {
     val tomb = Indexes.tombstonedIndex(spark, sfDir)
     val ts = new Searcher(tomb, ScoringMode.PreciseBM25())
     val qs: Seq[(String, Query)] = Seq(
@@ -281,6 +281,10 @@ class SearcherSpec extends AnyFunSuite {
       assert(want.forall(_._1 % 7 != 3), "sanity: search excludes tombstoned ids")
       val gotQ = (1 to want.size).map(rank => got((qid, rank.toLong)))
       assert(gotQ == want, s"$qid batched-with-tombstones != search")
+      val live = ts.scored(q).orderBy(org.apache.spark.sql.functions.desc("score"),
+        org.apache.spark.sql.functions.asc("docId")).limit(10)
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      TopKAssertions.assertSameTopK(s"$qid search vs scored", want, live)
     }
   }
 

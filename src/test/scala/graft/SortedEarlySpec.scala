@@ -1,6 +1,8 @@
 package graft
 
+import graft.core.{PostingBlock, PostingsCodec}
 import graft.search.{Searcher, TermQuery, ScoringMode}
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -44,5 +46,17 @@ class SortedEarlySpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSeq
     // every returned doc is live (doc_id % 7 == 3 tombstoned) and in order
     assert(got.forall(_ % 7 != 3) && got == got.sorted && got.size == 10)
+    // the k + D earliest blocks hold the k smallest live docs: equal to the
+    // exhaustive live result, also when a dead doc sits in the first k blocks
+    val firstBlock = t.index.postings.filter(col("term") === "spark")
+      .select(explode(col("blocks")).as("b")).select("b.*").as[PostingBlock](Encoders.product[PostingBlock])
+      .orderBy(asc("firstDoc")).head()
+    assert(PostingsCodec.decodeDocIds(firstBlock).exists(_ % 7 == 3), "a dead doc in the first block")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq.sortBy(_._1)
+    for (k <- Seq(1, 3, 10, 50, 200)) {
+      val want = rows(t.scored(TermQuery("spark")).orderBy(asc("docId")).limit(k))
+      assert(rows(t.searchByIndexOrder("spark", k)) == want, s"k=$k")
+    }
   }
 }

@@ -6,6 +6,7 @@ import graft.search._
 import org.apache.spark.{JobExecutionStatus, SparkJobInfo}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{asc, desc}
 import org.apache.spark.sql.execution.LocalTableScanExec
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,7 +18,8 @@ import TopKAssertions.assertSameTopK
   * its resident-block budget must keep the one-task plan and the same
   * top-k; flat queries and phrases above the postings bound must take the
   * sliced plan, one slice per reduce task, and return the same top-k;
-  * tombstoned indexes anti-join the live docs.
+  * pending tombstones change no route: a tombstoned resident index serves
+  * the same shapes on the driver and returns no deleted doc.
   * Checked on a built (doc-aligned) index and on its merge. */
 class WarmServingSpec extends AnyFunSuite with BeforeAndAfterAll {
   import SparkTestEnv.spark
@@ -359,8 +361,7 @@ class WarmServingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r <= c + 1024, s"a resident index serializes to $r bytes, a cold one to $c")
   }
 
-  // runs last: it tombstones docs of the shared index
-  test("queries above the postings bound take the sliced top-k plan; tombstoned indexes keep the multi-stage paths") {
+  test("queries above the postings bound take the sliced top-k plan, a slice per task") {
     val disjunction = BooleanQuery.should(Fillers.map(TermQuery): _*)
     // every doc without w0 matches with score 0, so the top-k is the k
     // smallest such doc ids: the docId tie-break within and across the
@@ -385,18 +386,37 @@ class WarmServingSpec extends AnyFunSuite with BeforeAndAfterAll {
       val ids = rows(p).map(_._1)
       assert(ids.sorted == (0L until 2200L), s"$dir: filler phrase matched ${ids.size} rows")
     }
+  }
 
+  // runs last: it tombstones docs of the shared index
+  test("a tombstoned resident index serves routed shapes with no job, no deleted doc") {
     val s = spark
     import s.implicits._
-    val deleted = Set(0L, 5L, 7L)
+    val shapes = Seq(TermQuery("w0"), BooleanQuery.must(TermQuery("w0"), TermQuery("w1")),
+      PhraseQuery(Seq("w0", "w1")), PrefixQuery("w1"),
+      TermRangeQuery(Some("w2"), Some("w25"), includeLower = true, includeUpper = false))
+    // the top doc of each shape is deleted too, so every top-k loses a doc
+    val before = new Searcher(InvertedIndex.open(spark, baseDir), ScoringMode.PreciseBM25())
+    val deleted = Set(0L, 5L, 7L) ++ shapes.map(q => rows(before.search(q, 1)).head._1)
     Deletes.tombstone(spark, baseDir, deleted.toSeq.map(java.lang.Long.valueOf).toDS())
     val w = new Searcher(warm(baseDir), ScoringMode.PreciseBM25())
-    Seq(BooleanQuery.must(TermQuery("w0"), TermQuery("w1")), PhraseQuery(Seq("w0", "w1"))).foreach { q =>
+    val exhaustive = new Searcher(InvertedIndex.open(spark, baseDir), ScoringMode.PreciseBM25())
+    val want = shapes.map { q =>
+      rows(exhaustive.scored(q).orderBy(desc("score"), asc("docId")).limit(10))
+    }
+    shapes.zip(want).foreach { case (q, top) =>
+      assert(top.size == 10 && !top.exists(h => deleted(h._1)), s"$q: the exhaustive plan's live top-10")
       val got = w.search(q, 10)
-      assert(got.queryExecution.executedPlan.toString.contains("LeftAnti"), s"$q")
+      assert(routed(got), s"tombstoned $q should take the driver route")
+      assert(jobProfile(w.search(q, 10)) == ((0, 0, 0)), s"tombstoned $q")
       val hits = rows(got)
       assert(!hits.exists(h => deleted(h._1)), s"$q returned a deleted doc")
-      assertSameTopK(s"tombstoned $q", hits, rows(cold(baseDir).search(q, 10)))
+      assertSameTopK(s"tombstoned $q", hits, top)
+      assertSameTopK(s"tombstoned cold $q", rows(cold(baseDir).search(q, 10)), top)
     }
+    val batch = shapes.zipWithIndex.map { case (q, i) => (s"t$i", q) }
+    assert(jobProfile(w.searchBatch(batch, 10)) == ((0, 0, 0)), "tombstoned batch")
+    val got = byQuery(w.searchBatch(batch, 10))
+    batch.zip(want).foreach { case ((id, q), top) => assertSameTopK(s"tombstoned batch $q", got(id), top) }
   }
 }
