@@ -925,8 +925,8 @@ object SparkEntry {
     }),
     "q85_sorted_index_order" -> ((s, dir) => {
       // TopFieldCollector with searchSort == indexSort: the k earliest docs
-      // for 'spark' via block-metadata early termination (only the k
-      // earliest-firstDoc blocks decode, O(k) work regardless of df)
+      // for 'spark', decoding blocks in firstDoc order only until no later
+      // block can hold one (O(k) work regardless of df)
       Indexes.searcher(s, dir).searchByIndexOrder("spark", 10)
         .select(col("docId").as("doc_id"), round(col("score"), 6).as("score"))
         .orderBy("doc_id")

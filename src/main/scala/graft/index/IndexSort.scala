@@ -70,9 +70,9 @@ object IndexSort {
   /** Sort-field top-k with early termination: the k best docs by
     * `(sortKey asc, extId asc)` matching `term`, scores intact — internal-id
     * order IS the sort order, so this is
-    * [[graft.search.Searcher.searchByIndexOrder]] (k earliest-firstDoc
-    * blocks decoded, O(k·blockSize) regardless of df) plus a broadcast map
-    * join back to external ids. */
+    * [[graft.search.Searcher.searchByIndexOrder]] (blocks decoded in
+    * `firstDoc` order until the k earliest live docs are found) plus a
+    * broadcast map join back to external ids. */
   def topKBySortField(spark: SparkSession, index: InvertedIndex, sortMap: DataFrame,
                       term: String, k: Int): DataFrame = {
     val hits = new graft.search.Searcher(index, graft.search.ScoringMode.PreciseBM25())

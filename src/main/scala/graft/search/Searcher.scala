@@ -9,6 +9,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.hash.Murmur3_x86_32
+import org.apache.spark.unsafe.types.UTF8String
 import scala.jdk.CollectionConverters._
 
 /** Positional window matcher for span-near verification (executor-side). */
@@ -140,6 +141,10 @@ private[search] final case class Routed(dfs: Map[String, Long],
     kernel(dfs.keysIterator.flatMap(t => blocks(t).map(b => (t, b))), accept)
 }
 
+/** One statistics lookup of [[Searcher]]: the exact terms' statistics and
+  * each constant-score expansion's matched terms (term → df). */
+private[search] final case class Lookup(stats: Map[String, TermStats], matched: Map[Query, Map[String, Long]])
+
 /** Distributed query execution over an [[InvertedIndex]].
   *
   * Every query compiles to a DataFrame of `(docId: long, score: double)`;
@@ -176,10 +181,10 @@ private[search] final case class Routed(dfs: Map[String, Long],
   * whatever the shape. The plan yields every match; top-k takes
   * TakeOrdered over it.
   *
-  * Prefix / range / term-set expansions of at most 4,096 terms on a warm
-  * index take the same slices ([[expansionRoute]]) while their terms hold at
-  * most 2^16 postings (Σdf, the `SingleTaskMaxPostings` bound), one
-  * [[SingleTask.smallestDocs]] kernel keeping the k smallest doc ids.
+  * Constant-score expansions (prefix, range, term-set, fuzzy, regexp) take
+  * the same slices on every reader: the statistics lookup resolves their
+  * terms ([[lookup]]), and one [[SingleTask.smallestDocs]] kernel per slice
+  * keeps the k smallest doc ids — the constant score's top-k.
   *
   * Driver route: a warm index whose encoded blocks fit the driver
   * ([[InvertedIndex.residentBlocks]]) answers every R = 1 query of these
@@ -299,9 +304,7 @@ final class Searcher(
     case ScoringMode.LuceneBM25(k1, b) =>
       val sim = BM25Similarity(k1, b)
       val idfSum = stats.map(s => sim.idf(s.docFreq, cs.docCount).toDouble).sum.toFloat
-      val synthetic = TermStats(1, 1)
-      val s = BM25Similarity(k1, b).scorer(1f, cs, synthetic)
-      // rebuild a scorer with weight = boost * idfSum using the same cache math
+      // a scorer with weight = boost * idfSum, using the term scorer's cache math
       val cache = Array.tabulate(256)(i => 1f / (k1 * ((1 - b) + b * SmallFloat.LengthTable(i) / cs.avgFieldLength)))
       val weight = boost.toFloat * idfSum
       (freq: Double, dl: Int) => {
@@ -350,19 +353,36 @@ final class Searcher(
     case _ => Set.empty
   }
 
-  private def lookupStats(terms: Set[String]): Map[String, TermStats] = {
-    if (terms.isEmpty) return Map.empty
-    index.warmTermStats match {
-      case Some(m) => // warm serving mode: RAM lookup, no Spark job
-        terms.iterator.flatMap(t => m.get(t).map(s => t -> TermStats(s._1, s._2))).toMap
-      case None =>
-        index.termStats
-          .filter(col("term").isin(terms.toSeq: _*))
-          .select("term", "df", "ttf")
-          .collect()
-          .map(r => r.getString(0) -> TermStats(r.getLong(1), r.getLong(2)))
-          .toMap
+  private def lookupStats(terms: Set[String]): Map[String, TermStats] = lookup(terms, Nil).stats
+
+  /** The lookup of the exact terms and the expansions of `queries`. */
+  private def lookupFor(queries: Seq[Query]): Lookup =
+    lookup(queries.flatMap(exactTerms).toSet, queries.flatMap(expansionOf))
+
+  /** A warm reader answers `terms` from its dictionary and resolves
+    * prefix, range and term-set expansions over its sorted terms
+    * ([[dictionaryMatches]]), with no job. The rest — a cold reader's
+    * terms, fuzzy and regexp expansions — comes from ONE collect over
+    * `termStats`, with one boolean column per expansion of `exps`. */
+  private def lookup(terms: Set[String], exps: Seq[Query]): Lookup = {
+    val warm = index.warmTermStats
+    val (onDictionary, scanned) = exps.distinct.partition {
+      case _: PrefixQuery | _: TermRangeQuery | _: TermInSetQuery => warm.isDefined
+      case _ => false
     }
+    val exact = if (warm.isDefined || terms.isEmpty) Nil else Seq(col("term").isin(terms.toSeq: _*))
+    val preds = scanned.map(expansionPred)
+    val rows =
+      if (exact.isEmpty && preds.isEmpty) Array.empty[Row]
+      else index.termStats.filter((exact ++ preds).reduce(_ || _))
+        .select(Seq(col("term"), col("df"), col("ttf")) ++ preds: _*).collect()
+    // warm serving mode: a RAM lookup, no Spark job
+    val known = warm.getOrElse(rows.iterator.map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap)
+    val matched = scanned.indices.map { i =>
+      scanned(i) -> rows.iterator.filter(_.getBoolean(3 + i)).map(r => r.getString(0) -> r.getLong(1)).toMap
+    }
+    Lookup(terms.iterator.flatMap(t => known.get(t).map(s => t -> TermStats(s._1, s._2))).toMap,
+      (onDictionary.map(e => e -> dictionaryMatches(e)) ++ matched).toMap)
   }
 
   // ---------------------------------------------------------------- leaves
@@ -435,16 +455,11 @@ final class Searcher(
     * broadcast regardless of lead df — the cliff-free upper tier. */
   private val CoarseLeadBuckets = 16 // log2
 
-  /** Matched-term bound of an expansion's route: [[expansionRoute]] leaves
-    * wider expansions to [[expansionTopK]], so the `term IN (...)` list of
-    * its plan stays small. */
-  private val ExpansionCap = 4096
-
   /** Postings (Σdf of the distinct terms) scored by one task or on the
-    * driver: the slice size of [[sliced]] and the bound of
-    * [[expansionRoute]]. One slice must stay cheaper than the jobs and
-    * stages it replaces (the bare one-job floor, `spark.range(1).collect()`,
-    * is ≈ 21 ms, p50 of 31 at `local[4]` on a 4-vCPU host). The scoring
+    * driver: the slice size of [[sliced]]. One slice must stay cheaper
+    * than the jobs and stages it replaces (the bare one-job floor,
+    * `spark.range(1).collect()`, is ≈ 21 ms, p50 of 31 at `local[4]` on a
+    * 4-vCPU host). The scoring
     * loops alone run ≈ 9M postings/s (≈ 7 ms at the bound); moving the rows into the one
     * task and decoding them raises that to ≈ 0.8 µs per posting. Measured at
     * 100k pages (warm merged index, `local[4]`), p50 of the single-task plan
@@ -717,30 +732,6 @@ final class Searcher(
           .withColumn("score", lit(boost))
     }
 
-  /** Top-k of a constant-score expansion = the k smallest live matching
-    * doc ids (score ties break docId asc). Metadata-pruned: the n = k + D
-    * smallest DISTINCT `firstDoc` values f₁<…<f_n of the matching blocks (D
-    * pending tombstones) are themselves real matching doc ids, at least k
-    * of them live, so the k-th result doc ≤ f_n =: T, and every result doc
-    * lives in a block with `firstDoc ≤ T` — only those blocks are decoded.
-    * A wide range query on a sorted corpus decodes a handful of blocks
-    * instead of much of the vocabulary (the r1 p95 tail). */
-  private def expansionTopK(termPred: org.apache.spark.sql.Column, boost: Double,
-                            k: Int, dictFirst: Boolean): DataFrame =
-    expansionBlocks(termPred, dictFirst) match {
-      case None => emptyFrame
-      case Some(blocks) =>
-        val n = withDeletes(k)
-        val firsts = blocks.select(col("firstDoc")).distinct()
-          .orderBy(asc("firstDoc")).limit(n).as[Long].collect()
-        // fewer than n blocks: every doc is a candidate
-        val t = if (firsts.length < n) Long.MaxValue else firsts.last
-        val candidates = docIds(blocks.filter(col("firstDoc") <= lit(t))).filter(col("value") <= lit(t))
-        applyLive(candidates.toDF("docId").distinct())
-          .orderBy(asc("docId")).limit(k)
-          .withColumn("score", lit(boost))
-    }
-
   /** Scored fuzzy ([[ScoredFuzzyQuery]]) — the reference's default
     * `TopTermsBlendedFreqScoringRewrite` re-expressed dictionary-first:
     * ONE ranked scan of `termStats` (levenshtein evaluated once per distinct
@@ -751,15 +742,13 @@ final class Searcher(
     * `TopTermsRewrite.java:36`. */
   private def scoredFuzzyFrame(qterm: String, maxEdits: Int, maxExpansions: Int,
                                boost: Double): DataFrame = {
-    val top: Array[(String, Long, Long)] = index.termStats
-      .filter(levenshtein(col("term"), lit(qterm)) <= maxEdits)
-      .orderBy(desc("df"), asc("term")).limit(maxExpansions)
-      .select("term", "df", "ttf")
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+    val top = topTerms(levenshtein(col("term"), lit(qterm)) <= maxEdits, maxExpansions)
     if (top.isEmpty) return emptyFrame
     val blendedDf = top.map(_._2).max
+    val q = qterm.codePoints().toArray
     val frames = top.toSeq.map { case (t, _, ttf) =>
-      val sim = 1.0 - editDistance(t, qterm).toDouble / math.min(t.length, qterm.length)
+      val cp = t.codePoints().toArray
+      val sim = 1.0 - editDistance(cp, q).toDouble / math.min(cp.length, q.length)
       decodeScored(blocksOf(t), termScorer(TermStats(blendedDf, ttf), boost * sim))
     }
     disjunction(frames, 1)
@@ -784,11 +773,7 @@ final class Searcher(
     * `maxExpansions`. */
   private def scoredExpansionFrame(pred: org.apache.spark.sql.Column,
                                    maxExpansions: Int, boost: Double): DataFrame = {
-    val top: Array[(String, Long, Long)] = index.termStats
-      .filter(pred)
-      .orderBy(desc("df"), asc("term")).limit(maxExpansions)
-      .select("term", "df", "ttf")
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+    val top = topTerms(pred, maxExpansions)
     if (top.isEmpty) return emptyFrame
     val frames = top.toSeq.map { case (t, df, ttf) =>
       decodeScored(blocksOf(t), termScorer(TermStats(df, ttf), boost))
@@ -796,8 +781,16 @@ final class Searcher(
     disjunction(frames, 1)
   }
 
-  /** Plain Levenshtein distance (driver-side, for the per-term boost). */
-  private def editDistance(a: String, b: String): Int = {
+  /** `(term, df, ttf)` of the `n` dictionary terms `pred` matches with the
+    * highest df (term asc on ties): one ranked scan, ≤ n rows collected. */
+  private def topTerms(pred: org.apache.spark.sql.Column, n: Int): Array[(String, Long, Long)] =
+    index.termStats.filter(pred).orderBy(desc("df"), asc("term")).limit(n)
+      .select("term", "df", "ttf").collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+
+  /** Levenshtein distance over code points (driver-side, for the per-term
+    * boost): the distance Spark's `levenshtein`, which selects the terms,
+    * and the reference's `FuzzyTermsEnum` count. */
+  private def editDistance(a: Array[Int], b: Array[Int]): Int = {
     val prev = new Array[Int](b.length + 1)
     val cur = new Array[Int](b.length + 1)
     var j = 0
@@ -807,7 +800,7 @@ final class Searcher(
       cur(0) = i
       j = 1
       while (j <= b.length) {
-        val cost = if (a.charAt(i - 1) == b.charAt(j - 1)) 0 else 1
+        val cost = if (a(i - 1) == b(j - 1)) 0 else 1
         cur(j) = math.min(math.min(cur(j - 1) + 1, prev(j) + 1), prev(j - 1) + cost)
         j += 1
       }
@@ -856,11 +849,8 @@ final class Searcher(
     case None => df
   }
 
-  /** [[InvertedIndex.deadDocIds]] for the tasks of the slice plans and [[searchByIndexOrder]]. */
+  /** [[InvertedIndex.deadDocIds]] for the tasks of the slice plans. */
   private lazy val deadIds: Broadcast[Array[Long]] = spark.sparkContext.broadcast(index.deadDocIds)
-
-  /** k + D, D pending tombstones: that many distinct matches hold k live. */
-  private def withDeletes(k: Int): Int = math.min(k.toLong + index.deadDocIds.length, Int.MaxValue).toInt
 
   /** Compile a query to its full scored doc set `(docId, score)`. */
   def scored(q: Query): DataFrame = {
@@ -890,10 +880,8 @@ final class Searcher(
       }
     case DocIdRangeQuery(inner, lo, hi) =>
       compile(inner, stats, boost).filter(col("docId").between(lo, hi))
-    case q: PrefixQuery => expansionFrame(expansionPred(q), boost)
-    case q: TermRangeQuery => expansionFrame(expansionPred(q), boost)
-    case q: TermInSetQuery => expansionFrame(expansionPred(q), boost)
-    case q: FuzzyQuery => expansionFrame(expansionPred(q), boost, dictFirst = true)
+    case q @ (_: PrefixQuery | _: TermRangeQuery | _: TermInSetQuery) => expansionFrame(expansionPred(q), boost)
+    case q @ (_: FuzzyQuery | _: RegexpQuery) => expansionFrame(expansionPred(q), boost, dictFirst = true)
     case ScoredFuzzyQuery(t, e, n) => scoredFuzzyFrame(t, e, n, boost)
     case ScoredPrefixQuery(p, n) =>
       scoredExpansionFrame(expansionPred(PrefixQuery(p)), n, boost)
@@ -904,7 +892,6 @@ final class Searcher(
         case t: TermQuery => compile(t, stats, boost)
         case lowered => scoredExpansionFrame(expansionPred(lowered), n, boost)
       }
-    case q: RegexpQuery => expansionFrame(expansionPred(q), boost, dictFirst = true)
     case w: WildcardQuery => compile(QueryRewriter.rewrite(w), stats, boost)
     case BoostQuery(inner, b) => compile(inner, stats, boost * b)
     case ConstantScoreQuery(inner) =>
@@ -1069,12 +1056,25 @@ final class Searcher(
 
   // ------------------------------------------------------------ top-k plans
 
-  /** One `(term, block)` row per posting block of `terms`. */
-  private def termBlocks(terms: Seq[String]): Dataset[(String, PostingBlock)] =
+  /** One `(term, block)` row per posting block of `terms`. Past the values
+    * a scan pushes down (`spark.sql.parquet.pushdown.inFilterThreshold`)
+    * the terms are data, not a literal `IN` list: their UTF-8 range is
+    * pushed and a broadcast set keeps them. */
+  private def termBlocks(terms: Seq[String]): Dataset[(String, PostingBlock)] = {
+    val pushedValues = spark.conf.get("spark.sql.parquet.pushdown.inFilterThreshold", "10").toInt
+    val matched =
+      if (terms.size <= pushedValues) col("term").isin(terms: _*)
+      else {
+        val utf8 = terms.map(UTF8String.fromString)
+        val set = spark.sparkContext.broadcast(terms.toSet)
+        val member = udf((t: String) => set.value.contains(t))
+        col("term").between(utf8.min.toString, utf8.max.toString) && member(col("term"))
+      }
     index.postings
-      .filter(col("term").isin(terms: _*))
+      .filter(matched)
       .select(col("term"), explode(col("blocks")).as("b"))
       .as[(String, PostingBlock)]
+  }
 
   /** The k best rows by score desc, docId asc. Rows on the driver (a
     * [[localFrame]]) are ranked there and stay local: a sort planned over
@@ -1194,43 +1194,30 @@ final class Searcher(
     else topK(sliced(route), k)
   }
 
-  /** The route of a small expansion on a warm index, or None when it takes
-    * the multi-stage paths. Routed: the index is [[InvertedIndex.warm]]ed
-    * (its term statistics are driver-resident), the shape is a prefix /
-    * range / term-set expansion, and its matched terms hold at most
-    * [[SingleTaskMaxPostings]] postings, so [[sliced]] takes its one-slice
-    * route, where [[SingleTask.smallestDocs]] keeps the k smallest doc
-    * ids. */
-  private def expansionRoute(q: Query, k: Int): Option[Routed] = {
-    if (index.warmTermStats.isEmpty) return None
-    q match {
-      case e @ (_: PrefixQuery | _: TermRangeQuery | _: TermInSetQuery) =>
-        dictionaryMatches(e).map(dfs => Routed(dfs, (rows, accept) =>
-          SingleTask.smallestDocs(rows.map(_._2), k, accept).map(d => (d, 1.0))))
-      case _ => None
-    }
-  }
-
-  /** The route of a (boosted) positional query whose terms the dictionary
-    * knows without a job — no prefix or wildcard interval source — or
-    * None. `stats` covers its exact terms. */
-  private def positionalTopRoute(q: Query, stats: => Map[String, TermStats],
-      boost: Double = 1.0): Option[Routed] = q match {
-    case BoostQuery(inner, b) => positionalTopRoute(inner, stats, boost * b)
-    case IntervalQuery(src) if Intervals.hasMultiTerm(src) => None
-    case SpanQuery(s) if Intervals.hasMultiTerm(Spans.toIntervals(s)) => None
-    case p @ (_: PhraseQuery | _: MultiPhraseQuery | _: SpanNearQuery | _: IntervalQuery | _: SpanQuery) =>
-      Some(positional(p, stats, boost))
+  /** The constant-score expansion `q` is under its boosts, or None. */
+  private def expansionOf(q: Query): Option[Query] = q match {
+    case BoostQuery(inner, _) => expansionOf(inner)
+    case e @ (_: PrefixQuery | _: TermRangeQuery | _: TermInSetQuery | _: FuzzyQuery | _: RegexpQuery) => Some(e)
     case _ => None
   }
 
-  /** The route of the rewritten query `q` — a flat term query, a small
-    * prefix / range / term-set expansion on a warm index or a positional
-    * query — or None. `stats` covers its exact terms; other shapes do not
-    * read it. */
-  private def route(q: Query, stats: => Map[String, TermStats], k: Int): Option[Routed] =
-    flatQuery(q).map(flatRoute(_, stats, k)).orElse(expansionRoute(q, k))
-      .orElse(positionalTopRoute(q, stats))
+  /** The route of the rewritten query `q` under `boost`, or None: a flat
+    * term query (a boosted one is flat itself); a constant-score expansion
+    * ([[SingleTask.smallestDocs]] over its matched terms); a positional
+    * query without prefix or wildcard interval sources. `found` covers its
+    * exact terms and its expansion; other shapes do not read it. */
+  private def route(q: Query, found: => Lookup, k: Int, boost: Double = 1.0): Option[Routed] =
+    flatQuery(q).map(flatRoute(_, found.stats, k)).orElse(q match {
+      case BoostQuery(inner, b) => route(inner, found, k, boost * b)
+      case e if expansionOf(e).isDefined =>
+        Some(Routed(found.matched(e), (rows, accept) =>
+          SingleTask.smallestDocs(rows.map(_._2), k, accept).map(d => (d, boost))))
+      case IntervalQuery(src) if Intervals.hasMultiTerm(src) => None
+      case SpanQuery(s) if Intervals.hasMultiTerm(Spans.toIntervals(s)) => None
+      case p @ (_: PhraseQuery | _: MultiPhraseQuery | _: SpanNearQuery | _: IntervalQuery | _: SpanQuery) =>
+        Some(positional(p, found.stats, boost))
+      case _ => None
+    })
 
   private def hasFilter(q: Query): Boolean = q match {
     case BooleanQuery(clauses, _) => clauses.exists(_._1 == Occur.FILTER)
@@ -1239,13 +1226,11 @@ final class Searcher(
   }
 
   /** The terms a prefix / range / term-set query matches in the warm
-    * dictionary with their dfs, or None past [[ExpansionCap]]
-    * terms or [[SingleTaskMaxPostings]] postings. Prefix and range bounds
-    * compare in UTF-8 byte order over [[InvertedIndex.warmSortedTerms]], so
-    * the matches equal Catalyst's `startsWith` and string comparisons in
+    * dictionary, with their dfs. Prefix and range bounds compare in UTF-8
+    * byte order over [[InvertedIndex.warmSortedTerms]], so the matches
+    * equal Catalyst's `startsWith` and string comparisons in
     * [[expansionPred]]. */
-  private def dictionaryMatches(q: Query): Option[Map[String, Long]] = {
-    import org.apache.spark.unsafe.types.UTF8String
+  private def dictionaryMatches(q: Query): Map[String, Long] = {
     val stats = index.warmTermStats.get
     val dict = index.warmSortedTerms.get
     // index of the first term ≥ v (inclusive) or > v
@@ -1264,18 +1249,7 @@ final class Searcher(
       case TermInSetQuery(ts) => ts.iterator.filter(stats.contains)
       case _ => Iterator.empty
     }
-    val out = Map.newBuilder[String, Long]
-    var n = 0
-    var postings = 0L
-    while (candidates.hasNext) {
-      val t = candidates.next()
-      val df = stats(t)._1
-      n += 1
-      postings += df
-      if (n > ExpansionCap || postings > SingleTaskMaxPostings) return None
-      out += t -> df
-    }
-    Some(out.result())
+    candidates.map(t => t -> stats(t)._1).toMap
   }
 
   // ---------------------------------------------------------------- public
@@ -1327,43 +1301,32 @@ final class Searcher(
     * `canEarlyTerminate`; each segment stops collecting after k hits because
     * docs arrive already in sort order).
     *
-    * Relational form: a term's k smallest live doc ids live entirely in the
-    * k + D blocks with the smallest `firstDoc`, D being the number of
-    * pending tombstones — every block's `firstDoc` is a real posting and one
-    * term never lists a doc twice, so those blocks hold k + D distinct
-    * matches, at least k of them live, ahead of any doc in a later block.
-    * One TakeOrdered over BLOCK METADATA (no payloads) picks those
-    * candidates; only they are decoded, dead docs dropped as they decode.
-    * Work is O((k + D)·blockSize) regardless of df — the early termination
-    * the index sort buys, vs decoding all df/128 blocks. */
+    * The term is a route like any other: each of its R slices keeps its k
+    * smallest live docs with [[SingleTask.smallestPostings]], decoding
+    * O(k) blocks whatever the df and the pending tombstones, and the ≤ R·k
+    * rows are sorted by docId (at R = 1 on a resident index: on the driver,
+    * no job). */
   def searchByIndexOrder(t: String, k: Int): DataFrame =
     lookupStats(Set(t)).get(t) match {
       case None => emptyFrame
       case Some(ts) =>
-        val candidates = blocksOf(t).orderBy(asc("firstDoc")).limit(withDeletes(k))
-        val dead = deadIds
-        val live = udf((d: Long) => java.util.Arrays.binarySearch(dead.value, d) < 0)
-        decodeScored(candidates, termScorer(ts, 1.0)).filter(live(col("docId")))
-          .orderBy(asc("docId")).limit(k)
+        val score = termScorer(ts, 1.0)
+        val route = Routed(Map(t -> ts.docFreq), (rows, accept) =>
+          SingleTask.smallestPostings(rows.map(_._2), k, accept).map { case (d, f, dl) => (d, score(f, dl)) })
+        // the driver's one slice is already the k smallest, ascending
+        onDriver(route).map(localFrame).getOrElse(
+          slices(route.dfs, route.kernel).toDF("docId", "score").orderBy(asc("docId")).limit(k))
     }
 
   /** Top-k search: `(docId, score)` ordered by score desc, docId asc —
-    * the reference's `TopDocs.merge` tiebreak. Routed shapes take their
+    * the reference's `TopDocs.merge` tiebreak. Routed shapes — flat term
+    * queries, constant-score expansions, positional queries — take their
     * route (see the class doc); other shapes rank [[scored]]'s doc set. */
   def search(q: Query, k: Int): DataFrame = {
     val rewritten = QueryRewriter.rewrite(q)
     flatPlan(rewritten, k)
-      .orElse(route(rewritten, lookupStats(exactTerms(rewritten)), k).map(r => topK(sliced(r), k)))
-      .getOrElse(rewritten match {
-        // constant-score expansions: top-k = k smallest doc ids, block-metadata
-        // pruned (see expansionTopK) — the r1 p95 tail was wide prefix/range
-        // expansions decoding much of the vocabulary for 10 rows
-        case e @ (_: PrefixQuery | _: TermRangeQuery | _: TermInSetQuery) =>
-          expansionTopK(expansionPred(e), 1.0, k, dictFirst = false)
-        case e @ (_: FuzzyQuery | _: RegexpQuery) =>
-          expansionTopK(expansionPred(e), 1.0, k, dictFirst = true)
-        case other => topK(scored(other), k)
-      })
+      .orElse(route(rewritten, lookupFor(Seq(rewritten)), k).map(r => topK(sliced(r), k)))
+      .getOrElse(topK(scored(rewritten), k))
   }
 
   private val BatchSchema = StructType(Seq(
@@ -1375,9 +1338,10 @@ final class Searcher(
     * equal to [[search]]'s.
     *
     * The batch rewrites every query and looks up the statistics of all of
-    * their exact terms at once, then routes each query as [[search]] does: a
-    * flat term query, a small prefix / range / term-set expansion on a warm
-    * index, a positional query. On an index with resident blocks
+    * their exact terms and the matched terms of all of their expansions at
+    * once ([[lookup]]: on a cold reader one job), then routes each query as
+    * [[search]] does: a flat term query, a constant-score expansion, a
+    * positional query. On an index with resident blocks
     * ([[InvertedIndex.residentBlocks]]) a route of one slice runs its kernel
     * on the driver, one collector per query like the reference's
     * `IndexSearcher` over a resident reader; those ranked rows form one local
@@ -1385,20 +1349,22 @@ final class Searcher(
     * route joins ONE slice plan ([[slices]]) over the blocks of all of their
     * terms: each slice runs every route's kernel over its own terms and
     * keeps that query's top-k of the slice — the reference's per-slice
-    * collectors — and one window ranks each query's rows. Queries without a
-    * route run their own [[search]], unioned in. Pending tombstones change
-    * no route: the kernels skip the deleted docs. */
+    * collectors — and one window ranks each query's rows. Only the shapes
+    * without a route (dismax, nested trees, scored expansions, interval
+    * sources with prefix leaves) run their own [[search]], unioned in.
+    * Pending tombstones change no route: the kernels skip the deleted
+    * docs. */
   def searchBatch(queries: Seq[(String, Query)], k: Int): DataFrame = {
     val ids = queries.map(_._1)
     require(ids.distinct.size == ids.size,
       s"searchBatch: duplicate query ids ${ids.diff(ids.distinct).distinct.mkString(", ")}")
     val rewritten = queries.map { case (id, q) => (id, QueryRewriter.rewrite(q)) }
-    lazy val stats = lookupStats(rewritten.iterator.flatMap(q => exactTerms(q._2)).toSet)
+    lazy val found = lookupFor(rewritten.map(_._2))
     val served = Vector.newBuilder[Row]
     val planned = Vector.newBuilder[(String, Routed)]
     val rest = Vector.newBuilder[DataFrame]
     rewritten.foreach { case (id, q) =>
-      route(q, stats, k) match {
+      route(q, found, k) match {
         case Some(r) => onDriver(r) match {
           case Some(hits) =>
             SingleTask.topK(hits, k).zipWithIndex.foreach { case ((d, sc), i) => served += Row(id, d, sc, i + 1L) }
@@ -1480,10 +1446,6 @@ final class Searcher(
           else if (present.size == 1) stats(present.head).docFreq
           else present.map(docIdsOf).reduce(_ unionAll _).distinct().count()
         }
-      case e @ (_: PrefixQuery | _: TermRangeQuery | _: TermInSetQuery) =>
-        expansionFrame(expansionPred(e), 1.0).count()
-      case e @ (_: FuzzyQuery | _: RegexpQuery) =>
-        expansionFrame(expansionPred(e), 1.0, dictFirst = true).count()
       case other => scored(other).count()
     }
   }

@@ -1,6 +1,6 @@
 package graft.search
 
-import graft.core.{LongBuf, PostingBlock, PostingsCodec}
+import graft.core.{PostingBlock, PostingsCodec}
 import scala.collection.mutable
 
 /** One flat term clause of a query (see [[Searcher]]'s flattening).
@@ -48,7 +48,7 @@ object Accept {
   * current doc summed in clause order, and the doc offered to one bounded
   * heap of primitive arrays that only replaces its worst entry
   * (`TopScoreDocCollector` / `HitQueue`). [[topK]] ranks any other hit
-  * stream with the same heap. */
+  * stream with the same heap, [[smallestDocs]] the earliest docs. */
 object SingleTask {
 
   /** Group `(term, block)` rows by term. */
@@ -102,15 +102,46 @@ object SingleTask {
     heap.drain()
   }
 
-  /** The k smallest distinct doc ids of the blocks that `accept` holds — a
-    * constant-score expansion's top-k (score ties break docId asc). */
-  def smallestDocs(blocks: Iterator[PostingBlock], k: Int, accept: Accept = Accept.All): Iterator[Long] = {
-    val all = new LongBuf()
-    blocks.filter(accept.overlaps)
-      .foreach(b => PostingsCodec.decodeDocIds(b).foreach(d => if (accept(d)) all.add(d)))
-    val docs = all.toArray
-    java.util.Arrays.sort(docs)
-    docs.iterator.distinct.take(math.max(k, 0))
+  /** The k smallest distinct doc ids of `blocks` that `accept` holds,
+    * ascending: a constant-score expansion's top-k. Index-order early
+    * termination (the reference's `TopFieldCollector.canEarlyTerminate`):
+    * blocks decode in `firstDoc` order until k docs are held and the next
+    * block starts past the largest of them. A dead doc is never held, so the
+    * bound is exact with tombstones. `onDecode` counts block decodes. */
+  def smallestDocs(blocks: Iterator[PostingBlock], k: Int, accept: Accept = Accept.All,
+      onDecode: () => Unit = () => ()): Iterator[Long] =
+    smallestPostings(blocks, k, accept, onDecode, scored = false).map(_._1)
+
+  /** [[smallestDocs]] with each doc's `(freq, doclen)` (0 unless `scored`):
+    * a term's index-order top-k. A term lists each doc once. */
+  def smallestPostings(blocks: Iterator[PostingBlock], k: Int, accept: Accept = Accept.All,
+      onDecode: () => Unit = () => (), scored: Boolean = true): Iterator[(Long, Int, Int)] = {
+    if (k <= 0) return Iterator.empty
+    val sorted = blocks.filter(accept.overlaps).toArray
+    java.util.Arrays.sort(sorted, (a: PostingBlock, b: PostingBlock) =>
+      java.lang.Long.compare(a.firstDoc, b.firstDoc))
+    // one score for every doc: the heap keeps the k smallest, the largest on top
+    val heap = new TopHeap(k)
+    val held = mutable.LongMap.empty[Long] // a held doc → freq << 32 | doclen
+    val docs = new Array[Long](sorted.iterator.map(_.count).maxOption.getOrElse(0))
+    val (freqs, doclens) = if (scored) (new Array[Int](docs.length), new Array[Int](docs.length)) else (null, null)
+    var i = 0
+    while (i < sorted.length && !(heap.full && sorted(i).firstDoc > heap.worstDoc)) {
+      onDecode()
+      PostingsCodec.decodeInto(sorted(i), docs, freqs, doclens, 0)
+      var j = 0
+      while (j < sorted(i).count) {
+        val d = docs(j)
+        if (accept(d) && (!heap.full || d < heap.worstDoc) && !held.contains(d)) {
+          if (heap.full) held.remove(heap.worstDoc)
+          heap.offer(d, 0.0)
+          held(d) = if (scored) freqs(j).toLong << 32 | doclens(j) else 0L
+        }
+        j += 1
+      }
+      i += 1
+    }
+    heap.drain().map { case (d, _) => val p = held(d); (d, (p >>> 32).toInt, p.toInt) }
   }
 
   /** One term's accepted postings, ascending by doc; `freqs` and
@@ -291,6 +322,9 @@ object SingleTask {
     private var docs = new Array[Long](math.min(k, 64))
     private var scores = new Array[Double](docs.length)
     private var n = 0
+
+    def full: Boolean = n == k
+    def worstDoc: Long = docs(0)
 
     private def worse(i: Int, j: Int): Boolean =
       if (scores(i) != scores(j)) java.lang.Double.compare(scores(i), scores(j)) < 0

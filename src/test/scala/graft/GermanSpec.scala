@@ -93,13 +93,15 @@ class GermanSpec extends AnyFunSuite {
     fuzzy.foreach { case (d, sc) => assert(math.abs(sc - exact(d)) < 1e-9, s"doc $d") }
   }
 
-  test("ScoredFuzzyQuery matches the brute-force blended model") {
-    val s = new Searcher(index, ScoringMode.PreciseBM25())
-    val qterm = "spark"
-    // brute model over the in-memory corpus: top-50 dictionary terms within
-    // 2 edits by (df desc, term asc), df blended to max, per-term
-    // BM25 × (1 − dist/min(|t|,|q|)), summed per doc
-    def lev(a: String, b: String): Int = {
+  /** Asserts `ScoredFuzzyQuery(qterm, maxEdits, 50)` on `s` equals the
+    * brute model over `docs` (doc → its terms): the top-50 dictionary terms
+    * within `maxEdits` edits by (df desc, term asc), df blended to max,
+    * per-term BM25 × (1 − dist/min(|t|,|q|)), summed per doc. Distances and
+    * lengths count code points, like Spark's `levenshtein`, which selects
+    * the terms, and the reference's `FuzzyTermsEnum`. */
+  private def assertBruteFuzzy(s: Searcher, docs: Map[Long, Seq[String]], qterm: String,
+      maxEdits: Int): Unit = {
+    def lev(a: Array[Int], b: Array[Int]): Int = {
       val d = Array.tabulate(a.length + 1, b.length + 1) { (i, j) =>
         if (i == 0) j else if (j == 0) i else 0 }
       for (i <- 1 to a.length; j <- 1 to b.length)
@@ -107,28 +109,53 @@ class GermanSpec extends AnyFunSuite {
           d(i - 1)(j - 1) + (if (a(i - 1) == b(j - 1)) 0 else 1))
       d(a.length)(b.length)
     }
-    val vocab = corpus.values.flatten.map(_.term).toSet
-    val kept = vocab.filter(t => lev(t, qterm) <= 2).toSeq
-      .map(t => (t, df(t))).sortBy { case (t, d) => (-d, t) }.take(50)
+    val q = qterm.codePoints().toArray
+    val n = docs.size.toLong
+    val avgLen = docs.values.map(_.size).sum / n.toDouble
+    val kept = docs.values.flatten.toSet.toSeq
+      .filter(t => lev(t.codePoints().toArray, q) <= maxEdits)
+      .map(t => (t, docs.values.count(_.contains(t)).toLong)).sortBy { case (t, d) => (-d, t) }.take(50)
     val bdf = kept.map(_._2).max
-    val idf = math.log(1 + (docCount - bdf + 0.5) / (bdf + 0.5))
+    val idf = math.log(1 + (n - bdf + 0.5) / (bdf + 0.5))
     val expected = scala.collection.mutable.Map.empty[Long, Double]
     kept.foreach { case (t, _) =>
-      val sim = 1.0 - lev(t, qterm).toDouble / math.min(t.length, qterm.length)
-      corpus.foreach { case (docId, toks) =>
-        val freq = toks.count(_.term == t)
+      val cp = t.codePoints().toArray
+      val sim = 1.0 - lev(cp, q).toDouble / math.min(cp.length, q.length)
+      docs.foreach { case (docId, terms) =>
+        val freq = terms.count(_ == t)
         if (freq > 0) {
-          val dlq = SmallFloat.byte4ToInt(SmallFloat.intToByte4(toks.size))
-          val sc = idf * sim * (freq / (freq + 1.2 * (1 - 0.75 + 0.75 * dlq / avgdl)))
+          val dlq = SmallFloat.byte4ToInt(SmallFloat.intToByte4(terms.size))
+          val sc = idf * sim * (freq / (freq + 1.2 * (1 - 0.75 + 0.75 * dlq / avgLen)))
           expected(docId) = expected.getOrElse(docId, 0.0) + sc
         }
       }
     }
-    val got = s.scored(ScoredFuzzyQuery(qterm, 2, 50)).collect()
+    val got = s.scored(ScoredFuzzyQuery(qterm, maxEdits, 50)).collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(got.keySet == expected.keySet)
+    assert(got.keySet == expected.keySet, qterm)
     got.foreach { case (d, sc) =>
-      assert(math.abs(sc - expected(d)) < 1e-6, s"doc $d: $sc vs ${expected(d)}")
+      assert(math.abs(sc - expected(d)) < 1e-6, s"$qterm doc $d: $sc vs ${expected(d)}")
     }
+  }
+
+  test("ScoredFuzzyQuery matches the brute-force blended model") {
+    assertBruteFuzzy(new Searcher(index, ScoringMode.PreciseBM25()),
+      corpus.map { case (d, toks) => d -> toks.map(_.term) }, "spark", 2)
+    // supplementary-plane terms (two UTF-16 units per code point): 𝐚𝐜 is
+    // one edit of two code points from 𝐚𝐛, a similarity of 0.5, not the
+    // 0.75 of one edit over four UTF-16 units
+    val analyzer = StandardLikeAnalyzer()
+    val texts = Seq("𝐚𝐛 𝐚𝐜 river", "𝐚𝐜 stone 𝐚𝐜", "𝐚𝐛", "𝐚𝐝𝐞 river", "𝐛𝐜 stone river")
+    val dir = java.nio.file.Files.createTempDirectory("graft-fuzzy-supp-").toString
+    try {
+      val s = spark
+      import s.implicits._
+      graft.index.IndexBuilder.build(texts.zipWithIndex.map { case (t, i) => graft.index.InputDoc(i.toLong, t) }
+        .toDS(), dir, graft.index.IndexConfig(analyzer))
+      val docs = texts.zipWithIndex.map { case (t, i) => i.toLong -> analyzer.tokenize(t).map(_.term) }.toMap
+      assert(docs(1).contains("𝐚𝐜"), "the analyzer keeps supplementary-plane terms")
+      assertBruteFuzzy(new Searcher(graft.index.InvertedIndex.open(spark, dir), ScoringMode.PreciseBM25()),
+        docs, "𝐚𝐛", 1)
+    } finally graft.tools.Rm.rmTree(dir)
   }
 }

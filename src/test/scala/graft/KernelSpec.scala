@@ -10,8 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * visits every live doc of the clause terms in `[lo, hi]`, counts and sums
   * its clauses in clause order, applies the `nMust` / `msm` /
   * no-prohibited rule, and ranks by score desc, docId asc.
-  * `SingleTask.smallestDocs` and `Positional.matchingDocs` are checked the
-  * same way against the docs they may return. */
+  * `SingleTask.smallestDocs` / `smallestPostings` (and their early
+  * termination) and `Positional.matchingDocs` are checked the same way
+  * against the docs they may return. */
 class KernelSpec extends AnyFunSuite {
 
   private type Hit = (Long, Double)
@@ -167,14 +168,45 @@ class KernelSpec extends AnyFunSuite {
     (0 until 400).foreach { trial =>
       val maxDoc = 1 + rnd.nextInt(if (rnd.nextBoolean()) 40 else 700)
       // an expansion's terms: their blocks in one stream, a doc on several terms
-      val blocks = Seq.fill(1 + rnd.nextInt(3))(encode(rnd, randomPostings(rnd, maxDoc))).flatten
+      val terms = Seq.fill(1 + rnd.nextInt(3))(encode(rnd, randomPostings(rnd, maxDoc)))
+      val blocks = terms.flatten
       val docs = decoded(blocks).keys.toSeq.sorted
-      val dead = randomDead(rnd, maxDoc)
+      // every third trial: the earliest docs are dead, at least 10 of them,
+      // and a random share of the later ones (deletes pending ahead of the
+      // k-th live doc)
+      val dead =
+        if (trial % 3 != 0) randomDead(rnd, maxDoc)
+        else {
+          val first = 10 + rnd.nextInt(200)
+          (docs.take(first) ++ docs.drop(first).filter(_ => rnd.nextDouble() < 0.5)).toArray
+        }
+      val postings = decoded(terms.head)
       slicesOf(rnd, maxDoc).foreach { case (lo, hi) =>
-        val live = docs.filter(d => d >= lo && d <= hi && java.util.Arrays.binarySearch(dead, d) < 0)
+        val accept = Accept(lo, hi, dead)
+        val live = docs.filter(accept(_))
+        /** `kernel`'s rows over `bs` in random order. When it keeps k docs
+          * no block whose firstDoc is above the k-th was decoded: blocks
+          * decode in firstDoc order, so at most those up to the k-th. */
+        def checked[T](bs: Seq[PostingBlock], k: Int, docOf: T => Long)(
+            kernel: (Iterator[PostingBlock], () => Unit) => Iterator[T]): List[T] = {
+          var decodes = 0
+          val got = kernel(rnd.shuffle(bs).iterator, () => decodes += 1).toList
+          if (k > 0 && got.size == k) {
+            val kth = docOf(got.last)
+            val upTo = bs.count(b => accept.overlaps(b) && b.firstDoc <= kth)
+            assert(decodes <= upTo, s"trial $trial k=$k: $decodes decodes, $upTo blocks start at or before $kth")
+          }
+          got
+        }
         Seq(0, 1, 10, live.size, live.size + 2).foreach { k =>
-          val got = SingleTask.smallestDocs(rnd.shuffle(blocks).iterator, k, Accept(lo, hi, dead)).toList
-          assert(got == live.take(k).toList, s"trial $trial k=$k [$lo, $hi] dead=${dead.mkString(",")}")
+          val clue = s"trial $trial k=$k [$lo, $hi] dead=${dead.mkString(",")}"
+          val got = checked(blocks, k, (d: Long) => d)(SingleTask.smallestDocs(_, k, accept, _))
+          assert(got == live.take(k).toList, clue)
+          // the scored form over one term's blocks keeps each doc's freq and doc length
+          val want = postings.keys.toSeq.sorted.filter(accept(_)).take(k).map(d => (d, postings(d)._1, postings(d)._2))
+          val scored = checked(terms.head, k, (p: (Long, Int, Int)) => p._1)(
+            SingleTask.smallestPostings(_, k, accept, _))
+          assert(scored == want.toList, s"scored $clue")
         }
       }
     }

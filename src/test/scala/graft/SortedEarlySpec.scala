@@ -7,9 +7,10 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[Searcher.searchByIndexOrder]] — index-sort early termination
-  * (TopFieldCollector canEarlyTerminate): k-earliest-block candidates must
-  * return exactly the exhaustive sorted result, while touching only k
-  * blocks' payloads. */
+  * (TopFieldCollector canEarlyTerminate): decoding blocks in firstDoc order
+  * until no later block can hold one of the k earliest live docs must
+  * return exactly the exhaustive sorted result, with and without pending
+  * tombstones. */
 class SortedEarlySpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestEnv.spark
@@ -39,15 +40,15 @@ class SortedEarlySpec extends AnyFunSuite {
     assert(early("spark", 3) == exhaustive("spark", 3))
   }
 
-  test("pending tombstones fall back to the exhaustive live path") {
+  test("pending tombstones: the k earliest live docs equal the exhaustive result") {
     val t = new Searcher(Indexes.tombstonedIndex(spark, SparkTestEnv.sfDir),
       ScoringMode.PreciseBM25())
     val got = t.searchByIndexOrder("spark", 10)
       .collect().map(_.getLong(0)).toSeq
     // every returned doc is live (doc_id % 7 == 3 tombstoned) and in order
     assert(got.forall(_ % 7 != 3) && got == got.sorted && got.size == 10)
-    // the k + D earliest blocks hold the k smallest live docs: equal to the
-    // exhaustive live result, also when a dead doc sits in the first k blocks
+    // dead docs are skipped as blocks decode and never count toward k: equal
+    // to the exhaustive live result, also with a dead doc in the first block
     val firstBlock = t.index.postings.filter(col("term") === "spark")
       .select(explode(col("blocks")).as("b")).select("b.*").as[PostingBlock](Encoders.product[PostingBlock])
       .orderBy(asc("firstDoc")).head()

@@ -90,9 +90,22 @@ class WarmServingSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def rows(df: DataFrame): Seq[(Long, Double)] =
     df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
 
+  /** The exhaustive top-k of `q` on a cold reader of `dir`: its full scored
+    * doc set ranked by score desc, docId asc. */
+  private def exhaustive(dir: String, q: Query, k: Int): Seq[(Long, Double)] =
+    rows(cold(dir).scored(q).orderBy(desc("score"), asc("docId")).limit(k))
+
   /** The driver route returns a local relation. */
   private def routed(df: DataFrame): Boolean =
     df.queryExecution.executedPlan.isInstanceOf[LocalTableScanExec]
+
+  /** A constant score ties every hit, which `assertSameTopK` accepts in any
+    * order: its top-k must be exactly the k smallest doc ids. */
+  private def assertConstantTopK(label: String, q: Query, got: Seq[(Long, Double)],
+      want: Seq[(Long, Double)]): Unit = q match {
+    case _: PrefixQuery | _: TermRangeQuery | _: TermInSetQuery => assert(got == want, label)
+    case _ => assertSameTopK(label, got, want)
+  }
 
   /** The one-task plan is the only one with a coalesce to one partition. */
   private def oneTask(df: DataFrame): Boolean =
@@ -128,7 +141,10 @@ class WarmServingSpec extends AnyFunSuite with BeforeAndAfterAll {
     TermRangeQuery(Some("w2"), Some("w25"), includeLower = true, includeUpper = false),
     TermRangeQuery(Some(Full), None, includeLower = false, includeUpper = true),
     TermRangeQuery(Some("w9"), Some(Supp), includeLower = false, includeUpper = false),
-    TermInSetQuery(Set("w5", Supp, "absent")))
+    TermInSetQuery(Set("w5", Supp, "absent")),
+    // more terms than a scan pushes down as values, and their UTF-8 range
+    // also holds w19 and w2: the slice scan keeps only the set's terms
+    TermInSetQuery(Set("w18") ++ (20 to 29).map(i => s"w$i")))
 
   test("warm statistics equal the cold dictionary; sorted terms follow Catalyst's order") {
     Seq(baseDir, mergedDir).foreach { dir =>
@@ -144,13 +160,12 @@ class WarmServingSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("warm top-k == cold exhaustive top-k, routed to the driver") {
     // the merged index scores exactly like the one it merges (MergeSpec), so
     // one cold reference serves both
-    val c = cold(baseDir)
     val warmSearchers = Seq(baseDir, mergedDir).map(d => new Searcher(warm(d), ScoringMode.PreciseBM25()))
     queries.foreach { q =>
-      val want = rows(c.search(q, 20))
+      val want = exhaustive(baseDir, q, 20)
       warmSearchers.foreach { w =>
         val df = w.search(q, 20)
-        assertSameTopK(s"${w.index.dir}: $q", rows(df), want)
+        assertConstantTopK(s"${w.index.dir}: $q", q, rows(df), want)
         if (want.nonEmpty) assert(routed(df), s"$q should take the driver route")
       }
     }
@@ -230,7 +245,8 @@ class WarmServingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val w = new Searcher(warm(mergedDir), ScoringMode.PreciseBM25())
     Seq(TermQuery("w0"), BooleanQuery.must(TermQuery("w1"), TermQuery("w2")),
       PhraseQuery(Seq("w0", "w1")), PrefixQuery("w1"),
-      TermRangeQuery(Some("w2"), Some("w25"), includeLower = true, includeUpper = false)).foreach { q =>
+      TermRangeQuery(Some("w2"), Some("w25"), includeLower = true, includeUpper = false),
+      TermInSetQuery(Set("w5", Supp, "absent"))).foreach { q =>
       assert(jobProfile(w.search(q, 10)) == ((0, 0, 0)), s"$q")
     }
   }
@@ -247,7 +263,6 @@ class WarmServingSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val batchQueries: Seq[(String, Query)] = queries.zipWithIndex.map { case (q, i) => (s"q$i", q) }
 
   test("a batch on a resident index is served on the driver: search's rows, cold's top-k, no job") {
-    val c = cold(baseDir)
     Seq(baseDir, mergedDir).foreach { dir =>
       val w = new Searcher(warm(dir), ScoringMode.PreciseBM25())
       val batch = w.searchBatch(batchQueries, 20)
@@ -256,7 +271,7 @@ class WarmServingSpec extends AnyFunSuite with BeforeAndAfterAll {
       batchQueries.foreach { case (id, q) =>
         val hits = got.getOrElse(id, Nil)
         assert(hits == rows(w.search(q, 20)), s"$dir: $q")
-        assertSameTopK(s"$dir batch: $q", hits, rows(c.search(q, 20)))
+        assertSameTopK(s"$dir batch: $q", hits, exhaustive(baseDir, q, 20))
       }
       assert(jobProfile(w.searchBatch(batchQueries, 20)) == ((0, 0, 0)), dir)
     }
@@ -271,28 +286,26 @@ class WarmServingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val mixed = Seq("served" -> BooleanQuery.must(TermQuery("w1"), TermQuery("w2")),
       "dismax" -> dismax, "fillers" -> disjunction, "phrase" -> PhraseQuery(Seq("w0", "w1")),
       "prefixed" -> prefixed)
-    val c = cold(baseDir)
     Seq(baseDir, mergedDir).foreach { dir =>
       val w = new Searcher(warm(dir), ScoringMode.PreciseBM25())
       val batch = w.searchBatch(mixed, 10)
       assert(!routed(batch), s"$dir: the fillers take the slice plan, the dismax its own search")
       val got = byQuery(batch)
       mixed.foreach { case (id, q) =>
-        assertSameTopK(s"$dir mixed batch: $q", got.getOrElse(id, Nil), rows(c.search(q, 10)))
+        assertSameTopK(s"$dir mixed batch: $q", got.getOrElse(id, Nil), exhaustive(baseDir, q, 10))
       }
       assert(got("served") == rows(w.search(mixed.head._2, 10)), dir)
     }
   }
 
   test("a batch on an index warmed over its budget plans Spark work and equals cold") {
-    val c = cold(baseDir)
     Seq(baseDir, mergedDir).foreach { dir =>
       val w = new Searcher(warmOverBudget(dir), ScoringMode.PreciseBM25())
       val batch = w.searchBatch(batchQueries, 20)
       assert(!routed(batch), s"$dir over budget: ${batch.queryExecution.executedPlan}")
       val got = byQuery(batch)
       batchQueries.foreach { case (id, q) =>
-        assertSameTopK(s"$dir over budget batch: $q", got.getOrElse(id, Nil), rows(c.search(q, 20)))
+        assertSameTopK(s"$dir over budget batch: $q", got.getOrElse(id, Nil), exhaustive(baseDir, q, 20))
       }
     }
   }
@@ -306,16 +319,14 @@ class WarmServingSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("building a cold batch of flat and positional queries runs one job: the statistics lookup") {
-    val flatAndPositional = batchQueries.filter(_._2 match {
-      case _: PrefixQuery | _: TermRangeQuery | _: TermInSetQuery => false
-      case _ => true
-    })
+  test("building a cold batch of routed queries runs one job: the statistics lookup") {
     Seq(baseDir, mergedDir).foreach { dir =>
       val c = cold(dir)
       // open the reader's views first: their parquet schema reads are jobs
       Seq(c.index.postings, c.index.termStats).foreach(_.schema)
-      assert(jobProfile(c.searchBatch(flatAndPositional, 20))._1 == 1, dir)
+      // the batch holds flat, positional and expansion queries: the one
+      // lookup also resolves the expansions' terms
+      assert(jobProfile(c.searchBatch(batchQueries, 20))._1 == 1, dir)
     }
   }
 
@@ -327,15 +338,14 @@ class WarmServingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("an index warmed over its resident-block budget keeps the one-task plan and equals cold") {
-    val c = cold(baseDir)
     Seq(baseDir, mergedDir).foreach { dir =>
       val idx = warmOverBudget(dir)
       assert(idx.residentBlocks.isEmpty && idx.residentBytes == 0L)
       val w = new Searcher(idx, ScoringMode.PreciseBM25())
       queries.foreach { q =>
-        val want = rows(c.search(q, 20))
+        val want = exhaustive(baseDir, q, 20)
         val df = w.search(q, 20)
-        assertSameTopK(s"$dir over budget: $q", rows(df), want)
+        assertConstantTopK(s"$dir over budget: $q", q, rows(df), want)
         if (want.nonEmpty) assert(oneTask(df) && !routed(df), s"$q should take the one-task plan")
       }
     }
@@ -368,7 +378,7 @@ class WarmServingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // slices decides it
     val conjunction = BooleanQuery(Fillers.map(t => Occur.FILTER -> TermQuery(t)) :+
       (Occur.MUST_NOT -> TermQuery("w0")))
-    val want = Seq(disjunction, conjunction).map(q => rows(cold(baseDir).search(q, 10)))
+    val want = Seq(disjunction, conjunction).map(exhaustive(baseDir, _, 10))
     Seq(baseDir, mergedDir).foreach { dir =>
       val w = new Searcher(warm(dir), ScoringMode.PreciseBM25())
       val Seq(d, c) = Seq(disjunction, conjunction).map(w.search(_, 10))
@@ -385,6 +395,18 @@ class WarmServingSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(!routed(p) && sliced(p), s"$dir: filler phrase")
       val ids = rows(p).map(_._1)
       assert(ids.sorted == (0L until 2200L), s"$dir: filler phrase matched ${ids.size} rows")
+      // the fillers' prefix matches 30 terms and 66,000 postings: a route of
+      // 2 slices on a resident, an over-budget and a cold reader alike
+      val prefix = PrefixQuery("c")
+      val top = exhaustive(baseDir, prefix, 10)
+      assert(top.map(_._1) == (0L until 10L), s"$dir: filler prefix")
+      Seq("resident" -> w, "over budget" -> new Searcher(warmOverBudget(dir), ScoringMode.PreciseBM25()),
+        "cold" -> cold(dir)).foreach { case (label, s) =>
+        val df = s.search(prefix, 10)
+        assert(!routed(df) && sliced(df), s"$dir $label: filler prefix ${df.queryExecution.executedPlan}")
+        assert(rows(df) == top, s"$dir $label: filler prefix")
+      }
+      assert(shuffleReadingTasks(w.search(prefix, 10)) == 2, s"$dir: filler prefix")
     }
   }
 
